@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 
@@ -278,7 +279,10 @@ def main(argv: list[str] | None = None) -> int:
     aq.set_defaults(fn=cmd_audit_query)
 
     au = sub.add_parser("audit")
-    au.add_argument("--repo-dir", default="/root/repo")
+    au.add_argument(
+        "--repo-dir",
+        default=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
     au.set_defaults(fn=cmd_audit)
 
     rm = sub.add_parser("run-medallion")

@@ -2,6 +2,12 @@
 ``(spark, sf_dir) -> DataFrame`` callable plus (where SQL-expressible) its
 DuckDB oracle SQL.
 
+Each query is declared once, where it is defined: ``@query(oracle=SQL)``
+puts the function into ``QUERIES`` under its name and ``SQL`` into
+``ORACLE_SQL``; a bare ``@query()`` declares a rows-only query. An oracle
+may reuse an earlier query's (``oracle=ORACLE_SQL["q_..."]``), so it is
+declared below that query.
+
 Hash-match hygiene applied throughout (SURVEY.md §5):
   * every computed column aliased identically in Spark and SQL;
   * double aggregates computed in exact decimal then surfaced as double
@@ -47,13 +53,39 @@ from datalake_breweries_two_spark.streaming import windows as stream_windows
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
+
+# The registry, filled by @query as the module is imported: QUERIES maps
+# each query's function name to the function, ORACLE_SQL maps it to the
+# DuckDB SQL its result is checked against (absent for rows-only queries).
+QUERIES: dict[str, QueryFn] = {}
+ORACLE_SQL: dict[str, str] = {}
+
+
+def query(oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Declare the decorated function as a query named after it, with
+    ``oracle`` as its DuckDB oracle SQL when it has one. This is the one
+    way to add a query; a name declared twice raises ``ValueError``."""
+
+    def register(fn: QueryFn) -> QueryFn:
+        if fn.__name__ in QUERIES:
+            raise ValueError(f"query {fn.__name__!r} is already declared")
+        QUERIES[fn.__name__] = fn
+        if oracle is not None:
+            ORACLE_SQL[fn.__name__] = oracle
+        return fn
+
+    return register
+
+
 # PER-PROCESS scratch root: staged streams / written lakes land under a
 # pid-unique dir. A fixed shared path let two concurrent engine processes
 # (e.g. the parity suite and the hostile-lake sweep) overwrite each
 # other's staged parquet mid-stream — observed r6 as a streaming query
 # reading the OTHER process's lake. Same-process queries still share and
 # overwrite their own stage dirs by design (each query re-stages).
-_SCRATCH_ROOT = "/root/repo/.scratch"
+_SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
 _SCRATCH = os.path.join(_SCRATCH_ROOT, f"pid{os.getpid()}")
 
 
@@ -97,6 +129,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Reference-surface parity (SURVEY.md §2.1)
 # ==========================================================================
 
+# S1 driver-side paginated ingest (r8 rows-only → full-oracle upgrade):
+# the injected offline fetcher's payload is deterministic — pages 1..3
+# carry ids 3p..3p+2, page 4 is truncated to the single id 9 (the short
+# page that terminates the reference's pagination loop) — so the whole
+# ingested relation is reconstructible.
+@query(oracle="""
+    SELECT CAST(i AS VARCHAR) AS id,
+           'brew ' || CAST(i AS VARCHAR) AS name,
+           'micro' AS brewery_type
+    FROM generate_series(0, 9) t(i)
+""")
 def q_ingest_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1: paginated-API ingest with an injected offline fetcher (the
     reference's loop-until-short-page semantics) → DataFrame.
@@ -129,6 +172,7 @@ def q_ingest_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation")
 def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2: JSON-lines scan with explicit schema (no inference pass). The
     nation table is round-tripped parquet→JSON→DataFrame."""
@@ -139,6 +183,7 @@ def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="SELECT r_regionkey, r_name FROM region")
 def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV scan with explicit schema (no inferSchema pass)."""
     csv_dir = os.path.join(_SCRATCH, "csv_region")
@@ -149,6 +194,7 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation")
 def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC scan with explicit schema (columnar alternative to parquet;
     same pushdown/pruning machinery). Round-trips nation parquet→ORC."""
@@ -160,6 +206,10 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
+        FROM lineitem WHERE l_returnflag = 'R'
+    """)
 def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3: parquet scan with projection + predicate (both pushed to the
     scan — ReadSchema/PushedFilters visible in .explain)."""
@@ -170,6 +220,14 @@ def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT CAST(p_partkey AS VARCHAR) AS id,
+               trim(p_name) AS item_name,
+               lower(p_type) AS item_type,
+               concat_ws(', ', p_name, p_brand, p_type) AS full_desc,
+               CAST(CAST(p_size AS VARCHAR) AS DOUBLE) AS size_double
+        FROM part
+    """)
 def q_silver_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1–P5 composite: the reference's silver curation shape
     (rename/trim/lower/concat_ws/string→double cast,
@@ -186,18 +244,23 @@ def q_silver_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="SELECT c_custkey, trim(c_name) AS name_trimmed FROM customer")
 def q_str_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "customer").select(
         "c_custkey", F.trim(F.col("c_name")).alias("name_trimmed")
     )
 
 
+@query(oracle="SELECT p_partkey, lower(p_type) AS type_lower FROM part")
 def q_str_lower(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "part").select(
         "p_partkey", F.lower(F.col("p_type")).alias("type_lower")
     )
 
 
+@query(oracle="""
+        SELECT p_partkey, concat_ws(', ', p_name, p_brand, p_type) AS joined FROM part
+    """)
 def q_str_concat_ws(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "part").select(
         "p_partkey",
@@ -207,12 +270,19 @@ def q_str_concat_ws(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT p_partkey, CAST(CAST(p_size AS VARCHAR) AS DOUBLE) AS size_double FROM part
+    """)
 def q_cast_double(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "part").select(
         "p_partkey", F.col("p_size").cast("string").cast("double").alias("size_double")
     )
 
 
+@query(oracle="""
+        SELECT doc_id, lang, source FROM documents
+        WHERE text IS NULL OR text = '' OR lang IS NULL OR lang = ''
+    """)
 def q_filter_null_or_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1: the quality predicate as a standalone filter."""
     return (
@@ -222,6 +292,10 @@ def q_filter_null_or_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT CAST(count(CASE WHEN c_acctbal < 0 THEN 1 END) > 0 AS INT) AS exists_flag
+        FROM customer
+    """)
 def q_exists_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 re-expressed deterministically: existence as a 1-row aggregate
     (the imperative ``limit(1).count() > 0`` probe lives in
@@ -231,6 +305,7 @@ def q_exists_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="SELECT CAST(count(*) = 0 AS INT) AS is_empty FROM region")
 def q_is_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L1 as a 1-row aggregate (imperative twin: DataFrame.isEmpty)."""
     return _t(spark, sf_dir, "region").agg(
@@ -238,6 +313,9 @@ def q_is_empty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT count(*) AS bounded_cnt FROM (SELECT * FROM lineitem LIMIT 100)
+    """)
 def q_limit_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2: bounded count — counts at most 100 rows via CollectLimit."""
     return (
@@ -247,12 +325,25 @@ def q_limit_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderstatus,
+               CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS order_month,
+               count(o_orderkey) AS order_count
+        FROM orders GROUP BY o_orderstatus, date_trunc('month', o_orderdate)
+    """)
 def q_gold_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 — FLAGSHIP: the reference's gold aggregate shape (group-by +
     COUNT(col)) on orders: count per (status, order month)."""
     return aggregates.orders_by_status_month(_t(spark, sf_dir, "orders"))
 
 
+@query(oracle="""
+        SELECT count(*) AS total_rows,
+               CAST(coalesce(sum(CASE WHEN text IS NULL OR text = '' THEN 1 ELSE 0 END), 0) AS BIGINT) AS viol_text,
+               CAST(coalesce(sum(CASE WHEN lang IS NULL OR lang = '' THEN 1 ELSE 0 END), 0) AS BIGINT) AS viol_lang,
+               CAST(coalesce(sum(CASE WHEN source IS NULL OR source = '' THEN 1 ELSE 0 END), 0) AS BIGINT) AS viol_source
+        FROM documents
+    """)
 def q_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1: full quality contract in ONE pass (vs the reference's
     job-per-column, ``plugins/data_quality_operator.py:69-70``)."""
@@ -265,6 +356,10 @@ def q_quality_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Relational completion (SURVEY.md §2.2)
 # ==========================================================================
 
+@query(oracle="""
+        SELECT c_custkey, c_name, n_name AS nation_name
+        FROM customer JOIN nation ON c_nationkey = n_nationkey
+    """)
 def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     n = _t(spark, sf_dir, "nation")
@@ -273,6 +368,10 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name", F.col("n_name").alias("nation_name"))
 
 
+@query(oracle="""
+        SELECT o_orderkey, o_totalprice, c_name
+        FROM orders LEFT JOIN customer ON o_custkey = c_custkey
+    """)
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
@@ -281,6 +380,10 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_custkey, c_name FROM customer c
+        WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+    """)
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
@@ -289,6 +392,10 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_custkey, c_name FROM customer c
+        WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+    """)
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
@@ -297,6 +404,18 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT r_name AS region_name,
+               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
+               count(l_orderkey) AS n_lineitems
+        FROM lineitem
+        JOIN orders   ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation   ON c_nationkey = n_nationkey
+        JOIN region   ON n_regionkey = r_regionkey
+        GROUP BY r_name
+    """)
 def q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joins.star_join_revenue(
         _t(spark, sf_dir, "region"),
@@ -307,6 +426,10 @@ def q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
+    """)
 def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windows.global_top_k(
         _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -316,6 +439,14 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_custkey, c_mktsegment, c_acctbal, CAST(rn AS INT) AS rn FROM (
+            SELECT c_custkey, c_mktsegment, c_acctbal,
+                   row_number() OVER (PARTITION BY c_mktsegment
+                                      ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
+            FROM customer
+        ) WHERE rn <= 3
+    """)
 def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windows.top_k_per_group(
         _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_acctbal"),
@@ -326,6 +457,14 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_custkey, c_mktsegment, c_acctbal,
+               CAST(row_number() OVER w AS INT) AS rn,
+               CAST(rank()       OVER w AS INT) AS rnk,
+               CAST(dense_rank() OVER w AS INT) AS drnk
+        FROM customer
+        WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC)
+    """)
 def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windows.rank_in_group(
         _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_acctbal"),
@@ -335,6 +474,14 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_custkey, o_orderkey,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
+                   PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS DOUBLE) AS running_sum
+        FROM orders
+    """)
 def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windows.running_sum(
         _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"),
@@ -345,6 +492,14 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("o_custkey", "o_orderkey", "running_sum")
 
 
+@query(oracle="""
+        SELECT user_id, event_id,
+               lag(value) OVER w AS prev_value,
+               value - lag(value) OVER w AS delta_value
+        FROM events
+        WINDOW w AS (PARTITION BY user_id
+                     ORDER BY date_trunc('microseconds', ts) ASC, event_id ASC)
+    """)
 def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windows.lag_delta(
         _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value"),
@@ -355,18 +510,32 @@ def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id", "event_id", "prev_value", "delta_value")
 
 
+@query(oracle="""
+        SELECT o_orderstatus, o_orderpriority, count(o_orderkey) AS n_orders
+        FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+    """)
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return aggregates.rollup_counts(
         _t(spark, sf_dir, "orders"), ["o_orderstatus", "o_orderpriority"], "o_orderkey", "n_orders"
     )
 
 
+@query(oracle="""
+        SELECT l_returnflag, l_linestatus, count(l_orderkey) AS n_items
+        FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
+    """)
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     return aggregates.cube_counts(
         _t(spark, sf_dir, "lineitem"), ["l_returnflag", "l_linestatus"], "l_orderkey", "n_items"
     )
 
 
+@query(oracle="""
+        SELECT l_returnflag,
+               count(CASE WHEN l_linestatus = 'F' THEN l_orderkey END) AS "F",
+               count(CASE WHEN l_linestatus = 'O' THEN l_orderkey END) AS "O"
+        FROM lineitem GROUP BY l_returnflag
+    """)
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _t(spark, sf_dir, "lineitem")
@@ -377,16 +546,25 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="SELECT DISTINCT c_mktsegment FROM customer")
 def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return setops.distinct_rows(_t(spark, sf_dir, "customer"), ["c_mktsegment"])
 
 
+@query(oracle="SELECT count(DISTINCT o_custkey) AS n_customers FROM orders")
 def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return setops.count_distinct_exact(
         _t(spark, sf_dir, "orders"), "o_custkey", "n_customers"
     )
 
 
+# sketch-accuracy contract (r12 upgrade): exact scalar + TRUE flag —
+# a hash match proves the HLL++ estimate is inside tolerance
+@query(oracle="""
+        SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
+               TRUE AS approx_ok
+        FROM lineitem
+    """)
 def q_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ surfaced as its BOUNDED ACCURACY CONTRACT (r12, rows-only →
     oracle upgrade, same pattern as q_kll_quantiles/q_theta_overlap): the
@@ -411,33 +589,77 @@ def q_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_nationkey AS nationkey FROM customer
+        UNION ALL
+        SELECT s_nationkey AS nationkey FROM supplier
+    """)
 def q_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return setops.union_all(c, s)
 
 
+@query(oracle="""
+        SELECT c_nationkey AS nationkey FROM customer
+        INTERSECT
+        SELECT s_nationkey AS nationkey FROM supplier
+    """)
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return setops.intersect_rows(c, s)
 
 
+@query(oracle="""
+        SELECT c_nationkey AS nationkey FROM customer
+        EXCEPT ALL
+        SELECT s_nationkey AS nationkey FROM supplier
+    """)
 def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
     s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return setops.except_rows(c, s)
 
 
+@query(oracle="""
+        SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS bucket,
+               count(value) AS n,
+               CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        FROM events GROUP BY date_trunc('day', ts)
+    """)
 def q_date_trunc_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return aggregates.date_trunc_agg(_t(spark, sf_dir, "events"), "ts", "day", "value")
 
 
+@query(oracle="""
+        -- WHERE mirrors F.window(ts, ...): NULL event time has no window
+        -- (the r14 nulls-profile NULL-ts row)
+        SELECT date_trunc('hour', ts) AS window_start,
+               count(value) AS n,
+               CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        FROM events WHERE ts IS NOT NULL GROUP BY date_trunc('hour', ts)
+    """)
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the streaming tumbling window (same F.window expr)."""
     return aggregates.tumbling_window_agg(_t(spark, sf_dir, "events"), "ts", "1 hour", "value")
 
 
+@query(oracle="""
+        WITH expanded AS (
+            SELECT value,
+                   to_timestamp(s) AS ws
+            FROM events,
+                 UNNEST(generate_series(
+                     CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800 - 1800,
+                     CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800,
+                     1800)) AS t(s)
+        )
+        SELECT CAST(ws AS TIMESTAMP) AS window_start,
+               count(value) AS n,
+               CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        FROM expanded GROUP BY ws
+    """)
 def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1h size, 30min slide): each event in 2 windows.
     Oracle expands the window starts with generate_series in DuckDB."""
@@ -446,6 +668,12 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT event_type,
+               count(CAST(json_extract(props, '$.k') AS INT)) AS n_with_k,
+               CAST(sum(CAST(json_extract(props, '$.k') AS INT)) AS BIGINT) AS sum_k
+        FROM events GROUP BY event_type
+    """)
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
     k = semistructured.json_get_int("props", "$.k")
@@ -455,6 +683,17 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT vec_id,
+               CAST(len(embedding) AS BIGINT) AS dim,
+               round(sqrt(list_aggregate(
+                   list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
+                   'sum')), 4) AS l2_norm,
+               round(list_aggregate(
+                   list_transform(embedding, x -> CAST(x AS DOUBLE)), 'sum')
+                   / len(embedding), 4) + 0.0 AS mean_component
+        FROM embeddings
+    """)
 def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = semistructured.embedding_stats(_t(spark, sf_dir, "embeddings"))
     return stats.select(
@@ -462,11 +701,22 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
+    """)
 def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     return d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("token"))
 
 
+@query(oracle="""
+        SELECT l_returnflag,
+               round(stddev_samp(l_quantity), 4) AS sd_qty,
+               round(var_samp(l_discount), 4) AS var_disc,
+               round(corr(l_quantity, l_extendedprice), 4) + 0.0 AS corr_qty_price,
+               round(covar_samp(l_quantity, l_extendedprice), 4) + 0.0 AS covar_qty_price
+        FROM lineitem GROUP BY l_returnflag
+    """)
 def q_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregates per group: stddev/variance/corr/covar.
     Rounded to 4 decimals — the estimators are FP-order-sensitive, rounding
@@ -495,6 +745,13 @@ def q_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderstatus,
+               round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
+               round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
+               round(quantile_cont(o_totalprice, 0.99), 4) AS p99
+        FROM orders GROUP BY o_orderstatus
+    """)
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles per group (Spark ``percentile`` ==
     DuckDB ``quantile_cont``). The approx twin (``approx_percentile``,
@@ -508,6 +765,12 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderpriority,
+               arg_max(o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) * 100000000 + o_orderkey) AS top_orderkey,
+               arg_min(o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) * 100000000 - o_orderkey) AS bottom_orderkey
+        FROM orders GROUP BY o_orderpriority
+    """)
 def q_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Argmin/argmax aggregates: the order row holding each group's extreme
     price (max_by/min_by — one pass, no window + filter needed)."""
@@ -523,6 +786,14 @@ def q_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_custkey,
+               CASE WHEN c_acctbal < 0 THEN 'overdrawn'
+                    WHEN c_acctbal < 1000 THEN 'low'
+                    ELSE 'high' END AS balance_band,
+               coalesce(nullif(c_mktsegment, 'MACHINERY'), 'OTHER') AS segment_or_other
+        FROM customer
+    """)
 def q_conditional_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN / coalesce / nullif chains — constant-folded and
     codegen'd by Catalyst."""
@@ -538,6 +809,12 @@ def q_conditional_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT p_partkey,
+               regexp_extract(p_name, '([a-z]+)$', 1) AS last_word,
+               substring(p_brand, 1, 5) AS brand_prefix
+        FROM part
+    """)
 def q_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """regexp_extract + substring over part names (same regex dialect for
     this pattern class in Spark and DuckDB)."""
@@ -549,6 +826,11 @@ def q_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS price_bucket,
+               count(o_orderkey) AS n_orders
+        FROM orders GROUP BY floor(o_totalprice / 50000)
+    """)
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram binning via arithmetic (floor division) — one
     codegen'd projection + partial/final count agg; no shuffle of values."""
@@ -559,6 +841,17 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT l_returnflag, l_linestatus,
+               CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
+               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
+               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_disc_price,
+               count(l_orderkey) AS count_order
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        GROUP BY l_returnflag, l_linestatus
+    """)
 def q_sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL surface: TPC-H Q1 shape via spark.sql over a registered view.
     Decimal-exact sums surfaced as double (order-independent)."""
@@ -578,6 +871,22 @@ def q_sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
+             r AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase')
+        SELECT l.event_id, l.user_id,
+               (SELECT r.event_id FROM r
+                WHERE r.user_id = l.user_id
+                  AND date_trunc('microseconds', r.ts) <= date_trunc('microseconds', l.ts)
+                ORDER BY date_trunc('microseconds', r.ts) DESC, r.event_id DESC
+                LIMIT 1) AS asof_event_id,
+               (SELECT r.value FROM r
+                WHERE r.user_id = l.user_id
+                  AND date_trunc('microseconds', r.ts) <= date_trunc('microseconds', l.ts)
+                ORDER BY date_trunc('microseconds', r.ts) DESC, r.event_id DESC
+                LIMIT 1) AS asof_value
+        FROM l
+    """)
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (union-trick, one shuffle): each click event matched to the
     user's latest purchase at-or-before it. No native Spark op — see
@@ -605,6 +914,28 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH l AS (SELECT event_id, user_id, ts FROM events
+                   WHERE event_type = 'click' AND ts IS NOT NULL),
+             r AS (SELECT event_id, user_id, ts, value FROM events
+                   WHERE event_type = 'purchase' AND ts IS NOT NULL)
+        SELECT l.event_id, l.user_id,
+               (SELECT r.event_id FROM r
+                WHERE r.user_id = l.user_id
+                ORDER BY abs(epoch_us(r.ts) - epoch_us(l.ts)) ASC,
+                         (r.ts <= l.ts) DESC,
+                         CASE WHEN r.ts <= l.ts THEN -r.event_id
+                              ELSE r.event_id END ASC
+                LIMIT 1) AS near_event_id,
+               (SELECT r.value FROM r
+                WHERE r.user_id = l.user_id
+                ORDER BY abs(epoch_us(r.ts) - epoch_us(l.ts)) ASC,
+                         (r.ts <= l.ts) DESC,
+                         CASE WHEN r.ts <= l.ts THEN -r.event_id
+                              ELSE r.event_id END ASC
+                LIMIT 1) AS near_value
+        FROM l
+    """)
 def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest as-of join (either direction, one key exchange): each click
     matched to the user's purchase CLOSEST in time — backward preferred on
@@ -634,6 +965,16 @@ def q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT band, count(o_orderkey) AS n_orders,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+        FROM orders
+        JOIN (VALUES ('low', 0.0, 100000.0),
+                     ('mid', 100000.0, 250000.0),
+                     ('high', 250000.0, 1e9)) b(band, lo, hi)
+          ON o_totalprice >= lo AND o_totalprice < hi
+        GROUP BY band
+    """)
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (band) join: orders bucketed into static price bands via a
     broadcast non-equi join (zero shuffles on the fact side)."""
@@ -652,6 +993,12 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderpriority, count(l_orderkey) AS n_lineitems,
+               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        GROUP BY o_orderpriority
+    """)
 def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-mitigated salted join (deterministic salt, build side replicated
     8x) — result identical to the plain join, so fully oracle-checked."""
@@ -673,6 +1020,11 @@ def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderstatus, o_orderpriority, count(o_orderkey) AS n_orders
+        FROM orders
+        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+    """)
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS beyond rollup/cube — arbitrary grouping combinations in
     one pass (Catalyst Expand: one scan, one shuffle for all sets)."""
@@ -686,6 +1038,20 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT l_orderkey,
+               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
+               CAST(o_orderdate AS TIMESTAMP) AS o_orderdate
+        FROM customer JOIN orders ON c_custkey = o_custkey
+                      JOIN lineitem ON l_orderkey = o_orderkey
+        WHERE c_mktsegment = 'BUILDING'
+          AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
+          AND l_shipdate  > TIMESTAMP '1998-06-01 00:00:00'
+        GROUP BY l_orderkey, o_orderdate
+        ORDER BY revenue DESC, l_orderkey ASC
+        LIMIT 10
+    """)
 def q_sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape (shipping-priority revenue): broadcast customer filter
     into the orders⋈lineitem sort-merge; top-10 via TakeOrderedAndProject."""
@@ -710,6 +1076,21 @@ def q_sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT n_name,
+               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
+        FROM customer JOIN orders   ON c_custkey = o_custkey
+                      JOIN lineitem ON l_orderkey = o_orderkey
+                      JOIN supplier ON l_suppkey = s_suppkey
+                                   AND c_nationkey = s_nationkey
+                      JOIN nation   ON s_nationkey = n_nationkey
+                      JOIN region   ON n_regionkey = r_regionkey
+        WHERE r_name = 'ASIA'
+          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+          AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
+        GROUP BY n_name
+    """)
 def q_sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape (local-supplier revenue per nation): five-way join,
     dims broadcast, facts sort-merged; revenue in exact decimal."""
@@ -734,6 +1115,13 @@ def q_sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_custkey, c_name, o_orderkey, o_totalprice
+        FROM (SELECT * FROM customer WHERE c_custkey % 3 = 0) c
+        FULL OUTER JOIN (SELECT o_orderkey, o_custkey, o_totalprice
+                         FROM orders WHERE o_orderkey % 2 = 0) o
+          ON c.c_custkey = o.o_custkey
+    """)
 def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER join; each side pre-filtered so both contribute unmatched
     rows (exercises null-extension on both sides)."""
@@ -748,6 +1136,9 @@ def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT n_name, r_name FROM nation CROSS JOIN region
+    """)
 def q_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded Cartesian product (nation × region, 25×5) — plan is
     BroadcastNestedLoopJoin; the larger side never shuffles."""
@@ -756,6 +1147,14 @@ def q_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joins.join_cross(n, r)
 
 
+@query(oracle="""
+        SELECT c_custkey,
+               lead(c_acctbal) OVER w AS next_val,
+               CAST(ntile(4) OVER w AS INT) AS quartile,
+               round(percent_rank() OVER w, 6) AS pct_rank
+        FROM customer
+        WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal ASC, c_custkey ASC)
+    """)
 def q_window_lead_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windows.lead_ntile_pct(
         _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_acctbal"),
@@ -767,6 +1166,14 @@ def q_window_lead_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_custkey,
+               first_value(c_custkey) OVER w AS first_key,
+               last_value(c_custkey) OVER w AS last_key
+        FROM customer
+        WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal ASC, c_custkey ASC
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+    """)
 def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windows.first_last_in_group(
         _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment", "c_acctbal"),
@@ -776,6 +1183,14 @@ def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "first_key", "last_key")
 
 
+@query(oracle="""
+        SELECT c_custkey,
+               count(*) OVER (PARTITION BY c_mktsegment
+                              ORDER BY CAST(round(c_acctbal * 100) AS BIGINT)
+                              RANGE BETWEEN 10000 PRECEDING AND 10000 FOLLOWING
+                             ) AS n_neighbors
+        FROM customer
+    """)
 def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame over exact cents (±$100 of neighbors per segment) —
     monetary double converted to integral cents so frame bounds are exact
@@ -790,6 +1205,13 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderpriority, count(o_orderkey) AS n_orders
+        FROM orders
+        WHERE EXISTS (SELECT 1 FROM lineitem
+                      WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
+        GROUP BY o_orderpriority
+    """)
 def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape (adapted to available columns): correlated EXISTS,
     decorrelated by Catalyst into a left-semi join — never a per-row probe."""
@@ -806,6 +1228,10 @@ def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_custkey, c_name FROM customer
+        WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 0)
+    """)
 def q_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN (subquery) → left-semi join against the (tiny, broadcast) keyset —
     never a driver-side collect()ed literal list."""
@@ -819,6 +1245,10 @@ def q_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderkey, o_totalprice FROM orders
+        WHERE o_totalprice > 0.5 * (SELECT max(o_totalprice) FROM orders)
+    """)
 def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery: one aggregate job feeds a filter constant (max is
     exact in double — no FP-threshold ambiguity at the boundary)."""
@@ -831,6 +1261,16 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+               count(l_orderkey) AS n_items
+        FROM lineitem
+        WHERE l_shipdate >= timestamp '1996-01-01 00:00:00'
+          AND l_shipdate <  timestamp '1997-01-01 00:00:00'
+          AND l_discount BETWEEN 0.04 AND 0.06
+          AND l_quantity < 24
+    """)
 def q_sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape (forecasting revenue change): pure scan-filter-agg;
     every predicate reaches the parquet scan as PushedFilters."""
@@ -849,6 +1289,15 @@ def q_sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT round(CAST(sum(CASE WHEN p_type = 'ECONOMY'
+                             THEN CAST(l_extendedprice AS DECIMAL(18,4))
+                                  * CAST(1 - l_discount AS DECIMAL(18,4))
+                             ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE), 4) AS promo_revenue,
+               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS total_revenue
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+    """)
 def q_sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape (promo revenue share): fact⋈dim join + conditional
     aggregate; part broadcasts, lineitem never shuffles. The revenue
@@ -870,6 +1319,11 @@ def q_sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_custkey, count(o_orderkey) AS n_orders,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+        FROM orders GROUP BY o_custkey HAVING count(o_orderkey) >= 12
+    """)
 def q_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY + HAVING — post-aggregate filter (runs after the final
     HashAggregate, before anything is materialized)."""
@@ -886,6 +1340,16 @@ def q_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT p_partkey,
+               upper(p_name) AS name_upper,
+               replace(p_name, ' ', '_') AS name_snake,
+               lpad(p_brand, 10, '0') AS brand_padded,
+               reverse(p_name) AS name_rev,
+               length(p_name) AS name_len,
+               levenshtein(p_brand, 'Brand#1') AS edit_dist
+        FROM part
+    """)
 def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-function family: upper/replace/lpad/reverse/length/
     levenshtein — all JVM-codegen'd, no Python in the plan."""
@@ -901,6 +1365,16 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderkey,
+               year(o_orderdate) AS o_year,
+               month(o_orderdate) AS o_month,
+               day(o_orderdate) AS o_day,
+               CAST(o_orderdate + INTERVAL 30 DAY AS DATE) AS due_date,
+               datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days_since_t0,
+               last_day(CAST(o_orderdate AS DATE)) AS month_end
+        FROM orders
+    """)
 def q_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time-function family: calendar extraction, date arithmetic,
     day-diff, month-end — over the orders date column."""
@@ -917,6 +1391,12 @@ def q_datetime_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT event_id,
+               CAST(json_extract(props, '$.k') AS INT) AS k_val,
+               CAST(json_extract_string(props, '$.tag') AS VARCHAR) AS tag_val
+        FROM events
+    """)
 def q_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-on-read promotion: ``from_json`` parses the raw props JSON
     string into a typed struct once; absent fields surface as NULL (vs
@@ -930,6 +1410,27 @@ def q_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH tokens AS (
+            SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+        ), tf AS (
+            SELECT doc_id, term, count(*) AS tf FROM tokens
+            WHERE length(term) > 0 GROUP BY doc_id, term
+        ), dfreq AS (
+            SELECT term, count(*) AS df FROM tf GROUP BY term
+        ), n AS (
+            SELECT count(DISTINCT doc_id) AS n_docs FROM documents
+        ), scored AS (
+            SELECT tf.doc_id, tf.term,
+                   round(tf.tf * ln(n.n_docs / dfreq.df), 4) AS tfidf
+            FROM tf JOIN dfreq USING (term) CROSS JOIN n
+        )
+        SELECT doc_id, term, tfidf, CAST(rn AS INT) AS rn FROM (
+            SELECT *, row_number() OVER (
+                PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rn
+            FROM scored
+        ) WHERE rn <= 3
+    """)
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF top-3 terms per document (see ``text.tfidf_top_terms`` for
     the shuffle profile). Scores rounded before ranking → deterministic."""
@@ -938,6 +1439,13 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "term", "tfidf", F.col("rn").cast("int").alias("rn"))
 
 
+@query(oracle="""
+        SELECT token, n FROM (
+            SELECT token, count(*) AS n FROM (
+                SELECT unnest(string_split(text, ' ')) AS token FROM documents
+            ) WHERE length(token) > 0 GROUP BY token
+        ) ORDER BY n DESC, token ASC LIMIT 20
+    """)
 def q_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-20 token frequencies via TakeOrderedAndProject."""
     return text.word_count_top(
@@ -945,6 +1453,12 @@ def q_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_nationkey,
+               string_agg(CAST(c_custkey AS VARCHAR), ',' ORDER BY c_custkey) AS custkeys_csv,
+               count(*) AS n_customers
+        FROM customer GROUP BY c_nationkey
+    """)
 def q_collect_list_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic list aggregation: ``collect_list`` ordering is
     partition-order-dependent, so the array is sorted before use — the
@@ -960,6 +1474,11 @@ def q_collect_list_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    -- WHERE mirrors dropDuplicatesWithinWatermark: a row with NULL event
+    -- time cannot be placed in the watermark horizon (r14 nulls row)
+    SELECT event_id, user_id, event_type FROM events WHERE ts IS NOT NULL
+""")
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-dedup of an at-least-once replay: 30% of events are
     re-delivered (exact duplicate rows), the union staged as time-ordered
@@ -983,6 +1502,39 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_id", "user_id", "event_type")
 
 
+@query(oracle="""
+        WITH obs AS (
+            -- non-observations (NULL ts or NULL value) excluded up front,
+            -- mirroring operators/timeseries.py resample_ffill
+            SELECT * FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
+        ),
+        bounds AS (
+            SELECT date_trunc('day', min(ts)) AS d0, date_trunc('day', max(ts)) AS d1
+            FROM obs
+        ),
+        keys AS (SELECT DISTINCT user_id FROM obs),
+        grid AS (
+            SELECT k.user_id, b.d0 + i.i * INTERVAL 1 DAY AS slot
+            FROM keys k
+            CROSS JOIN bounds b
+            CROSS JOIN (SELECT unnest(range(0, 3700)) AS i) i
+            WHERE b.d0 + i.i * INTERVAL 1 DAY <= b.d1
+        ),
+        slotted AS (
+            SELECT user_id, date_trunc('day', ts) AS slot,
+                   arg_max(value,
+                           CAST(floor(epoch(ts)) AS BIGINT) * 1000000000 + event_id
+                   ) AS slot_value
+            FROM obs GROUP BY user_id, date_trunc('day', ts)
+        )
+        SELECT g.user_id, g.slot,
+               last_value(s.slot_value IGNORE NULLS) OVER (
+                   PARTITION BY g.user_id ORDER BY g.slot ASC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS value_ffill
+        FROM grid g LEFT JOIN slotted s
+          ON g.user_id = s.user_id AND g.slot = s.slot
+    """)
 def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily resampling of each user's value stream with forward fill —
     the gap-filling shape every metrics lake needs (see
@@ -998,6 +1550,64 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _media_golden_rows(n: int) -> list[tuple[int, str, bytes]]:
+    """Python-side golden recompute of the deterministic media stub
+    (mirrors ``multimodal.synthetic_media`` + ``_decode_payload``).
+
+    DuckDB's ``sha256`` accepts VARCHAR only, so blob digests (the
+    feature stub) cannot be recomputed in-engine; the expected rows are
+    reconstructed here — driver-side pure Python, independent of the
+    executors' Arrow/mapInPandas path — and embedded as VALUES oracles."""
+    import hashlib
+
+    return [
+        (
+            i,
+            ["image", "audio", "video"][i % 3],
+            hashlib.sha256(str(i).encode()).digest() * 32,
+        )
+        for i in range(n)
+    ]
+
+
+def _media_features_oracle(n: int) -> str:
+    import hashlib
+
+    vals = []
+    for i, mt, payload in _media_golden_rows(n):
+        digest = hashlib.sha256(payload)
+        fb = ",".join(str(b) for b in digest.digest()[:8])
+        vals.append(
+            f"({i}, '{mt}', {len(payload)}, '{digest.hexdigest()}', '{fb}')"
+        )
+    return (
+        "SELECT CAST(media_id AS BIGINT) AS media_id, media_type, "
+        "CAST(payload_bytes AS INT) AS payload_bytes, sha256, feature_bytes "
+        "FROM (VALUES " + ", ".join(vals) + ") "
+        "t(media_id, media_type, payload_bytes, sha256, feature_bytes)"
+    )
+
+
+def _media_frames_oracle(n: int, n_frames: int) -> str:
+    import hashlib
+
+    vals = []
+    for i, mt, payload in _media_golden_rows(n):
+        if mt != "video":
+            continue
+        for f in range(n_frames):
+            digest = hashlib.sha256(payload + bytes([f])).digest()
+            fb = ",".join(str(b) for b in digest[:8])
+            vals.append(f"({i}, {f}, '{fb}')")
+    return (
+        "SELECT CAST(media_id AS BIGINT) AS media_id, "
+        "CAST(frame_idx AS INT) AS frame_idx, feature_bytes "
+        "FROM (VALUES " + ", ".join(vals) + ") "
+        "t(media_id, frame_idx, feature_bytes)"
+    )
+
+
+@query(oracle=_media_frames_oracle(64, 4))
 def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video → per-frame feature rows via cardinality-changing mapInPandas
     (decode stubbed, plumbing real). The ``feature array<float>`` is
@@ -1022,6 +1632,13 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    -- WHERE mirrors the stream-dim INNER join: a NULL user matches no
+    -- dimension row, so it contributes to no tier
+    SELECT CAST(user_id % 4 AS INT) AS tier, count(event_id) AS n
+    FROM events WHERE user_id IS NOT NULL
+    GROUP BY CAST(user_id % 4 AS INT)
+""")
 def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast join: each micro-batch enriches events with
     a static user→tier dimension, then counts per tier under a watermark.
@@ -1057,6 +1674,15 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("tier").agg(F.max("n").alias("n"))
 
 
+@query(oracle="""
+    SELECT v.user_id AS user_id, count(*) AS n_attributed
+    FROM (SELECT user_id, ts, event_id FROM events WHERE event_type = 'view') v
+    JOIN (SELECT user_id AS cu, ts AS cts FROM events WHERE event_type = 'click') c
+      ON v.user_id = c.cu
+     AND c.cts >= v.ts
+     AND c.cts <= v.ts + INTERVAL 30 MINUTE
+    GROUP BY v.user_id
+""")
 def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join (view→click attribution within 30 min):
     BOTH sides are watermarked streams over the same staged event files;
@@ -1084,6 +1710,14 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_attributed"))
 
 
+@query(oracle="""
+        SELECT o_orderkey, o_totalprice, CAST(big.sum_qty AS DOUBLE) AS sum_qty
+        FROM orders JOIN (
+            SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty
+            FROM lineitem GROUP BY l_orderkey
+            HAVING sum(CAST(l_quantity AS DECIMAL(18,4))) > 150
+        ) big ON o_orderkey = big.l_orderkey
+    """)
 def q_sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape (large-volume orders): aggregate subquery in the
     join input, HAVING on an exact decimal sum."""
@@ -1102,6 +1736,13 @@ def q_sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b
+        FROM events a JOIN events b
+          ON a.user_id = b.user_id
+         AND a.event_id < b.event_id
+         AND abs(epoch(a.ts) - epoch(b.ts)) <= 300.0
+    """)
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same-user event pairs within ±5 minutes via the bucketed temporal
     join (equi-join on (user, time-bucket) + exact filter) — never a
@@ -1115,6 +1756,20 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH expanded AS (
+        SELECT event_id, event_type, value, to_timestamp(s) AS ws
+        FROM events,
+             UNNEST(generate_series(
+                 CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800 - 1800,
+                 CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800,
+                 1800)) AS t(s)
+    )
+    SELECT CAST(ws AS TIMESTAMP) AS window_start, event_type,
+           count(event_id) AS n,
+           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+    FROM expanded GROUP BY ws, event_type
+""")
 def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming SLIDING (hopping) windows — each event lands in
     window/slide overlapping buckets; watermark bounds the multiplied
@@ -1143,6 +1798,13 @@ def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT vec_id,
+               CAST(len(list_filter(embedding, x -> x > 0)) AS BIGINT) AS n_positive,
+               CAST(len(list_filter(embedding, x -> x > 0.9)) > 0 AS INT) AS has_gt_09,
+               CAST(len(list_filter(embedding, x -> NOT (x > -1.5))) = 0 AS INT) AS all_gt_neg15
+        FROM embeddings
+    """)
 def q_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array functions beyond transform/aggregate: filter,
     exists, forall over the embedding vectors — all JVM lambda expressions,
@@ -1160,6 +1822,12 @@ def q_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderstatus,
+               bit_or(o_orderkey % 8) AS flags_or,
+               bit_and(o_orderkey % 8) AS flags_and
+        FROM orders GROUP BY o_orderstatus
+    """)
 def q_bitwise_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise OR/AND aggregates per group — flag-set accumulation (e.g.
     merging permission/feature bitmasks) in one partial+final agg pass."""
@@ -1171,6 +1839,13 @@ def q_bitwise_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT p_partkey, 'size' AS attribute, CAST(p_size AS DOUBLE) AS value
+        FROM part
+        UNION ALL
+        SELECT p_partkey, 'retailprice' AS attribute, p_retailprice AS value
+        FROM part
+    """)
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide→long melt): per-part numeric attributes become
     (attribute, value) rows — a narrow Expand projection, no shuffle at
@@ -1183,6 +1858,13 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.unpivot("p_partkey", ["size", "retailprice"], "attribute", "value")
 
 
+@query(oracle="""
+        SELECT o_orderstatus, o_orderpriority,
+               count(o_orderkey) AS n_orders,
+               CAST(grouping(o_orderstatus) AS INT) AS g_status,
+               CAST(grouping(o_orderpriority) AS INT) AS g_priority
+        FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
+    """)
 def q_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollup with GROUPING() flags: distinguishes a real NULL key from a
     subtotal row — the correctness subtlety naive rollup consumers miss."""
@@ -1194,6 +1876,11 @@ def q_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT lower(p_type) AS item_type, p_brand AS brand,
+               count(p_partkey) AS n_items
+        FROM part GROUP BY lower(p_type), p_brand
+    """)
 def q_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The engine's flagship dataflow end-to-end: part staged as bronze
     JSON-lines → explicit-schema scan → curated silver (trim/lower
@@ -1232,6 +1919,12 @@ def q_medallion_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT s_nationkey,
+               count(s_suppkey) AS n_suppliers,
+               CAST(sum(CAST(s_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_bal
+        FROM supplier GROUP BY s_nationkey
+    """)
 def q_versioned_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Versioned-table lifecycle end-to-end: supplier written as a
     deliberately fragmented version (16 small files) → atomic compaction
@@ -1256,6 +1949,13 @@ def q_versioned_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_custkey, c_name, c_acctbal, CAST(NULL AS VARCHAR) AS c_mktsegment
+        FROM customer WHERE c_custkey % 2 = 0
+        UNION ALL
+        SELECT c_custkey, c_name, c_acctbal, c_mktsegment
+        FROM customer WHERE c_custkey % 2 = 1
+    """)
 def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution union: two snapshots with different column ORDER and
     one missing column unioned by NAME (positional union would silently
@@ -1270,6 +1970,18 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     return old_snap.unionByName(new_snap, allowMissingColumns=True)
 
 
+@query(oracle="""
+        WITH o AS (
+            SELECT o_orderkey,
+                   CASE WHEN o_totalprice >= 300000.0
+                        THEN CAST(floor(o_totalprice / 100000) AS BIGINT) END AS band
+            FROM orders
+        ), ref(band, label) AS (
+            VALUES (3, 'high3'), (4, 'high4'), (NULL, 'small')
+        )
+        SELECT o_orderkey, label
+        FROM o JOIN ref ON o.band IS NOT DISTINCT FROM ref.band
+    """)
 def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equality join (<=>): NULL keys match each other instead of
     disappearing — the semantics audits need when joining on nullable
@@ -1286,6 +1998,11 @@ def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select("o_orderkey", "label")
 
 
+@query(oracle="""
+        SELECT l_returnflag, count(*) AS n,
+               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+        FROM lineitem GROUP BY l_returnflag
+    """)
 def q_skew_agg_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-resistant two-level aggregation (salted partials → final) —
     result provably identical to the direct group aggregate, which is what
@@ -1297,6 +2014,45 @@ def q_skew_agg_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH RECURSIVE sh AS (
+            SELECT doc_id,
+                   list_distinct(list_transform(
+                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
+                       i -> array_to_string(list_slice(
+                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
+                   )) AS shingles
+            FROM documents
+        ),
+        sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
+        ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
+        inter AS (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   a.set_size AS sz_a, b.set_size AS sz_b,
+                   count(*) AS n_inter
+            FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
+        ),
+        pairs AS (
+            SELECT id_a, id_b FROM inter
+            WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.2
+        ),
+        sym AS (
+            SELECT id_a AS s, id_b AS d FROM pairs
+            UNION ALL
+            SELECT id_b AS s, id_a AS d FROM pairs
+        ),
+        reach AS (
+            SELECT s, d FROM sym
+            UNION
+            SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s
+        ),
+        losers AS (
+            SELECT s AS doc_id FROM reach GROUP BY s HAVING least(s, min(d)) <> s
+        )
+        SELECT doc_id, lang, source FROM documents
+        WHERE doc_id NOT IN (SELECT doc_id FROM losers)
+    """)
 def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The actual dedup OUTPUT: drop every near-dup cluster member except
     its canonical (min-id) doc — the corpus a training pipeline would keep.
@@ -1315,6 +2071,21 @@ def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.join(losers, "doc_id", "left_anti")
 
 
+@query(oracle="""
+        SELECT c_custkey, c_name, n_name,
+               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
+        FROM customer
+        JOIN orders   ON c_custkey = o_custkey
+        JOIN lineitem ON l_orderkey = o_orderkey
+        JOIN nation   ON c_nationkey = n_nationkey
+        WHERE l_returnflag = 'R'
+          AND o_orderdate >= timestamp '1996-01-01 00:00:00'
+          AND o_orderdate <  timestamp '1997-01-01 00:00:00'
+        GROUP BY c_custkey, c_name, n_name
+        ORDER BY revenue DESC, c_custkey ASC
+        LIMIT 20
+    """)
 def q_sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape (returned-item revenue, top 20 customers): fact⋈fact
     sort-merge + dim broadcasts + decimal revenue + deterministic top-k."""
@@ -1339,6 +2110,18 @@ def q_sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_mktsegment,
+               count(c_custkey) AS n_custs,
+               CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_bal
+        FROM customer
+        WHERE c_acctbal > (SELECT avg(CAST(c_acctbal AS DECIMAL(18,4)))
+                           FROM customer WHERE c_acctbal > 0.0)
+          AND NOT EXISTS (SELECT 1 FROM orders
+                          WHERE o_custkey = c_custkey
+                            AND o_totalprice > 350000.0)
+        GROUP BY c_mktsegment
+    """)
 def q_sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape (global sales opportunity): scalar AVG subquery +
     NOT EXISTS anti join, bucketed by segment (the cntrycode analog)."""
@@ -1360,6 +2143,16 @@ def q_sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT s_suppkey, 'delete' AS change_type
+        FROM supplier WHERE s_suppkey % 7 = 0
+        UNION ALL
+        SELECT s_suppkey, 'update' AS change_type
+        FROM supplier WHERE s_suppkey % 7 <> 0 AND s_suppkey % 5 = 0
+        UNION ALL
+        SELECT s_suppkey + 1000000, 'insert' AS change_type
+        FROM supplier WHERE s_suppkey % 11 = 0
+    """)
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC between two supplier snapshots (the change feed a downstream
     consumer would ingest): v2 deterministically deletes every 7th key,
@@ -1381,6 +2174,14 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lake.diff_snapshots(v1, v2, ["s_suppkey"])
 
 
+@query(oracle="""
+        SELECT o_orderstatus,
+               count(o_orderkey) AS n_orders,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
+        FROM orders
+        WHERE o_totalprice >= 100000.0 AND o_totalprice < 120000.0
+        GROUP BY o_orderstatus
+    """)
 def q_range_sorted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-skipping layout end-to-end: orders staged range-partitioned +
     in-file-sorted on o_totalprice, then a selective range predicate scans
@@ -1402,6 +2203,22 @@ def q_range_sorted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT n1.n_name AS supp_nation,
+               n2.n_name AS cust_nation,
+               CAST(year(l_shipdate) AS BIGINT) AS l_year,
+               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
+        FROM lineitem
+        JOIN supplier ON l_suppkey = s_suppkey
+        JOIN orders   ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+           OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
+        GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
+    """)
 def q_sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape (volume shipping between a nation pair): the fact
     joins TWO independent dim chains (supplier→nation, orders→customer→
@@ -1430,6 +2247,17 @@ def q_sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
+        FROM lineitem JOIN part ON l_partkey = p_partkey
+        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
+               AND l_quantity BETWEEN 1 AND 11)
+           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
+               AND l_quantity BETWEEN 10 AND 20)
+           OR (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 15
+               AND l_quantity BETWEEN 20 AND 30)
+    """)
 def q_sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape (discounted revenue, disjunctive predicates): an
     OR-of-ANDs across both join sides — Catalyst pushes the common
@@ -1452,6 +2280,29 @@ def q_sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_year,
+               round(CAST(sum(CASE WHEN nation = 'NATION_5' THEN volume ELSE CAST(0 AS DECIMAL(18,8)) END) AS DOUBLE)
+                     / CAST(sum(volume) AS DOUBLE), 4) + 0.0 AS mkt_share
+        FROM (
+            SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
+                   CAST(l_extendedprice AS DECIMAL(18,4))
+                     * CAST(1 - l_discount AS DECIMAL(18,4)) AS volume,
+                   n2.n_name AS nation
+            FROM lineitem
+            JOIN part     ON p_partkey = l_partkey
+            JOIN supplier ON s_suppkey = l_suppkey
+            JOIN orders   ON l_orderkey = o_orderkey
+            JOIN customer ON o_custkey = c_custkey
+            JOIN nation n1 ON c_nationkey = n1.n_nationkey
+            JOIN region   ON n1.n_regionkey = r_regionkey
+            JOIN nation n2 ON s_nationkey = n2.n_nationkey
+            WHERE r_name = 'ASIA'
+              AND o_orderdate BETWEEN DATE '1995-01-01' AND DATE '1996-12-31'
+              AND p_type = 'PROMO'
+        ) all_nations
+        GROUP BY o_year
+    """)
 def q_sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape (national market share): the deepest dim chain in the
     suite — lineitem joins part + supplier + orders→customer→nation→region,
@@ -1488,6 +2339,16 @@ def q_sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
+        FROM (
+            SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
+            FROM customer LEFT JOIN orders
+              ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+            GROUP BY c_custkey
+        ) c_orders
+        GROUP BY c_count
+    """)
 def q_sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape (customer order-count distribution): a LEFT join
     whose extra ON-clause predicate must stay in the join (not become a
@@ -1509,6 +2370,20 @@ def q_sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH revenue AS (
+            SELECT l_suppkey AS supplier_no,
+                   sum(CAST(l_extendedprice AS DECIMAL(18,4))
+                       * CAST(1 - l_discount AS DECIMAL(18,4))) AS total_revenue
+            FROM lineitem
+            WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-04-01'
+            GROUP BY l_suppkey
+        )
+        SELECT s_suppkey, s_name,
+               round(CAST(total_revenue AS DOUBLE), 4) AS total_revenue
+        FROM supplier JOIN revenue ON s_suppkey = supplier_no
+        WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
+    """)
 def q_sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape (top supplier): a derived revenue relation consumed
     twice — once joined to supplier, once reduced to its max — with the
@@ -1534,6 +2409,16 @@ def q_sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 4)
+                 + 0.0 AS avg_yearly
+        FROM lineitem JOIN part ON p_partkey = l_partkey
+        WHERE p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
+          AND l_quantity < (
+              SELECT 0.2 * avg(l2.l_quantity) FROM lineitem l2
+              WHERE l2.l_partkey = p_partkey
+          )
+    """)
 def q_sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape (small-quantity revenue): a correlated scalar
     subquery per part — Catalyst de-correlates it into a per-partkey
@@ -1555,6 +2440,15 @@ def q_sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT doc_id, lang,
+               CASE WHEN substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'split-v1')), 1, 8)
+                         < 'cccccccc' THEN 'train'
+                    WHEN substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'split-v1')), 1, 8)
+                         < 'e6666666' THEN 'val'
+                    ELSE 'test' END AS split
+        FROM documents
+    """)
 def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test split: the label is a pure
     function of (doc_id, seed) via lexicographic md5-bucket comparison —
@@ -1564,6 +2458,16 @@ def q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT doc_id, lang, source FROM documents
+        WHERE substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'sample-v1')), 1, 8)
+              < CASE lang WHEN 'en' THEN '80000000'
+                          WHEN 'es' THEN '40000000'
+                          WHEN 'de' THEN '20000000'
+                          WHEN 'zh' THEN 'g'
+                          WHEN 'fr' THEN 'g'
+                          ELSE '00000000' END
+    """)
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language deterministic downsample (keep all rare langs, thin
     dominant ones) — hash-threshold filter, no RNG, exact oracle."""
@@ -1573,6 +2477,34 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH sh AS (
+            SELECT doc_id,
+                   list_distinct(list_transform(
+                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
+                       i -> array_to_string(list_slice(
+                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
+                   )) AS shingles
+            FROM documents
+        ),
+        corpus AS (
+            SELECT doc_id, len(shingles) AS n_shingles, unnest(shingles) AS shingle
+            FROM sh WHERE doc_id % 20 <> 0
+        ),
+        bench AS (
+            SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % 20 = 0
+        ),
+        hits AS (
+            SELECT doc_id, n_shingles, count(*) AS n_overlap
+            FROM corpus JOIN bench USING (shingle)
+            GROUP BY doc_id, n_shingles
+        )
+        SELECT doc_id, n_overlap,
+               CAST(n_shingles AS BIGINT) AS n_shingles,
+               round(n_overlap / n_shingles, 4) AS overlap_ratio
+        FROM hits
+        WHERE round(n_overlap / n_shingles, 4) >= 0.1
+    """)
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination sweep: training docs (doc_id % 20 != 0)
     whose 3-gram overlap with the held-out benchmark slice (doc_id % 20
@@ -1584,6 +2516,29 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.decontaminate(corpus, benchmark, n=3, threshold=0.1)
 
 
+@query(oracle="""
+        WITH RECURSIVE tok AS (
+            SELECT doc_id, lang,
+                   CAST(CASE WHEN trim(text) = '' THEN 0
+                        ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END AS BIGINT) AS n_tokens,
+                   row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
+            FROM documents
+        ),
+        packed AS (
+            SELECT doc_id, lang, n_tokens, rn,
+                   CAST(0 AS BIGINT) AS pack_id,
+                   CAST(0 AS BIGINT) AS pack_pos,
+                   n_tokens AS running
+            FROM tok WHERE rn = 1
+            UNION ALL
+            SELECT t.doc_id, t.lang, t.n_tokens, t.rn,
+                   CASE WHEN p.running + t.n_tokens > 256 THEN p.pack_id + 1 ELSE p.pack_id END,
+                   CASE WHEN p.running + t.n_tokens > 256 THEN CAST(0 AS BIGINT) ELSE p.pack_pos + 1 END,
+                   CASE WHEN p.running + t.n_tokens > 256 THEN t.n_tokens ELSE p.running + t.n_tokens END
+            FROM tok t JOIN packed p ON t.lang = p.lang AND t.rn = p.rn + 1
+        )
+        SELECT doc_id, lang, n_tokens, pack_id, pack_pos FROM packed
+    """)
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy 256-token context-window packing per language via
     ``applyInPandas`` — sequential within a group, parallel across
@@ -1592,6 +2547,36 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packing.pack_sequences(_t(spark, sf_dir, "documents"), budget=256)
 
 
+@query(oracle="""
+        WITH tok AS (
+            SELECT doc_id,
+                   unnest(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) AS token
+            FROM documents
+        ),
+        uni AS (SELECT doc_id, token, count(*) AS c FROM tok GROUP BY 1, 2),
+        us AS (
+            SELECT doc_id, sum(c) AS n_tokens, count(*) AS n_distinct, max(c) AS top_c
+            FROM uni GROUP BY 1
+        ),
+        big AS (
+            SELECT doc_id,
+                   unnest(list_transform(
+                       range(1, greatest(len(toks) - 1, 0) + 1),
+                       i -> array_to_string(list_slice(toks, i, i + 1), ' ')
+                   )) AS bigram
+            FROM (SELECT doc_id,
+                         regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+') AS toks
+                  FROM documents)
+        ),
+        bi AS (SELECT doc_id, bigram, count(*) AS c FROM big GROUP BY 1, 2),
+        bs AS (SELECT doc_id, sum(c) AS n_bigrams, max(c) AS top_bi_c FROM bi GROUP BY 1)
+        SELECT us.doc_id,
+               CAST(n_tokens AS BIGINT) AS n_tokens,
+               round(n_distinct / n_tokens, 4) AS distinct_ratio,
+               round(top_c / n_tokens, 4) AS top_token_frac,
+               round(top_bi_c / n_bigrams, 4) AS top_bigram_frac
+        FROM us LEFT JOIN bs ON us.doc_id = bs.doc_id
+    """)
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style per-doc repetition signals (distinct-token ratio,
     top-token and top-bigram fractions) — the quality-filter inputs for
@@ -1599,6 +2584,29 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.repetition_stats(_t(spark, sf_dir, "documents"))
 
 
+@query(oracle="""
+        WITH sh AS (
+            SELECT doc_id,
+                   unnest(list_distinct(list_transform(
+                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
+                       i -> array_to_string(list_slice(
+                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
+                   ))) AS shingle
+            FROM documents
+        ),
+        dfc AS (SELECT shingle, count(DISTINCT doc_id) AS n_docs FROM sh GROUP BY 1),
+        boiler AS (SELECT shingle FROM dfc WHERE n_docs >= 4),
+        na AS (SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY 1),
+        nb AS (
+            SELECT doc_id, count(*) AS n_boiler
+            FROM sh JOIN boiler USING (shingle) GROUP BY 1
+        )
+        SELECT na.doc_id,
+               CAST(n_shingles AS BIGINT) AS n_shingles,
+               CAST(coalesce(n_boiler, 0) AS BIGINT) AS n_boiler,
+               round(coalesce(n_boiler, 0) / n_shingles, 4) AS boiler_frac
+        FROM na LEFT JOIN nb ON na.doc_id = nb.doc_id
+    """)
 def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style boilerplate detector: fraction of each doc's distinct
     3-grams that occur in >= 4 distinct documents corpus-wide."""
@@ -1607,6 +2615,27 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH dirty AS (
+            SELECT doc_id,
+                   CASE WHEN doc_id % 3 = 0
+                        THEN concat(text, ' contact user', CAST(doc_id AS VARCHAR),
+                                    '@example.com from 10.0.',
+                                    CAST(doc_id % 256 AS VARCHAR), '.42')
+                        ELSE text END AS text
+            FROM documents
+        )
+        SELECT doc_id,
+               CAST(len(regexp_extract_all(text,
+                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+               CAST(len(regexp_extract_all(text,
+                   '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b')) AS BIGINT) AS n_ips,
+               regexp_replace(
+                   regexp_replace(text,
+                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+                   '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '<IP>', 'g') AS redacted
+        FROM dirty
+    """)
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub (emails + IPv4) with per-doc redaction counts. The corpus
     is word-salad, so every third doc is deterministically contaminated
@@ -1632,6 +2661,22 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.pii_redact(dirty)
 
 
+@query(oracle="""
+        WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
+        m AS (SELECT min(n) AS min_n FROM c),
+        r AS (SELECT lang, round(pow(n / min_n, -0.5), 4) AS rate FROM c, m),
+        t AS (
+            SELECT lang, rate,
+                   CASE WHEN rate >= 1.0 THEN 'g'
+                        ELSE lpad(lower(to_hex(CAST(floor(rate * 4294967296.0) AS BIGINT))), 8, '0')
+                   END AS threshold
+            FROM r
+        )
+        SELECT d.doc_id, d.lang, t.rate
+        FROM documents d JOIN t ON d.lang = t.lang
+        WHERE substr(md5(concat_ws(':', CAST(d.doc_id AS VARCHAR), 'mix-v1')), 1, 8)
+              < t.threshold
+    """)
 def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-flattened language mix (alpha=0.5): dominant langs are
     hash-downsampled toward the rare ones; rates derive from the data and
@@ -1641,6 +2686,19 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH s AS (
+            SELECT doc_id,
+                   md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'shard-v1')) AS hash
+            FROM documents
+        )
+        SELECT doc_id,
+               CAST(strpos('0123456789abcdef', substr(hash, 1, 1)) - 1 AS BIGINT) AS shard,
+               CAST(row_number() OVER (
+                   PARTITION BY strpos('0123456789abcdef', substr(hash, 1, 1))
+                   ORDER BY hash, doc_id) AS BIGINT) AS pos
+        FROM s
+    """)
 def q_shard_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global training-shard order: 16 hash shards + rank of
     the md5 digest within each shard — a reproducible corpus shuffle with
@@ -1648,6 +2706,32 @@ def q_shard_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampling.shard_order(_t(spark, sf_dir, "documents").select("doc_id"))
 
 
+@query(oracle="""
+    WITH x AS (
+        SELECT vec_id,
+               list_transform(embedding, v -> CAST(v AS DOUBLE)) AS xd
+        FROM embeddings
+    ),
+    s AS (
+        SELECT vec_id, xd,
+               list_aggregate(list_transform(xd, v -> abs(v)), 'max') AS raw_scale
+        FROM x
+    ),
+    g AS (
+        SELECT vec_id, xd,
+               CASE WHEN raw_scale = 0 THEN 1.0 ELSE raw_scale END AS scale
+        FROM s
+    ),
+    q AS (
+        SELECT vec_id, scale,
+               list_transform(xd, v -> CAST(floor(v * 127.0 / scale) AS INT)) AS qv
+        FROM g
+    )
+    SELECT vec_id, scale,
+           array_to_string(qv, ',') AS q_csv,
+           CAST(list_aggregate(qv, 'sum') AS BIGINT) AS q_sum
+    FROM q
+""")
 def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector max-abs int8 quantization of the embedding table —
     floor-based so the codes are bit-identical across engines; codes
@@ -1655,6 +2739,24 @@ def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.quantize_embeddings(_t(spark, sf_dir, "embeddings"))
 
 
+@query(oracle="""
+    WITH daily AS (
+        SELECT event_type, CAST(ts AS DATE) AS day,
+               sum(CAST(value AS DECIMAL(18,4))) AS dec_total
+        FROM events GROUP BY 1, 2
+    ),
+    d2 AS (
+        SELECT event_type, day,
+               date_diff('day', DATE '1970-01-01', day) AS day_num, dec_total
+        FROM daily
+    )
+    SELECT event_type, day,
+           round(CAST(dec_total AS DOUBLE), 4) + 0.0 AS daily_total,
+           round(CAST(sum(dec_total) OVER w AS DOUBLE) / count(*) OVER w, 4) + 0.0 AS avg_7d
+    FROM d2
+    WINDOW w AS (PARTITION BY event_type ORDER BY day_num
+                 RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
+""")
 def q_moving_avg_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 7-day moving average of daily event value per event type —
     the time-RANGE window frame (gap days widen the frame; a rows-frame
@@ -1662,6 +2764,15 @@ def q_moving_avg_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     return timeseries.moving_avg_time(_t(spark, sf_dir, "events"), days=7)
 
 
+@query(oracle="""
+    SELECT o_orderstatus,
+           count(o_orderkey) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
+    FROM orders
+    WHERE o_totalprice >= 100000.0 AND o_totalprice < 150000.0
+      AND o_orderdate >= DATE '1995-01-01' AND o_orderdate < DATE '1996-01-01'
+    GROUP BY 1
+""")
 def q_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout end-to-end: orders staged Morton-interleaved on
     (o_totalprice, order day), then a 2-D box predicate scans the layout —
@@ -1690,6 +2801,65 @@ def q_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _kmeans_oracle_sql(k: int, iters: int, col: str, table: str) -> str:
+    """Unrolled Lloyd's-iteration CTE oracle mirroring
+    ``clustering.kmeans_1d`` exactly: same IEEE init expression, same
+    strict-lowest-index argmin, same decimal-mean 4dp rounding — so every
+    iteration is bit-identical to the Spark loop."""
+    ks = ", ".join(f"k{j}" for j in range(k))
+    init = ", ".join(f"lo + ({j} + 0.5)*(hi - lo)/{k} AS k{j}" for j in range(k))
+    dists = ", ".join(f"(x - k{j})*(x - k{j}) AS d{j}" for j in range(k))
+    least = ", ".join(f"d{j}" for j in range(k))
+    argmin = (
+        "CASE "
+        + " ".join(f"WHEN d{j} = bd THEN {j}" for j in range(k - 1))
+        + f" ELSE {k - 1} END"
+    )
+    parts = [
+        f"WITH b AS (SELECT min(CAST({col} AS DOUBLE)) AS lo,"
+        f" max(CAST({col} AS DOUBLE)) AS hi FROM {table}),",
+        f"c0 AS (SELECT {init} FROM b),",
+        # WHERE mirrors kmeans_1d's NULL-point exclusion: a NULL value has
+        # no cluster assignment
+        f"p AS (SELECT CAST({col} AS DOUBLE) AS x FROM {table}"
+        f" WHERE {col} IS NOT NULL),",
+    ]
+    for i in range(1, iters + 1):
+        parts.append(
+            f"a{i} AS (SELECT x, {argmin} AS c FROM ("
+            f"SELECT x, least({least}) AS bd, {least} FROM ("
+            f"SELECT x, {dists} FROM p, c{i - 1}))),"
+        )
+        parts.append(
+            f"m{i} AS (SELECT c, count(*) AS n,"
+            f" round(CAST(sum(CAST(x AS DECIMAL(18,4))) AS DOUBLE)/count(*), 4)"
+            f" + 0.0 AS mu FROM a{i} GROUP BY c),"
+        )
+        if i < iters:
+            upd = ", ".join(
+                f"coalesce(max(CASE WHEN m.c = {j} THEN m.mu END), max(pr.k{j})) AS k{j}"
+                for j in range(k)
+            )
+            parts.append(f"c{i} AS (SELECT {upd} FROM m{i} m, c{i - 1} pr),")
+    spine = ", ".join(f"({j})" for j in range(k))
+    prev_case = (
+        "CASE s.cluster_id "
+        + " ".join(f"WHEN {j} THEN pr.k{j}" for j in range(k))
+        + " END"
+    )
+    parts.append(
+        f"s AS (SELECT CAST(j AS BIGINT) AS cluster_id FROM (VALUES {spine}) t(j))"
+    )
+    parts.append(
+        "SELECT s.cluster_id, CAST(coalesce(m.n, 0) AS BIGINT) AS n_points,"
+        f" coalesce(m.mu, {prev_case}) AS centroid"
+        f" FROM s CROSS JOIN c{iters - 1} pr"
+        f" LEFT JOIN m{iters} m ON m.c = s.cluster_id"
+    )
+    return "\n".join(parts)
+
+
+@query(oracle=_kmeans_oracle_sql(4, 3, "o_totalprice", "orders"))
 def q_kmeans_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means over order totals (k=4, 3 iterations): deterministic
     mid-bin init, codegen'd argmin assignment against broadcast centroid
@@ -1700,6 +2870,28 @@ def q_kmeans_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=r"""
+    WITH t AS (
+        SELECT doc_id,
+               CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
+                    ELSE string_split_regex(trim(text), '[ \t\n\r\f\x0b]+') END AS toks
+        FROM documents
+    ),
+    s AS (
+        SELECT doc_id, toks,
+               unnest(range(0, greatest(len(toks), 1), 48)) AS start
+        FROM t
+    ),
+    c AS (
+        SELECT doc_id, start, toks[start + 1 : start + 64] AS chunk FROM s
+    )
+    SELECT doc_id,
+           CAST(start / 48 AS BIGINT) AS chunk_id,
+           CAST(len(chunk) AS BIGINT) AS n_tokens,
+           array_to_string(chunk, ' ') AS chunk_text
+    FROM c
+    WHERE len(chunk) > 0
+""")
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (64-token chunks, 16-token
     overlap) — context-window prep before packing. One explode over a
@@ -1709,6 +2901,27 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# q_hll_partitioned rows-only -> oracle upgrade (r14): n_parts counts the
+# (type, day) cells the merge consumed — one per DISTINCT (event_type,
+# to_date(ts)) incl. NULL days (count(DISTINCT x) would skip them, so the
+# cell relation is materialized first); the Datasketches estimate surfaces
+# only through the self-diagnosing bounded-accuracy flag.
+@query(oracle="""
+    WITH cells AS (
+        SELECT DISTINCT event_type, CAST(ts AS DATE) AS day FROM events
+    ),
+    np AS (
+        SELECT event_type, CAST(count(*) AS BIGINT) AS n_parts
+        FROM cells GROUP BY event_type
+    ),
+    ex AS (
+        SELECT event_type,
+               CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct
+        FROM events GROUP BY event_type
+    )
+    SELECT ex.event_type, np.n_parts, ex.exact_distinct, 'ok' AS est_ok
+    FROM ex JOIN np ON ex.event_type IS NOT DISTINCT FROM np.event_type
+""")
 def q_hll_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable-sketch distinct users per event type: one Datasketches HLL
     sketch per (type, day) unioned per type — the incremental rollup shape
@@ -1754,6 +2967,77 @@ def q_hll_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Portable HLL (r8 growth): every register, the integer harmonic
+# denominator, and the single-division estimate recomputed in-engine.
+# Constants (the alpha·m²·2^53 numerator, thresholds) are inlined from
+# the same Python values the Spark plan embeds; rho comes from the md5
+# HEX TEXT (4 bits per leading '0' + a CASE on the first non-zero digit)
+# so there is no floating log2 anywhere; the only libm step is the
+# small-range branch's ln, rounded at 4dp per the zipf/PMI discipline.
+from datalake_breweries_two_spark.operators.setops import (
+    HLL_M as _HLL_M,
+    HLL_NUMERATOR as _HLL_NUM,
+)
+
+
+# Shared register/rho/estimate CTE block for BOTH portable-HLL oracles
+# (r14 review finding: the rollup oracle had copy-pasted this verbatim,
+# and the one freshly-written CTE it added was where its NULL-day bug
+# crept in). References a `keyed` CTE with columns (g, h, k); ends at
+# `fin` with (g, n_used, exact_distinct, hll_estimate).
+_HLL_REGISTER_ESTIMATE_CTES = f"""
+    br AS (
+        SELECT g,
+               CAST(('0x' || substr(h, 1, 2)) AS INT) AS bucket,
+               CASE WHEN ltrim(substr(h, 3, 13), '0') = '' THEN 53
+                    ELSE (13 - length(ltrim(substr(h, 3, 13), '0'))) * 4
+                         + CASE substr(ltrim(substr(h, 3, 13), '0'), 1, 1)
+                             WHEN '1' THEN 3
+                             WHEN '2' THEN 2 WHEN '3' THEN 2
+                             WHEN '4' THEN 1 WHEN '5' THEN 1
+                             WHEN '6' THEN 1 WHEN '7' THEN 1
+                             ELSE 0 END
+                         + 1 END AS rho
+        FROM keyed
+    ),
+    regs AS (SELECT g, bucket, max(rho) AS reg FROM br GROUP BY g, bucket),
+    pg AS (
+        SELECT g, CAST(count(*) AS INT) AS n_used,
+               CAST(sum(CAST(1 AS BIGINT) << (53 - reg)) AS BIGINT) AS s_present
+        FROM regs GROUP BY g
+    ),
+    ex AS (
+        SELECT g, CAST(count(DISTINCT k) AS BIGINT) AS exact_distinct
+        FROM keyed GROUP BY g
+    ),
+    est AS (
+        SELECT pg.g, pg.n_used, ex.exact_distinct,
+               {_HLL_NUM!r} / CAST(pg.s_present
+                   + CAST({_HLL_M} - pg.n_used AS BIGINT) * CAST({1 << 53} AS BIGINT)
+                   AS DOUBLE) AS raw,
+               {_HLL_M} - pg.n_used AS v_zero
+        FROM pg JOIN ex ON pg.g IS NOT DISTINCT FROM ex.g
+    ),
+    fin AS (
+        SELECT g, n_used, exact_distinct,
+               CASE WHEN raw <= {2.5 * _HLL_M!r} AND v_zero > 0
+                    THEN round({float(_HLL_M)!r} * ln({float(_HLL_M)!r} / CAST(v_zero AS DOUBLE)), 4)
+                    ELSE round(raw, 4) END AS hll_estimate
+        FROM est
+    )"""
+
+
+@query(oracle=f"""
+    WITH keyed AS (
+        SELECT event_type AS g, md5(CAST(user_id AS VARCHAR)) AS h, user_id AS k
+        FROM events WHERE user_id IS NOT NULL
+    ),
+{_HLL_REGISTER_ESTIMATE_CTES}
+    SELECT g AS event_type, n_used, hll_estimate, exact_distinct,
+           round(abs(hll_estimate - CAST(exact_distinct AS DOUBLE))
+                 / CAST(exact_distinct AS DOUBLE), 4) AS abs_rel_err
+    FROM fin
+""")
 def q_hll_union_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable-HLL distinct users per event type (r8 growth): the same
     sketch-per-(type, day) → register-wise-MAX-merge rollup shape as
@@ -1768,6 +3052,30 @@ def q_hll_union_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH v AS (
+        SELECT user_id, min(ts) AS t_view FROM events
+        WHERE event_type = 'view' GROUP BY 1
+    ),
+    c AS (
+        SELECT v.user_id, v.t_view, min(e.ts) AS t_click
+        FROM v LEFT JOIN events e
+          ON e.user_id = v.user_id AND e.event_type = 'click'
+         AND e.ts > v.t_view AND e.ts <= v.t_view + INTERVAL 60 MINUTE
+        GROUP BY 1, 2
+    ),
+    p AS (
+        SELECT c.user_id, c.t_view, c.t_click, min(e.ts) AS t_purchase
+        FROM c LEFT JOIN events e
+          ON e.user_id = c.user_id AND e.event_type = 'purchase'
+         AND e.ts > c.t_click AND e.ts <= c.t_click + INTERVAL 60 MINUTE
+        GROUP BY 1, 2, 3
+    )
+    SELECT user_id, t_view, t_click, t_purchase,
+           CAST(1 + (CASE WHEN t_click IS NULL THEN 0 ELSE 1 END)
+                  + (CASE WHEN t_purchase IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS stage_depth
+    FROM p
+""")
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anchored view→click→purchase funnel within 60-minute hops: per-user
     stage timestamps + depth. Each stage is a conditional left join +
@@ -1775,12 +3083,80 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return behavior.funnel_stages(_t(spark, sf_dir, "events"))
 
 
+@query(oracle="""
+    WITH f AS (
+        SELECT user_id, CAST(min(ts) AS DATE) AS cohort_day
+        FROM events GROUP BY 1
+    ),
+    a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events)
+    SELECT f.cohort_day,
+           CAST(date_diff('day', f.cohort_day, a.day) AS BIGINT) AS day_offset,
+           count(*) AS n_users
+    FROM a JOIN f USING (user_id)
+    GROUP BY 1, 2
+""")
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily cohort retention triangle: first-seen day × day-offset user
     counts from the distinct user-day relation."""
     return behavior.cohort_retention(_t(spark, sf_dir, "events"))
 
 
+def _pagerank_oracle_sql(num_iter: int = 10) -> str:
+    """Unrolled power-iteration oracle: fixed-count iterative algorithms are
+    SQL-expressible by chaining one CTE per iteration (recursive CTEs can't
+    aggregate in the recursive term). Mirrors graph.pagerank exactly —
+    same 4dp edge rounding, fixed-point int64 rank units (1e-8)."""
+    sq = (
+        "sqrt(list_aggregate(list_transform({v}, "
+        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))"
+    )
+    cos = (
+        "round(list_aggregate(list_transform(range(1, len(ea) + 1), "
+        "i -> CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)), 'sum') "
+        f"/ ({sq.format(v='ea')} * {sq.format(v='eb')}), 4)"
+    )
+    parts = [
+        f"""
+    WITH sub AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
+    pr AS (
+        SELECT a.vec_id AS src, b.vec_id AS dst, a.embedding AS ea, b.embedding AS eb
+        FROM sub a JOIN sub b ON a.vec_id <> b.vec_id
+    ),
+    scored AS (SELECT src, dst, {cos} AS cos FROM pr),
+    e AS (
+        SELECT src, dst FROM (
+            SELECT src, dst,
+                   row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
+            FROM scored
+        ) WHERE rn <= 3
+    ),
+    deg AS (SELECT src, count(*) AS d FROM e GROUP BY 1),
+    nodes AS (SELECT DISTINCT node FROM (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
+    nn AS (SELECT count(*) AS cnt FROM nodes),
+    i0 AS (SELECT node, CAST(floor(100000000 / cnt) AS BIGINT) AS rank_e8 FROM nodes, nn)"""
+    ]
+    for t in range(num_iter):
+        parts.append(
+            f"""
+    i{t + 1} AS (
+        SELECT nd.node,
+               CAST(floor(15000000 / nn.cnt) + coalesce(s.contrib, 0) AS BIGINT) AS rank_e8
+        FROM nodes nd CROSS JOIN nn
+        LEFT JOIN (
+            SELECT e.dst AS node,
+                   sum(CAST(floor(85 * i{t}.rank_e8 / (100.0 * deg.d)) AS BIGINT)) AS contrib
+            FROM e JOIN i{t} ON e.src = i{t}.node JOIN deg ON deg.src = e.src
+            GROUP BY e.dst
+        ) s ON s.node = nd.node
+    )"""
+        )
+    return ",".join(parts) + (
+        f"\n    SELECT node, rank_e8, round(rank_e8 / 100000000.0, 8) AS rank"
+        f" FROM i{num_iter}"
+    )
+
+
+@query(oracle=_pagerank_oracle_sql())
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-iteration PageRank over the cosine 3-NN graph of a bounded
     embedding subset (vec_id < 200). Ranks are fixed-point int64 units so
@@ -1790,12 +3166,126 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.pagerank(graph.knn_edges(_t(spark, sf_dir, "embeddings")))
 
 
+@query(oracle="""
+        WITH sub AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 50),
+        p AS (
+            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                   a.embedding AS ea, b.embedding AS eb
+            FROM sub a JOIN sub b ON a.vec_id < b.vec_id
+        )
+        SELECT id_a, id_b,
+               round(
+                   list_aggregate(list_transform(range(1, len(ea) + 1),
+                       i -> CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)), 'sum')
+                   / (sqrt(list_aggregate(list_transform(ea,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
+                      * sqrt(list_aggregate(list_transform(eb,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))),
+                   4) + 0.0 AS cosine
+        FROM p
+    """)
 def q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact pairwise cosine over vec_id<50 — the oracle-checked ground
     truth the approximate ANN paths are judged against."""
     return similarity.cosine_pairs_exact(_t(spark, sf_dir, "embeddings"), max_id=50)
 
 
+# ---------------------------------------------------------------------------
+# r7 rows-only → full-oracle upgrades: the IVF pair and the LSH top-k.
+# All three are deterministic end-to-end — centroid seeding now uses the
+# portable md5-60bit id hash (operators/similarity.py:centroid_seeds), the
+# LSH hyperplanes are a pure integer-LCG sequence inlined below as double
+# literals, and r6's raw-float registry validation established that
+# DuckDB's sequential list sum is bit-identical to Spark's left fold, so
+# every argmin / sign-bit / Hamming-rank / rounded-cosine decision is
+# reproduced exactly by these oracles.
+# ---------------------------------------------------------------------------
+
+# DuckDB mirror of the portable seed hash + driver-side enumeration in
+# centroid_seeds: pick n by (hash asc, id asc), re-number by id order.
+_IVF_SEEDS_SQL = """
+    nn AS (
+        SELECT vec_id, embedding FROM embeddings WHERE embedding IS NOT NULL
+    ),
+    seedpick AS (
+        SELECT vec_id, embedding FROM nn
+        ORDER BY CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
+                     AS BIGINT) ASC,
+                 vec_id ASC
+        LIMIT {n_centroids}
+    ),
+    seeds AS (
+        SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS INT)
+                   AS centroid_id,
+               embedding AS cv
+        FROM seedpick
+    ),
+    scored AS (
+        SELECT n.vec_id, s.centroid_id,
+               coalesce(list_aggregate(list_transform(
+                   range(1, len(n.embedding) + 1),
+                   i -> (CAST(n.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))
+                      * (CAST(n.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))),
+                   'sum'), 0.0) AS d2
+        FROM nn n CROSS JOIN seeds s
+    ),
+    assigned AS (
+        SELECT vec_id, centroid_id
+        FROM (SELECT vec_id, centroid_id,
+                     ROW_NUMBER() OVER (PARTITION BY vec_id
+                                        ORDER BY d2 ASC, centroid_id ASC) AS rn
+              FROM scored)
+        WHERE rn = 1
+    )
+"""
+
+
+# Probe search: rank the 16 seeds by squared distance to the query vector
+# (vec 0, lowest id as fallback — same rule as the declared query), keep
+# the 4 nearest cells, exact-rescore only their members. `+ 0.0` is
+# DuckDB-side negative-zero normalization only: Spark's round never emits
+# -0.0, DuckDB's preserves it.
+@query(oracle="WITH "
+    + _IVF_SEEDS_SQL.format(n_centroids=16)
+    + """
+    , q AS (
+        -- nn only: NULL embeddings can't be queries (mirrors the declared
+        -- draw's isNotNull guard)
+        SELECT embedding AS qv FROM nn
+        WHERE vec_id = COALESCE(
+            (SELECT min(vec_id) FROM nn WHERE vec_id = 0),
+            (SELECT min(vec_id) FROM nn))
+    ),
+    probes AS (
+        SELECT centroid_id FROM seeds, q
+        ORDER BY coalesce(list_aggregate(list_transform(
+                     range(1, len(cv) + 1),
+                     i -> (CAST(cv[i] AS DOUBLE) - CAST(qv[i] AS DOUBLE))
+                        * (CAST(cv[i] AS DOUBLE) - CAST(qv[i] AS DOUBLE))),
+                     'sum'), 0.0) ASC,
+                 centroid_id ASC
+        LIMIT 4
+    ),
+    rescored AS (
+        SELECT n.vec_id,
+               round(
+                   coalesce(list_aggregate(list_transform(
+                       range(1, len(n.embedding) + 1),
+                       i -> CAST(n.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)),
+                       'sum'), 0.0)
+                   / (sqrt(coalesce(list_aggregate(list_transform(n.embedding,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))
+                      * sqrt(coalesce(list_aggregate(list_transform(q.qv,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))),
+                   4) + 0.0 AS cosine
+        FROM nn n
+        JOIN assigned a ON n.vec_id = a.vec_id
+        CROSS JOIN q
+        WHERE a.centroid_id IN (SELECT centroid_id FROM probes)
+    )
+    SELECT vec_id, cosine FROM rescored
+    ORDER BY cosine DESC NULLS LAST, vec_id ASC LIMIT 10
+""")
 def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe ANN search for a fixed query vector (vec_id 0's embedding)
     over a PRECOMPUTED centroid-partitioned index: the one-time
@@ -1842,6 +3332,17 @@ def q_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_search(spark, index_dir, qvec, k=10, n_probe=4)
 
 
+@query(oracle="""
+        SELECT count(*) AS n_rows,
+               CAST(coalesce(sum(CASE WHEN c_name IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS nulls_c_name,
+               CAST(coalesce(sum(CASE WHEN c_mktsegment IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS nulls_c_mktsegment,
+               count(DISTINCT c_mktsegment) AS distinct_c_mktsegment,
+               min(c_acctbal) AS min_val,
+               max(c_acctbal) AS max_val,
+               round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
+                     / count(c_acctbal), 4) AS mean_val
+        FROM customer
+    """)
 def q_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass, one-job table profile (nulls / distinct / min / max /
     mean) — vs the reference's job-per-column gate."""
@@ -1853,6 +3354,19 @@ def q_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH stats AS (
+            SELECT event_type,
+                   round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
+                         / count(value), 4) AS mu,
+                   round(stddev_samp(value), 4) AS sigma
+            FROM events GROUP BY event_type
+        )
+        SELECT event_id, event_type,
+               CASE WHEN sigma > 0 THEN round((value - mu) / sigma, 4) END AS z
+        FROM events JOIN stats USING (event_type)
+        WHERE sigma > 0 AND abs(round((value - mu) / sigma, 4)) >= 3.0
+    """)
 def q_outliers_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type z-score outliers (|z| ≥ 3) with rounded-stats
     chaining for cross-engine determinism."""
@@ -1864,6 +3378,12 @@ def q_outliers_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT o_orderstatus,
+               count(*) AS n_orders,
+               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+        FROM orders GROUP BY o_orderstatus
+    """)
 def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental rollup maintenance: base aggregate (90% of orders) merged
     with the delta batch's aggregate — result provably identical to the
@@ -1888,6 +3408,41 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH RECURSIVE sh AS (
+            SELECT doc_id,
+                   list_distinct(list_transform(
+                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
+                       i -> array_to_string(list_slice(
+                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
+                   )) AS shingles
+            FROM documents
+        ),
+        sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
+        ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
+        inter AS (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   a.set_size AS sz_a, b.set_size AS sz_b,
+                   count(*) AS n_inter
+            FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
+        ),
+        pairs AS (
+            SELECT id_a, id_b FROM inter
+            WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.2
+        ),
+        sym AS (
+            SELECT id_a AS s, id_b AS d FROM pairs
+            UNION ALL
+            SELECT id_b AS s, id_a AS d FROM pairs
+        ),
+        reach AS (
+            SELECT s, d FROM sym
+            UNION
+            SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s
+        )
+        SELECT s AS doc_id, least(s, min(d)) AS canonical_id FROM reach GROUP BY s
+    """)
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster assignment: exact n-gram Jaccard pairs (≥0.2) →
     connected components → every clustered doc labeled with its cluster's
@@ -1907,6 +3462,14 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT user_id, event_id, value,
+               ts AS valid_from,
+               lead(ts) OVER w AS valid_to,
+               CAST(lead(ts) OVER w IS NULL AS INT) AS is_current
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+    """)
 def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 dimension history built from the events changelog: per-user
     value versions with [valid_from, valid_to) ranges and a current flag."""
@@ -1916,6 +3479,7 @@ def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query()
 def q_sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bernoulli TABLESAMPLE with a fixed seed — per-row RNG stream is
     engine-specific, so rows-only check. At scale this is the standard
@@ -1936,10 +3500,141 @@ def q_sample_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LLM-data-pipeline extensions (dedup / similarity / text / multimodal)
 # ==========================================================================
 
+@query(oracle="""
+        SELECT md5(text) AS fingerprint,
+               min(doc_id) AS keep_id,
+               count(doc_id) AS dup_count
+        FROM documents GROUP BY md5(text)
+    """)
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.dedup_exact(_t(spark, sf_dir, "documents"))
 
 
+# ---------------------------------------------------------------------------
+# r7 rows-only → full-oracle upgrades: the MinHash+LSH near-dup tier.
+# The declared queries now run hash_fn="portable" (operators/dedup.py:
+# minhash_signatures — two md5-derived integers per shingle mixed per seed
+# as (h1 + s*h2) mod 2^61-1) with İ-folded tokenizers, so a DuckDB oracle
+# recomputes every signature value, every band bucket (the raw joined
+# signature-slice string — no re-hash), the over-cap bucket drops, and the
+# est/exact verify tier. Production xxhash64 paths are unchanged.
+# ---------------------------------------------------------------------------
+
+# Mirrors of _tokens_expr (İ-folded variants only — portable hashing
+# requires the fold; see operators/dedup.py:_tokens_expr).
+_TOKS_SQL = {
+    "whitespace_folded": (
+        "regexp_split_to_array(lower(translate(trim(text), 'İ', 'i')),"
+        " '[ \\t\\n\\r\\f\\x0b]+')"
+    ),
+    "bpe": (
+        "regexp_extract_all(lower(translate(text, 'İ', 'i')),"
+        " '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')"
+    ),
+}
+
+
+def _minhash_lsh_oracle_sql(
+    tokenizer: str,
+    shingle_n: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    verify: str,
+    max_bucket: int = 64,
+) -> str:
+    """DuckDB mirror of the portable MinHash+LSH near-dup pipeline.
+
+    ``verify="est"`` scores candidate pairs by signature agreement
+    fraction (q_dedup_near); ``verify="exact"`` scores them by exact
+    shingle-set Jaccard (near_duplicates_verified). Shingling mirrors
+    shingle_docs_exploded: docs with fewer than ``shingle_n`` tokens
+    contribute one truncated shingle; bpe zero-token docs contribute
+    none. The minhash family constants (P = 2^61-1, 55-bit h2 fold)
+    are dedup.py's _MINHASH_P / _MINHASH_H2_FOLD."""
+    rpb = num_hashes // bands
+    # bpe on an empty doc extracts ZERO tokens (doc has no shingles);
+    # whitespace split always yields ≥1 token (one "" for empty docs)
+    nz = "WHERE len(t) > 0" if tokenizer == "bpe" else ""
+    scorer = {
+        "est": f"""
+    agree AS (
+        SELECT c.id_a, c.id_b,
+               sum(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS n_agree
+        FROM cands c
+        JOIN sig sa ON sa.doc_id = c.id_a
+        JOIN sig sb ON sb.doc_id = c.id_b AND sb.seed = sa.seed
+        GROUP BY c.id_a, c.id_b
+    )
+    SELECT id_a, id_b, n_agree / {num_hashes} AS est_jaccard
+    FROM agree
+    WHERE n_agree / {num_hashes} >= {threshold}
+""",
+        "exact": f"""
+    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
+    inter AS (
+        SELECT c.id_a, c.id_b, count(*) AS n_inter
+        FROM cands c
+        JOIN ex ea ON ea.doc_id = c.id_a
+        JOIN ex eb ON eb.doc_id = c.id_b AND eb.shingle = ea.shingle
+        GROUP BY c.id_a, c.id_b
+    )
+    SELECT i.id_a, i.id_b,
+           round(i.n_inter / (za.sz + zb.sz - i.n_inter), 4) AS jaccard
+    FROM inter i
+    JOIN sizes za ON za.doc_id = i.id_a
+    JOIN sizes zb ON zb.doc_id = i.id_b
+    WHERE round(i.n_inter / (za.sz + zb.sz - i.n_inter), 4) >= {threshold}
+""",
+    }[verify]
+    return f"""
+    WITH toks AS (
+        SELECT doc_id, {_TOKS_SQL[tokenizer]} AS t
+        FROM documents WHERE text IS NOT NULL
+    ),
+    nzt AS (SELECT doc_id, t FROM toks {nz}),
+    sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   range(1, greatest(len(t) - {shingle_n - 1}, 1) + 1),
+                   i -> array_to_string(list_slice(t, i, i + {shingle_n - 1}), ' ')
+               )) AS shingles
+        FROM nzt
+    ),
+    ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
+    th AS (
+        SELECT doc_id,
+               CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) AS h1,
+               CAST(('0x' || substr(md5('#' || shingle), 1, 15)) AS BIGINT)
+                   % 36028797018963968 AS h2,
+               shingle
+        FROM ex
+    ),
+    sig AS (
+        SELECT doc_id, s.seed,
+               min((h1 + s.seed * h2) % 2305843009213693951) AS mh
+        FROM th CROSS JOIN (SELECT unnest(range({num_hashes})) AS seed) s
+        GROUP BY doc_id, s.seed
+    ),
+    bnd AS (
+        SELECT doc_id, seed // {rpb} AS band,
+               string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS bucket
+        FROM sig GROUP BY doc_id, seed // {rpb}
+    ),
+    sized AS (
+        SELECT *, count(*) OVER (PARTITION BY band, bucket) AS _n FROM bnd
+    ),
+    cands AS (
+        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM sized a JOIN sized b
+          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+        WHERE a._n <= {max_bucket}
+    ),
+    {scorer}
+"""
+
+
+@query(oracle=_minhash_lsh_oracle_sql("whitespace_folded", 3, 32, 8, 0.4, "est"))
 def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs. FULL ORACLE since r7: the declared
     query runs ``hash_fn="portable"`` (two-md5 Carter-Wegman minhash
@@ -1959,6 +3654,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=_minhash_lsh_oracle_sql("whitespace_folded", 3, 32, 8, 0.2, "exact"))
 def q_dedup_near_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tiered near-dup: LSH candidates verified by EXACT Jaccard restricted
     to candidate pairs (the 100 TB pipeline shape). FULL ORACLE since r7
@@ -1975,6 +3671,15 @@ def q_dedup_near_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH fp AS (SELECT doc_id, md5(text) AS fingerprint FROM documents)
+    SELECT b.doc_id, b.fingerprint
+    FROM fp b
+    WHERE b.doc_id >= 300
+      AND NOT EXISTS (SELECT 1 FROM fp p
+                      WHERE p.doc_id < 300
+                        AND p.fingerprint = b.fingerprint)
+""")
 def q_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental corpus ingestion: only the NOVEL documents of a new
     batch survive — batch rows (doc_id ≥ 300) LEFT-ANTI joined on the
@@ -1998,6 +3703,48 @@ def q_incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH exact AS (
+        SELECT count(*) AS n_docs,
+               count(DISTINCT md5(text)) AS n_distinct_texts
+        FROM documents
+    ),
+    toks AS (
+        SELECT doc_id,
+               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
+        FROM documents
+        WHERE doc_id < 400
+    ),
+    nz AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
+    sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   range(1, greatest(len(t) - 1, 1) + 1),
+                   i -> array_to_string(list_slice(t, i, i + 1), ' ')
+               )) AS shingles
+        FROM nz
+    ),
+    sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
+    ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
+    inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               a.set_size AS sz_a, b.set_size AS sz_b,
+               count(*) AS n_inter
+        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
+    ),
+    near AS (
+        SELECT CAST(coalesce(sum(CASE WHEN round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.3
+                                      THEN 1 ELSE 0 END), 0) AS BIGINT) AS near_dup_pairs_bounded
+        FROM inter
+    )
+    SELECT n_docs,
+           n_docs - n_distinct_texts AS exact_dup_docs,
+           round(CAST(n_docs - n_distinct_texts AS DOUBLE) * 100.0 / n_docs, 2)
+               AS exact_dup_pct,
+           near_dup_pairs_bounded
+    FROM exact, near
+""")
 def q_dedup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup executive summary — the one-row corpus-health report a
     pipeline emits after every refresh: total docs, exact-duplicate docs
@@ -2030,6 +3777,47 @@ def q_dedup_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH RECURSIVE toks AS (
+        SELECT doc_id,
+               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
+        FROM documents
+        WHERE doc_id < 400
+    ),
+    nz AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
+    sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   range(1, greatest(len(t) - 1, 1) + 1),
+                   i -> array_to_string(list_slice(t, i, i + 1), ' ')
+               )) AS shingles
+        FROM nz
+    ),
+    sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
+    ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
+    inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               a.set_size AS sz_a, b.set_size AS sz_b,
+               count(*) AS n_inter
+        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
+    ),
+    pairs AS (
+        SELECT id_a, id_b FROM inter
+        WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.3
+    ),
+    sym AS (
+        SELECT id_a AS s, id_b AS d FROM pairs
+        UNION ALL
+        SELECT id_b AS s, id_a AS d FROM pairs
+    ),
+    reach AS (
+        SELECT s, d FROM sym
+        UNION
+        SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s
+    )
+    SELECT s AS doc_id, least(s, min(d)) AS canonical_id FROM reach GROUP BY s
+""")
 def q_token_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKENIZER-AWARE duplicate clusters: exact BPE-ish token 2-gram
     Jaccard pairs (≥0.3) → connected components → every clustered doc
@@ -2054,6 +3842,69 @@ def q_token_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _simhash_oracle_sql(max_hamming: int, bucket_cap: int) -> str:
+    """DuckDB mirror of the portable-simhash near-dup pipeline: 60 md5
+    bit-planes, majority vote per bit, the SAME disjoint-block layout as
+    the Spark pair generator (shared via ``simhash_block_layout``),
+    over-cap bucket drops BEFORE pairing, exact Hamming verify."""
+    n_bits = dedup.simhash_bits("portable")
+    offsets, widths = dedup.simhash_block_layout(n_bits, max_hamming + 1)
+    bit_sums = ",\n               ".join(
+        f"sum((h >> {b}) & 1) AS b{b}" for b in range(n_bits)
+    )
+    sim_terms = "\n                 + ".join(
+        f"(CASE WHEN b{b} * 2 >= n THEN {1 << b} ELSE 0 END)"
+        for b in range(n_bits)
+    )
+    blocks_values = ", ".join(
+        f"({i}, {offsets[i]}, {(1 << widths[i]) - 1})"
+        for i in range(len(offsets))
+    )
+    return f"""
+    WITH toks AS (
+        SELECT doc_id,
+               unnest(regexp_extract_all(lower(translate(text, 'İ', 'i')),
+                      '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')) AS token
+        FROM documents
+    ),
+    th AS (
+        SELECT doc_id,
+               CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) AS h
+        FROM toks
+    ),
+    bs AS (
+        SELECT doc_id, count(*) AS n,
+               {bit_sums}
+        FROM th GROUP BY doc_id
+    ),
+    sh AS (
+        SELECT doc_id,
+               CAST({sim_terms} AS BIGINT) AS simhash
+        FROM bs
+    ),
+    blocks AS (
+        SELECT s.doc_id, s.simhash, b.blk,
+               (s.simhash >> b.off) & b.mask AS val
+        FROM sh s CROSS JOIN (VALUES {blocks_values}) b(blk, off, mask)
+    ),
+    sized AS (
+        SELECT *, count(*) OVER (PARTITION BY blk, val) AS _n FROM blocks
+    ),
+    pairs AS (
+        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
+               a.simhash AS sh_a, b.simhash AS sh_b
+        FROM sized a JOIN sized b
+          ON a.blk = b.blk AND a.val = b.val AND a.doc_id < b.doc_id
+        WHERE a._n <= {bucket_cap}
+    )
+    SELECT id_a, id_b,
+           CAST(bit_count(xor(sh_a, sh_b)) AS BIGINT) AS hamming
+    FROM pairs
+    WHERE bit_count(xor(sh_a, sh_b)) <= {max_hamming}
+"""
+
+
+@query(oracle=_simhash_oracle_sql(max_hamming=6, bucket_cap=256))
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs. FULL ORACLE since r7: the declared query
     runs the ``hash_fn="portable"`` 60-bit md5-plane variant with the
@@ -2074,6 +3925,36 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH toks AS (
+            SELECT doc_id,
+                   regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
+            FROM documents
+            WHERE doc_id < 400
+        ),
+        nz AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
+        sh AS (
+            SELECT doc_id,
+                   list_distinct(list_transform(
+                       range(1, greatest(len(t) - 1, 1) + 1),
+                       i -> array_to_string(list_slice(t, i, i + 1), ' ')
+                   )) AS shingles
+            FROM nz
+        ),
+        sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
+        ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
+        inter AS (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   a.set_size AS sz_a, b.set_size AS sz_b,
+                   count(*) AS n_inter
+            FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
+        )
+        SELECT id_a, id_b,
+               round(n_inter / (sz_a + sz_b - n_inter), 4) AS jaccard
+        FROM inter
+        WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.3
+    """)
 def q_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TOKENIZER-AWARE exact Jaccard over BPE-ish token 2-grams, bounded
     id subset (doc_id < 400) — the tokenizer-aware ground truth the r5
@@ -2091,6 +3972,7 @@ def q_token_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=_minhash_lsh_oracle_sql("bpe", 2, 32, 8, 0.3, "exact"))
 def q_token_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-aware tiered near-dup at corpus scale: MinHash+LSH over
     BPE-ish token 2-gram shingles proposes candidates, exact token
@@ -2110,6 +3992,31 @@ def q_token_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH sh AS (
+            SELECT doc_id,
+                   list_distinct(list_transform(
+                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
+                       i -> array_to_string(list_slice(
+                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
+                   )) AS shingles
+            FROM documents
+            WHERE doc_id < 400
+        ),
+        sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
+        ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
+        inter AS (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   a.set_size AS sz_a, b.set_size AS sz_b,
+                   count(*) AS n_inter
+            FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
+        )
+        SELECT id_a, id_b,
+               round(n_inter / (sz_a + sz_b - n_inter), 4) AS jaccard
+        FROM inter
+        WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.2
+    """)
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard over a BOUNDED id subset (doc_id < 400) — the
     same bounded-ground-truth pattern as q_cosine_pairs: the quadratic
@@ -2125,6 +4032,21 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+        SELECT e.vec_id,
+               round(
+                   list_aggregate(list_transform(range(1, len(e.embedding) + 1),
+                       i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)), 'sum')
+                   / (sqrt(list_aggregate(list_transform(e.embedding,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
+                      * sqrt(list_aggregate(list_transform(q.qv,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))),
+               4) AS cosine
+        FROM embeddings e, q
+        WHERE e.vec_id <> 0
+        ORDER BY cosine DESC NULLS LAST, e.vec_id ASC LIMIT 10
+    """)
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-k against the vec_id=0 query vector,
     joined in-plan (broadcast single-row cross join — no collect)."""
@@ -2147,6 +4069,85 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(10)
 
 
+def _lsh_planes_values_sql(n_planes: int, dim: int) -> str:
+    """The deterministic hyperplane sequence as DuckDB VALUES rows.
+
+    Generated from the SAME source function the Spark plan embeds
+    (operators/similarity.py:_hyperplane — pure integer LCG, no RNG
+    state), so the literals are guaranteed identical on both sides;
+    Python float repr round-trips to the exact double in DuckDB."""
+    from datalake_breweries_two_spark.operators.similarity import _hyperplane
+
+    rows = []
+    for b in range(n_planes):
+        vals = ", ".join(repr(w) for w in _hyperplane(dim, b))
+        rows.append(f"({b}, [{vals}])")
+    return ",\n        ".join(rows)
+
+
+# Semantics mirrored bit-for-bit from cosine_topk_lsh (k=10 → candidate
+# budget max(8k, 64) = 80): sign bits coalesce exactly like Spark's
+# when(dot >= 0, bit).otherwise(0) — a NULL vector scores FALSE on every
+# plane, an EMPTY one folds to dot 0.0 (>= 0 → TRUE); Hamming rank ties
+# break on vec_id; the rescore is the same rounded cosine as the exact
+# path, NULLS LAST like Spark's desc().
+@query(oracle="""
+    WITH planes(plane_id, pv) AS (VALUES
+        {planes}
+    ),
+    q AS (
+        -- embedding IS NOT NULL everywhere: NULL embeddings can't be
+        -- queries (mirrors the declared draw's isNotNull guard)
+        SELECT embedding AS qv FROM embeddings
+        WHERE embedding IS NOT NULL AND vec_id = COALESCE(
+            (SELECT min(vec_id) FROM embeddings
+             WHERE vec_id = 0 AND embedding IS NOT NULL),
+            (SELECT min(vec_id) FROM embeddings
+             WHERE embedding IS NOT NULL))
+    ),
+    bits AS (
+        SELECT e.vec_id, p.plane_id,
+               CASE WHEN e.embedding IS NULL THEN FALSE
+                    ELSE coalesce(list_aggregate(list_transform(
+                             range(1, len(e.embedding) + 1),
+                             i -> CAST(e.embedding[i] AS DOUBLE) * pv[i]),
+                             'sum'), 0.0) >= 0
+               END AS bit
+        FROM embeddings e CROSS JOIN planes p
+    ),
+    qbits AS (
+        SELECT p.plane_id,
+               coalesce(list_aggregate(list_transform(
+                   range(1, len(q.qv) + 1),
+                   i -> CAST(q.qv[i] AS DOUBLE) * pv[i]), 'sum'), 0.0) >= 0 AS qbit
+        FROM q CROSS JOIN planes p
+    ),
+    hamm AS (
+        SELECT b.vec_id,
+               sum(CASE WHEN b.bit <> qb.qbit THEN 1 ELSE 0 END) AS h
+        FROM bits b JOIN qbits qb USING (plane_id)
+        GROUP BY b.vec_id
+    ),
+    cand AS (
+        SELECT vec_id FROM hamm ORDER BY h ASC, vec_id ASC LIMIT 80
+    ),
+    rescored AS (
+        SELECT e.vec_id,
+               round(
+                   coalesce(list_aggregate(list_transform(
+                       range(1, len(e.embedding) + 1),
+                       i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)),
+                       'sum'), 0.0)
+                   / (sqrt(coalesce(list_aggregate(list_transform(e.embedding,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))
+                      * sqrt(coalesce(list_aggregate(list_transform(q.qv,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))),
+                   4) + 0.0 AS cosine
+        FROM embeddings e JOIN cand ON e.vec_id = cand.vec_id CROSS JOIN q
+    )
+    SELECT vec_id, cosine FROM rescored
+    ORDER BY cosine DESC NULLS LAST, vec_id ASC LIMIT 10
+""".format(planes=_lsh_planes_values_sql(48, 64)))
 def q_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN top-k via the 48-plane random-hyperplane LSH prefilter, for the
     vec_id-0 query vector (lowest id as fallback — same deterministic rule
@@ -2169,6 +4170,29 @@ def q_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk_lsh(emb, qv, k=10)
 
 
+# Exact quadratic recompute of the banded-LSH near-dup query: valid as a
+# full hash oracle because (a) planted scaled copies are caught by LSH
+# with recall exactly 1 (sign(v·plane) is scale-invariant) and (b) no
+# natural pair in the synthetic corpus approaches the 0.95 threshold
+# (max ≈0.5), so approximate output == exact output deterministically.
+@query(oracle="""
+    WITH base AS (
+        SELECT vec_id,
+               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+        FROM embeddings
+    ),
+    corpus AS (
+        SELECT vec_id, v FROM base
+        UNION ALL
+        SELECT vec_id + 1000000, list_transform(v, x -> x * 1.5)
+        FROM base WHERE vec_id < 20
+    )
+    SELECT id_a, id_b, cosine FROM (
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+               round(list_cosine_similarity(a.v, b.v), 4) AS cosine
+        FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
+    ) WHERE cosine >= 0.95
+""")
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs via BANDED LSH, on a corpus with
     PLANTED duplicates: the synthetic embeddings table is random (max
@@ -2201,6 +4225,156 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# q_ann_recall full oracle (r7): with BOTH bounded draws (centroid seeds
+# and the recall harness's query vectors) on the portable md5-60bit id
+# hash, every tier of the harness is deterministic — exact top-k truth
+# (round-6 cosine, id tie-breaks), LSH Hamming-budget candidates
+# (integer-LCG plane literals), IVF probe candidates (md5-seeded
+# assignment + per-query centroid ranks) — so DuckDB recomputes the
+# whole recall report. Every window pins DESC NULLS LAST explicitly
+# (Spark's desc() is NULLS LAST; DuckDB's DESC default is not).
+@query(oracle="""
+    WITH """ + _IVF_SEEDS_SQL.format(n_centroids=8) + """
+    , planes(plane_id, pv) AS (VALUES
+        {planes}
+    ),
+    qsel AS (
+        SELECT vec_id AS qid, embedding AS qv FROM nn
+        ORDER BY CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
+                     AS BIGINT) ASC,
+                 vec_id ASC
+        LIMIT 3
+    ),
+    -- round-6 cosine of every (query, corpus) pair except the query row
+    -- itself: shared by the truth ranking AND both tiers' rescoring
+    pair_cos AS (
+        SELECT q.qid, e.vec_id,
+               round(
+                   coalesce(list_aggregate(list_transform(
+                       range(1, len(e.embedding) + 1),
+                       i -> CAST(e.embedding[i] AS DOUBLE) * q.qv[i]), 'sum'), 0.0)
+                   / (sqrt(coalesce(list_aggregate(list_transform(e.embedding,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))
+                      * sqrt(coalesce(list_aggregate(list_transform(q.qv,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))),
+                   6) AS cosine
+        FROM embeddings e CROSS JOIN qsel q
+        WHERE e.vec_id <> q.qid
+    ),
+    truth AS (
+        SELECT qid, vec_id
+        FROM (SELECT qid, vec_id,
+                     ROW_NUMBER() OVER (PARTITION BY qid
+                         ORDER BY cosine DESC NULLS LAST, vec_id ASC) AS rn
+              FROM pair_cos)
+        WHERE rn <= 10
+    ),
+    denom AS (SELECT qid, count(*) AS n_truth FROM truth GROUP BY qid),
+    -- LSH tier: sign bits vs the 48 plane literals, Hamming rank, budget
+    -- cut, rescore by the shared round-6 cosine
+    bits AS (
+        SELECT e.vec_id, p.plane_id,
+               CASE WHEN e.embedding IS NULL THEN FALSE
+                    ELSE coalesce(list_aggregate(list_transform(
+                             range(1, len(e.embedding) + 1),
+                             i -> CAST(e.embedding[i] AS DOUBLE) * pv[i]),
+                             'sum'), 0.0) >= 0
+               END AS bit
+        FROM embeddings e CROSS JOIN planes p
+    ),
+    qbits AS (
+        SELECT q.qid, p.plane_id,
+               coalesce(list_aggregate(list_transform(
+                   range(1, len(q.qv) + 1),
+                   i -> q.qv[i] * pv[i]), 'sum'), 0.0) >= 0 AS qbit
+        FROM qsel q CROSS JOIN planes p
+    ),
+    hamm AS (
+        SELECT qb.qid, b.vec_id,
+               sum(CASE WHEN b.bit <> qb.qbit THEN 1 ELSE 0 END) AS h
+        FROM bits b JOIN qbits qb USING (plane_id)
+        GROUP BY qb.qid, b.vec_id
+    ),
+    lsh_ranked AS (
+        SELECT qid, vec_id,
+               ROW_NUMBER() OVER (PARTITION BY qid
+                   ORDER BY h ASC, vec_id ASC) AS rn_h
+        FROM hamm WHERE vec_id <> qid
+    ),
+    lsh_hits AS (
+        SELECT qid, param, vec_id
+        FROM (SELECT l.qid, bu.param, l.vec_id,
+                     ROW_NUMBER() OVER (PARTITION BY l.qid, bu.param
+                         ORDER BY pc.cosine DESC NULLS LAST, l.vec_id ASC) AS rn
+              FROM lsh_ranked l
+              JOIN (VALUES (16), (64)) bu(param) ON l.rn_h <= bu.param
+              JOIN pair_cos pc ON pc.qid = l.qid AND pc.vec_id = l.vec_id)
+        WHERE rn <= 10
+    ),
+    -- IVF tier: per-query centroid ranks over the 8 md5-seeded cells,
+    -- candidates from the crank<=n_probe cells, same rescore
+    d2q AS (
+        SELECT q.qid, s.centroid_id,
+               coalesce(list_aggregate(list_transform(
+                   range(1, len(s.cv) + 1),
+                   i -> (CAST(s.cv[i] AS DOUBLE) - q.qv[i])
+                      * (CAST(s.cv[i] AS DOUBLE) - q.qv[i])), 'sum'), 0.0) AS d2
+        FROM qsel q CROSS JOIN seeds s
+    ),
+    cranks AS (
+        SELECT qid, centroid_id,
+               ROW_NUMBER() OVER (PARTITION BY qid
+                   ORDER BY d2 ASC, centroid_id ASC) AS crank
+        FROM d2q
+    ),
+    ivf_hits AS (
+        SELECT qid, param, vec_id
+        FROM (SELECT c.qid, pr.param, a.vec_id,
+                     ROW_NUMBER() OVER (PARTITION BY c.qid, pr.param
+                         ORDER BY pc.cosine DESC NULLS LAST, a.vec_id ASC) AS rn
+              FROM assigned a
+              JOIN cranks c ON a.centroid_id = c.centroid_id
+              JOIN (VALUES (1), (4)) pr(param) ON c.crank <= pr.param
+              JOIN pair_cos pc ON pc.qid = c.qid AND pc.vec_id = a.vec_id
+              WHERE a.vec_id <> c.qid)
+        WHERE rn <= 10
+    ),
+    lsh_recall AS (
+        SELECT 'lsh' AS method, g.param,
+               round(avg(CASE WHEN coalesce(d.n_truth, 0) = 0 THEN 1.0
+                              ELSE coalesce(m.n_hit, 0) / d.n_truth END),
+                     4) AS recall
+        FROM (SELECT q.qid, bu.param
+              FROM qsel q CROSS JOIN (VALUES (16), (64)) bu(param)) g
+        LEFT JOIN (SELECT h.qid, h.param, count(*) AS n_hit
+                   FROM lsh_hits h
+                   JOIN truth t ON t.qid = h.qid AND t.vec_id = h.vec_id
+                   GROUP BY h.qid, h.param) m
+               ON m.qid = g.qid AND m.param = g.param
+        LEFT JOIN denom d ON d.qid = g.qid
+        GROUP BY g.param
+    ),
+    ivf_recall AS (
+        SELECT 'ivf' AS method, g.param,
+               round(avg(CASE WHEN coalesce(d.n_truth, 0) = 0 THEN 1.0
+                              ELSE coalesce(m.n_hit, 0) / d.n_truth END),
+                     4) AS recall
+        FROM (SELECT q.qid, pr.param
+              FROM qsel q CROSS JOIN (VALUES (1), (4)) pr(param)) g
+        LEFT JOIN (SELECT h.qid, h.param, count(*) AS n_hit
+                   FROM ivf_hits h
+                   JOIN truth t ON t.qid = h.qid AND t.vec_id = h.vec_id
+                   GROUP BY h.qid, h.param) m
+               ON m.qid = g.qid AND m.param = g.param
+        LEFT JOIN denom d ON d.qid = g.qid
+        GROUP BY g.param
+    )
+    SELECT method, CAST(param AS INT) AS param, recall FROM (
+        SELECT 'brute' AS method, 10 AS param, 1.0 AS recall
+        UNION ALL SELECT * FROM lsh_recall
+        UNION ALL SELECT * FROM ivf_recall
+    ) ORDER BY method, param
+""".format(planes=_lsh_planes_values_sql(48, 64)))
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN recall curves: recall@10 of the LSH candidate-budget tier and
     the IVF probe tier vs exact brute-force, averaged over 3 seeded query
@@ -2220,6 +4394,12 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="WITH "
+    + _IVF_SEEDS_SQL.format(n_centroids=8)
+    + """
+    SELECT centroid_id, CAST(count(*) AS BIGINT) AS n_vectors
+    FROM assigned GROUP BY centroid_id
+""")
 def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF centroid assignment histogram. FULL ORACLE since r7: centroid
     seeding uses the portable md5-60bit id hash (similarity.centroid_seeds)
@@ -2231,6 +4411,36 @@ def q_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assigned.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("n_vectors"))
 
 
+@query(oracle="""
+    WITH toks AS (
+        SELECT doc_id,
+               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
+        FROM documents
+    ),
+    big AS (
+        SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
+        FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) g
+        WHERE len(t) >= 2
+    ),
+    bstat AS (SELECT w1, w2, count(*) AS cb FROM big GROUP BY 1, 2),
+    cstat AS (SELECT w1, count(*) AS cc FROM big GROUP BY 1),
+    vocab AS (
+        SELECT count(DISTINCT w) AS v
+        FROM (SELECT unnest(t) AS w FROM toks)
+    ),
+    scored AS (
+        SELECT b.doc_id,
+               ln(CAST(s.cb + 1 AS DOUBLE) / CAST(c.cc + v.v AS DOUBLE)) AS lp
+        FROM big b
+        JOIN bstat s USING (w1, w2)
+        JOIN cstat c USING (w1)
+        CROSS JOIN vocab v
+    )
+    SELECT doc_id,
+           CAST(count(*) AS BIGINT) AS n_bigrams,
+           round(avg(lp), 4) AS avg_logprob
+    FROM scored GROUP BY doc_id
+""")
 def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean bigram log-probability under the corpus's own
     add-one-smoothed bigram LM — the statistical-LM quality signal for
@@ -2239,6 +4449,41 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bigram_logprob(_t(spark, sf_dir, "documents"))
 
 
+@query(oracle="""
+    WITH flags AS (
+        SELECT
+            (length(trim(text)) > 0) AS p1,
+            len(regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')) AS nt,
+            list_aggregate(list_transform(
+                regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]'),
+                x -> length(x)), 'sum') AS sum_len,
+            len(list_filter(
+                regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]'),
+                x -> NOT regexp_matches(x, '^[a-z0-9]'))) AS n_punct
+        FROM documents
+    ),
+    staged AS (
+        SELECT p1,
+               (p1 AND nt >= 5) AS p2,
+               (p1 AND nt >= 5 AND sum_len <= nt * 12) AS p3,
+               (p1 AND nt >= 5 AND sum_len <= nt * 12
+                   AND n_punct * 2 <= nt) AS p4
+        FROM flags
+    ),
+    agg AS (
+        SELECT count(*) AS c0,
+               CAST(coalesce(sum(CASE WHEN p1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS c1,
+               CAST(coalesce(sum(CASE WHEN p2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS c2,
+               CAST(coalesce(sum(CASE WHEN p3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS c3,
+               CAST(coalesce(sum(CASE WHEN p4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS c4
+        FROM staged
+    )
+    SELECT 'all' AS stage, 0 AS stage_idx, c0 AS n_docs FROM agg
+    UNION ALL SELECT 'nonempty', 1, c1 FROM agg
+    UNION ALL SELECT 'min_tokens', 2, c2 FROM agg
+    UNION ALL SELECT 'token_len', 3, c3 FROM agg
+    UNION ALL SELECT 'punct', 4, c4 FROM agg
+""")
 def q_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequential quality-filter acceptance funnel over documents — five
     survivor counts (all → nonempty → ≥5 tokens → sane token length →
@@ -2248,6 +4493,25 @@ def q_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.quality_filter_funnel(_t(spark, sf_dir, "documents"))
 
 
+@query(oracle="""
+    WITH toks AS (
+        SELECT doc_id,
+               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
+        FROM documents
+    ),
+    big AS (
+        SELECT DISTINCT doc_id, t[i] || ' ' || t[i + 1] AS sh
+        FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) g
+        WHERE len(t) >= 2
+    ),
+    dfreq AS (SELECT sh, count(*) AS df FROM big GROUP BY sh)
+    SELECT doc_id,
+           CAST(count(*) AS BIGINT) AS n_shingles,
+           round(CAST(sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
+               / count(*), 4) AS dup_frac
+    FROM big JOIN dfreq USING (sh)
+    GROUP BY doc_id
+""")
 def q_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc fraction of distinct token bigrams shared with ANY other
     document (ExactSubstr-lite boilerplate signal) — corpus-wide with no
@@ -2255,6 +4519,27 @@ def q_dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.dup_ngram_fraction(_t(spark, sf_dir, "documents"))
 
 
+@query(oracle="""
+    WITH toks AS (
+        SELECT doc_id,
+               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
+        FROM documents
+    ),
+    big AS (
+        SELECT t[i] AS w1, t[i + 1] AS w2
+        FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) g
+        WHERE len(t) >= 2
+    ),
+    bstat AS (SELECT w1, w2, count(*) AS cb FROM big GROUP BY 1, 2),
+    l AS (SELECT w1, CAST(sum(cb) AS BIGINT) AS cl FROM bstat GROUP BY 1),
+    r AS (SELECT w2, CAST(sum(cb) AS BIGINT) AS cr FROM bstat GROUP BY 1),
+    n AS (SELECT CAST(sum(cb) AS BIGINT) AS nn FROM bstat)
+    SELECT w1, w2, cb AS n_pair,
+           round(ln(CAST(nn * cb AS DOUBLE) / CAST(cl * cr AS DOUBLE)), 4) AS pmi
+    FROM bstat JOIN l USING (w1) JOIN r USING (w2) CROSS JOIN n
+    WHERE cb >= 5
+    ORDER BY pmi DESC, w1, w2 LIMIT 20
+""")
 def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 bigram collocations by PMI (min count 5) — exact integer
     counts, one rounded ln, total-order tie-break (see
@@ -2262,6 +4547,27 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.pmi_collocations(_t(spark, sf_dir, "documents"), min_count=5, k=20)
 
 
+@query(oracle="""
+    WITH toks AS (
+        SELECT doc_id,
+               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
+        FROM documents
+    ),
+    spans AS (
+        SELECT DISTINCT doc_id,
+               array_to_string(list_slice(t, i, i + 7), ' ') AS span
+        FROM toks, LATERAL (SELECT unnest(range(1, len(t) - 7 + 1)) AS i) g
+        WHERE len(t) >= 8
+    ),
+    kept AS (
+        SELECT doc_id, span FROM spans
+        QUALIFY count(*) OVER (PARTITION BY span) <= 16
+    )
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           count(*) AS n_spans
+    FROM kept a JOIN kept b ON a.span = b.span AND a.doc_id < b.doc_id
+    GROUP BY 1, 2
+""")
 def q_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc pairs sharing a verbatim 8-token span (exact-substring dedup
     evidence) over the WHOLE corpus — safe unfenced because the join is
@@ -2272,6 +4578,30 @@ def q_shared_span_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH q AS (
+        SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 8
+    ),
+    scored AS (
+        SELECT q.q_id, e.vec_id AS neighbor_id,
+               round(
+                   list_aggregate(list_transform(range(1, len(e.embedding) + 1),
+                       i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)), 'sum')
+                   / (sqrt(list_aggregate(list_transform(e.embedding,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
+                      * sqrt(list_aggregate(list_transform(q.qv,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))),
+               4) + 0.0 AS cosine
+        FROM embeddings e JOIN q ON e.vec_id <> q.q_id
+    ),
+    ranked AS (
+        SELECT q_id, neighbor_id, cosine,
+               row_number() OVER (PARTITION BY q_id
+                   ORDER BY cosine DESC NULLS LAST, neighbor_id ASC) AS rank
+        FROM scored
+    )
+    SELECT q_id, neighbor_id, rank, cosine FROM ranked WHERE rank <= 5
+""")
 def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch exact k-NN join (8 query vectors × top-5 cosine neighbors)
     via broadcast-queries + two-level distributed top-k (see
@@ -2281,12 +4611,65 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH ex AS (
+        SELECT label, generate_subscripts(embedding, 1) AS dim,
+               unnest(embedding) AS x
+        FROM embeddings
+    ),
+    cent AS (
+        SELECT label, dim, round(avg(CAST(x AS DOUBLE)), 6) + 0.0 AS c
+        FROM ex GROUP BY 1, 2
+    ),
+    cent_arr AS (
+        SELECT label, list(c ORDER BY dim) AS cv FROM cent GROUP BY 1
+    ),
+    member AS (
+        SELECT e.label,
+               round(
+                   list_aggregate(list_transform(range(1, len(e.embedding) + 1),
+                       i -> CAST(e.embedding[i] AS DOUBLE) * ca.cv[i]), 'sum')
+                   / (sqrt(list_aggregate(list_transform(e.embedding,
+                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
+                      * sqrt(list_aggregate(list_transform(ca.cv,
+                          x -> x * x), 'sum'))),
+               4) + 0.0 AS cos4
+        FROM embeddings e JOIN cent_arr ca ON e.label = ca.label
+    ),
+    norms AS (
+        SELECT label,
+               round(sqrt(list_aggregate(list_transform(cv, x -> x * x), 'sum')),
+                     4) + 0.0 AS centroid_norm
+        FROM cent_arr
+    )
+    SELECT m.label, count(*) AS n_vecs, any_value(n.centroid_norm) AS centroid_norm,
+           round(avg(cos4), 4) + 0.0 AS avg_cos,
+           quantile_disc(cos4, 0.5) AS p50_cos,
+           min(cos4) AS min_cos
+    FROM member m JOIN norms n ON m.label = n.label
+    GROUP BY 1
+""")
 def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroid + member-cosine cohesion profile
     (see operators/similarity.py:label_centroid_profile)."""
     return similarity.label_centroid_profile(_t(spark, sf_dir, "embeddings"))
 
 
+@query(oracle="""
+    WITH per_cell AS (
+        SELECT source, lang,
+               count(*) AS n_docs,
+               CAST(coalesce(sum(len(regexp_extract_all(
+                   lower(translate(text, 'İ', 'i')),
+                   '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]'))), 0) AS BIGINT) AS total_tokens,
+               round(avg(n_chars), 4) AS avg_chars
+        FROM documents GROUP BY source, lang
+    ),
+    tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS corpus_docs FROM per_cell)
+    SELECT source, lang, n_docs, total_tokens, avg_chars,
+           round(n_docs * 100.0 / corpus_docs, 2) AS share_pct
+    FROM per_cell, tot
+""")
 def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-mixture composition report per (source, lang): docs, BPE
     token totals, and each cell's share of the corpus — one grouped
@@ -2295,6 +4678,14 @@ def q_corpus_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.corpus_mix_report(_t(spark, sf_dir, "documents"))
 
 
+@query(oracle="""
+    WITH per_class AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label),
+    tot AS (SELECT CAST(sum(n) AS BIGINT) AS total, count(*) AS k FROM per_class)
+    SELECT label, n,
+           round(CAST(total AS DOUBLE) / (k * n), 4) AS inv_weight,
+           round(sqrt(CAST(total AS DOUBLE) / n), 4) AS sqrt_inv_weight
+    FROM per_class, tot
+""")
 def q_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label inverse-frequency and sqrt-inverse training weights over
     the embeddings labels (see operators/sampling.py:class_balance_weights)."""
@@ -2303,6 +4694,27 @@ def q_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH toks AS (
+        SELECT doc_id,
+               coalesce(len(regexp_extract_all(
+                   lower(translate(text, 'İ', 'i')),
+                   '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')), 0) AS n_tokens
+        FROM documents WHERE doc_id IS NOT NULL
+    ),
+    cum AS (
+        SELECT doc_id, n_tokens,
+               sum(n_tokens) OVER (ORDER BY doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
+        FROM toks
+    )
+    SELECT CAST((cum_tokens - n_tokens) // 1000 AS BIGINT) AS shard_id,
+           count(*) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
+           min(doc_id) AS first_id,
+           max(doc_id) AS last_id
+    FROM cum GROUP BY 1
+""")
 def q_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget shard plan (~1000 BPE tokens per shard) via the
     distributed prefix-sum pattern — the input-shard packing plan of a
@@ -2312,10 +4724,35 @@ def q_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT lang,
+               count(doc_id) AS n_docs,
+               round(avg(n_chars), 4) AS avg_chars,
+               CAST(sum(CASE WHEN trim(text) = '' THEN 0
+                        ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END) AS BIGINT)
+                   AS total_tokens
+        FROM documents GROUP BY lang
+    """)
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.text_stats_by_lang(_t(spark, sf_dir, "documents"))
 
 
+@query(oracle="""
+        SELECT doc_id,
+               len(text) AS len_chars,
+               CAST(CASE WHEN trim(text) = '' THEN 0
+                    ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END AS BIGINT) AS n_tokens,
+               round(len(text) / greatest(
+                   CASE WHEN trim(text) = '' THEN 0
+                        ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END, 1), 4) AS mean_token_len,
+               round(len(regexp_replace(text, '[^.,;:!?]', '', 'g')) / greatest(len(text), 1), 4) AS punct_ratio,
+               round(len(list_filter(string_split_regex(lower(text), '[ \\t\\n\\r\\f\\x0b]+'),
+                         x -> x IN ('the','and','of','to','is','a','in','that','it','for')))
+                   / greatest(CASE WHEN trim(text) = '' THEN 0
+                        ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END, 1), 4) AS stopword_ratio,
+               round(len(regexp_replace(text, '[^A-Z]', '', 'g')) / greatest(len(text), 1), 4) AS upper_ratio
+        FROM documents
+    """)
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.text_quality_features(_t(spark, sf_dir, "documents")).select(
         "doc_id",
@@ -2328,6 +4765,13 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        SELECT doc_id,
+               CAST(CASE WHEN trim(text) = '' THEN 0
+                    ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END AS BIGINT) AS n_ws_tokens,
+               CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r\\f\\x0b]')) AS BIGINT) AS n_bpe_tokens
+        FROM documents
+    """)
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     return d.select(
@@ -2337,18 +4781,73 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH scores AS (
+            SELECT doc_id,
+                   CAST((len(p) - len(replace(p, ' the ', ''))) / 5
+                      + (len(p) - len(replace(p, ' and ', ''))) / 5
+                      + (len(p) - len(replace(p, ' of ', ''))) / 4
+                      + (len(p) - len(replace(p, ' to ', ''))) / 4
+                      + (len(p) - len(replace(p, ' is ', ''))) / 4 AS INT) AS s_en,
+                   CAST((len(p) - len(replace(p, ' el ', ''))) / 4
+                      + (len(p) - len(replace(p, ' la ', ''))) / 4
+                      + (len(p) - len(replace(p, ' de ', ''))) / 4
+                      + (len(p) - len(replace(p, ' que ', ''))) / 5
+                      + (len(p) - len(replace(p, ' los ', ''))) / 5 AS INT) AS s_es,
+                   CAST((len(p) - len(replace(p, ' der ', ''))) / 5
+                      + (len(p) - len(replace(p, ' die ', ''))) / 5
+                      + (len(p) - len(replace(p, ' und ', ''))) / 5
+                      + (len(p) - len(replace(p, ' das ', ''))) / 5
+                      + (len(p) - len(replace(p, ' ist ', ''))) / 5 AS INT) AS s_de,
+                   CAST((len(p) - len(replace(p, ' le ', ''))) / 4
+                      + (len(p) - len(replace(p, ' la ', ''))) / 4
+                      + (len(p) - len(replace(p, ' et ', ''))) / 4
+                      + (len(p) - len(replace(p, ' les ', ''))) / 5
+                      + (len(p) - len(replace(p, ' des ', ''))) / 5 AS INT) AS s_fr
+            FROM (SELECT doc_id, concat(' ', lower(coalesce(text, '')), ' ') AS p
+                  FROM documents)
+        )
+        SELECT doc_id,
+               CASE WHEN greatest(s_en, s_es, s_de, s_fr) <= 0 THEN 'und'
+                    WHEN s_fr >= s_en AND s_fr >= s_es AND s_fr >= s_de THEN 'fr'
+                    WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
+                    WHEN s_en >= s_de THEN 'en'
+                    ELSE 'de' END AS pred_lang,
+               CAST(greatest(s_en, s_es, s_de, s_fr) AS BIGINT) AS lang_score
+        FROM scores
+    """)
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.language_id_heuristic(_t(spark, sf_dir, "documents")).select(
         "doc_id", "pred_lang", F.col("lang_score").cast("long").alias("lang_score")
     )
 
 
+@query(oracle="""
+        SELECT doc_id,
+               md5(text) AS fingerprint,
+               CAST(strpos('0123456789abcdef', substr(md5(text), 1, 1)) - 1 AS BIGINT) AS fp_bucket
+        FROM documents
+    """)
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.fingerprint_md5(_t(spark, sf_dir, "documents")).select(
         "doc_id", "fingerprint", F.col("fp_bucket").cast("long").alias("fp_bucket")
     )
 
 
+# r7 rows-only → full-oracle upgrades, part 2: the fingerprint pair.
+# Both declared queries switch to the portable md5-60bit hash (operators
+# keep their fast xxhash64 production default behind hash_fn="xx"), so
+# DuckDB recomputes every hash decision exactly — the same pattern that
+# upgraded the IVF/LSH/recall tier above.
+@query(oracle="""
+    SELECT doc_id,
+           list_min(list_transform(
+               range(1, greatest(length(text) - 15, 1) + 1),
+               i -> CAST(('0x' || substr(md5(substr(text, CAST(i AS INT), 16)),
+                                         1, 15)) AS BIGINT)
+           )) AS robust_fingerprint
+    FROM documents
+""")
 def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint (min hash over 16-char shingles). FULL
     ORACLE since r7: the declared query runs the ``hash_fn="portable"``
@@ -2360,6 +4859,30 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "robust_fingerprint")
 
 
+@query(oracle="""
+        WITH norm AS (
+            SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts FROM events
+        ),
+        gaps AS (
+            SELECT user_id, event_id, ts,
+                   CASE WHEN lag(ts) OVER w IS NULL
+                             OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 2 * 60 * 1000
+                        THEN 1 ELSE 0 END AS is_new
+            FROM norm
+            WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+        ),
+        sess AS (
+            SELECT user_id, event_id, ts,
+                   CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
+            FROM gaps
+        )
+        SELECT user_id, session_seq,
+               count(event_id) AS n_events,
+               min(ts) AS session_start,
+               max(ts) AS session_end
+        FROM sess GROUP BY user_id, session_seq
+    """)
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization, 2-minute inactivity gap — the events tables
     span ~43 minutes, so a 30-minute gap would degenerate to one session
@@ -2367,6 +4890,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_windows.sessionize_batch(_t(spark, sf_dir, "events"), gap_minutes=2)
 
 
+@query(oracle=_media_features_oracle(48))
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal plumbing: binary payloads → mapInPandas feature extraction
     (decode stubbed; plumbing real). FULL ORACLE since r7: the stub is
@@ -2392,6 +4916,18 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Streaming full oracles: drained stream state == batch recompute (the
+# staging/watermark choices in each query guarantee no late drops — see
+# the query docstrings).
+@query(oracle="""
+    -- WHERE mirrors the streaming window(ts, ...): NULL event time has
+    -- no window and never enters watermarked state (r14 nulls row)
+    SELECT date_trunc('hour', ts) AS window_start, event_type,
+           count(event_id) AS n,
+           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+    FROM events WHERE ts IS NOT NULL
+    GROUP BY date_trunc('hour', ts), event_type
+""")
 def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming tumbling-window counts driven to completion via
     the memory sink (update mode) — FULL ORACLE: the staged slices are
@@ -2423,6 +4959,39 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESS_SENTINEL_USER = -(2**62)  # no generated or hostile fixture uses it
 
 
+# Streaming sessionization (r8 rows-only → full-oracle upgrade): the
+# sentinel-drained sink closes EVERY session, so the stream must equal the
+# batch gap-split recompute — q_sessionize's oracle minus the session_seq
+# surrogate, with count(*) (the stream counts rows, not non-null
+# event_ids) and ts IS NOT NULL (NULL-ts rows never pass the time-range
+# slice predicates, so they never enter the stream).
+@query(oracle="""
+    WITH norm AS (
+        SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts
+        FROM events WHERE ts IS NOT NULL
+    ),
+    gaps AS (
+        SELECT user_id, event_id, ts,
+               -- epoch_us, not epoch_ms: the stateful operator compares
+               -- inter-event gaps in integer MICROSECONDS
+               CASE WHEN lag(ts) OVER w IS NULL
+                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 2 * 60 * 1000000
+                    THEN 1 ELSE 0 END AS is_new
+        FROM norm
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+    ),
+    sess AS (
+        SELECT user_id, ts,
+               CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
+        FROM gaps
+    )
+    SELECT user_id,
+           min(ts) AS session_start,
+           max(ts) AS session_end,
+           CAST(count(*) AS BIGINT) AS n_events
+    FROM sess GROUP BY user_id, session_seq
+""")
 def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState): per-user
     sessions with event-time timeout. Closed sessions agree with the batch
@@ -2494,6 +5063,21 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+        WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
+        upd AS (
+            SELECT o_orderkey, 'U' AS o_orderstatus, o_totalprice * 2 AS o_totalprice
+            FROM base WHERE o_orderkey % 100 = 0
+            UNION ALL
+            SELECT o_orderkey + 10000000, 'N', 1.0 FROM base WHERE o_orderkey % 1000 = 0
+        )
+        SELECT coalesce(u.o_orderkey, b.o_orderkey) AS o_orderkey,
+               CASE WHEN u.o_orderkey IS NOT NULL THEN u.o_orderstatus
+                    ELSE b.o_orderstatus END AS o_orderstatus,
+               CASE WHEN u.o_orderkey IS NOT NULL THEN u.o_totalprice
+                    ELSE b.o_totalprice END AS o_totalprice
+        FROM base b FULL OUTER JOIN upd u ON b.o_orderkey = u.o_orderkey
+    """)
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE/upsert over the orders table: keys %100==0 updated (status 'U',
     price doubled), keys %1000==0 re-inserted as new rows — the incremental
@@ -2516,6 +5100,12 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lake.merge_upsert(base, updates, ["o_orderkey"])
 
 
+@query(oracle="""
+        SELECT o_orderpriority, count(l_orderkey) AS n_lineitems,
+               CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        GROUP BY o_orderpriority
+    """)
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed co-located join: both sides staged as bucketed tables on the
     join key, so the join itself needs NO exchange (asserted in tests) —
@@ -2539,1988 +5129,37 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ==========================================================================
-# Registry + oracles
-# ==========================================================================
-
-QUERIES: dict[str, QueryFn] = {
-    # reference parity
-    "q_ingest_rows": q_ingest_rows,
-    "q_scan_json": q_scan_json,
-    "q_scan_csv": q_scan_csv,
-    "q_scan_orc": q_scan_orc,
-    "q_scan_parquet": q_scan_parquet,
-    "q_silver_projection": q_silver_projection,
-    "q_str_trim": q_str_trim,
-    "q_str_lower": q_str_lower,
-    "q_str_concat_ws": q_str_concat_ws,
-    "q_cast_double": q_cast_double,
-    "q_filter_null_or_empty": q_filter_null_or_empty,
-    "q_exists_probe": q_exists_probe,
-    "q_is_empty": q_is_empty,
-    "q_limit_count": q_limit_count,
-    "q_gold_agg": q_gold_agg,
-    "q_quality_summary": q_quality_summary,
-    # relational completion
-    "q_join_inner": q_join_inner,
-    "q_join_left": q_join_left,
-    "q_join_semi": q_join_semi,
-    "q_join_anti": q_join_anti,
-    "q_star_join": q_star_join,
-    "q_topk": q_topk,
-    "q_topk_per_group": q_topk_per_group,
-    "q_window_rank": q_window_rank,
-    "q_window_running_sum": q_window_running_sum,
-    "q_window_lag": q_window_lag,
-    "q_rollup": q_rollup,
-    "q_cube": q_cube,
-    "q_pivot": q_pivot,
-    "q_distinct": q_distinct,
-    "q_count_distinct": q_count_distinct,
-    "q_approx_count_distinct": q_approx_count_distinct,
-    "q_union": q_union,
-    "q_intersect": q_intersect,
-    "q_except": q_except,
-    "q_date_trunc_agg": q_date_trunc_agg,
-    "q_tumbling_window": q_tumbling_window,
-    "q_sliding_window": q_sliding_window,
-    "q_json_extract": q_json_extract,
-    "q_array_ops": q_array_ops,
-    "q_explode_tokens": q_explode_tokens,
-    "q_stats_agg": q_stats_agg,
-    "q_percentiles": q_percentiles,
-    "q_minmax_by": q_minmax_by,
-    "q_conditional_funcs": q_conditional_funcs,
-    "q_regex_extract": q_regex_extract,
-    "q_histogram": q_histogram,
-    "q_sql_tpch_q1": q_sql_tpch_q1,
-    "q_asof_join": q_asof_join,
-    "q_asof_join_nearest": q_asof_join_nearest,
-    "q_range_join": q_range_join,
-    "q_skew_join_salted": q_skew_join_salted,
-    "q_grouping_sets": q_grouping_sets,
-    "q_sql_tpch_q3": q_sql_tpch_q3,
-    "q_sql_tpch_q5": q_sql_tpch_q5,
-    "q_join_full": q_join_full,
-    "q_cross_join": q_cross_join,
-    "q_window_lead_ntile": q_window_lead_ntile,
-    "q_window_first_last": q_window_first_last,
-    "q_window_range_frame": q_window_range_frame,
-    "q_exists_subquery": q_exists_subquery,
-    "q_in_subquery": q_in_subquery,
-    "q_scalar_subquery": q_scalar_subquery,
-    "q_sql_tpch_q6": q_sql_tpch_q6,
-    "q_sql_tpch_q14": q_sql_tpch_q14,
-    "q_having": q_having,
-    "q_string_funcs": q_string_funcs,
-    "q_datetime_funcs": q_datetime_funcs,
-    "q_from_json_struct": q_from_json_struct,
-    "q_sample_seeded": q_sample_seeded,
-    "q_tfidf": q_tfidf,
-    "q_word_count": q_word_count,
-    "q_collect_list_sorted": q_collect_list_sorted,
-    "q_streaming_dedup": q_streaming_dedup,
-    "q_dedup_clusters": q_dedup_clusters,
-    "q_scd2": q_scd2,
-    "q_cosine_pairs": q_cosine_pairs,
-    "q_ivf_search": q_ivf_search,
-    "q_sql_tpch_q10": q_sql_tpch_q10,
-    "q_sql_tpch_q22": q_sql_tpch_q22,
-    "q_sql_tpch_q7": q_sql_tpch_q7,
-    "q_range_sorted_scan": q_range_sorted_scan,
-    "q_snapshot_diff": q_snapshot_diff,
-    "q_sql_tpch_q19": q_sql_tpch_q19,
-    "q_sql_tpch_q8": q_sql_tpch_q8,
-    "q_sql_tpch_q13": q_sql_tpch_q13,
-    "q_sql_tpch_q15": q_sql_tpch_q15,
-    "q_sql_tpch_q17": q_sql_tpch_q17,
-    "q_interval_join": q_interval_join,
-    "q_streaming_sliding": q_streaming_sliding,
-    "q_array_higher_order": q_array_higher_order,
-    "q_bitwise_agg": q_bitwise_agg,
-    "q_unpivot": q_unpivot,
-    "q_grouping_id": q_grouping_id,
-    "q_medallion_e2e": q_medallion_e2e,
-    "q_versioned_compact_e2e": q_versioned_compact_e2e,
-    "q_union_by_name": q_union_by_name,
-    "q_null_safe_join": q_null_safe_join,
-    "q_skew_agg_two_level": q_skew_agg_two_level,
-    "q_dedup_canonical": q_dedup_canonical,
-    "q_resample_ffill": q_resample_ffill,
-    "q_media_frame_sample": q_media_frame_sample,
-    "q_streaming_enrich": q_streaming_enrich,
-    "q_streaming_interval_join": q_streaming_interval_join,
-    "q_sql_tpch_q18": q_sql_tpch_q18,
-    "q_data_profile": q_data_profile,
-    "q_outliers_zscore": q_outliers_zscore,
-    "q_incremental_agg": q_incremental_agg,
-    # LLM-pipeline extensions
-    "q_dedup_exact": q_dedup_exact,
-    "q_dedup_near": q_dedup_near,
-    "q_dedup_near_verified": q_dedup_near_verified,
-    "q_simhash": q_simhash,
-    "q_ngram_jaccard": q_ngram_jaccard,
-    "q_token_jaccard": q_token_jaccard,
-    "q_token_dup_clusters": q_token_dup_clusters,
-    "q_incremental_ingest_dedup": q_incremental_ingest_dedup,
-    "q_dedup_rate_report": q_dedup_rate_report,
-    "q_corpus_mix": q_corpus_mix,
-    "q_dup_ngram_fraction": q_dup_ngram_fraction,
-    "q_pmi_collocations": q_pmi_collocations,
-    "q_class_weights": q_class_weights,
-    "q_token_shards": q_token_shards,
-    "q_knn_join": q_knn_join,
-    "q_shared_span_pairs": q_shared_span_pairs,
-    "q_label_centroids": q_label_centroids,
-    "q_token_dedup_near": q_token_dedup_near,
-    "q_cosine_topk": q_cosine_topk,
-    "q_cosine_topk_lsh": q_cosine_topk_lsh,
-    "q_embedding_near_dup": q_embedding_near_dup,
-    "q_ivf_assign": q_ivf_assign,
-    "q_ann_recall": q_ann_recall,
-    "q_text_stats": q_text_stats,
-    "q_quality_funnel": q_quality_funnel,
-    "q_bigram_logprob": q_bigram_logprob,
-    "q_text_quality": q_text_quality,
-    "q_token_count": q_token_count,
-    "q_lang_id": q_lang_id,
-    "q_fingerprint": q_fingerprint,
-    "q_rolling_fingerprint": q_rolling_fingerprint,
-    "q_sessionize": q_sessionize,
-    "q_media_features": q_media_features,
-    "q_streaming_tumbling": q_streaming_tumbling,
-    "q_streaming_sessionize": q_streaming_sessionize,
-    "q_bucketed_join": q_bucketed_join,
-    "q_merge_upsert": q_merge_upsert,
-    "q_hash_split": q_hash_split,
-    "q_stratified_sample": q_stratified_sample,
-    "q_decontaminate": q_decontaminate,
-    "q_pack_sequences": q_pack_sequences,
-    "q_repetition_stats": q_repetition_stats,
-    "q_boilerplate_ngrams": q_boilerplate_ngrams,
-    "q_pii_redact": q_pii_redact,
-    "q_temperature_mix": q_temperature_mix,
-    "q_shard_order": q_shard_order,
-    "q_quantize_embeddings": q_quantize_embeddings,
-    "q_moving_avg_time": q_moving_avg_time,
-    "q_zorder_scan": q_zorder_scan,
-    "q_kmeans_1d": q_kmeans_1d,
-    "q_chunk_documents": q_chunk_documents,
-    "q_hll_partitioned": q_hll_partitioned,
-    "q_hll_union_portable": q_hll_union_portable,
-    "q_funnel": q_funnel,
-    "q_cohort_retention": q_cohort_retention,
-    "q_pagerank": q_pagerank,
-}
-
-
-ORACLE_SQL: dict[str, str] = {
-    "q_scan_json": "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-    "q_scan_csv": "SELECT r_regionkey, r_name FROM region",
-    "q_scan_orc": "SELECT n_nationkey, n_name, n_regionkey FROM nation",
-    "q_scan_parquet": """
-        SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
-        FROM lineitem WHERE l_returnflag = 'R'
-    """,
-    "q_silver_projection": """
-        SELECT CAST(p_partkey AS VARCHAR) AS id,
-               trim(p_name) AS item_name,
-               lower(p_type) AS item_type,
-               concat_ws(', ', p_name, p_brand, p_type) AS full_desc,
-               CAST(CAST(p_size AS VARCHAR) AS DOUBLE) AS size_double
-        FROM part
-    """,
-    "q_str_trim": "SELECT c_custkey, trim(c_name) AS name_trimmed FROM customer",
-    "q_str_lower": "SELECT p_partkey, lower(p_type) AS type_lower FROM part",
-    "q_str_concat_ws": """
-        SELECT p_partkey, concat_ws(', ', p_name, p_brand, p_type) AS joined FROM part
-    """,
-    "q_cast_double": """
-        SELECT p_partkey, CAST(CAST(p_size AS VARCHAR) AS DOUBLE) AS size_double FROM part
-    """,
-    "q_filter_null_or_empty": """
-        SELECT doc_id, lang, source FROM documents
-        WHERE text IS NULL OR text = '' OR lang IS NULL OR lang = ''
-    """,
-    "q_exists_probe": """
-        SELECT CAST(count(CASE WHEN c_acctbal < 0 THEN 1 END) > 0 AS INT) AS exists_flag
-        FROM customer
-    """,
-    "q_is_empty": "SELECT CAST(count(*) = 0 AS INT) AS is_empty FROM region",
-    "q_limit_count": """
-        SELECT count(*) AS bounded_cnt FROM (SELECT * FROM lineitem LIMIT 100)
-    """,
-    "q_gold_agg": """
-        SELECT o_orderstatus,
-               CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS order_month,
-               count(o_orderkey) AS order_count
-        FROM orders GROUP BY o_orderstatus, date_trunc('month', o_orderdate)
-    """,
-    "q_quality_summary": """
-        SELECT count(*) AS total_rows,
-               CAST(coalesce(sum(CASE WHEN text IS NULL OR text = '' THEN 1 ELSE 0 END), 0) AS BIGINT) AS viol_text,
-               CAST(coalesce(sum(CASE WHEN lang IS NULL OR lang = '' THEN 1 ELSE 0 END), 0) AS BIGINT) AS viol_lang,
-               CAST(coalesce(sum(CASE WHEN source IS NULL OR source = '' THEN 1 ELSE 0 END), 0) AS BIGINT) AS viol_source
-        FROM documents
-    """,
-    "q_join_inner": """
-        SELECT c_custkey, c_name, n_name AS nation_name
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
-    """,
-    "q_join_left": """
-        SELECT o_orderkey, o_totalprice, c_name
-        FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-    """,
-    "q_join_semi": """
-        SELECT c_custkey, c_name FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    """,
-    "q_join_anti": """
-        SELECT c_custkey, c_name FROM customer c
-        WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    """,
-    "q_star_join": """
-        SELECT r_name AS region_name,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
-               count(l_orderkey) AS n_lineitems
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation   ON c_nationkey = n_nationkey
-        JOIN region   ON n_regionkey = r_regionkey
-        GROUP BY r_name
-    """,
-    "q_topk": """
-        SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
-    """,
-    "q_topk_per_group": """
-        SELECT c_custkey, c_mktsegment, c_acctbal, CAST(rn AS INT) AS rn FROM (
-            SELECT c_custkey, c_mktsegment, c_acctbal,
-                   row_number() OVER (PARTITION BY c_mktsegment
-                                      ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
-            FROM customer
-        ) WHERE rn <= 3
-    """,
-    "q_window_rank": """
-        SELECT c_custkey, c_mktsegment, c_acctbal,
-               CAST(row_number() OVER w AS INT) AS rn,
-               CAST(rank()       OVER w AS INT) AS rnk,
-               CAST(dense_rank() OVER w AS INT) AS drnk
-        FROM customer
-        WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC)
-    """,
-    "q_window_running_sum": """
-        SELECT o_custkey, o_orderkey,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
-                   PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS DOUBLE) AS running_sum
-        FROM orders
-    """,
-    "q_window_lag": """
-        SELECT user_id, event_id,
-               lag(value) OVER w AS prev_value,
-               value - lag(value) OVER w AS delta_value
-        FROM events
-        WINDOW w AS (PARTITION BY user_id
-                     ORDER BY date_trunc('microseconds', ts) ASC, event_id ASC)
-    """,
-    "q_rollup": """
-        SELECT o_orderstatus, o_orderpriority, count(o_orderkey) AS n_orders
-        FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-    """,
-    "q_cube": """
-        SELECT l_returnflag, l_linestatus, count(l_orderkey) AS n_items
-        FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-    """,
-    "q_pivot": """
-        SELECT l_returnflag,
-               count(CASE WHEN l_linestatus = 'F' THEN l_orderkey END) AS "F",
-               count(CASE WHEN l_linestatus = 'O' THEN l_orderkey END) AS "O"
-        FROM lineitem GROUP BY l_returnflag
-    """,
-    "q_stats_agg": """
-        SELECT l_returnflag,
-               round(stddev_samp(l_quantity), 4) AS sd_qty,
-               round(var_samp(l_discount), 4) AS var_disc,
-               round(corr(l_quantity, l_extendedprice), 4) + 0.0 AS corr_qty_price,
-               round(covar_samp(l_quantity, l_extendedprice), 4) + 0.0 AS covar_qty_price
-        FROM lineitem GROUP BY l_returnflag
-    """,
-    "q_percentiles": """
-        SELECT o_orderstatus,
-               round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-               round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
-               round(quantile_cont(o_totalprice, 0.99), 4) AS p99
-        FROM orders GROUP BY o_orderstatus
-    """,
-    "q_minmax_by": """
-        SELECT o_orderpriority,
-               arg_max(o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) * 100000000 + o_orderkey) AS top_orderkey,
-               arg_min(o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) * 100000000 - o_orderkey) AS bottom_orderkey
-        FROM orders GROUP BY o_orderpriority
-    """,
-    "q_conditional_funcs": """
-        SELECT c_custkey,
-               CASE WHEN c_acctbal < 0 THEN 'overdrawn'
-                    WHEN c_acctbal < 1000 THEN 'low'
-                    ELSE 'high' END AS balance_band,
-               coalesce(nullif(c_mktsegment, 'MACHINERY'), 'OTHER') AS segment_or_other
-        FROM customer
-    """,
-    "q_regex_extract": """
-        SELECT p_partkey,
-               regexp_extract(p_name, '([a-z]+)$', 1) AS last_word,
-               substring(p_brand, 1, 5) AS brand_prefix
-        FROM part
-    """,
-    "q_histogram": """
-        SELECT CAST(floor(o_totalprice / 50000) AS BIGINT) AS price_bucket,
-               count(o_orderkey) AS n_orders
-        FROM orders GROUP BY floor(o_totalprice / 50000)
-    """,
-    "q_asof_join": """
-        WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-             r AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase')
-        SELECT l.event_id, l.user_id,
-               (SELECT r.event_id FROM r
-                WHERE r.user_id = l.user_id
-                  AND date_trunc('microseconds', r.ts) <= date_trunc('microseconds', l.ts)
-                ORDER BY date_trunc('microseconds', r.ts) DESC, r.event_id DESC
-                LIMIT 1) AS asof_event_id,
-               (SELECT r.value FROM r
-                WHERE r.user_id = l.user_id
-                  AND date_trunc('microseconds', r.ts) <= date_trunc('microseconds', l.ts)
-                ORDER BY date_trunc('microseconds', r.ts) DESC, r.event_id DESC
-                LIMIT 1) AS asof_value
-        FROM l
-    """,
-    "q_asof_join_nearest": """
-        WITH l AS (SELECT event_id, user_id, ts FROM events
-                   WHERE event_type = 'click' AND ts IS NOT NULL),
-             r AS (SELECT event_id, user_id, ts, value FROM events
-                   WHERE event_type = 'purchase' AND ts IS NOT NULL)
-        SELECT l.event_id, l.user_id,
-               (SELECT r.event_id FROM r
-                WHERE r.user_id = l.user_id
-                ORDER BY abs(epoch_us(r.ts) - epoch_us(l.ts)) ASC,
-                         (r.ts <= l.ts) DESC,
-                         CASE WHEN r.ts <= l.ts THEN -r.event_id
-                              ELSE r.event_id END ASC
-                LIMIT 1) AS near_event_id,
-               (SELECT r.value FROM r
-                WHERE r.user_id = l.user_id
-                ORDER BY abs(epoch_us(r.ts) - epoch_us(l.ts)) ASC,
-                         (r.ts <= l.ts) DESC,
-                         CASE WHEN r.ts <= l.ts THEN -r.event_id
-                              ELSE r.event_id END ASC
-                LIMIT 1) AS near_value
-        FROM l
-    """,
-    "q_range_join": """
-        SELECT band, count(o_orderkey) AS n_orders,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-        FROM orders
-        JOIN (VALUES ('low', 0.0, 100000.0),
-                     ('mid', 100000.0, 250000.0),
-                     ('high', 250000.0, 1e9)) b(band, lo, hi)
-          ON o_totalprice >= lo AND o_totalprice < hi
-        GROUP BY band
-    """,
-    "q_skew_join_salted": """
-        SELECT o_orderpriority, count(l_orderkey) AS n_lineitems,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY o_orderpriority
-    """,
-    "q_grouping_sets": """
-        SELECT o_orderstatus, o_orderpriority, count(o_orderkey) AS n_orders
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """,
-    "q_sql_tpch_q3": """
-        SELECT l_orderkey,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue,
-               CAST(o_orderdate AS TIMESTAMP) AS o_orderdate
-        FROM customer JOIN orders ON c_custkey = o_custkey
-                      JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
-          AND l_shipdate  > TIMESTAMP '1998-06-01 00:00:00'
-        GROUP BY l_orderkey, o_orderdate
-        ORDER BY revenue DESC, l_orderkey ASC
-        LIMIT 10
-    """,
-    "q_sql_tpch_q5": """
-        SELECT n_name,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM customer JOIN orders   ON c_custkey = o_custkey
-                      JOIN lineitem ON l_orderkey = o_orderkey
-                      JOIN supplier ON l_suppkey = s_suppkey
-                                   AND c_nationkey = s_nationkey
-                      JOIN nation   ON s_nationkey = n_nationkey
-                      JOIN region   ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
-          AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-          AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-        GROUP BY n_name
-    """,
-    "q_merge_upsert": """
-        WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders),
-        upd AS (
-            SELECT o_orderkey, 'U' AS o_orderstatus, o_totalprice * 2 AS o_totalprice
-            FROM base WHERE o_orderkey % 100 = 0
-            UNION ALL
-            SELECT o_orderkey + 10000000, 'N', 1.0 FROM base WHERE o_orderkey % 1000 = 0
-        )
-        SELECT coalesce(u.o_orderkey, b.o_orderkey) AS o_orderkey,
-               CASE WHEN u.o_orderkey IS NOT NULL THEN u.o_orderstatus
-                    ELSE b.o_orderstatus END AS o_orderstatus,
-               CASE WHEN u.o_orderkey IS NOT NULL THEN u.o_totalprice
-                    ELSE b.o_totalprice END AS o_totalprice
-        FROM base b FULL OUTER JOIN upd u ON b.o_orderkey = u.o_orderkey
-    """,
-    "q_bucketed_join": """
-        SELECT o_orderpriority, count(l_orderkey) AS n_lineitems,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY o_orderpriority
-    """,
-    "q_distinct": "SELECT DISTINCT c_mktsegment FROM customer",
-    "q_count_distinct": "SELECT count(DISTINCT o_custkey) AS n_customers FROM orders",
-    # sketch-accuracy contract (r12 upgrade): exact scalar + TRUE flag —
-    # a hash match proves the HLL++ estimate is inside tolerance
-    "q_approx_count_distinct": """
-        SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-               TRUE AS approx_ok
-        FROM lineitem
-    """,
-    "q_union": """
-        SELECT c_nationkey AS nationkey FROM customer
-        UNION ALL
-        SELECT s_nationkey AS nationkey FROM supplier
-    """,
-    "q_intersect": """
-        SELECT c_nationkey AS nationkey FROM customer
-        INTERSECT
-        SELECT s_nationkey AS nationkey FROM supplier
-    """,
-    "q_except": """
-        SELECT c_nationkey AS nationkey FROM customer
-        EXCEPT ALL
-        SELECT s_nationkey AS nationkey FROM supplier
-    """,
-    "q_date_trunc_agg": """
-        SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS bucket,
-               count(value) AS n,
-               CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM events GROUP BY date_trunc('day', ts)
-    """,
-    "q_tumbling_window": """
-        -- WHERE mirrors F.window(ts, ...): NULL event time has no window
-        -- (the r14 nulls-profile NULL-ts row)
-        SELECT date_trunc('hour', ts) AS window_start,
-               count(value) AS n,
-               CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM events WHERE ts IS NOT NULL GROUP BY date_trunc('hour', ts)
-    """,
-    "q_sliding_window": """
-        WITH expanded AS (
-            SELECT value,
-                   to_timestamp(s) AS ws
-            FROM events,
-                 UNNEST(generate_series(
-                     CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800 - 1800,
-                     CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800,
-                     1800)) AS t(s)
-        )
-        SELECT CAST(ws AS TIMESTAMP) AS window_start,
-               count(value) AS n,
-               CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM expanded GROUP BY ws
-    """,
-    "q_json_extract": """
-        SELECT event_type,
-               count(CAST(json_extract(props, '$.k') AS INT)) AS n_with_k,
-               CAST(sum(CAST(json_extract(props, '$.k') AS INT)) AS BIGINT) AS sum_k
-        FROM events GROUP BY event_type
-    """,
-    "q_join_full": """
-        SELECT c_custkey, c_name, o_orderkey, o_totalprice
-        FROM (SELECT * FROM customer WHERE c_custkey % 3 = 0) c
-        FULL OUTER JOIN (SELECT o_orderkey, o_custkey, o_totalprice
-                         FROM orders WHERE o_orderkey % 2 = 0) o
-          ON c.c_custkey = o.o_custkey
-    """,
-    "q_cross_join": """
-        SELECT n_name, r_name FROM nation CROSS JOIN region
-    """,
-    "q_window_lead_ntile": """
-        SELECT c_custkey,
-               lead(c_acctbal) OVER w AS next_val,
-               CAST(ntile(4) OVER w AS INT) AS quartile,
-               round(percent_rank() OVER w, 6) AS pct_rank
-        FROM customer
-        WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal ASC, c_custkey ASC)
-    """,
-    "q_window_first_last": """
-        SELECT c_custkey,
-               first_value(c_custkey) OVER w AS first_key,
-               last_value(c_custkey) OVER w AS last_key
-        FROM customer
-        WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal ASC, c_custkey ASC
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-    """,
-    "q_window_range_frame": """
-        SELECT c_custkey,
-               count(*) OVER (PARTITION BY c_mktsegment
-                              ORDER BY CAST(round(c_acctbal * 100) AS BIGINT)
-                              RANGE BETWEEN 10000 PRECEDING AND 10000 FOLLOWING
-                             ) AS n_neighbors
-        FROM customer
-    """,
-    "q_exists_subquery": """
-        SELECT o_orderpriority, count(o_orderkey) AS n_orders
-        FROM orders
-        WHERE EXISTS (SELECT 1 FROM lineitem
-                      WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        GROUP BY o_orderpriority
-    """,
-    "q_in_subquery": """
-        SELECT c_custkey, c_name FROM customer
-        WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 0)
-    """,
-    "q_scalar_subquery": """
-        SELECT o_orderkey, o_totalprice FROM orders
-        WHERE o_totalprice > 0.5 * (SELECT max(o_totalprice) FROM orders)
-    """,
-    "q_sql_tpch_q6": """
-        SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-               count(l_orderkey) AS n_items
-        FROM lineitem
-        WHERE l_shipdate >= timestamp '1996-01-01 00:00:00'
-          AND l_shipdate <  timestamp '1997-01-01 00:00:00'
-          AND l_discount BETWEEN 0.04 AND 0.06
-          AND l_quantity < 24
-    """,
-    "q_sql_tpch_q14": """
-        SELECT round(CAST(sum(CASE WHEN p_type = 'ECONOMY'
-                             THEN CAST(l_extendedprice AS DECIMAL(18,4))
-                                  * CAST(1 - l_discount AS DECIMAL(18,4))
-                             ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE), 4) AS promo_revenue,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS total_revenue
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-    """,
-    "q_having": """
-        SELECT o_custkey, count(o_orderkey) AS n_orders,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-        FROM orders GROUP BY o_custkey HAVING count(o_orderkey) >= 12
-    """,
-    "q_string_funcs": """
-        SELECT p_partkey,
-               upper(p_name) AS name_upper,
-               replace(p_name, ' ', '_') AS name_snake,
-               lpad(p_brand, 10, '0') AS brand_padded,
-               reverse(p_name) AS name_rev,
-               length(p_name) AS name_len,
-               levenshtein(p_brand, 'Brand#1') AS edit_dist
-        FROM part
-    """,
-    "q_datetime_funcs": """
-        SELECT o_orderkey,
-               year(o_orderdate) AS o_year,
-               month(o_orderdate) AS o_month,
-               day(o_orderdate) AS o_day,
-               CAST(o_orderdate + INTERVAL 30 DAY AS DATE) AS due_date,
-               datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days_since_t0,
-               last_day(CAST(o_orderdate AS DATE)) AS month_end
-        FROM orders
-    """,
-    "q_from_json_struct": """
-        SELECT event_id,
-               CAST(json_extract(props, '$.k') AS INT) AS k_val,
-               CAST(json_extract_string(props, '$.tag') AS VARCHAR) AS tag_val
-        FROM events
-    """,
-    "q_tfidf": """
-        WITH tokens AS (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-        ), tf AS (
-            SELECT doc_id, term, count(*) AS tf FROM tokens
-            WHERE length(term) > 0 GROUP BY doc_id, term
-        ), dfreq AS (
-            SELECT term, count(*) AS df FROM tf GROUP BY term
-        ), n AS (
-            SELECT count(DISTINCT doc_id) AS n_docs FROM documents
-        ), scored AS (
-            SELECT tf.doc_id, tf.term,
-                   round(tf.tf * ln(n.n_docs / dfreq.df), 4) AS tfidf
-            FROM tf JOIN dfreq USING (term) CROSS JOIN n
-        )
-        SELECT doc_id, term, tfidf, CAST(rn AS INT) AS rn FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rn
-            FROM scored
-        ) WHERE rn <= 3
-    """,
-    "q_word_count": """
-        SELECT token, n FROM (
-            SELECT token, count(*) AS n FROM (
-                SELECT unnest(string_split(text, ' ')) AS token FROM documents
-            ) WHERE length(token) > 0 GROUP BY token
-        ) ORDER BY n DESC, token ASC LIMIT 20
-    """,
-    "q_collect_list_sorted": """
-        SELECT c_nationkey,
-               string_agg(CAST(c_custkey AS VARCHAR), ',' ORDER BY c_custkey) AS custkeys_csv,
-               count(*) AS n_customers
-        FROM customer GROUP BY c_nationkey
-    """,
-    "q_dedup_clusters": """
-        WITH RECURSIVE sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
-                       i -> array_to_string(list_slice(
-                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
-                   )) AS shingles
-            FROM documents
-        ),
-        sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
-        ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   a.set_size AS sz_a, b.set_size AS sz_b,
-                   count(*) AS n_inter
-            FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
-        ),
-        pairs AS (
-            SELECT id_a, id_b FROM inter
-            WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.2
-        ),
-        sym AS (
-            SELECT id_a AS s, id_b AS d FROM pairs
-            UNION ALL
-            SELECT id_b AS s, id_a AS d FROM pairs
-        ),
-        reach AS (
-            SELECT s, d FROM sym
-            UNION
-            SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s
-        )
-        SELECT s AS doc_id, least(s, min(d)) AS canonical_id FROM reach GROUP BY s
-    """,
-    "q_interval_join": """
-        SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b
-        FROM events a JOIN events b
-          ON a.user_id = b.user_id
-         AND a.event_id < b.event_id
-         AND abs(epoch(a.ts) - epoch(b.ts)) <= 300.0
-    """,
-    "q_array_higher_order": """
-        SELECT vec_id,
-               CAST(len(list_filter(embedding, x -> x > 0)) AS BIGINT) AS n_positive,
-               CAST(len(list_filter(embedding, x -> x > 0.9)) > 0 AS INT) AS has_gt_09,
-               CAST(len(list_filter(embedding, x -> NOT (x > -1.5))) = 0 AS INT) AS all_gt_neg15
-        FROM embeddings
-    """,
-    "q_bitwise_agg": """
-        SELECT o_orderstatus,
-               bit_or(o_orderkey % 8) AS flags_or,
-               bit_and(o_orderkey % 8) AS flags_and
-        FROM orders GROUP BY o_orderstatus
-    """,
-    "q_unpivot": """
-        SELECT p_partkey, 'size' AS attribute, CAST(p_size AS DOUBLE) AS value
-        FROM part
-        UNION ALL
-        SELECT p_partkey, 'retailprice' AS attribute, p_retailprice AS value
-        FROM part
-    """,
-    "q_grouping_id": """
-        SELECT o_orderstatus, o_orderpriority,
-               count(o_orderkey) AS n_orders,
-               CAST(grouping(o_orderstatus) AS INT) AS g_status,
-               CAST(grouping(o_orderpriority) AS INT) AS g_priority
-        FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-    """,
-    "q_medallion_e2e": """
-        SELECT lower(p_type) AS item_type, p_brand AS brand,
-               count(p_partkey) AS n_items
-        FROM part GROUP BY lower(p_type), p_brand
-    """,
-    "q_versioned_compact_e2e": """
-        SELECT s_nationkey,
-               count(s_suppkey) AS n_suppliers,
-               CAST(sum(CAST(s_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_bal
-        FROM supplier GROUP BY s_nationkey
-    """,
-    "q_union_by_name": """
-        SELECT c_custkey, c_name, c_acctbal, CAST(NULL AS VARCHAR) AS c_mktsegment
-        FROM customer WHERE c_custkey % 2 = 0
-        UNION ALL
-        SELECT c_custkey, c_name, c_acctbal, c_mktsegment
-        FROM customer WHERE c_custkey % 2 = 1
-    """,
-    "q_null_safe_join": """
-        WITH o AS (
-            SELECT o_orderkey,
-                   CASE WHEN o_totalprice >= 300000.0
-                        THEN CAST(floor(o_totalprice / 100000) AS BIGINT) END AS band
-            FROM orders
-        ), ref(band, label) AS (
-            VALUES (3, 'high3'), (4, 'high4'), (NULL, 'small')
-        )
-        SELECT o_orderkey, label
-        FROM o JOIN ref ON o.band IS NOT DISTINCT FROM ref.band
-    """,
-    "q_skew_agg_two_level": """
-        SELECT l_returnflag, count(*) AS n,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-        FROM lineitem GROUP BY l_returnflag
-    """,
-    "q_dedup_canonical": """
-        WITH RECURSIVE sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
-                       i -> array_to_string(list_slice(
-                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
-                   )) AS shingles
-            FROM documents
-        ),
-        sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
-        ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   a.set_size AS sz_a, b.set_size AS sz_b,
-                   count(*) AS n_inter
-            FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
-        ),
-        pairs AS (
-            SELECT id_a, id_b FROM inter
-            WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.2
-        ),
-        sym AS (
-            SELECT id_a AS s, id_b AS d FROM pairs
-            UNION ALL
-            SELECT id_b AS s, id_a AS d FROM pairs
-        ),
-        reach AS (
-            SELECT s, d FROM sym
-            UNION
-            SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s
-        ),
-        losers AS (
-            SELECT s AS doc_id FROM reach GROUP BY s HAVING least(s, min(d)) <> s
-        )
-        SELECT doc_id, lang, source FROM documents
-        WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-    """,
-    "q_scd2": """
-        SELECT user_id, event_id, value,
-               ts AS valid_from,
-               lead(ts) OVER w AS valid_to,
-               CAST(lead(ts) OVER w IS NULL AS INT) AS is_current
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    """,
-    "q_cosine_pairs": """
-        WITH sub AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 50),
-        p AS (
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   a.embedding AS ea, b.embedding AS eb
-            FROM sub a JOIN sub b ON a.vec_id < b.vec_id
-        )
-        SELECT id_a, id_b,
-               round(
-                   list_aggregate(list_transform(range(1, len(ea) + 1),
-                       i -> CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)), 'sum')
-                   / (sqrt(list_aggregate(list_transform(ea,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-                      * sqrt(list_aggregate(list_transform(eb,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))),
-                   4) + 0.0 AS cosine
-        FROM p
-    """,
-    "q_data_profile": """
-        SELECT count(*) AS n_rows,
-               CAST(coalesce(sum(CASE WHEN c_name IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS nulls_c_name,
-               CAST(coalesce(sum(CASE WHEN c_mktsegment IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS nulls_c_mktsegment,
-               count(DISTINCT c_mktsegment) AS distinct_c_mktsegment,
-               min(c_acctbal) AS min_val,
-               max(c_acctbal) AS max_val,
-               round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE)
-                     / count(c_acctbal), 4) AS mean_val
-        FROM customer
-    """,
-    "q_outliers_zscore": """
-        WITH stats AS (
-            SELECT event_type,
-                   round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE)
-                         / count(value), 4) AS mu,
-                   round(stddev_samp(value), 4) AS sigma
-            FROM events GROUP BY event_type
-        )
-        SELECT event_id, event_type,
-               CASE WHEN sigma > 0 THEN round((value - mu) / sigma, 4) END AS z
-        FROM events JOIN stats USING (event_type)
-        WHERE sigma > 0 AND abs(round((value - mu) / sigma, 4)) >= 3.0
-    """,
-    "q_incremental_agg": """
-        SELECT o_orderstatus,
-               count(*) AS n_orders,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-        FROM orders GROUP BY o_orderstatus
-    """,
-    "q_resample_ffill": """
-        WITH obs AS (
-            -- non-observations (NULL ts or NULL value) excluded up front,
-            -- mirroring operators/timeseries.py resample_ffill
-            SELECT * FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        ),
-        bounds AS (
-            SELECT date_trunc('day', min(ts)) AS d0, date_trunc('day', max(ts)) AS d1
-            FROM obs
-        ),
-        keys AS (SELECT DISTINCT user_id FROM obs),
-        grid AS (
-            SELECT k.user_id, b.d0 + i.i * INTERVAL 1 DAY AS slot
-            FROM keys k
-            CROSS JOIN bounds b
-            CROSS JOIN (SELECT unnest(range(0, 3700)) AS i) i
-            WHERE b.d0 + i.i * INTERVAL 1 DAY <= b.d1
-        ),
-        slotted AS (
-            SELECT user_id, date_trunc('day', ts) AS slot,
-                   arg_max(value,
-                           CAST(floor(epoch(ts)) AS BIGINT) * 1000000000 + event_id
-                   ) AS slot_value
-            FROM obs GROUP BY user_id, date_trunc('day', ts)
-        )
-        SELECT g.user_id, g.slot,
-               last_value(s.slot_value IGNORE NULLS) OVER (
-                   PARTITION BY g.user_id ORDER BY g.slot ASC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS value_ffill
-        FROM grid g LEFT JOIN slotted s
-          ON g.user_id = s.user_id AND g.slot = s.slot
-    """,
-    "q_sql_tpch_q18": """
-        SELECT o_orderkey, o_totalprice, CAST(big.sum_qty AS DOUBLE) AS sum_qty
-        FROM orders JOIN (
-            SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty
-            FROM lineitem GROUP BY l_orderkey
-            HAVING sum(CAST(l_quantity AS DECIMAL(18,4))) > 150
-        ) big ON o_orderkey = big.l_orderkey
-    """,
-    "q_sql_tpch_q10": """
-        SELECT c_custkey, c_name, n_name,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM customer
-        JOIN orders   ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        JOIN nation   ON c_nationkey = n_nationkey
-        WHERE l_returnflag = 'R'
-          AND o_orderdate >= timestamp '1996-01-01 00:00:00'
-          AND o_orderdate <  timestamp '1997-01-01 00:00:00'
-        GROUP BY c_custkey, c_name, n_name
-        ORDER BY revenue DESC, c_custkey ASC
-        LIMIT 20
-    """,
-    "q_sql_tpch_q22": """
-        SELECT c_mktsegment,
-               count(c_custkey) AS n_custs,
-               CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS total_bal
-        FROM customer
-        WHERE c_acctbal > (SELECT avg(CAST(c_acctbal AS DECIMAL(18,4)))
-                           FROM customer WHERE c_acctbal > 0.0)
-          AND NOT EXISTS (SELECT 1 FROM orders
-                          WHERE o_custkey = c_custkey
-                            AND o_totalprice > 350000.0)
-        GROUP BY c_mktsegment
-    """,
-    "q_sql_tpch_q7": """
-        SELECT n1.n_name AS supp_nation,
-               n2.n_name AS cust_nation,
-               CAST(year(l_shipdate) AS BIGINT) AS l_year,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM lineitem
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-           OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-        GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
-    """,
-    "q_snapshot_diff": """
-        SELECT s_suppkey, 'delete' AS change_type
-        FROM supplier WHERE s_suppkey % 7 = 0
-        UNION ALL
-        SELECT s_suppkey, 'update' AS change_type
-        FROM supplier WHERE s_suppkey % 7 <> 0 AND s_suppkey % 5 = 0
-        UNION ALL
-        SELECT s_suppkey + 1000000, 'insert' AS change_type
-        FROM supplier WHERE s_suppkey % 11 = 0
-    """,
-    "q_range_sorted_scan": """
-        SELECT o_orderstatus,
-               count(o_orderkey) AS n_orders,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-        FROM orders
-        WHERE o_totalprice >= 100000.0 AND o_totalprice < 120000.0
-        GROUP BY o_orderstatus
-    """,
-    "q_sql_tpch_q19": """
-        SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS revenue
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-               AND l_quantity BETWEEN 1 AND 11)
-           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-               AND l_quantity BETWEEN 10 AND 20)
-           OR (p_brand = 'Brand#3'  AND p_size BETWEEN 1 AND 15
-               AND l_quantity BETWEEN 20 AND 30)
-    """,
-    "q_sql_tpch_q8": """
-        SELECT o_year,
-               round(CAST(sum(CASE WHEN nation = 'NATION_5' THEN volume ELSE CAST(0 AS DECIMAL(18,8)) END) AS DOUBLE)
-                     / CAST(sum(volume) AS DOUBLE), 4) + 0.0 AS mkt_share
-        FROM (
-            SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-                   CAST(l_extendedprice AS DECIMAL(18,4))
-                     * CAST(1 - l_discount AS DECIMAL(18,4)) AS volume,
-                   n2.n_name AS nation
-            FROM lineitem
-            JOIN part     ON p_partkey = l_partkey
-            JOIN supplier ON s_suppkey = l_suppkey
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation n1 ON c_nationkey = n1.n_nationkey
-            JOIN region   ON n1.n_regionkey = r_regionkey
-            JOIN nation n2 ON s_nationkey = n2.n_nationkey
-            WHERE r_name = 'ASIA'
-              AND o_orderdate BETWEEN DATE '1995-01-01' AND DATE '1996-12-31'
-              AND p_type = 'PROMO'
-        ) all_nations
-        GROUP BY o_year
-    """,
-    "q_sql_tpch_q13": """
-        SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        FROM (
-            SELECT c_custkey, CAST(count(o_orderkey) AS BIGINT) AS c_count
-            FROM customer LEFT JOIN orders
-              ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-            GROUP BY c_custkey
-        ) c_orders
-        GROUP BY c_count
-    """,
-    "q_sql_tpch_q15": """
-        WITH revenue AS (
-            SELECT l_suppkey AS supplier_no,
-                   sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                       * CAST(1 - l_discount AS DECIMAL(18,4))) AS total_revenue
-            FROM lineitem
-            WHERE l_shipdate >= DATE '1996-01-01' AND l_shipdate < DATE '1996-04-01'
-            GROUP BY l_suppkey
-        )
-        SELECT s_suppkey, s_name,
-               round(CAST(total_revenue AS DOUBLE), 4) AS total_revenue
-        FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-    """,
-    "q_sql_tpch_q17": """
-        SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0, 4)
-                 + 0.0 AS avg_yearly
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 10
-          AND l_quantity < (
-              SELECT 0.2 * avg(l2.l_quantity) FROM lineitem l2
-              WHERE l2.l_partkey = p_partkey
-          )
-    """,
-    "q_hash_split": """
-        SELECT doc_id, lang,
-               CASE WHEN substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'split-v1')), 1, 8)
-                         < 'cccccccc' THEN 'train'
-                    WHEN substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'split-v1')), 1, 8)
-                         < 'e6666666' THEN 'val'
-                    ELSE 'test' END AS split
-        FROM documents
-    """,
-    "q_stratified_sample": """
-        SELECT doc_id, lang, source FROM documents
-        WHERE substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'sample-v1')), 1, 8)
-              < CASE lang WHEN 'en' THEN '80000000'
-                          WHEN 'es' THEN '40000000'
-                          WHEN 'de' THEN '20000000'
-                          WHEN 'zh' THEN 'g'
-                          WHEN 'fr' THEN 'g'
-                          ELSE '00000000' END
-    """,
-    "q_decontaminate": """
-        WITH sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
-                       i -> array_to_string(list_slice(
-                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
-                   )) AS shingles
-            FROM documents
-        ),
-        corpus AS (
-            SELECT doc_id, len(shingles) AS n_shingles, unnest(shingles) AS shingle
-            FROM sh WHERE doc_id % 20 <> 0
-        ),
-        bench AS (
-            SELECT DISTINCT unnest(shingles) AS shingle FROM sh WHERE doc_id % 20 = 0
-        ),
-        hits AS (
-            SELECT doc_id, n_shingles, count(*) AS n_overlap
-            FROM corpus JOIN bench USING (shingle)
-            GROUP BY doc_id, n_shingles
-        )
-        SELECT doc_id, n_overlap,
-               CAST(n_shingles AS BIGINT) AS n_shingles,
-               round(n_overlap / n_shingles, 4) AS overlap_ratio
-        FROM hits
-        WHERE round(n_overlap / n_shingles, 4) >= 0.1
-    """,
-    "q_pack_sequences": """
-        WITH RECURSIVE tok AS (
-            SELECT doc_id, lang,
-                   CAST(CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END AS BIGINT) AS n_tokens,
-                   row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-            FROM documents
-        ),
-        packed AS (
-            SELECT doc_id, lang, n_tokens, rn,
-                   CAST(0 AS BIGINT) AS pack_id,
-                   CAST(0 AS BIGINT) AS pack_pos,
-                   n_tokens AS running
-            FROM tok WHERE rn = 1
-            UNION ALL
-            SELECT t.doc_id, t.lang, t.n_tokens, t.rn,
-                   CASE WHEN p.running + t.n_tokens > 256 THEN p.pack_id + 1 ELSE p.pack_id END,
-                   CASE WHEN p.running + t.n_tokens > 256 THEN CAST(0 AS BIGINT) ELSE p.pack_pos + 1 END,
-                   CASE WHEN p.running + t.n_tokens > 256 THEN t.n_tokens ELSE p.running + t.n_tokens END
-            FROM tok t JOIN packed p ON t.lang = p.lang AND t.rn = p.rn + 1
-        )
-        SELECT doc_id, lang, n_tokens, pack_id, pack_pos FROM packed
-    """,
-    "q_repetition_stats": """
-        WITH tok AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) AS token
-            FROM documents
-        ),
-        uni AS (SELECT doc_id, token, count(*) AS c FROM tok GROUP BY 1, 2),
-        us AS (
-            SELECT doc_id, sum(c) AS n_tokens, count(*) AS n_distinct, max(c) AS top_c
-            FROM uni GROUP BY 1
-        ),
-        big AS (
-            SELECT doc_id,
-                   unnest(list_transform(
-                       range(1, greatest(len(toks) - 1, 0) + 1),
-                       i -> array_to_string(list_slice(toks, i, i + 1), ' ')
-                   )) AS bigram
-            FROM (SELECT doc_id,
-                         regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+') AS toks
-                  FROM documents)
-        ),
-        bi AS (SELECT doc_id, bigram, count(*) AS c FROM big GROUP BY 1, 2),
-        bs AS (SELECT doc_id, sum(c) AS n_bigrams, max(c) AS top_bi_c FROM bi GROUP BY 1)
-        SELECT us.doc_id,
-               CAST(n_tokens AS BIGINT) AS n_tokens,
-               round(n_distinct / n_tokens, 4) AS distinct_ratio,
-               round(top_c / n_tokens, 4) AS top_token_frac,
-               round(top_bi_c / n_bigrams, 4) AS top_bigram_frac
-        FROM us LEFT JOIN bs ON us.doc_id = bs.doc_id
-    """,
-    "q_boilerplate_ngrams": """
-        WITH sh AS (
-            SELECT doc_id,
-                   unnest(list_distinct(list_transform(
-                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
-                       i -> array_to_string(list_slice(
-                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
-                   ))) AS shingle
-            FROM documents
-        ),
-        dfc AS (SELECT shingle, count(DISTINCT doc_id) AS n_docs FROM sh GROUP BY 1),
-        boiler AS (SELECT shingle FROM dfc WHERE n_docs >= 4),
-        na AS (SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY 1),
-        nb AS (
-            SELECT doc_id, count(*) AS n_boiler
-            FROM sh JOIN boiler USING (shingle) GROUP BY 1
-        )
-        SELECT na.doc_id,
-               CAST(n_shingles AS BIGINT) AS n_shingles,
-               CAST(coalesce(n_boiler, 0) AS BIGINT) AS n_boiler,
-               round(coalesce(n_boiler, 0) / n_shingles, 4) AS boiler_frac
-        FROM na LEFT JOIN nb ON na.doc_id = nb.doc_id
-    """,
-    "q_pii_redact": """
-        WITH dirty AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 3 = 0
-                        THEN concat(text, ' contact user', CAST(doc_id AS VARCHAR),
-                                    '@example.com from 10.0.',
-                                    CAST(doc_id % 256 AS VARCHAR), '.42')
-                        ELSE text END AS text
-            FROM documents
-        )
-        SELECT doc_id,
-               CAST(len(regexp_extract_all(text,
-                   '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-               CAST(len(regexp_extract_all(text,
-                   '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b')) AS BIGINT) AS n_ips,
-               regexp_replace(
-                   regexp_replace(text,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                   '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '<IP>', 'g') AS redacted
-        FROM dirty
-    """,
-    "q_temperature_mix": """
-        WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-        m AS (SELECT min(n) AS min_n FROM c),
-        r AS (SELECT lang, round(pow(n / min_n, -0.5), 4) AS rate FROM c, m),
-        t AS (
-            SELECT lang, rate,
-                   CASE WHEN rate >= 1.0 THEN 'g'
-                        ELSE lpad(lower(to_hex(CAST(floor(rate * 4294967296.0) AS BIGINT))), 8, '0')
-                   END AS threshold
-            FROM r
-        )
-        SELECT d.doc_id, d.lang, t.rate
-        FROM documents d JOIN t ON d.lang = t.lang
-        WHERE substr(md5(concat_ws(':', CAST(d.doc_id AS VARCHAR), 'mix-v1')), 1, 8)
-              < t.threshold
-    """,
-    "q_shard_order": """
-        WITH s AS (
-            SELECT doc_id,
-                   md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'shard-v1')) AS hash
-            FROM documents
-        )
-        SELECT doc_id,
-               CAST(strpos('0123456789abcdef', substr(hash, 1, 1)) - 1 AS BIGINT) AS shard,
-               CAST(row_number() OVER (
-                   PARTITION BY strpos('0123456789abcdef', substr(hash, 1, 1))
-                   ORDER BY hash, doc_id) AS BIGINT) AS pos
-        FROM s
-    """,
-    "q_array_ops": """
-        SELECT vec_id,
-               CAST(len(embedding) AS BIGINT) AS dim,
-               round(sqrt(list_aggregate(
-                   list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-                   'sum')), 4) AS l2_norm,
-               round(list_aggregate(
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)), 'sum')
-                   / len(embedding), 4) + 0.0 AS mean_component
-        FROM embeddings
-    """,
-    "q_explode_tokens": """
-        SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-    """,
-    "q_sql_tpch_q1": """
-        SELECT l_returnflag, l_linestatus,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-               round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))
-                        * CAST(1 - l_discount AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_disc_price,
-               count(l_orderkey) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "q_dedup_exact": """
-        SELECT md5(text) AS fingerprint,
-               min(doc_id) AS keep_id,
-               count(doc_id) AS dup_count
-        FROM documents GROUP BY md5(text)
-    """,
-    "q_ngram_jaccard": """
-        WITH sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       range(1, greatest(len(regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+')) - 2, 1) + 1),
-                       i -> array_to_string(list_slice(
-                                regexp_split_to_array(lower(trim(text)), '[ \\t\\n\\r\\f\\x0b]+'), i, i + 2), ' ')
-                   )) AS shingles
-            FROM documents
-            WHERE doc_id < 400
-        ),
-        sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
-        ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   a.set_size AS sz_a, b.set_size AS sz_b,
-                   count(*) AS n_inter
-            FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
-        )
-        SELECT id_a, id_b,
-               round(n_inter / (sz_a + sz_b - n_inter), 4) AS jaccard
-        FROM inter
-        WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.2
-    """,
-    "q_token_jaccard": """
-        WITH toks AS (
-            SELECT doc_id,
-                   regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
-            FROM documents
-            WHERE doc_id < 400
-        ),
-        nz AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
-        sh AS (
-            SELECT doc_id,
-                   list_distinct(list_transform(
-                       range(1, greatest(len(t) - 1, 1) + 1),
-                       i -> array_to_string(list_slice(t, i, i + 1), ' ')
-                   )) AS shingles
-            FROM nz
-        ),
-        sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
-        ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
-        inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   a.set_size AS sz_a, b.set_size AS sz_b,
-                   count(*) AS n_inter
-            FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
-        )
-        SELECT id_a, id_b,
-               round(n_inter / (sz_a + sz_b - n_inter), 4) AS jaccard
-        FROM inter
-        WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.3
-    """,
-    "q_cosine_topk": """
-        WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-        SELECT e.vec_id,
-               round(
-                   list_aggregate(list_transform(range(1, len(e.embedding) + 1),
-                       i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)), 'sum')
-                   / (sqrt(list_aggregate(list_transform(e.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-                      * sqrt(list_aggregate(list_transform(q.qv,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))),
-               4) AS cosine
-        FROM embeddings e, q
-        WHERE e.vec_id <> 0
-        ORDER BY cosine DESC NULLS LAST, e.vec_id ASC LIMIT 10
-    """,
-    "q_text_stats": """
-        SELECT lang,
-               count(doc_id) AS n_docs,
-               round(avg(n_chars), 4) AS avg_chars,
-               CAST(sum(CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END) AS BIGINT)
-                   AS total_tokens
-        FROM documents GROUP BY lang
-    """,
-    "q_text_quality": """
-        SELECT doc_id,
-               len(text) AS len_chars,
-               CAST(CASE WHEN trim(text) = '' THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END AS BIGINT) AS n_tokens,
-               round(len(text) / greatest(
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END, 1), 4) AS mean_token_len,
-               round(len(regexp_replace(text, '[^.,;:!?]', '', 'g')) / greatest(len(text), 1), 4) AS punct_ratio,
-               round(len(list_filter(string_split_regex(lower(text), '[ \\t\\n\\r\\f\\x0b]+'),
-                         x -> x IN ('the','and','of','to','is','a','in','that','it','for')))
-                   / greatest(CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END, 1), 4) AS stopword_ratio,
-               round(len(regexp_replace(text, '[^A-Z]', '', 'g')) / greatest(len(text), 1), 4) AS upper_ratio
-        FROM documents
-    """,
-    "q_token_count": """
-        SELECT doc_id,
-               CAST(CASE WHEN trim(text) = '' THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END AS BIGINT) AS n_ws_tokens,
-               CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r\\f\\x0b]')) AS BIGINT) AS n_bpe_tokens
-        FROM documents
-    """,
-    "q_lang_id": """
-        WITH scores AS (
-            SELECT doc_id,
-                   CAST((len(p) - len(replace(p, ' the ', ''))) / 5
-                      + (len(p) - len(replace(p, ' and ', ''))) / 5
-                      + (len(p) - len(replace(p, ' of ', ''))) / 4
-                      + (len(p) - len(replace(p, ' to ', ''))) / 4
-                      + (len(p) - len(replace(p, ' is ', ''))) / 4 AS INT) AS s_en,
-                   CAST((len(p) - len(replace(p, ' el ', ''))) / 4
-                      + (len(p) - len(replace(p, ' la ', ''))) / 4
-                      + (len(p) - len(replace(p, ' de ', ''))) / 4
-                      + (len(p) - len(replace(p, ' que ', ''))) / 5
-                      + (len(p) - len(replace(p, ' los ', ''))) / 5 AS INT) AS s_es,
-                   CAST((len(p) - len(replace(p, ' der ', ''))) / 5
-                      + (len(p) - len(replace(p, ' die ', ''))) / 5
-                      + (len(p) - len(replace(p, ' und ', ''))) / 5
-                      + (len(p) - len(replace(p, ' das ', ''))) / 5
-                      + (len(p) - len(replace(p, ' ist ', ''))) / 5 AS INT) AS s_de,
-                   CAST((len(p) - len(replace(p, ' le ', ''))) / 4
-                      + (len(p) - len(replace(p, ' la ', ''))) / 4
-                      + (len(p) - len(replace(p, ' et ', ''))) / 4
-                      + (len(p) - len(replace(p, ' les ', ''))) / 5
-                      + (len(p) - len(replace(p, ' des ', ''))) / 5 AS INT) AS s_fr
-            FROM (SELECT doc_id, concat(' ', lower(coalesce(text, '')), ' ') AS p
-                  FROM documents)
-        )
-        SELECT doc_id,
-               CASE WHEN greatest(s_en, s_es, s_de, s_fr) <= 0 THEN 'und'
-                    WHEN s_fr >= s_en AND s_fr >= s_es AND s_fr >= s_de THEN 'fr'
-                    WHEN s_es >= s_en AND s_es >= s_de THEN 'es'
-                    WHEN s_en >= s_de THEN 'en'
-                    ELSE 'de' END AS pred_lang,
-               CAST(greatest(s_en, s_es, s_de, s_fr) AS BIGINT) AS lang_score
-        FROM scores
-    """,
-    "q_fingerprint": """
-        SELECT doc_id,
-               md5(text) AS fingerprint,
-               CAST(strpos('0123456789abcdef', substr(md5(text), 1, 1)) - 1 AS BIGINT) AS fp_bucket
-        FROM documents
-    """,
-    "q_sessionize": """
-        WITH norm AS (
-            SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts FROM events
-        ),
-        gaps AS (
-            SELECT user_id, event_id, ts,
-                   CASE WHEN lag(ts) OVER w IS NULL
-                             OR epoch_ms(ts) - epoch_ms(lag(ts) OVER w) > 2 * 60 * 1000
-                        THEN 1 ELSE 0 END AS is_new
-            FROM norm
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-        ),
-        sess AS (
-            SELECT user_id, event_id, ts,
-                   CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-            FROM gaps
-        )
-        SELECT user_id, session_seq,
-               count(event_id) AS n_events,
-               min(ts) AS session_start,
-               max(ts) AS session_end
-        FROM sess GROUP BY user_id, session_seq
-    """,
-}
-
-ORACLE_SQL["q_bigram_logprob"] = """
-    WITH toks AS (
-        SELECT doc_id,
-               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
-        FROM documents
+@query(oracle="""
+    WITH tokens AS (
+        SELECT doc_id, t.token AS term
+        FROM documents, unnest(string_split(text, ' ')) AS t(token)
+        WHERE length(t.token) > 0
     ),
-    big AS (
-        SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-        FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) g
-        WHERE len(t) >= 2
+    doclen AS (SELECT doc_id, count(*) AS dl FROM tokens GROUP BY doc_id),
+    avgdl AS (
+        SELECT round(CAST(sum(dl) AS DOUBLE) / count(*), 6) AS avgdl FROM doclen
     ),
-    bstat AS (SELECT w1, w2, count(*) AS cb FROM big GROUP BY 1, 2),
-    cstat AS (SELECT w1, count(*) AS cc FROM big GROUP BY 1),
-    vocab AS (
-        SELECT count(DISTINCT w) AS v
-        FROM (SELECT unnest(t) AS w FROM toks)
+    n AS (SELECT count(*) AS n_docs FROM documents),
+    tf AS (
+        SELECT doc_id, term, count(*) AS tf FROM tokens
+        WHERE term IN ('spark', 'join', 'data') GROUP BY doc_id, term
     ),
-    scored AS (
-        SELECT b.doc_id,
-               ln(CAST(s.cb + 1 AS DOUBLE) / CAST(c.cc + v.v AS DOUBLE)) AS lp
-        FROM big b
-        JOIN bstat s USING (w1, w2)
-        JOIN cstat c USING (w1)
-        CROSS JOIN vocab v
+    idf AS (
+        SELECT term,
+               round(ln(1.0 + (n_docs - count(*) + 0.5) / (count(*) + 0.5)), 6) AS idf
+        FROM tf, n GROUP BY term, n_docs
     )
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_bigrams,
-           round(avg(lp), 4) AS avg_logprob
-    FROM scored GROUP BY doc_id
-"""
-
-ORACLE_SQL["q_dedup_rate_report"] = """
-    WITH exact AS (
-        SELECT count(*) AS n_docs,
-               count(DISTINCT md5(text)) AS n_distinct_texts
-        FROM documents
-    ),
-    toks AS (
-        SELECT doc_id,
-               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
-        FROM documents
-        WHERE doc_id < 400
-    ),
-    nz AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, greatest(len(t) - 1, 1) + 1),
-                   i -> array_to_string(list_slice(t, i, i + 1), ' ')
-               )) AS shingles
-        FROM nz
-    ),
-    sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
-    ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
-    inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.set_size AS sz_a, b.set_size AS sz_b,
-               count(*) AS n_inter
-        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
-    ),
-    near AS (
-        SELECT CAST(coalesce(sum(CASE WHEN round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.3
-                                      THEN 1 ELSE 0 END), 0) AS BIGINT) AS near_dup_pairs_bounded
-        FROM inter
-    )
-    SELECT n_docs,
-           n_docs - n_distinct_texts AS exact_dup_docs,
-           round(CAST(n_docs - n_distinct_texts AS DOUBLE) * 100.0 / n_docs, 2)
-               AS exact_dup_pct,
-           near_dup_pairs_bounded
-    FROM exact, near
-"""
-
-ORACLE_SQL["q_incremental_ingest_dedup"] = """
-    WITH fp AS (SELECT doc_id, md5(text) AS fingerprint FROM documents)
-    SELECT b.doc_id, b.fingerprint
-    FROM fp b
-    WHERE b.doc_id >= 300
-      AND NOT EXISTS (SELECT 1 FROM fp p
-                      WHERE p.doc_id < 300
-                        AND p.fingerprint = b.fingerprint)
-"""
-
-ORACLE_SQL["q_shared_span_pairs"] = """
-    WITH toks AS (
-        SELECT doc_id,
-               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
-        FROM documents
-    ),
-    spans AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(t, i, i + 7), ' ') AS span
-        FROM toks, LATERAL (SELECT unnest(range(1, len(t) - 7 + 1)) AS i) g
-        WHERE len(t) >= 8
-    ),
-    kept AS (
-        SELECT doc_id, span FROM spans
-        QUALIFY count(*) OVER (PARTITION BY span) <= 16
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           count(*) AS n_spans
-    FROM kept a JOIN kept b ON a.span = b.span AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-"""
-
-ORACLE_SQL["q_knn_join"] = """
-    WITH q AS (
-        SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 8
-    ),
-    scored AS (
-        SELECT q.q_id, e.vec_id AS neighbor_id,
-               round(
-                   list_aggregate(list_transform(range(1, len(e.embedding) + 1),
-                       i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)), 'sum')
-                   / (sqrt(list_aggregate(list_transform(e.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-                      * sqrt(list_aggregate(list_transform(q.qv,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))),
-               4) + 0.0 AS cosine
-        FROM embeddings e JOIN q ON e.vec_id <> q.q_id
-    ),
-    ranked AS (
-        SELECT q_id, neighbor_id, cosine,
-               row_number() OVER (PARTITION BY q_id
-                   ORDER BY cosine DESC NULLS LAST, neighbor_id ASC) AS rank
-        FROM scored
-    )
-    SELECT q_id, neighbor_id, rank, cosine FROM ranked WHERE rank <= 5
-"""
-
-ORACLE_SQL["q_label_centroids"] = """
-    WITH ex AS (
-        SELECT label, generate_subscripts(embedding, 1) AS dim,
-               unnest(embedding) AS x
-        FROM embeddings
-    ),
-    cent AS (
-        SELECT label, dim, round(avg(CAST(x AS DOUBLE)), 6) + 0.0 AS c
-        FROM ex GROUP BY 1, 2
-    ),
-    cent_arr AS (
-        SELECT label, list(c ORDER BY dim) AS cv FROM cent GROUP BY 1
-    ),
-    member AS (
-        SELECT e.label,
-               round(
-                   list_aggregate(list_transform(range(1, len(e.embedding) + 1),
-                       i -> CAST(e.embedding[i] AS DOUBLE) * ca.cv[i]), 'sum')
-                   / (sqrt(list_aggregate(list_transform(e.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))
-                      * sqrt(list_aggregate(list_transform(ca.cv,
-                          x -> x * x), 'sum'))),
-               4) + 0.0 AS cos4
-        FROM embeddings e JOIN cent_arr ca ON e.label = ca.label
-    ),
-    norms AS (
-        SELECT label,
-               round(sqrt(list_aggregate(list_transform(cv, x -> x * x), 'sum')),
-                     4) + 0.0 AS centroid_norm
-        FROM cent_arr
-    )
-    SELECT m.label, count(*) AS n_vecs, any_value(n.centroid_norm) AS centroid_norm,
-           round(avg(cos4), 4) + 0.0 AS avg_cos,
-           quantile_disc(cos4, 0.5) AS p50_cos,
-           min(cos4) AS min_cos
-    FROM member m JOIN norms n ON m.label = n.label
-    GROUP BY 1
-"""
-
-ORACLE_SQL["q_dup_ngram_fraction"] = """
-    WITH toks AS (
-        SELECT doc_id,
-               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
-        FROM documents
-    ),
-    big AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i + 1] AS sh
-        FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) g
-        WHERE len(t) >= 2
-    ),
-    dfreq AS (SELECT sh, count(*) AS df FROM big GROUP BY sh)
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_shingles,
-           round(CAST(sum(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
-               / count(*), 4) AS dup_frac
-    FROM big JOIN dfreq USING (sh)
-    GROUP BY doc_id
-"""
-
-ORACLE_SQL["q_pmi_collocations"] = """
-    WITH toks AS (
-        SELECT doc_id,
-               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
-        FROM documents
-    ),
-    big AS (
-        SELECT t[i] AS w1, t[i + 1] AS w2
-        FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) g
-        WHERE len(t) >= 2
-    ),
-    bstat AS (SELECT w1, w2, count(*) AS cb FROM big GROUP BY 1, 2),
-    l AS (SELECT w1, CAST(sum(cb) AS BIGINT) AS cl FROM bstat GROUP BY 1),
-    r AS (SELECT w2, CAST(sum(cb) AS BIGINT) AS cr FROM bstat GROUP BY 1),
-    n AS (SELECT CAST(sum(cb) AS BIGINT) AS nn FROM bstat)
-    SELECT w1, w2, cb AS n_pair,
-           round(ln(CAST(nn * cb AS DOUBLE) / CAST(cl * cr AS DOUBLE)), 4) AS pmi
-    FROM bstat JOIN l USING (w1) JOIN r USING (w2) CROSS JOIN n
-    WHERE cb >= 5
-    ORDER BY pmi DESC, w1, w2 LIMIT 20
-"""
-
-ORACLE_SQL["q_corpus_mix"] = """
-    WITH per_cell AS (
-        SELECT source, lang,
-               count(*) AS n_docs,
-               CAST(coalesce(sum(len(regexp_extract_all(
-                   lower(translate(text, 'İ', 'i')),
-                   '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]'))), 0) AS BIGINT) AS total_tokens,
-               round(avg(n_chars), 4) AS avg_chars
-        FROM documents GROUP BY source, lang
-    ),
-    tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS corpus_docs FROM per_cell)
-    SELECT source, lang, n_docs, total_tokens, avg_chars,
-           round(n_docs * 100.0 / corpus_docs, 2) AS share_pct
-    FROM per_cell, tot
-"""
-
-ORACLE_SQL["q_class_weights"] = """
-    WITH per_class AS (SELECT label, count(*) AS n FROM embeddings GROUP BY label),
-    tot AS (SELECT CAST(sum(n) AS BIGINT) AS total, count(*) AS k FROM per_class)
-    SELECT label, n,
-           round(CAST(total AS DOUBLE) / (k * n), 4) AS inv_weight,
-           round(sqrt(CAST(total AS DOUBLE) / n), 4) AS sqrt_inv_weight
-    FROM per_class, tot
-"""
-
-ORACLE_SQL["q_token_shards"] = """
-    WITH toks AS (
-        SELECT doc_id,
-               coalesce(len(regexp_extract_all(
-                   lower(translate(text, 'İ', 'i')),
-                   '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')), 0) AS n_tokens
-        FROM documents WHERE doc_id IS NOT NULL
-    ),
-    cum AS (
-        SELECT doc_id, n_tokens,
-               sum(n_tokens) OVER (ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
-        FROM toks
-    )
-    SELECT CAST((cum_tokens - n_tokens) // 1000 AS BIGINT) AS shard_id,
-           count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-           min(doc_id) AS first_id,
-           max(doc_id) AS last_id
-    FROM cum GROUP BY 1
-"""
-
-ORACLE_SQL["q_quality_funnel"] = """
-    WITH flags AS (
-        SELECT
-            (length(trim(text)) > 0) AS p1,
-            len(regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')) AS nt,
-            list_aggregate(list_transform(
-                regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]'),
-                x -> length(x)), 'sum') AS sum_len,
-            len(list_filter(
-                regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]'),
-                x -> NOT regexp_matches(x, '^[a-z0-9]'))) AS n_punct
-        FROM documents
-    ),
-    staged AS (
-        SELECT p1,
-               (p1 AND nt >= 5) AS p2,
-               (p1 AND nt >= 5 AND sum_len <= nt * 12) AS p3,
-               (p1 AND nt >= 5 AND sum_len <= nt * 12
-                   AND n_punct * 2 <= nt) AS p4
-        FROM flags
-    ),
-    agg AS (
-        SELECT count(*) AS c0,
-               CAST(coalesce(sum(CASE WHEN p1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS c1,
-               CAST(coalesce(sum(CASE WHEN p2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS c2,
-               CAST(coalesce(sum(CASE WHEN p3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS c3,
-               CAST(coalesce(sum(CASE WHEN p4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS c4
-        FROM staged
-    )
-    SELECT 'all' AS stage, 0 AS stage_idx, c0 AS n_docs FROM agg
-    UNION ALL SELECT 'nonempty', 1, c1 FROM agg
-    UNION ALL SELECT 'min_tokens', 2, c2 FROM agg
-    UNION ALL SELECT 'token_len', 3, c3 FROM agg
-    UNION ALL SELECT 'punct', 4, c4 FROM agg
-"""
-
-ORACLE_SQL["q_token_dup_clusters"] = """
-    WITH RECURSIVE toks AS (
-        SELECT doc_id,
-               regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
-        FROM documents
-        WHERE doc_id < 400
-    ),
-    nz AS (SELECT doc_id, t FROM toks WHERE len(t) > 0),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, greatest(len(t) - 1, 1) + 1),
-                   i -> array_to_string(list_slice(t, i, i + 1), ' ')
-               )) AS shingles
-        FROM nz
-    ),
-    sized AS (SELECT doc_id, shingles, len(shingles) AS set_size FROM sh),
-    ex AS (SELECT doc_id, set_size, unnest(shingles) AS shingle FROM sized),
-    inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.set_size AS sz_a, b.set_size AS sz_b,
-               count(*) AS n_inter
-        FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id, a.set_size, b.set_size
-    ),
-    pairs AS (
-        SELECT id_a, id_b FROM inter
-        WHERE round(n_inter / (sz_a + sz_b - n_inter), 4) >= 0.3
-    ),
-    sym AS (
-        SELECT id_a AS s, id_b AS d FROM pairs
-        UNION ALL
-        SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    reach AS (
-        SELECT s, d FROM sym
-        UNION
-        SELECT r.s, y.d FROM reach r JOIN sym y ON r.d = y.s
-    )
-    SELECT s AS doc_id, least(s, min(d)) AS canonical_id FROM reach GROUP BY s
-"""
-
-# Exact quadratic recompute of the banded-LSH near-dup query: valid as a
-# full hash oracle because (a) planted scaled copies are caught by LSH
-# with recall exactly 1 (sign(v·plane) is scale-invariant) and (b) no
-# natural pair in the synthetic corpus approaches the 0.95 threshold
-# (max ≈0.5), so approximate output == exact output deterministically.
-ORACLE_SQL["q_embedding_near_dup"] = """
-    WITH base AS (
-        SELECT vec_id,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-        FROM embeddings
-    ),
-    corpus AS (
-        SELECT vec_id, v FROM base
-        UNION ALL
-        SELECT vec_id + 1000000, list_transform(v, x -> x * 1.5)
-        FROM base WHERE vec_id < 20
-    )
-    SELECT id_a, id_b, cosine FROM (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               round(list_cosine_similarity(a.v, b.v), 4) AS cosine
-        FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-    ) WHERE cosine >= 0.95
-"""
-
-ORACLE_SQL["q_quantize_embeddings"] = """
-    WITH x AS (
-        SELECT vec_id,
-               list_transform(embedding, v -> CAST(v AS DOUBLE)) AS xd
-        FROM embeddings
-    ),
-    s AS (
-        SELECT vec_id, xd,
-               list_aggregate(list_transform(xd, v -> abs(v)), 'max') AS raw_scale
-        FROM x
-    ),
-    g AS (
-        SELECT vec_id, xd,
-               CASE WHEN raw_scale = 0 THEN 1.0 ELSE raw_scale END AS scale
-        FROM s
-    ),
-    q AS (
-        SELECT vec_id, scale,
-               list_transform(xd, v -> CAST(floor(v * 127.0 / scale) AS INT)) AS qv
-        FROM g
-    )
-    SELECT vec_id, scale,
-           array_to_string(qv, ',') AS q_csv,
-           CAST(list_aggregate(qv, 'sum') AS BIGINT) AS q_sum
-    FROM q
-"""
-
-ORACLE_SQL["q_moving_avg_time"] = """
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS day,
-               sum(CAST(value AS DECIMAL(18,4))) AS dec_total
-        FROM events GROUP BY 1, 2
-    ),
-    d2 AS (
-        SELECT event_type, day,
-               date_diff('day', DATE '1970-01-01', day) AS day_num, dec_total
-        FROM daily
-    )
-    SELECT event_type, day,
-           round(CAST(dec_total AS DOUBLE), 4) + 0.0 AS daily_total,
-           round(CAST(sum(dec_total) OVER w AS DOUBLE) / count(*) OVER w, 4) + 0.0 AS avg_7d
-    FROM d2
-    WINDOW w AS (PARTITION BY event_type ORDER BY day_num
-                 RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-"""
-
-ORACLE_SQL["q_zorder_scan"] = """
-    SELECT o_orderstatus,
-           count(o_orderkey) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-    FROM orders
-    WHERE o_totalprice >= 100000.0 AND o_totalprice < 150000.0
-      AND o_orderdate >= DATE '1995-01-01' AND o_orderdate < DATE '1996-01-01'
-    GROUP BY 1
-"""
-
-def _kmeans_oracle_sql(k: int, iters: int, col: str, table: str) -> str:
-    """Unrolled Lloyd's-iteration CTE oracle mirroring
-    ``clustering.kmeans_1d`` exactly: same IEEE init expression, same
-    strict-lowest-index argmin, same decimal-mean 4dp rounding — so every
-    iteration is bit-identical to the Spark loop."""
-    ks = ", ".join(f"k{j}" for j in range(k))
-    init = ", ".join(f"lo + ({j} + 0.5)*(hi - lo)/{k} AS k{j}" for j in range(k))
-    dists = ", ".join(f"(x - k{j})*(x - k{j}) AS d{j}" for j in range(k))
-    least = ", ".join(f"d{j}" for j in range(k))
-    argmin = (
-        "CASE "
-        + " ".join(f"WHEN d{j} = bd THEN {j}" for j in range(k - 1))
-        + f" ELSE {k - 1} END"
-    )
-    parts = [
-        f"WITH b AS (SELECT min(CAST({col} AS DOUBLE)) AS lo,"
-        f" max(CAST({col} AS DOUBLE)) AS hi FROM {table}),",
-        f"c0 AS (SELECT {init} FROM b),",
-        # WHERE mirrors kmeans_1d's NULL-point exclusion: a NULL value has
-        # no cluster assignment
-        f"p AS (SELECT CAST({col} AS DOUBLE) AS x FROM {table}"
-        f" WHERE {col} IS NOT NULL),",
-    ]
-    for i in range(1, iters + 1):
-        parts.append(
-            f"a{i} AS (SELECT x, {argmin} AS c FROM ("
-            f"SELECT x, least({least}) AS bd, {least} FROM ("
-            f"SELECT x, {dists} FROM p, c{i - 1}))),"
-        )
-        parts.append(
-            f"m{i} AS (SELECT c, count(*) AS n,"
-            f" round(CAST(sum(CAST(x AS DECIMAL(18,4))) AS DOUBLE)/count(*), 4)"
-            f" + 0.0 AS mu FROM a{i} GROUP BY c),"
-        )
-        if i < iters:
-            upd = ", ".join(
-                f"coalesce(max(CASE WHEN m.c = {j} THEN m.mu END), max(pr.k{j})) AS k{j}"
-                for j in range(k)
-            )
-            parts.append(f"c{i} AS (SELECT {upd} FROM m{i} m, c{i - 1} pr),")
-    spine = ", ".join(f"({j})" for j in range(k))
-    prev_case = (
-        "CASE s.cluster_id "
-        + " ".join(f"WHEN {j} THEN pr.k{j}" for j in range(k))
-        + " END"
-    )
-    parts.append(
-        f"s AS (SELECT CAST(j AS BIGINT) AS cluster_id FROM (VALUES {spine}) t(j))"
-    )
-    parts.append(
-        "SELECT s.cluster_id, CAST(coalesce(m.n, 0) AS BIGINT) AS n_points,"
-        f" coalesce(m.mu, {prev_case}) AS centroid"
-        f" FROM s CROSS JOIN c{iters - 1} pr"
-        f" LEFT JOIN m{iters} m ON m.c = s.cluster_id"
-    )
-    return "\n".join(parts)
-
-
-ORACLE_SQL["q_kmeans_1d"] = _kmeans_oracle_sql(4, 3, "o_totalprice", "orders")
-
-ORACLE_SQL["q_chunk_documents"] = r"""
-    WITH t AS (
-        SELECT doc_id,
-               CASE WHEN trim(text) = '' THEN CAST([] AS VARCHAR[])
-                    ELSE string_split_regex(trim(text), '[ \t\n\r\f\x0b]+') END AS toks
-        FROM documents
-    ),
-    s AS (
-        SELECT doc_id, toks,
-               unnest(range(0, greatest(len(toks), 1), 48)) AS start
-        FROM t
-    ),
-    c AS (
-        SELECT doc_id, start, toks[start + 1 : start + 64] AS chunk FROM s
-    )
-    SELECT doc_id,
-           CAST(start / 48 AS BIGINT) AS chunk_id,
-           CAST(len(chunk) AS BIGINT) AS n_tokens,
-           array_to_string(chunk, ' ') AS chunk_text
-    FROM c
-    WHERE len(chunk) > 0
-"""
-
-ORACLE_SQL["q_funnel"] = """
-    WITH v AS (
-        SELECT user_id, min(ts) AS t_view FROM events
-        WHERE event_type = 'view' GROUP BY 1
-    ),
-    c AS (
-        SELECT v.user_id, v.t_view, min(e.ts) AS t_click
-        FROM v LEFT JOIN events e
-          ON e.user_id = v.user_id AND e.event_type = 'click'
-         AND e.ts > v.t_view AND e.ts <= v.t_view + INTERVAL 60 MINUTE
-        GROUP BY 1, 2
-    ),
-    p AS (
-        SELECT c.user_id, c.t_view, c.t_click, min(e.ts) AS t_purchase
-        FROM c LEFT JOIN events e
-          ON e.user_id = c.user_id AND e.event_type = 'purchase'
-         AND e.ts > c.t_click AND e.ts <= c.t_click + INTERVAL 60 MINUTE
-        GROUP BY 1, 2, 3
-    )
-    SELECT user_id, t_view, t_click, t_purchase,
-           CAST(1 + (CASE WHEN t_click IS NULL THEN 0 ELSE 1 END)
-                  + (CASE WHEN t_purchase IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS stage_depth
-    FROM p
-"""
-
-ORACLE_SQL["q_cohort_retention"] = """
-    WITH f AS (
-        SELECT user_id, CAST(min(ts) AS DATE) AS cohort_day
-        FROM events GROUP BY 1
-    ),
-    a AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events)
-    SELECT f.cohort_day,
-           CAST(date_diff('day', f.cohort_day, a.day) AS BIGINT) AS day_offset,
-           count(*) AS n_users
-    FROM a JOIN f USING (user_id)
-    GROUP BY 1, 2
-"""
-
-
-def _pagerank_oracle_sql(num_iter: int = 10) -> str:
-    """Unrolled power-iteration oracle: fixed-count iterative algorithms are
-    SQL-expressible by chaining one CTE per iteration (recursive CTEs can't
-    aggregate in the recursive term). Mirrors graph.pagerank exactly —
-    same 4dp edge rounding, fixed-point int64 rank units (1e-8)."""
-    sq = (
-        "sqrt(list_aggregate(list_transform({v}, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))"
-    )
-    cos = (
-        "round(list_aggregate(list_transform(range(1, len(ea) + 1), "
-        "i -> CAST(ea[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)), 'sum') "
-        f"/ ({sq.format(v='ea')} * {sq.format(v='eb')}), 4)"
-    )
-    parts = [
-        f"""
-    WITH sub AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 200),
-    pr AS (
-        SELECT a.vec_id AS src, b.vec_id AS dst, a.embedding AS ea, b.embedding AS eb
-        FROM sub a JOIN sub b ON a.vec_id <> b.vec_id
-    ),
-    scored AS (SELECT src, dst, {cos} AS cos FROM pr),
-    e AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS rn
-            FROM scored
-        ) WHERE rn <= 3
-    ),
-    deg AS (SELECT src, count(*) AS d FROM e GROUP BY 1),
-    nodes AS (SELECT DISTINCT node FROM (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-    nn AS (SELECT count(*) AS cnt FROM nodes),
-    i0 AS (SELECT node, CAST(floor(100000000 / cnt) AS BIGINT) AS rank_e8 FROM nodes, nn)"""
-    ]
-    for t in range(num_iter):
-        parts.append(
-            f"""
-    i{t + 1} AS (
-        SELECT nd.node,
-               CAST(floor(15000000 / nn.cnt) + coalesce(s.contrib, 0) AS BIGINT) AS rank_e8
-        FROM nodes nd CROSS JOIN nn
-        LEFT JOIN (
-            SELECT e.dst AS node,
-                   sum(CAST(floor(85 * i{t}.rank_e8 / (100.0 * deg.d)) AS BIGINT)) AS contrib
-            FROM e JOIN i{t} ON e.src = i{t}.node JOIN deg ON deg.src = e.src
-            GROUP BY e.dst
-        ) s ON s.node = nd.node
-    )"""
-        )
-    return ",".join(parts) + (
-        f"\n    SELECT node, rank_e8, round(rank_e8 / 100000000.0, 8) AS rank"
-        f" FROM i{num_iter}"
-    )
-
-
-ORACLE_SQL["q_pagerank"] = _pagerank_oracle_sql()
-
-
+    SELECT tf.doc_id,
+           CAST(round(sum(CAST(round(
+               idf.idf * (tf.tf * 2.2)
+               / (tf.tf + 1.2 * (0.25 + 0.75 * doclen.dl / avgdl.avgdl)), 6)
+           AS DECIMAL(18,6))), 4) AS DOUBLE) AS bm25
+    FROM tf
+    JOIN doclen ON tf.doc_id = doclen.doc_id
+    JOIN idf ON tf.term = idf.term
+    CROSS JOIN avgdl
+    GROUP BY tf.doc_id
+""")
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 relevance scoring against a fixed query-term set — the
     retrieval-quality twin of q_tfidf (text.py:bm25_scores has the plan
@@ -4531,6 +5170,19 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH tokens AS (
+        SELECT doc_id, t.token AS token
+        FROM documents, unnest(string_split(text, ' ')) AS t(token)
+        WHERE length(t.token) > 0
+    ),
+    counts AS (SELECT doc_id, token, count(*) AS c FROM tokens GROUP BY doc_id, token)
+    SELECT doc_id,
+           CAST(sum(c) AS BIGINT) AS n_tokens,
+           round(ln(sum(c)) - CAST(sum(CAST(round(c * ln(c), 6) AS DECIMAL(18,6)))
+                                   AS DOUBLE) / sum(c), 4) + 0.0 AS entropy_nats
+    FROM counts GROUP BY doc_id
+""")
 def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document Shannon entropy of the token distribution (nats) — the
     repetition/diversity quality signal; H = ln(n) - sum(c*ln c)/n over
@@ -4538,6 +5190,17 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.token_entropy(_t(spark, sf_dir, "documents"))
 
 
+@query(oracle="""
+    SELECT doc_id, n_chars AS weight,
+           round(ln((CAST(('0x' || substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR),
+                                                        'wsample-v1')), 1, 13))
+                          AS BIGINT) + 1.0) / 4503599627370496.0)
+                 / CAST(n_chars AS DOUBLE), 8) AS es_key
+    FROM documents
+    WHERE n_chars > 0
+    ORDER BY es_key DESC, doc_id ASC
+    LIMIT 50
+""")
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling without replacement (Efraimidis-
     Spirakis keys from md5 draws, weight = document length) — top-50
@@ -4548,6 +5211,18 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH final AS (
+        SELECT o_orderkey, o_orderstatus,
+               CASE WHEN o_orderstatus = 'F' THEN o_totalprice * 2
+                    ELSE o_totalprice END AS o_totalprice
+        FROM orders
+    )
+    SELECT o_orderstatus,
+           count(o_orderkey) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
+    FROM final GROUP BY o_orderstatus
+""")
 def q_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic partition overwrite end-to-end: orders staged hive-
     partitioned by status, then ONLY the 'F' partition rewritten (prices
@@ -4575,6 +5250,12 @@ def q_partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+@query(oracle="""
+    SELECT user_id,
+           count(event_id) AS n_events,
+           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+    FROM events GROUP BY user_id
+""")
 def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming aggregate → foreachBatch MERGE into a versioned lake table
     (the Delta `foreachBatch + MERGE` pattern on this repo's versioned-
@@ -4621,103 +5302,7 @@ def q_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_bm25"] = q_bm25
-QUERIES["q_token_entropy"] = q_token_entropy
-QUERIES["q_weighted_sample"] = q_weighted_sample
-QUERIES["q_partition_overwrite_dynamic"] = q_partition_overwrite_dynamic
-QUERIES["q_streaming_upsert"] = q_streaming_upsert
-
-ORACLE_SQL["q_bm25"] = """
-    WITH tokens AS (
-        SELECT doc_id, t.token AS term
-        FROM documents, unnest(string_split(text, ' ')) AS t(token)
-        WHERE length(t.token) > 0
-    ),
-    doclen AS (SELECT doc_id, count(*) AS dl FROM tokens GROUP BY doc_id),
-    avgdl AS (
-        SELECT round(CAST(sum(dl) AS DOUBLE) / count(*), 6) AS avgdl FROM doclen
-    ),
-    n AS (SELECT count(*) AS n_docs FROM documents),
-    tf AS (
-        SELECT doc_id, term, count(*) AS tf FROM tokens
-        WHERE term IN ('spark', 'join', 'data') GROUP BY doc_id, term
-    ),
-    idf AS (
-        SELECT term,
-               round(ln(1.0 + (n_docs - count(*) + 0.5) / (count(*) + 0.5)), 6) AS idf
-        FROM tf, n GROUP BY term, n_docs
-    )
-    SELECT tf.doc_id,
-           CAST(round(sum(CAST(round(
-               idf.idf * (tf.tf * 2.2)
-               / (tf.tf + 1.2 * (0.25 + 0.75 * doclen.dl / avgdl.avgdl)), 6)
-           AS DECIMAL(18,6))), 4) AS DOUBLE) AS bm25
-    FROM tf
-    JOIN doclen ON tf.doc_id = doclen.doc_id
-    JOIN idf ON tf.term = idf.term
-    CROSS JOIN avgdl
-    GROUP BY tf.doc_id
-"""
-
-ORACLE_SQL["q_token_entropy"] = """
-    WITH tokens AS (
-        SELECT doc_id, t.token AS token
-        FROM documents, unnest(string_split(text, ' ')) AS t(token)
-        WHERE length(t.token) > 0
-    ),
-    counts AS (SELECT doc_id, token, count(*) AS c FROM tokens GROUP BY doc_id, token)
-    SELECT doc_id,
-           CAST(sum(c) AS BIGINT) AS n_tokens,
-           round(ln(sum(c)) - CAST(sum(CAST(round(c * ln(c), 6) AS DECIMAL(18,6)))
-                                   AS DOUBLE) / sum(c), 4) + 0.0 AS entropy_nats
-    FROM counts GROUP BY doc_id
-"""
-
-ORACLE_SQL["q_weighted_sample"] = """
-    SELECT doc_id, n_chars AS weight,
-           round(ln((CAST(('0x' || substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR),
-                                                        'wsample-v1')), 1, 13))
-                          AS BIGINT) + 1.0) / 4503599627370496.0)
-                 / CAST(n_chars AS DOUBLE), 8) AS es_key
-    FROM documents
-    WHERE n_chars > 0
-    ORDER BY es_key DESC, doc_id ASC
-    LIMIT 50
-"""
-
-ORACLE_SQL["q_partition_overwrite_dynamic"] = """
-    WITH final AS (
-        SELECT o_orderkey, o_orderstatus,
-               CASE WHEN o_orderstatus = 'F' THEN o_totalprice * 2
-                    ELSE o_totalprice END AS o_totalprice
-        FROM orders
-    )
-    SELECT o_orderstatus,
-           count(o_orderkey) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-    FROM final GROUP BY o_orderstatus
-"""
-
-ORACLE_SQL["q_streaming_upsert"] = """
-    SELECT user_id,
-           count(event_id) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-    FROM events GROUP BY user_id
-"""
-
-
-def q_media_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload fixity checksums (sha2 over the hex encoding —
-    portable across engines whose hash functions are VARCHAR-only) for the
-    deterministic synthetic media table. The ONE multimodal query with a
-    full oracle: DuckDB reconstructs the same payload bytes
-    (repeat(unhex(sha256(i)), 32)) and verifies every checksum."""
-    return multimodal.media_checksums(multimodal.synthetic_media(spark, n=48))
-
-
-QUERIES["q_media_checksum"] = q_media_checksum
-
-ORACLE_SQL["q_media_checksum"] = """
+@query(oracle="""
     WITH m AS (
         SELECT i AS media_id,
                ['image', 'audio', 'video'][(i % 3) + 1] AS media_type,
@@ -4728,116 +5313,17 @@ ORACLE_SQL["q_media_checksum"] = """
            CAST(octet_length(payload) AS BIGINT) AS payload_bytes,
            sha256(hex(payload)) AS payload_hex_sha256
     FROM m
-"""
+""")
+def q_media_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Binary-payload fixity checksums (sha2 over the hex encoding —
+    portable across engines whose hash functions are VARCHAR-only) for the
+    deterministic synthetic media table. The ONE multimodal query with a
+    full oracle: DuckDB reconstructs the same payload bytes
+    (repeat(unhex(sha256(i)), 32)) and verifies every checksum."""
+    return multimodal.media_checksums(multimodal.synthetic_media(spark, n=48))
 
 
-def _media_golden_rows(n: int) -> list[tuple[int, str, bytes]]:
-    """Python-side golden recompute of the deterministic media stub
-    (mirrors ``multimodal.synthetic_media`` + ``_decode_payload``).
-
-    DuckDB's ``sha256`` accepts VARCHAR only, so blob digests (the
-    feature stub) cannot be recomputed in-engine; the expected rows are
-    reconstructed here — driver-side pure Python, independent of the
-    executors' Arrow/mapInPandas path — and embedded as VALUES oracles."""
-    import hashlib
-
-    return [
-        (
-            i,
-            ["image", "audio", "video"][i % 3],
-            hashlib.sha256(str(i).encode()).digest() * 32,
-        )
-        for i in range(n)
-    ]
-
-
-def _media_features_oracle(n: int) -> str:
-    import hashlib
-
-    vals = []
-    for i, mt, payload in _media_golden_rows(n):
-        digest = hashlib.sha256(payload)
-        fb = ",".join(str(b) for b in digest.digest()[:8])
-        vals.append(
-            f"({i}, '{mt}', {len(payload)}, '{digest.hexdigest()}', '{fb}')"
-        )
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id, media_type, "
-        "CAST(payload_bytes AS INT) AS payload_bytes, sha256, feature_bytes "
-        "FROM (VALUES " + ", ".join(vals) + ") "
-        "t(media_id, media_type, payload_bytes, sha256, feature_bytes)"
-    )
-
-
-def _media_frames_oracle(n: int, n_frames: int) -> str:
-    import hashlib
-
-    vals = []
-    for i, mt, payload in _media_golden_rows(n):
-        if mt != "video":
-            continue
-        for f in range(n_frames):
-            digest = hashlib.sha256(payload + bytes([f])).digest()
-            fb = ",".join(str(b) for b in digest[:8])
-            vals.append(f"({i}, {f}, '{fb}')")
-    return (
-        "SELECT CAST(media_id AS BIGINT) AS media_id, "
-        "CAST(frame_idx AS INT) AS frame_idx, feature_bytes "
-        "FROM (VALUES " + ", ".join(vals) + ") "
-        "t(media_id, frame_idx, feature_bytes)"
-    )
-
-
-ORACLE_SQL["q_media_features"] = _media_features_oracle(48)
-ORACLE_SQL["q_media_frame_sample"] = _media_frames_oracle(64, 4)
-
-
-def q_equi_depth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth (quantile) binning of order totals into 8 bins — exact
-    percentile edges as ONE distributed aggregate, broadcast back, bin
-    assignment a pure projection (no global-sort ntile window)."""
-    return cleaning.equi_depth_bins(
-        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderkey", n_bins=8
-    )
-
-
-def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type winsorization at the exact [p05, p95] quantiles —
-    outlier damping that preserves row count."""
-    return cleaning.winsorize(
-        _t(spark, sf_dir, "events"), "event_type", "value", "event_id"
-    )
-
-
-def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-mean imputation over a deterministically nulled value column
-    (event_id % 7 == 0 → NULL): decimal-exact group means broadcast back,
-    coalesce projection fills the gaps."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.when(F.col("event_id") % 7 == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("value"))
-        .alias("value"),
-    )
-    return cleaning.impute_group_mean(ev, "event_type", "value", "event_id")
-
-
-def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity-resolution pairs over part names: blocked on the head noun
-    (last token), Levenshtein ≤ 4 within blocks only — candidate scoring
-    without a quadratic self-join; JVM-side edit distance."""
-    return dedup.fuzzy_blocked_pairs(
-        _t(spark, sf_dir, "part"), "p_name", "p_partkey", max_distance=4
-    )
-
-
-QUERIES["q_equi_depth_bins"] = q_equi_depth_bins
-QUERIES["q_winsorize"] = q_winsorize
-QUERIES["q_impute_group_mean"] = q_impute_group_mean
-QUERIES["q_fuzzy_pairs"] = q_fuzzy_pairs
-
-ORACLE_SQL["q_equi_depth_bins"] = """
+@query(oracle="""
     WITH e AS (
         SELECT """ + ", ".join(
     f"quantile_disc(o_totalprice, {i}/8.0) AS e{i}" for i in range(1, 8)
@@ -4849,9 +5335,17 @@ ORACLE_SQL["q_equi_depth_bins"] = """
     f"CAST(o_totalprice > e{i} AS INT)" for i in range(1, 8)
 ) + """ AS BIGINT) AS bin
     FROM orders, e
-"""
+""")
+def q_equi_depth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Equi-depth (quantile) binning of order totals into 8 bins — exact
+    percentile edges as ONE distributed aggregate, broadcast back, bin
+    assignment a pure projection (no global-sort ntile window)."""
+    return cleaning.equi_depth_bins(
+        _t(spark, sf_dir, "orders"), "o_totalprice", "o_orderkey", n_bins=8
+    )
 
-ORACLE_SQL["q_winsorize"] = """
+
+@query(oracle="""
     WITH b AS (
         SELECT event_type,
                quantile_disc(value, 0.05) AS lo,
@@ -4862,9 +5356,16 @@ ORACLE_SQL["q_winsorize"] = """
            round(least(greatest(value, lo), hi), 4) AS value_winsorized,
            (value < lo OR value > hi) AS was_clamped
     FROM events JOIN b USING (event_type)
-"""
+""")
+def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-event-type winsorization at the exact [p05, p95] quantiles —
+    outlier damping that preserves row count."""
+    return cleaning.winsorize(
+        _t(spark, sf_dir, "events"), "event_type", "value", "event_id"
+    )
 
-ORACLE_SQL["q_impute_group_mean"] = """
+
+@query(oracle="""
     WITH ev AS (
         SELECT event_id, event_type,
                CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS value
@@ -4880,9 +5381,22 @@ ORACLE_SQL["q_impute_group_mean"] = """
            round(coalesce(ev.value, m.mu), 4) AS value_imputed,
            ev.value IS NULL AS was_imputed
     FROM ev JOIN m USING (event_type)
-"""
+""")
+def q_impute_group_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Group-mean imputation over a deterministically nulled value column
+    (event_id % 7 == 0 → NULL): decimal-exact group means broadcast back,
+    coalesce projection fills the gaps."""
+    ev = _t(spark, sf_dir, "events").select(
+        "event_id",
+        "event_type",
+        F.when(F.col("event_id") % 7 == 0, F.lit(None).cast("double"))
+        .otherwise(F.col("value"))
+        .alias("value"),
+    )
+    return cleaning.impute_group_mean(ev, "event_type", "value", "event_id")
 
-ORACLE_SQL["q_fuzzy_pairs"] = """
+
+@query(oracle="""
     WITH k AS (
         SELECT p_partkey, p_name,
                string_split_regex(p_name, '[ \\t\\n\\r\\f\\x0b]+')[-1] AS blk
@@ -4895,9 +5409,46 @@ ORACLE_SQL["q_fuzzy_pairs"] = """
     FROM b a JOIN b c USING (blk)
     WHERE a.p_partkey < c.p_partkey
       AND levenshtein(a.p_name, c.p_name) <= 4
-"""
+""")
+def q_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Entity-resolution pairs over part names: blocked on the head noun
+    (last token), Levenshtein ≤ 4 within blocks only — candidate scoring
+    without a quadratic self-join; JVM-side edit distance."""
+    return dedup.fuzzy_blocked_pairs(
+        _t(spark, sf_dir, "part"), "p_name", "p_partkey", max_distance=4
+    )
 
 
+@query(oracle="""
+    WITH quality AS (
+        SELECT * FROM documents
+        WHERE n_chars >= 100
+          AND CASE WHEN trim(text) = '' THEN 0
+                   ELSE length(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END >= 10
+    ),
+    canonical AS (
+        SELECT md5(text) AS content_key,
+               min(doc_id) AS doc_id,
+               min(n_chars) AS n_chars
+        FROM quality GROUP BY md5(text)
+    ),
+    labeled AS (
+        SELECT doc_id, n_chars,
+               CASE WHEN substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'split-v1')), 1, 8)
+                         < 'cccccccc' THEN 'train'
+                    WHEN substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'split-v1')), 1, 8)
+                         < 'e6666666' THEN 'val'
+                    ELSE 'test' END AS split,
+               CAST(strpos('0123456789abcdef',
+                    substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'shard-v1')), 1, 1))
+                    - 1 AS BIGINT) AS shard
+        FROM canonical
+    )
+    SELECT split, shard,
+           count(doc_id) AS n_docs,
+           CAST(sum(n_chars) AS BIGINT) AS total_chars
+    FROM labeled GROUP BY split, shard
+""")
 def q_training_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capstone LLM training-data pipeline, end-to-end in ONE declarative
     plan: quality gate → exact dedup (md5 content key, min-id canonical) →
@@ -4941,52 +5492,7 @@ def q_training_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_training_pipeline_e2e"] = q_training_pipeline_e2e
-
-ORACLE_SQL["q_training_pipeline_e2e"] = """
-    WITH quality AS (
-        SELECT * FROM documents
-        WHERE n_chars >= 100
-          AND CASE WHEN trim(text) = '' THEN 0
-                   ELSE length(regexp_split_to_array(trim(text), '[ \\t\\n\\r\\f\\x0b]+')) END >= 10
-    ),
-    canonical AS (
-        SELECT md5(text) AS content_key,
-               min(doc_id) AS doc_id,
-               min(n_chars) AS n_chars
-        FROM quality GROUP BY md5(text)
-    ),
-    labeled AS (
-        SELECT doc_id, n_chars,
-               CASE WHEN substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'split-v1')), 1, 8)
-                         < 'cccccccc' THEN 'train'
-                    WHEN substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'split-v1')), 1, 8)
-                         < 'e6666666' THEN 'val'
-                    ELSE 'test' END AS split,
-               CAST(strpos('0123456789abcdef',
-                    substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR), 'shard-v1')), 1, 1))
-                    - 1 AS BIGINT) AS shard
-        FROM canonical
-    )
-    SELECT split, shard,
-           count(doc_id) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_chars
-    FROM labeled GROUP BY split, shard
-"""
-
-
-def q_weighted_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language Efraimidis-Spirakis sample (10 docs per lang, weight =
-    doc length) — balanced-corpus construction; one group-keyed window
-    shuffle, reproducible on any engine/partitioning."""
-    return sampling.weighted_hash_sample_per_group(
-        _t(spark, sf_dir, "documents"), "lang", "n_chars", 10
-    )
-
-
-QUERIES["q_weighted_sample_per_group"] = q_weighted_sample_per_group
-
-ORACLE_SQL["q_weighted_sample_per_group"] = """
+@query(oracle="""
     WITH keyed AS (
         SELECT doc_id, lang, n_chars AS weight,
                round(ln((CAST(('0x' || substr(md5(concat_ws(':', CAST(doc_id AS VARCHAR),
@@ -5002,62 +5508,24 @@ ORACLE_SQL["q_weighted_sample_per_group"] = """
         FROM keyed
     )
     SELECT doc_id, lang, weight, es_key FROM ranked WHERE rn <= 10
-"""
-
-
-# Streaming full oracles: drained stream state == batch recompute (the
-# staging/watermark choices in each query guarantee no late drops — see
-# the query docstrings).
-ORACLE_SQL["q_streaming_tumbling"] = """
-    -- WHERE mirrors the streaming window(ts, ...): NULL event time has
-    -- no window and never enters watermarked state (r14 nulls row)
-    SELECT date_trunc('hour', ts) AS window_start, event_type,
-           count(event_id) AS n,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-    FROM events WHERE ts IS NOT NULL
-    GROUP BY date_trunc('hour', ts), event_type
-"""
-
-ORACLE_SQL["q_streaming_sliding"] = """
-    WITH expanded AS (
-        SELECT event_id, event_type, value, to_timestamp(s) AS ws
-        FROM events,
-             UNNEST(generate_series(
-                 CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800 - 1800,
-                 CAST(floor(epoch(ts) / 1800) AS BIGINT) * 1800,
-                 1800)) AS t(s)
+""")
+def q_weighted_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-language Efraimidis-Spirakis sample (10 docs per lang, weight =
+    doc length) — balanced-corpus construction; one group-keyed window
+    shuffle, reproducible on any engine/partitioning."""
+    return sampling.weighted_hash_sample_per_group(
+        _t(spark, sf_dir, "documents"), "lang", "n_chars", 10
     )
-    SELECT CAST(ws AS TIMESTAMP) AS window_start, event_type,
-           count(event_id) AS n,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-    FROM expanded GROUP BY ws, event_type
-"""
-
-ORACLE_SQL["q_streaming_dedup"] = """
-    -- WHERE mirrors dropDuplicatesWithinWatermark: a row with NULL event
-    -- time cannot be placed in the watermark horizon (r14 nulls row)
-    SELECT event_id, user_id, event_type FROM events WHERE ts IS NOT NULL
-"""
-
-ORACLE_SQL["q_streaming_enrich"] = """
-    -- WHERE mirrors the stream-dim INNER join: a NULL user matches no
-    -- dimension row, so it contributes to no tier
-    SELECT CAST(user_id % 4 AS INT) AS tier, count(event_id) AS n
-    FROM events WHERE user_id IS NOT NULL
-    GROUP BY CAST(user_id % 4 AS INT)
-"""
-
-ORACLE_SQL["q_streaming_interval_join"] = """
-    SELECT v.user_id AS user_id, count(*) AS n_attributed
-    FROM (SELECT user_id, ts, event_id FROM events WHERE event_type = 'view') v
-    JOIN (SELECT user_id AS cu, ts AS cts FROM events WHERE event_type = 'click') c
-      ON v.user_id = c.cu
-     AND c.cts >= v.ts
-     AND c.cts <= v.ts + INTERVAL 30 MINUTE
-    GROUP BY v.user_id
-"""
 
 
+@query(oracle="""
+    SELECT o_orderkey, l.l_linenumber, l.l_extendedprice
+    FROM orders, LATERAL (
+        SELECT l_linenumber, l_extendedprice FROM lineitem
+        WHERE l_orderkey = o_orderkey
+        ORDER BY l_extendedprice DESC, l_linenumber ASC LIMIT 2
+    ) l
+""")
 def q_lateral_topk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery (SQL:2016 surface, Spark 3.2+): per
     order, its top-2 line items by price — the SQL spelling of
@@ -5078,6 +5546,19 @@ def q_lateral_topk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH c AS (
+        SELECT user_id, event_type, count(event_id) AS cnt
+        FROM events WHERE event_type IS NOT NULL
+        GROUP BY user_id, event_type
+    )
+    SELECT user_id,
+           coalesce(string_agg(CASE WHEN cnt >= 5 THEN event_type END, ','
+                               ORDER BY event_type), '') AS frequent_csv,
+           string_agg(CAST(cnt * 2 AS VARCHAR), ','
+                      ORDER BY event_type) AS doubled_csv
+    FROM c GROUP BY user_id
+""")
 def q_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType surface: per-user event-type count map built with
     map_from_entries(sorted entries), then map higher-order functions —
@@ -5109,33 +5590,16 @@ def q_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_lateral_topk_join"] = q_lateral_topk_join
-QUERIES["q_map_ops"] = q_map_ops
-
-ORACLE_SQL["q_lateral_topk_join"] = """
-    SELECT o_orderkey, l.l_linenumber, l.l_extendedprice
-    FROM orders, LATERAL (
-        SELECT l_linenumber, l_extendedprice FROM lineitem
-        WHERE l_orderkey = o_orderkey
-        ORDER BY l_extendedprice DESC, l_linenumber ASC LIMIT 2
-    ) l
-"""
-
-ORACLE_SQL["q_map_ops"] = """
-    WITH c AS (
-        SELECT user_id, event_type, count(event_id) AS cnt
-        FROM events WHERE event_type IS NOT NULL
-        GROUP BY user_id, event_type
-    )
+@query(oracle="""
     SELECT user_id,
-           coalesce(string_agg(CASE WHEN cnt >= 5 THEN event_type END, ','
-                               ORDER BY event_type), '') AS frequent_csv,
-           string_agg(CAST(cnt * 2 AS VARCHAR), ','
-                      ORDER BY event_type) AS doubled_csv
-    FROM c GROUP BY user_id
-"""
-
-
+           count(event_id) AS n_events,
+           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
+    FROM events
+    -- NULL-user rows are NOT in the forget set (the delete pass is an
+    -- anti-join on key equality, which never matches NULL): they survive
+    WHERE user_id IS NULL OR user_id % 10 != 0
+    GROUP BY user_id
+""")
 def q_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten end-to-end: stage a versioned per-user
     aggregate table, erase users with user_id % 10 == 0 via the anti-join
@@ -5175,20 +5639,19 @@ def q_gdpr_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_gdpr_delete"] = q_gdpr_delete
-
-ORACLE_SQL["q_gdpr_delete"] = """
-    SELECT user_id,
-           count(event_id) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
-    FROM events
-    -- NULL-user rows are NOT in the forget set (the delete pass is an
-    -- anti-join on key equality, which never matches NULL): they survive
-    WHERE user_id IS NULL OR user_id % 10 != 0
-    GROUP BY user_id
-"""
-
-
+@query(oracle="""
+    SELECT o_orderkey,
+           CASE WHEN o_orderkey % 100 = 0 THEN 'U' ELSE o_orderstatus END
+               AS o_orderstatus,
+           CASE WHEN o_orderkey % 100 = 0 THEN o_totalprice * 2
+                ELSE o_totalprice END AS o_totalprice
+    FROM orders WHERE o_orderkey % 97 != 0
+    UNION ALL
+    SELECT o_orderkey + 10000000 AS o_orderkey,
+           'N' AS o_orderstatus,
+           1.0 AS o_totalprice
+    FROM orders WHERE o_orderkey % 1000 = 0
+""")
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC round-trip: build v2 from orders by a deterministic transform
     (keys %97==0 deleted; %100==0 updated to status 'U', price doubled;
@@ -5220,23 +5683,14 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lake.apply_changes(v1, feed, ["o_orderkey"])
 
 
-QUERIES["q_cdc_apply"] = q_cdc_apply
-
-ORACLE_SQL["q_cdc_apply"] = """
-    SELECT o_orderkey,
-           CASE WHEN o_orderkey % 100 = 0 THEN 'U' ELSE o_orderstatus END
-               AS o_orderstatus,
-           CASE WHEN o_orderkey % 100 = 0 THEN o_totalprice * 2
-                ELSE o_totalprice END AS o_totalprice
-    FROM orders WHERE o_orderkey % 97 != 0
-    UNION ALL
-    SELECT o_orderkey + 10000000 AS o_orderkey,
-           'N' AS o_orderstatus,
-           1.0 AS o_totalprice
-    FROM orders WHERE o_orderkey % 1000 = 0
-"""
-
-
+@query(oracle="""
+    SELECT o_orderdate,
+           count(l_orderkey) AS n_items,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+               AS total_price
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    GROUP BY o_orderdate
+""")
 def q_shuffle_hash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit SHUFFLE_HASH join-strategy hint: orders ⋈ lineitem with the
     build side hash-tabled per partition instead of sort-merge — the right
@@ -5260,18 +5714,13 @@ def q_shuffle_hash_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_shuffle_hash_join"] = q_shuffle_hash_join
-
-ORACLE_SQL["q_shuffle_hash_join"] = """
-    SELECT o_orderdate,
-           count(l_orderkey) AS n_items,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+@query(oracle="""
+    SELECT o_orderstatus,
+           count(o_orderkey) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
                AS total_price
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    GROUP BY o_orderdate
-"""
-
-
+    FROM orders GROUP BY o_orderstatus
+""")
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel on the versioned-parquet layer: publish v1 (per-status
     counts), publish v2 (filtered to 'F' only), then read v1 BY VERSION
@@ -5300,6 +5749,17 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH g AS (
+        SELECT o_orderstatus,
+               count(o_orderkey) AS n,
+               sum(CAST(o_totalprice AS DECIMAL(18,4))) AS dec_total
+        FROM orders GROUP BY o_orderstatus
+    )
+    SELECT o_orderstatus, 'count' AS metric, CAST(n AS DOUBLE) AS value FROM g
+    UNION ALL
+    SELECT o_orderstatus, 'total' AS metric, CAST(dec_total AS DOUBLE) AS value FROM g
+""")
 def q_exchange_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metric fan-out off ONE shuffle: both per-status metrics computed in
     a single grouped aggregate, then unpivoted (Expand — shuffle-free)
@@ -5319,30 +5779,13 @@ def q_exchange_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_time_travel"] = q_time_travel
-QUERIES["q_exchange_reuse"] = q_exchange_reuse
-
-ORACLE_SQL["q_time_travel"] = """
-    SELECT o_orderstatus,
-           count(o_orderkey) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-               AS total_price
-    FROM orders GROUP BY o_orderstatus
-"""
-
-ORACLE_SQL["q_exchange_reuse"] = """
-    WITH g AS (
-        SELECT o_orderstatus,
-               count(o_orderkey) AS n,
-               sum(CAST(o_totalprice AS DECIMAL(18,4))) AS dec_total
-        FROM orders GROUP BY o_orderstatus
-    )
-    SELECT o_orderstatus, 'count' AS metric, CAST(n AS DOUBLE) AS value FROM g
-    UNION ALL
-    SELECT o_orderstatus, 'total' AS metric, CAST(dec_total AS DOUBLE) AS value FROM g
-"""
-
-
+@query(oracle="""
+    SELECT i AS item_id,
+           CAST(i // 25 AS INT) AS page,
+           'item-' || lpad(CAST(i AS VARCHAR), 6, '0') AS name,
+           round((i % 97) / 97.0, 6) AS score
+    FROM generate_series(0, 199) t(i)
+""")
 def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource (Spark-4 extension point): the reference's
     paginated-API extract re-planned as a real SCAN — one input partition
@@ -5369,17 +5812,7 @@ def q_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_python_datasource"] = q_python_datasource
-
-ORACLE_SQL["q_python_datasource"] = """
-    SELECT i AS item_id,
-           CAST(i // 25 AS INT) AS page,
-           'item-' || lpad(CAST(i AS VARCHAR), 6, '0') AS name,
-           round((i % 97) / 97.0, 6) AS score
-    FROM generate_series(0, 199) t(i)
-"""
-
-
+@query(oracle=ORACLE_SQL["q_python_datasource"])
 def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING custom Python DataSource (SimpleDataSourceStreamReader):
     the paginated API as a micro-batch stream — each trigger ingests
@@ -5417,44 +5850,6 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_python_datasource_stream"] = q_python_datasource_stream
-
-ORACLE_SQL["q_python_datasource_stream"] = ORACLE_SQL["q_python_datasource"]
-
-# Streaming sessionization (r8 rows-only → full-oracle upgrade): the
-# sentinel-drained sink closes EVERY session, so the stream must equal the
-# batch gap-split recompute — q_sessionize's oracle minus the session_seq
-# surrogate, with count(*) (the stream counts rows, not non-null
-# event_ids) and ts IS NOT NULL (NULL-ts rows never pass the time-range
-# slice predicates, so they never enter the stream).
-ORACLE_SQL["q_streaming_sessionize"] = """
-    WITH norm AS (
-        SELECT user_id, event_id, date_trunc('microseconds', ts) AS ts
-        FROM events WHERE ts IS NOT NULL
-    ),
-    gaps AS (
-        SELECT user_id, event_id, ts,
-               -- epoch_us, not epoch_ms: the stateful operator compares
-               -- inter-event gaps in integer MICROSECONDS
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 2 * 60 * 1000000
-                    THEN 1 ELSE 0 END AS is_new
-        FROM norm
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    ),
-    sess AS (
-        SELECT user_id, ts,
-               CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-        FROM gaps
-    )
-    SELECT user_id,
-           min(ts) AS session_start,
-           max(ts) AS session_end,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM sess GROUP BY user_id, session_seq
-"""
-
 # Portable KMV set algebra (r8 growth): min-k sketches, their merge, and
 # the (k-1)·2^60 / kth-min estimates recomputed in-engine. The numerator
 # literal is the same Python double the Spark plan embeds; a set smaller
@@ -5464,132 +5859,14 @@ from datalake_breweries_two_spark.operators.setops import (
     KMV_NUMERATOR as _KMV_NUM,
 )
 
-ORACLE_SQL["q_kmv_overlap"] = f"""
-    WITH base AS (
-        SELECT event_type AS t,
-               CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-                    AS BIGINT) AS h
-        FROM events
-        WHERE user_id IS NOT NULL AND event_type IN ('view', 'click')
-    ),
-    dh AS (SELECT DISTINCT t, h FROM base),
-    kmv_a AS (SELECT h FROM dh WHERE t = 'view' ORDER BY h ASC LIMIT {_KMV_K}),
-    kmv_b AS (SELECT h FROM dh WHERE t = 'click' ORDER BY h ASC LIMIT {_KMV_K}),
-    kmv_u AS (
-        SELECT h FROM (
-            SELECT DISTINCT h FROM (
-                SELECT h FROM kmv_a UNION ALL SELECT h FROM kmv_b
-            )
-        ) ORDER BY h ASC LIMIT {_KMV_K}
-    ),
-    ea AS (SELECT CASE WHEN count(h) < {_KMV_K} THEN CAST(count(h) AS DOUBLE)
-                       ELSE round({_KMV_NUM!r} / CAST(max(h) AS DOUBLE), 4)
-                  END AS est_a FROM kmv_a),
-    eb AS (SELECT CASE WHEN count(h) < {_KMV_K} THEN CAST(count(h) AS DOUBLE)
-                       ELSE round({_KMV_NUM!r} / CAST(max(h) AS DOUBLE), 4)
-                  END AS est_b FROM kmv_b),
-    eu AS (SELECT CASE WHEN count(h) < {_KMV_K} THEN CAST(count(h) AS DOUBLE)
-                       ELSE round({_KMV_NUM!r} / CAST(max(h) AS DOUBLE), 4)
-                  END AS est_union FROM kmv_u),
-    ex AS (
-        SELECT CAST(count(DISTINCT CASE WHEN event_type = 'view'
-                                        THEN user_id END) AS BIGINT) AS exact_a,
-               CAST(count(DISTINCT CASE WHEN event_type = 'click'
-                                        THEN user_id END) AS BIGINT) AS exact_b,
-               CAST(count(DISTINCT CASE WHEN event_type IN ('view', 'click')
-                                        THEN user_id END) AS BIGINT) AS exact_union
-        FROM events WHERE user_id IS NOT NULL
-    )
-    SELECT est_a, est_b, est_union,
-           round(est_a + est_b - est_union, 4) AS est_intersect,
-           exact_a, exact_b, exact_union,
-           CAST(exact_a + exact_b - exact_union AS BIGINT) AS exact_intersect
-    FROM ea, eb, eu, ex
-"""
 
-# Portable HLL (r8 growth): every register, the integer harmonic
-# denominator, and the single-division estimate recomputed in-engine.
-# Constants (the alpha·m²·2^53 numerator, thresholds) are inlined from
-# the same Python values the Spark plan embeds; rho comes from the md5
-# HEX TEXT (4 bits per leading '0' + a CASE on the first non-zero digit)
-# so there is no floating log2 anywhere; the only libm step is the
-# small-range branch's ln, rounded at 4dp per the zipf/PMI discipline.
-from datalake_breweries_two_spark.operators.setops import (
-    HLL_M as _HLL_M,
-    HLL_NUMERATOR as _HLL_NUM,
-)
-
-# Shared register/rho/estimate CTE block for BOTH portable-HLL oracles
-# (r14 review finding: the rollup oracle had copy-pasted this verbatim,
-# and the one freshly-written CTE it added was where its NULL-day bug
-# crept in). References a `keyed` CTE with columns (g, h, k); ends at
-# `fin` with (g, n_used, exact_distinct, hll_estimate).
-_HLL_REGISTER_ESTIMATE_CTES = f"""
-    br AS (
-        SELECT g,
-               CAST(('0x' || substr(h, 1, 2)) AS INT) AS bucket,
-               CASE WHEN ltrim(substr(h, 3, 13), '0') = '' THEN 53
-                    ELSE (13 - length(ltrim(substr(h, 3, 13), '0'))) * 4
-                         + CASE substr(ltrim(substr(h, 3, 13), '0'), 1, 1)
-                             WHEN '1' THEN 3
-                             WHEN '2' THEN 2 WHEN '3' THEN 2
-                             WHEN '4' THEN 1 WHEN '5' THEN 1
-                             WHEN '6' THEN 1 WHEN '7' THEN 1
-                             ELSE 0 END
-                         + 1 END AS rho
-        FROM keyed
-    ),
-    regs AS (SELECT g, bucket, max(rho) AS reg FROM br GROUP BY g, bucket),
-    pg AS (
-        SELECT g, CAST(count(*) AS INT) AS n_used,
-               CAST(sum(CAST(1 AS BIGINT) << (53 - reg)) AS BIGINT) AS s_present
-        FROM regs GROUP BY g
-    ),
-    ex AS (
-        SELECT g, CAST(count(DISTINCT k) AS BIGINT) AS exact_distinct
-        FROM keyed GROUP BY g
-    ),
-    est AS (
-        SELECT pg.g, pg.n_used, ex.exact_distinct,
-               {_HLL_NUM!r} / CAST(pg.s_present
-                   + CAST({_HLL_M} - pg.n_used AS BIGINT) * CAST({1 << 53} AS BIGINT)
-                   AS DOUBLE) AS raw,
-               {_HLL_M} - pg.n_used AS v_zero
-        FROM pg JOIN ex ON pg.g IS NOT DISTINCT FROM ex.g
-    ),
-    fin AS (
-        SELECT g, n_used, exact_distinct,
-               CASE WHEN raw <= {2.5 * _HLL_M!r} AND v_zero > 0
-                    THEN round({float(_HLL_M)!r} * ln({float(_HLL_M)!r} / CAST(v_zero AS DOUBLE)), 4)
-                    ELSE round(raw, 4) END AS hll_estimate
-        FROM est
-    )"""
-
-ORACLE_SQL["q_hll_union_portable"] = f"""
-    WITH keyed AS (
-        SELECT event_type AS g, md5(CAST(user_id AS VARCHAR)) AS h, user_id AS k
-        FROM events WHERE user_id IS NOT NULL
-    ),
-{_HLL_REGISTER_ESTIMATE_CTES}
-    SELECT g AS event_type, n_used, hll_estimate, exact_distinct,
-           round(abs(hll_estimate - CAST(exact_distinct AS DOUBLE))
-                 / CAST(exact_distinct AS DOUBLE), 4) AS abs_rel_err
-    FROM fin
-"""
-
-# S1 driver-side paginated ingest (r8 rows-only → full-oracle upgrade):
-# the injected offline fetcher's payload is deterministic — pages 1..3
-# carry ids 3p..3p+2, page 4 is truncated to the single id 9 (the short
-# page that terminates the reference's pagination loop) — so the whole
-# ingested relation is reconstructible.
-ORACLE_SQL["q_ingest_rows"] = """
-    SELECT CAST(i AS VARCHAR) AS id,
-           'brew ' || CAST(i AS VARCHAR) AS name,
-           'micro' AS brewery_type
-    FROM generate_series(0, 9) t(i)
-"""
-
-
+@query(oracle="""
+    SELECT l_orderkey,
+           CAST(count(*) AS INT) AS n_items,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+               AS order_total
+    FROM lineitem GROUP BY l_orderkey
+""")
 def q_nested_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested columnar round-trip: lineitems collected into a sorted
     array<struct> per order (the denormalized at-rest layout that replaces
@@ -5621,17 +5898,16 @@ def q_nested_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_nested_rollup"] = q_nested_rollup
-
-ORACLE_SQL["q_nested_rollup"] = """
-    SELECT l_orderkey,
-           CAST(count(*) AS INT) AS n_items,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
-               AS order_total
-    FROM lineitem GROUP BY l_orderkey
-"""
-
-
+# The sketch-accuracy contracts (r12 upgrades): the oracle recomputes the
+# EXACT portable scalars and asserts the ok flags are TRUE — a hash match
+# means the engine's sketch estimates landed inside the documented
+# tolerance. The estimates themselves stay engine-specific by design.
+@query(oracle="""
+    SELECT event_type,
+           CAST(count(value) AS BIGINT) AS n_rows,
+           'ok' AS p50_ok, 'ok' AS p90_ok, 'ok' AS p99_ok
+    FROM events GROUP BY event_type
+""")
 def q_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable KLL quantile sketches per event type (p50/p90/p99,
     operators/setops.py:kll_quantile_rollup) surfaced as their BOUNDED
@@ -5706,6 +5982,23 @@ def q_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH f AS (
+        SELECT user_id,
+               max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS ha,
+               max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS hb
+        FROM events
+        WHERE user_id IS NOT NULL AND event_type IN ('view', 'click')
+        GROUP BY user_id
+    )
+    SELECT CAST(coalesce(sum(ha), 0) AS BIGINT) AS n_a,
+           CAST(coalesce(sum(hb), 0) AS BIGINT) AS n_b,
+           CAST(count(*) AS BIGINT) AS n_union,
+           CAST(coalesce(sum(CASE WHEN ha = 1 AND hb = 1 THEN 1 ELSE 0 END), 0)
+                AS BIGINT) AS n_intersect,
+           TRUE AS a_ok, TRUE AS b_ok, TRUE AS union_ok, TRUE AS intersect_ok
+    FROM f
+""")
 def q_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta-sketch distinct-set algebra (|view users|, |click users|,
     union, inclusion-exclusion intersection — audience overlap WITHOUT
@@ -5766,6 +6059,48 @@ def q_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle=f"""
+    WITH base AS (
+        SELECT event_type AS t,
+               CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+                    AS BIGINT) AS h
+        FROM events
+        WHERE user_id IS NOT NULL AND event_type IN ('view', 'click')
+    ),
+    dh AS (SELECT DISTINCT t, h FROM base),
+    kmv_a AS (SELECT h FROM dh WHERE t = 'view' ORDER BY h ASC LIMIT {_KMV_K}),
+    kmv_b AS (SELECT h FROM dh WHERE t = 'click' ORDER BY h ASC LIMIT {_KMV_K}),
+    kmv_u AS (
+        SELECT h FROM (
+            SELECT DISTINCT h FROM (
+                SELECT h FROM kmv_a UNION ALL SELECT h FROM kmv_b
+            )
+        ) ORDER BY h ASC LIMIT {_KMV_K}
+    ),
+    ea AS (SELECT CASE WHEN count(h) < {_KMV_K} THEN CAST(count(h) AS DOUBLE)
+                       ELSE round({_KMV_NUM!r} / CAST(max(h) AS DOUBLE), 4)
+                  END AS est_a FROM kmv_a),
+    eb AS (SELECT CASE WHEN count(h) < {_KMV_K} THEN CAST(count(h) AS DOUBLE)
+                       ELSE round({_KMV_NUM!r} / CAST(max(h) AS DOUBLE), 4)
+                  END AS est_b FROM kmv_b),
+    eu AS (SELECT CASE WHEN count(h) < {_KMV_K} THEN CAST(count(h) AS DOUBLE)
+                       ELSE round({_KMV_NUM!r} / CAST(max(h) AS DOUBLE), 4)
+                  END AS est_union FROM kmv_u),
+    ex AS (
+        SELECT CAST(count(DISTINCT CASE WHEN event_type = 'view'
+                                        THEN user_id END) AS BIGINT) AS exact_a,
+               CAST(count(DISTINCT CASE WHEN event_type = 'click'
+                                        THEN user_id END) AS BIGINT) AS exact_b,
+               CAST(count(DISTINCT CASE WHEN event_type IN ('view', 'click')
+                                        THEN user_id END) AS BIGINT) AS exact_union
+        FROM events WHERE user_id IS NOT NULL
+    )
+    SELECT est_a, est_b, est_union,
+           round(est_a + est_b - est_union, 4) AS est_intersect,
+           exact_a, exact_b, exact_union,
+           CAST(exact_a + exact_b - exact_union AS BIGINT) AS exact_intersect
+    FROM ea, eb, eu, ex
+""")
 def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-minimum-values distinct-set algebra (r8 growth): the portable,
     hash-checkable twin of q_theta_overlap — |view users|, |click users|,
@@ -5779,76 +6114,7 @@ def q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_kll_quantiles"] = q_kll_quantiles
-QUERIES["q_theta_overlap"] = q_theta_overlap
-QUERIES["q_kmv_overlap"] = q_kmv_overlap
-
-# The sketch-accuracy contracts (r12 upgrades): the oracle recomputes the
-# EXACT portable scalars and asserts the ok flags are TRUE — a hash match
-# means the engine's sketch estimates landed inside the documented
-# tolerance. The estimates themselves stay engine-specific by design.
-ORACLE_SQL["q_kll_quantiles"] = """
-    SELECT event_type,
-           CAST(count(value) AS BIGINT) AS n_rows,
-           'ok' AS p50_ok, 'ok' AS p90_ok, 'ok' AS p99_ok
-    FROM events GROUP BY event_type
-"""
-
-ORACLE_SQL["q_theta_overlap"] = """
-    WITH f AS (
-        SELECT user_id,
-               max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS ha,
-               max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS hb
-        FROM events
-        WHERE user_id IS NOT NULL AND event_type IN ('view', 'click')
-        GROUP BY user_id
-    )
-    SELECT CAST(coalesce(sum(ha), 0) AS BIGINT) AS n_a,
-           CAST(coalesce(sum(hb), 0) AS BIGINT) AS n_b,
-           CAST(count(*) AS BIGINT) AS n_union,
-           CAST(coalesce(sum(CASE WHEN ha = 1 AND hb = 1 THEN 1 ELSE 0 END), 0)
-                AS BIGINT) AS n_intersect,
-           TRUE AS a_ok, TRUE AS b_ok, TRUE AS union_ok, TRUE AS intersect_ok
-    FROM f
-"""
-
-
-def q_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands interval union: each event opens a deterministic
-    [ts, ts + 20+(event_id%90) sec] activity window; overlapping-or-touching
-    windows per user merge into maximal islands (operators/timeseries.py:
-    coalesce_intervals — single wide exchange, window + island groupBy share
-    one user-keyed partitioning). The interval twin of q_sessionize's
-    point-gap split; full oracle."""
-    from datalake_breweries_two_spark.operators import timeseries
-
-    iv = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.col("ts").alias("s"),
-        F.expr(
-            "ts + make_interval(0, 0, 0, 0, 0, 0, 20 + event_id % 90)"
-        ).alias("e"),
-    )
-    return timeseries.coalesce_intervals(iv, "user_id", "s", "e", "event_id")
-
-
-def q_mode_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-group mode (most frequent order priority per
-    status, ties to the smallest value) — count→rank formulation because
-    engine-native mode() leaves ties unspecified
-    (operators/aggregates.py:group_mode). Full oracle."""
-    from datalake_breweries_two_spark.operators.aggregates import group_mode
-
-    return group_mode(
-        _t(spark, sf_dir, "orders"), "o_orderstatus", "o_orderpriority"
-    )
-
-
-QUERIES["q_interval_coalesce"] = q_interval_coalesce
-QUERIES["q_mode_agg"] = q_mode_agg
-
-ORACLE_SQL["q_interval_coalesce"] = """
+@query(oracle="""
     WITH iv AS (
         SELECT user_id, event_id, ts AS s,
                ts + (20 + event_id % 90) * INTERVAL 1 SECOND AS e
@@ -5878,9 +6144,28 @@ ORACLE_SQL["q_interval_coalesce"] = """
            count(*) AS n_events,
            epoch_us(max(e)) - epoch_us(min(s)) AS covered_us
     FROM islands GROUP BY user_id, island
-"""
+""")
+def q_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gaps-and-islands interval union: each event opens a deterministic
+    [ts, ts + 20+(event_id%90) sec] activity window; overlapping-or-touching
+    windows per user merge into maximal islands (operators/timeseries.py:
+    coalesce_intervals — single wide exchange, window + island groupBy share
+    one user-keyed partitioning). The interval twin of q_sessionize's
+    point-gap split; full oracle."""
+    from datalake_breweries_two_spark.operators import timeseries
 
-ORACLE_SQL["q_mode_agg"] = """
+    iv = _t(spark, sf_dir, "events").select(
+        "user_id",
+        "event_id",
+        F.col("ts").alias("s"),
+        F.expr(
+            "ts + make_interval(0, 0, 0, 0, 0, 0, 20 + event_id % 90)"
+        ).alias("e"),
+    )
+    return timeseries.coalesce_intervals(iv, "user_id", "s", "e", "event_id")
+
+
+@query(oracle="""
     WITH counts AS (
         SELECT o_orderstatus, o_orderpriority, count(*) AS n
         FROM orders GROUP BY o_orderstatus, o_orderpriority
@@ -5895,9 +6180,26 @@ ORACLE_SQL["q_mode_agg"] = """
     )
     SELECT o_orderstatus, o_orderpriority AS mode_value, n AS mode_count
     FROM ranked WHERE rn = 1
-"""
+""")
+def q_mode_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic per-group mode (most frequent order priority per
+    status, ties to the smallest value) — count→rank formulation because
+    engine-native mode() leaves ties unspecified
+    (operators/aggregates.py:group_mode). Full oracle."""
+    from datalake_breweries_two_spark.operators.aggregates import group_mode
+
+    return group_mode(
+        _t(spark, sf_dir, "orders"), "o_orderstatus", "o_orderpriority"
+    )
 
 
+@query(oracle="""
+    SELECT event_type,
+           count(CAST(props->>'$.k' AS BIGINT)) AS n_with_k,
+           CAST(sum(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
+           count(DISTINCT CAST(props->>'$.k' AS BIGINT)) AS n_distinct_k
+    FROM events GROUP BY event_type
+""")
 def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark-4 VARIANT semi-structured path: parse_json → binary variant →
     typed variant_get extractions, aggregated per event type
@@ -5908,6 +6210,17 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semistructured.variant_props_rollup(_t(spark, sf_dir, "events"))
 
 
+@query(oracle="""
+    WITH toks AS (
+        SELECT doc_id, string_split(text, ' ') AS t, len(string_split(text, ' ')) AS n
+        FROM documents
+    )
+    SELECT doc_id,
+           CAST(start // 24 AS INT) AS chunk_idx,
+           CAST(least(start + 32, n) - start AS INT) AS n_tokens,
+           array_to_string(t[start + 1 : least(start + 32, n)], ' ') AS chunk_text
+    FROM toks, LATERAL (SELECT unnest(range(0, n, 24)) AS start) g
+""")
 def q_udtf_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (Arrow-batched LATERAL table function, Spark-4 extension
     point): overlapping 32-token windows with 8-token overlap per document
@@ -5919,30 +6232,13 @@ def q_udtf_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_variant_extract"] = q_variant_extract
-QUERIES["q_udtf_chunk"] = q_udtf_chunk
-
-ORACLE_SQL["q_variant_extract"] = """
-    SELECT event_type,
-           count(CAST(props->>'$.k' AS BIGINT)) AS n_with_k,
-           CAST(sum(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
-           count(DISTINCT CAST(props->>'$.k' AS BIGINT)) AS n_distinct_k
-    FROM events GROUP BY event_type
-"""
-
-ORACLE_SQL["q_udtf_chunk"] = """
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t, len(string_split(text, ' ')) AS n
-        FROM documents
-    )
-    SELECT doc_id,
-           CAST(start // 24 AS INT) AS chunk_idx,
-           CAST(least(start + 32, n) - start AS INT) AS n_tokens,
-           array_to_string(t[start + 1 : least(start + 32, n)], ' ') AS chunk_text
-    FROM toks, LATERAL (SELECT unnest(range(0, n, 24)) AS start) g
-"""
-
-
+@query(oracle="""
+    SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END AS o_orderpriority,
+           count(o_orderkey) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
+    FROM orders
+    GROUP BY CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END
+""")
 def q_mergeschema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution READ path: two parquet generations (v1 without
     o_orderpriority, v2 with it) unified by ``mergeSchema=true`` at scan —
@@ -5972,17 +6268,30 @@ def q_mergeschema_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_mergeschema_scan"] = q_mergeschema_scan
-
-ORACLE_SQL["q_mergeschema_scan"] = """
-    SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END AS o_orderpriority,
-           count(o_orderkey) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-    FROM orders
-    GROUP BY CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END
-"""
-
-
+@query(oracle="""
+    WITH ordered AS (
+        SELECT user_id, ts, value, event_id,
+               CASE WHEN lag(ts) OVER w IS NULL
+                         OR ts - lag(ts) OVER w >= INTERVAL 2 MINUTE
+                    THEN 1 ELSE 0 END AS opens
+        FROM events WHERE ts IS NOT NULL
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+    ),
+    islands AS (
+        SELECT user_id, ts, value,
+               sum(opens) OVER (
+                   PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS island
+        FROM ordered
+    )
+    SELECT user_id,
+           min(ts) AS session_start,
+           max(ts) + INTERVAL 2 MINUTE AS session_end,
+           count(*) AS n_events,
+           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
+    FROM islands GROUP BY user_id, island
+""")
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NATIVE session windows (F.session_window — Spark's dedicated
     session-aggregation operator, merging events while each arrives within
@@ -6013,45 +6322,6 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_session_window"] = q_session_window
-
-ORACLE_SQL["q_session_window"] = """
-    WITH ordered AS (
-        SELECT user_id, ts, value, event_id,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w >= INTERVAL 2 MINUTE
-                    THEN 1 ELSE 0 END AS opens
-        FROM events WHERE ts IS NOT NULL
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-    ),
-    islands AS (
-        SELECT user_id, ts, value,
-               sum(opens) OVER (
-                   PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS island
-        FROM ordered
-    )
-    SELECT user_id,
-           min(ts) AS session_start,
-           max(ts) + INTERVAL 2 MINUTE AS session_end,
-           count(*) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
-    FROM islands GROUP BY user_id, island
-"""
-
-
-def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE (Spark 4 WITH RECURSIVE): a deterministic doubling
-    chain walked from every 30th customer key up to the table's max key —
-    iteration expressed IN SQL with no driver loop (vs the hand-rolled
-    fixed-point joins in operators/graph.py). The recursion bound rides
-    along as a carried column so the recursive member stays subquery-free.
-    Full oracle: DuckDB runs the identical statement."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    return spark.sql(_RECURSIVE_CTE_SQL.format(table="customer_v"))
-
-
 _RECURSIVE_CTE_SQL = """
     WITH RECURSIVE chain AS (
         SELECT c_custkey AS root, c_custkey AS cur, 0 AS depth, m.bound AS bound
@@ -6068,6 +6338,31 @@ _RECURSIVE_CTE_SQL = """
 """
 
 
+@query(oracle=_RECURSIVE_CTE_SQL.format(table="customer"))
+def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recursive CTE (Spark 4 WITH RECURSIVE): a deterministic doubling
+    chain walked from every 30th customer key up to the table's max key —
+    iteration expressed IN SQL with no driver loop (vs the hand-rolled
+    fixed-point joins in operators/graph.py). The recursion bound rides
+    along as a carried column so the recursive member stays subquery-free.
+    Full oracle: DuckDB runs the identical statement."""
+    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
+    return spark.sql(_RECURSIVE_CTE_SQL.format(table="customer_v"))
+
+
+@query(oracle="""
+    WITH v AS (
+        SELECT o_orderstatus,
+               CASE WHEN o_orderkey % 2 = 0
+                    THEN lower(o_orderpriority)
+                    ELSE o_orderpriority END AS prio
+        FROM orders
+    )
+    SELECT o_orderstatus,
+           count(DISTINCT lower(prio)) AS n_ci,
+           count(DISTINCT prio) AS n_cs
+    FROM v GROUP BY o_orderstatus
+""")
 def q_collated_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String collations (Spark 4): a case-insensitive UTF8_LCASE DISTINCT
     folds synthesized case variants of the order priority that a binary
@@ -6092,26 +6387,13 @@ def q_collated_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_recursive_cte"] = q_recursive_cte
-QUERIES["q_collated_distinct"] = q_collated_distinct
-
-ORACLE_SQL["q_recursive_cte"] = _RECURSIVE_CTE_SQL.format(table="customer")
-
-ORACLE_SQL["q_collated_distinct"] = """
-    WITH v AS (
-        SELECT o_orderstatus,
-               CASE WHEN o_orderkey % 2 = 0
-                    THEN lower(o_orderpriority)
-                    ELSE o_orderpriority END AS prio
-        FROM orders
-    )
+@query(oracle="""
     SELECT o_orderstatus,
-           count(DISTINCT lower(prio)) AS n_ci,
-           count(DISTINCT prio) AS n_cs
-    FROM v GROUP BY o_orderstatus
-"""
-
-
+           count(o_orderkey) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
+    FROM orders WHERE o_orderkey % 10 = 0
+    GROUP BY o_orderstatus
+""")
 def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML scan (Spark 4 NATIVE xml data source — no external package):
     a filtered orders projection staged as XML, read back with an EXPLICIT
@@ -6144,17 +6426,12 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_scan_xml"] = q_scan_xml
-
-ORACLE_SQL["q_scan_xml"] = """
+@query(oracle="""
     SELECT o_orderstatus,
-           count(o_orderkey) AS n_orders,
+           count(*) AS n_orders,
            CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-    FROM orders WHERE o_orderkey % 10 = 0
-    GROUP BY o_orderstatus
-"""
-
-
+    FROM orders GROUP BY o_orderstatus
+""")
 def q_pandas_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pandas API on Spark (pyspark.pandas): the DataFrame loaded through
     the catalog, switched into the pandas dialect (``.pandas_api`` with a
@@ -6186,16 +6463,32 @@ def q_pandas_api(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_pandas_api"] = q_pandas_api
-
-ORACLE_SQL["q_pandas_api"] = """
-    SELECT o_orderstatus,
-           count(*) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_price
-    FROM orders GROUP BY o_orderstatus
-"""
-
-
+@query(oracle="""
+    -- ts comparisons and outputs truncated to microseconds: Spark decodes
+    -- every events.ts layout to microsecond timestamps (catalog.py), so a
+    -- raw nanosecond fixture would otherwise diverge at sub-us precision
+    WITH dim AS (
+        SELECT user_id,
+               date_trunc('microseconds', ts) AS valid_from,
+               lead(date_trunc('microseconds', ts)) OVER w AS valid_to,
+               event_id AS dim_version_id,
+               value AS dim_value
+        FROM events WHERE event_type = 'purchase'
+        WINDOW w AS (
+            PARTITION BY user_id
+            ORDER BY date_trunc('microseconds', ts) ASC, event_id ASC
+        )
+    ),
+    clicks AS (
+        SELECT event_id, user_id, date_trunc('microseconds', ts) AS ts
+        FROM events WHERE event_type = 'click'
+    )
+    SELECT c.event_id, c.user_id, c.ts, d.dim_version_id, d.dim_value
+    FROM clicks c LEFT JOIN dim d
+      ON c.user_id = d.user_id
+     AND d.valid_from <= c.ts
+     AND (d.valid_to IS NULL OR c.ts < d.valid_to)
+""")
 def q_pit_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time SCD2 dimension lookup: each click event joined to the
     per-user dimension version (built from the purchase changelog,
@@ -6229,69 +6522,7 @@ def q_pit_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_pit_lookup"] = q_pit_lookup
-
-ORACLE_SQL["q_pit_lookup"] = """
-    -- ts comparisons and outputs truncated to microseconds: Spark decodes
-    -- every events.ts layout to microsecond timestamps (catalog.py), so a
-    -- raw nanosecond fixture would otherwise diverge at sub-us precision
-    WITH dim AS (
-        SELECT user_id,
-               date_trunc('microseconds', ts) AS valid_from,
-               lead(date_trunc('microseconds', ts)) OVER w AS valid_to,
-               event_id AS dim_version_id,
-               value AS dim_value
-        FROM events WHERE event_type = 'purchase'
-        WINDOW w AS (
-            PARTITION BY user_id
-            ORDER BY date_trunc('microseconds', ts) ASC, event_id ASC
-        )
-    ),
-    clicks AS (
-        SELECT event_id, user_id, date_trunc('microseconds', ts) AS ts
-        FROM events WHERE event_type = 'click'
-    )
-    SELECT c.event_id, c.user_id, c.ts, d.dim_version_id, d.dim_value
-    FROM clicks c LEFT JOIN dim d
-      ON c.user_id = d.user_id
-     AND d.valid_from <= c.ts
-     AND (d.valid_to IS NULL OR c.ts < d.valid_to)
-"""
-
-
-def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER stream-stream interval join — unconverted views surface
-    as a stream with NULL click columns when the watermark evicts their
-    state (streaming/joins.py:view_click_attribution_outer). FULL ORACLE:
-    the staged slices replay in time order, so matched pairs equal the
-    batch interval join and the emitted null rows are exactly the
-    unmatched views whose ``view_ts + lag`` fell before the final global
-    watermark ``min(max view_ts, max click_ts) - delay`` — both recomputed
-    in SQL. Per-user counts returned."""
-    from datalake_breweries_two_spark.streaming import joins as stream_joins
-
-    stage_dir = os.path.join(_SCRATCH, "events_ssjoin_outer_stream")
-    stream_windows.stage_time_ordered_stream(
-        spark, os.path.join(sf_dir, "events.parquet"), stage_dir, n_slices=4
-    )
-    stream = stream_windows.read_events_stream(spark, stage_dir)
-    views = stream.filter(F.col("event_type") == "view")
-    clicks = stream.filter(F.col("event_type") == "click")
-    pairs = stream_joins.view_click_attribution_outer(
-        views, clicks, max_lag_minutes=5, watermark="2 minutes"
-    )
-    out = stream_windows.run_stream_to_memory(
-        spark, pairs, "q_streaming_ssjoin_outer_sink", output_mode="append"
-    )
-    return out.groupBy("user_id").agg(
-        F.count("click_id").alias("n_attributed"),
-        F.sum(F.col("click_id").isNull().cast("long")).alias("n_expired_unmatched"),
-    )
-
-
-QUERIES["q_streaming_interval_join_outer"] = q_streaming_interval_join_outer
-
-ORACLE_SQL["q_streaming_interval_join_outer"] = """
+@query(oracle="""
     WITH v AS (
         SELECT user_id, date_trunc('microseconds', ts) AS view_ts,
                event_id AS view_id
@@ -6342,7 +6573,35 @@ ORACLE_SQL["q_streaming_interval_join_outer"] = """
         UNION ALL
         SELECT user_id, click_id FROM expired_unmatched
     ) GROUP BY user_id
-"""
+""")
+def q_streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEFT OUTER stream-stream interval join — unconverted views surface
+    as a stream with NULL click columns when the watermark evicts their
+    state (streaming/joins.py:view_click_attribution_outer). FULL ORACLE:
+    the staged slices replay in time order, so matched pairs equal the
+    batch interval join and the emitted null rows are exactly the
+    unmatched views whose ``view_ts + lag`` fell before the final global
+    watermark ``min(max view_ts, max click_ts) - delay`` — both recomputed
+    in SQL. Per-user counts returned."""
+    from datalake_breweries_two_spark.streaming import joins as stream_joins
+
+    stage_dir = os.path.join(_SCRATCH, "events_ssjoin_outer_stream")
+    stream_windows.stage_time_ordered_stream(
+        spark, os.path.join(sf_dir, "events.parquet"), stage_dir, n_slices=4
+    )
+    stream = stream_windows.read_events_stream(spark, stage_dir)
+    views = stream.filter(F.col("event_type") == "view")
+    clicks = stream.filter(F.col("event_type") == "click")
+    pairs = stream_joins.view_click_attribution_outer(
+        views, clicks, max_lag_minutes=5, watermark="2 minutes"
+    )
+    out = stream_windows.run_stream_to_memory(
+        spark, pairs, "q_streaming_ssjoin_outer_sink", output_mode="append"
+    )
+    return out.groupBy("user_id").agg(
+        F.count("click_id").alias("n_attributed"),
+        F.sum(F.col("click_id").isNull().cast("long")).alias("n_expired_unmatched"),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -6351,6 +6610,17 @@ ORACLE_SQL["q_streaming_interval_join_outer"] = """
 # data-quality audit.
 # --------------------------------------------------------------------------
 
+@query(oracle="""
+    SELECT o_orderpriority,
+           count(*) AS order_count
+    FROM orders
+    WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o_orderdate <  TIMESTAMP '1997-01-01'
+      AND EXISTS (SELECT 1 FROM lineitem
+                  WHERE l_orderkey = o_orderkey
+                    AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+    GROUP BY o_orderpriority
+""")
 def q_sql_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape (priority queue): orders in a one-year band that had
     at least one LATE lineitem (shipped >60 days after the order date —
@@ -6373,6 +6643,19 @@ def q_sql_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    SELECT l_linestatus,
+           CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
+                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+           CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
+                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+    FROM lineitem
+    JOIN orders ON l_orderkey = o_orderkey
+    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+      AND l_shipdate <  TIMESTAMP '1997-01-01'
+      AND l_shipdate > o_orderdate + INTERVAL 30 DAY
+    GROUP BY l_linestatus
+""")
 def q_sql_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (shipping modes / late lines): lineitems shipped in
     a one-year band AND slow (>30 days after order date), bucketed by
@@ -6397,6 +6680,26 @@ def q_sql_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The textbook correlated EXISTS / NOT EXISTS triple-self-join form — the
+# Spark side decorrelates it to one per-order aggregate; results must agree.
+@query(oracle="""
+    SELECT s_name, count(*) AS numwait
+    FROM supplier
+    JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
+    JOIN orders ON o_orderkey = l1.l_orderkey
+    WHERE o_orderstatus = 'F'
+      AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
+      AND EXISTS (SELECT 1 FROM lineitem l2
+                  WHERE l2.l_orderkey = l1.l_orderkey
+                    AND l2.l_suppkey <> l1.l_suppkey)
+      AND NOT EXISTS (SELECT 1 FROM lineitem l3
+                      WHERE l3.l_orderkey = l1.l_orderkey
+                        AND l3.l_suppkey <> l1.l_suppkey
+                        AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
+    GROUP BY s_name
+    ORDER BY numwait DESC, s_name
+    LIMIT 20
+""")
 def q_sql_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (suppliers who kept waiting): in finished orders,
     count late lineitems whose supplier was the ONLY late supplier of a
@@ -6444,6 +6747,15 @@ def q_sql_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    SELECT l_returnflag,
+           count(*) AS n_rows,
+           round(corr(l_quantity, l_extendedprice), 4) + 0.0 AS corr_l_quantity_l_extendedprice,
+           round(corr(l_extendedprice, l_discount), 4) + 0.0 AS corr_l_extendedprice_l_discount,
+           round(corr(l_quantity, l_discount), 4) + 0.0 AS corr_l_quantity_l_discount
+    FROM lineitem
+    GROUP BY l_returnflag
+""")
 def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-returnflag Pearson correlation matrix over the lineitem measure
     columns — one single-pass grouped aggregate (operators/aggregates.py
@@ -6461,6 +6773,15 @@ def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    SELECT c_mktsegment,
+           round(regr_slope(o_totalprice, c_acctbal), 4) + 0.0 AS slope,
+           round(regr_intercept(o_totalprice, c_acctbal), 4) + 0.0 AS intercept,
+           regr_count(o_totalprice, c_acctbal) AS n_obs
+    FROM orders
+    JOIN customer ON o_custkey = c_custkey
+    GROUP BY c_mktsegment
+""")
 def q_linreg_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-market-segment least-squares fit of order total against customer
     account balance — the regr_* closed-form single-job pattern
@@ -6478,6 +6799,50 @@ def q_linreg_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     return linreg_by_group(joined, "c_mktsegment", "o_totalprice", "c_acctbal")
 
 
+@query(oracle="""
+    SELECT 'lineitem_orderkey_fk' AS check,
+           count(*) AS n_violations, count(*) = 0 AS passed
+    FROM lineitem WHERE l_orderkey IS NULL
+       OR NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)
+    UNION ALL
+    SELECT 'orders_custkey_fk', count(*), count(*) = 0
+    FROM orders WHERE o_custkey IS NULL
+       OR NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey)
+    UNION ALL
+    SELECT 'customer_nationkey_fk', count(*), count(*) = 0
+    FROM customer WHERE c_nationkey IS NULL
+       OR NOT EXISTS (SELECT 1 FROM nation WHERE n_nationkey = c_nationkey)
+    UNION ALL
+    SELECT 'orders_orderkey_unique',
+           CAST(coalesce(sum(n), 0) AS BIGINT), coalesce(sum(n), 0) = 0
+    FROM (SELECT count(*) AS n FROM orders GROUP BY o_orderkey HAVING count(*) > 1)
+    UNION ALL
+    SELECT 'lineitem_line_unique',
+           CAST(coalesce(sum(n), 0) AS BIGINT), coalesce(sum(n), 0) = 0
+    FROM (SELECT count(*) AS n FROM lineitem
+          GROUP BY l_orderkey, l_linenumber HAVING count(*) > 1)
+    UNION ALL
+    SELECT 'orders_totalprice_positive',
+           CAST(coalesce(sum(CASE WHEN o_totalprice <= 0 OR o_totalprice IS NULL
+                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
+           coalesce(sum(CASE WHEN o_totalprice <= 0 OR o_totalprice IS NULL
+                             THEN 1 ELSE 0 END), 0) = 0
+    FROM orders
+    UNION ALL
+    SELECT 'lineitem_discount_range',
+           CAST(coalesce(sum(CASE WHEN l_discount < 0 OR l_discount > 1 OR l_discount IS NULL
+                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
+           coalesce(sum(CASE WHEN l_discount < 0 OR l_discount > 1 OR l_discount IS NULL
+                             THEN 1 ELSE 0 END), 0) = 0
+    FROM lineitem
+    UNION ALL
+    SELECT 'orders_totalprice_finite',
+           CAST(coalesce(sum(CASE WHEN isnan(o_totalprice) OR isinf(o_totalprice)
+                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
+           coalesce(sum(CASE WHEN isnan(o_totalprice) OR isinf(o_totalprice)
+                             THEN 1 ELSE 0 END), 0) = 0
+    FROM orders
+""")
 def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dbt/Deequ-style audit suite over the lake in one declarative plan:
     referential integrity (FK orphans), key uniqueness, and row-level
@@ -6540,126 +6905,24 @@ def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dq_audit(checks).unionByName(orders_row_checks)
 
 
-QUERIES["q_sql_tpch_q4"] = q_sql_tpch_q4
-QUERIES["q_sql_tpch_q12"] = q_sql_tpch_q12
-QUERIES["q_sql_tpch_q21"] = q_sql_tpch_q21
-QUERIES["q_corr_matrix"] = q_corr_matrix
-QUERIES["q_linreg_by_group"] = q_linreg_by_group
-QUERIES["q_dq_audit"] = q_dq_audit
-
-ORACLE_SQL["q_sql_tpch_q4"] = """
-    SELECT o_orderpriority,
-           count(*) AS order_count
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate <  TIMESTAMP '1997-01-01'
-      AND EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey
-                    AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-    GROUP BY o_orderpriority
-"""
-
-ORACLE_SQL["q_sql_tpch_q12"] = """
-    SELECT l_linestatus,
-           CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      AND l_shipdate <  TIMESTAMP '1997-01-01'
-      AND l_shipdate > o_orderdate + INTERVAL 30 DAY
-    GROUP BY l_linestatus
-"""
-
-# The textbook correlated EXISTS / NOT EXISTS triple-self-join form — the
-# Spark side decorrelates it to one per-order aggregate; results must agree.
-ORACLE_SQL["q_sql_tpch_q21"] = """
-    SELECT s_name, count(*) AS numwait
-    FROM supplier
-    JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-    JOIN orders ON o_orderkey = l1.l_orderkey
-    WHERE o_orderstatus = 'F'
-      AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-      AND EXISTS (SELECT 1 FROM lineitem l2
-                  WHERE l2.l_orderkey = l1.l_orderkey
-                    AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                      WHERE l3.l_orderkey = l1.l_orderkey
-                        AND l3.l_suppkey <> l1.l_suppkey
-                        AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
-    GROUP BY s_name
-    ORDER BY numwait DESC, s_name
-    LIMIT 20
-"""
-
-ORACLE_SQL["q_corr_matrix"] = """
+@query(oracle="""
+    WITH ranked AS (
+        SELECT l_returnflag,
+               CAST(rank() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
+                    AS DOUBLE) AS rx,
+               CAST(rank() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice)
+                    AS DOUBLE) AS ry
+        FROM lineitem
+        WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
+    )
     SELECT l_returnflag,
-           count(*) AS n_rows,
-           round(corr(l_quantity, l_extendedprice), 4) + 0.0 AS corr_l_quantity_l_extendedprice,
-           round(corr(l_extendedprice, l_discount), 4) + 0.0 AS corr_l_extendedprice_l_discount,
-           round(corr(l_quantity, l_discount), 4) + 0.0 AS corr_l_quantity_l_discount
-    FROM lineitem
+           round(regr_sxy(rx, ry)
+                 / sqrt(regr_sxx(rx, ry) * regr_syy(rx, ry)), 4) + 0.0
+               AS spearman_qty_price,
+           count(*) AS n_rows
+    FROM ranked
     GROUP BY l_returnflag
-"""
-
-ORACLE_SQL["q_linreg_by_group"] = """
-    SELECT c_mktsegment,
-           round(regr_slope(o_totalprice, c_acctbal), 4) + 0.0 AS slope,
-           round(regr_intercept(o_totalprice, c_acctbal), 4) + 0.0 AS intercept,
-           regr_count(o_totalprice, c_acctbal) AS n_obs
-    FROM orders
-    JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_mktsegment
-"""
-
-ORACLE_SQL["q_dq_audit"] = """
-    SELECT 'lineitem_orderkey_fk' AS check,
-           count(*) AS n_violations, count(*) = 0 AS passed
-    FROM lineitem WHERE l_orderkey IS NULL
-       OR NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)
-    UNION ALL
-    SELECT 'orders_custkey_fk', count(*), count(*) = 0
-    FROM orders WHERE o_custkey IS NULL
-       OR NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey)
-    UNION ALL
-    SELECT 'customer_nationkey_fk', count(*), count(*) = 0
-    FROM customer WHERE c_nationkey IS NULL
-       OR NOT EXISTS (SELECT 1 FROM nation WHERE n_nationkey = c_nationkey)
-    UNION ALL
-    SELECT 'orders_orderkey_unique',
-           CAST(coalesce(sum(n), 0) AS BIGINT), coalesce(sum(n), 0) = 0
-    FROM (SELECT count(*) AS n FROM orders GROUP BY o_orderkey HAVING count(*) > 1)
-    UNION ALL
-    SELECT 'lineitem_line_unique',
-           CAST(coalesce(sum(n), 0) AS BIGINT), coalesce(sum(n), 0) = 0
-    FROM (SELECT count(*) AS n FROM lineitem
-          GROUP BY l_orderkey, l_linenumber HAVING count(*) > 1)
-    UNION ALL
-    SELECT 'orders_totalprice_positive',
-           CAST(coalesce(sum(CASE WHEN o_totalprice <= 0 OR o_totalprice IS NULL
-                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
-           coalesce(sum(CASE WHEN o_totalprice <= 0 OR o_totalprice IS NULL
-                             THEN 1 ELSE 0 END), 0) = 0
-    FROM orders
-    UNION ALL
-    SELECT 'lineitem_discount_range',
-           CAST(coalesce(sum(CASE WHEN l_discount < 0 OR l_discount > 1 OR l_discount IS NULL
-                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
-           coalesce(sum(CASE WHEN l_discount < 0 OR l_discount > 1 OR l_discount IS NULL
-                             THEN 1 ELSE 0 END), 0) = 0
-    FROM lineitem
-    UNION ALL
-    SELECT 'orders_totalprice_finite',
-           CAST(coalesce(sum(CASE WHEN isnan(o_totalprice) OR isinf(o_totalprice)
-                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
-           coalesce(sum(CASE WHEN isnan(o_totalprice) OR isinf(o_totalprice)
-                             THEN 1 ELSE 0 END), 0) = 0
-    FROM orders
-"""
-
-
+""")
 def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-returnflag Spearman rank correlation of quantity vs extended
     price: rank-transform both measures inside one group-partitioned
@@ -6702,6 +6965,20 @@ def q_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH pairs AS (
+        SELECT event_type AS from_type,
+               lead(event_type) OVER (PARTITION BY user_id
+                                      ORDER BY ts, event_id) AS to_type
+        FROM events
+    )
+    SELECT from_type, to_type, count(*) AS n_transitions
+    FROM pairs
+    WHERE to_type IS NOT NULL
+    GROUP BY from_type, to_type
+    ORDER BY n_transitions DESC, from_type, to_type
+    LIMIT 20
+""")
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user event-type transition (first-order Markov) counts: one
     user-keyed window pass pairs each event with its successor
@@ -6729,6 +7006,22 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH per_nation AS (
+        SELECT r_name, n_name,
+               sum(CAST(o_totalprice AS DECIMAL(18,4))) AS _rev
+        FROM orders
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation   ON c_nationkey = n_nationkey
+        JOIN region   ON n_regionkey = r_regionkey
+        GROUP BY r_name, n_name
+    )
+    SELECT r_name, n_name,
+           CAST(_rev AS DOUBLE) AS revenue,
+           round(CAST(_rev / sum(_rev) OVER (PARTITION BY r_name) AS DOUBLE), 6)
+               AS region_share
+    FROM per_nation
+""")
 def q_percent_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Share-of-total BI shape: order revenue per (region, nation) and
     each nation's share of its region — one fact aggregate (decimal-exact
@@ -6766,62 +7059,12 @@ def q_percent_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_spearman_corr"] = q_spearman_corr
-QUERIES["q_event_transitions"] = q_event_transitions
-QUERIES["q_percent_of_total"] = q_percent_of_total
-
-ORACLE_SQL["q_spearman_corr"] = """
-    WITH ranked AS (
-        SELECT l_returnflag,
-               CAST(rank() OVER (PARTITION BY l_returnflag ORDER BY l_quantity)
-                    AS DOUBLE) AS rx,
-               CAST(rank() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice)
-                    AS DOUBLE) AS ry
-        FROM lineitem
-        WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-    )
-    SELECT l_returnflag,
-           round(regr_sxy(rx, ry)
-                 / sqrt(regr_sxx(rx, ry) * regr_syy(rx, ry)), 4) + 0.0
-               AS spearman_qty_price,
-           count(*) AS n_rows
-    FROM ranked
-    GROUP BY l_returnflag
-"""
-
-ORACLE_SQL["q_event_transitions"] = """
-    WITH pairs AS (
-        SELECT event_type AS from_type,
-               lead(event_type) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS to_type
-        FROM events
-    )
-    SELECT from_type, to_type, count(*) AS n_transitions
-    FROM pairs
-    WHERE to_type IS NOT NULL
-    GROUP BY from_type, to_type
-    ORDER BY n_transitions DESC, from_type, to_type
-    LIMIT 20
-"""
-
-ORACLE_SQL["q_percent_of_total"] = """
-    WITH per_nation AS (
-        SELECT r_name, n_name,
-               sum(CAST(o_totalprice AS DECIMAL(18,4))) AS _rev
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation   ON c_nationkey = n_nationkey
-        JOIN region   ON n_regionkey = r_regionkey
-        GROUP BY r_name, n_name
-    )
-    SELECT r_name, n_name,
-           CAST(_rev AS DOUBLE) AS revenue,
-           round(CAST(_rev / sum(_rev) OVER (PARTITION BY r_name) AS DOUBLE), 6)
-               AS region_share
-    FROM per_nation
-"""
-
-
+@query(oracle="""
+    SELECT o_orderkey, o_custkey, o_totalprice
+    FROM orders
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 50 OFFSET 100
+""")
 def q_offset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-standard LIMIT/OFFSET pagination (Spark 4 OFFSET support): page 3
     of orders by descending value with a full deterministic sort key.
@@ -6844,6 +7087,13 @@ def q_offset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    SELECT o_orderkey,
+           nullif(o_orderpriority, '4-NOT SPECIFIED') AS pri
+    FROM orders
+    ORDER BY pri ASC NULLS LAST, o_orderkey
+    LIMIT 30
+""")
 def q_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit NULLS FIRST / NULLS LAST ordering: engines DISAGREE on the
     default NULL sort position (Spark ASC = NULLS FIRST, DuckDB ASC =
@@ -6864,6 +7114,15 @@ def q_nulls_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    SELECT o_orderstatus,
+           o_orderpriority,
+           count(*) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+               AS total_value
+    FROM orders
+    GROUP BY ALL
+""")
 def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL (Spark 4 / modern-SQL sugar): every non-aggregate
     select item becomes a grouping key — compiles to the identical
@@ -6883,76 +7142,7 @@ def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_offset_pagination"] = q_offset_pagination
-QUERIES["q_nulls_ordering"] = q_nulls_ordering
-QUERIES["q_group_by_all"] = q_group_by_all
-
-ORACLE_SQL["q_offset_pagination"] = """
-    SELECT o_orderkey, o_custkey, o_totalprice
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 50 OFFSET 100
-"""
-
-ORACLE_SQL["q_nulls_ordering"] = """
-    SELECT o_orderkey,
-           nullif(o_orderpriority, '4-NOT SPECIFIED') AS pri
-    FROM orders
-    ORDER BY pri ASC NULLS LAST, o_orderkey
-    LIMIT 30
-"""
-
-ORACLE_SQL["q_group_by_all"] = """
-    SELECT o_orderstatus,
-           o_orderpriority,
-           count(*) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-               AS total_value
-    FROM orders
-    GROUP BY ALL
-"""
-
-
-def q_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leakage-safe split summary: documents split by SOURCE hash (all docs
-    of a source share a split — near-dups can't straddle train/test), then
-    a per-(split, source-count) sanity rollup
-    (operators/sampling.py:group_split). The rollup proves the invariant
-    the oracle checks: every source maps to exactly one split."""
-    from datalake_breweries_two_spark.operators.sampling import group_split
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    return (
-        group_split(docs, "source")
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.countDistinct("source").cast("long").alias("n_sources"),
-        )
-    )
-
-
-def q_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Class-balanced downsample of the embeddings table to min-class
-    cardinality, summarized per label (operators/sampling.py:
-    balanced_downsample) — the md5-ordered deterministic variant of the
-    random undersampling every classifier pipeline runs; checksum of
-    picked ids proves both engines selected the IDENTICAL rows, not just
-    the same count."""
-    from datalake_breweries_two_spark.operators.sampling import balanced_downsample
-
-    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
-    picked = balanced_downsample(emb, "label", "vec_id")
-    return picked.groupBy("label").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("vec_id").cast("long").alias("id_checksum"),
-    )
-
-
-QUERIES["q_group_split"] = q_group_split
-QUERIES["q_balanced_sample"] = q_balanced_sample
-
-ORACLE_SQL["q_group_split"] = """
+@query(oracle="""
     WITH assigned AS (
         -- concat_ws semantics: a NULL group key is SKIPPED, so the draw
         -- becomes md5(seed alone) — all NULL-source docs share one
@@ -6973,9 +7163,27 @@ ORACLE_SQL["q_group_split"] = """
            count(DISTINCT source) AS n_sources
     FROM assigned
     GROUP BY split
-"""
+""")
+def q_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Leakage-safe split summary: documents split by SOURCE hash (all docs
+    of a source share a split — near-dups can't straddle train/test), then
+    a per-(split, source-count) sanity rollup
+    (operators/sampling.py:group_split). The rollup proves the invariant
+    the oracle checks: every source maps to exactly one split."""
+    from datalake_breweries_two_spark.operators.sampling import group_split
 
-ORACLE_SQL["q_balanced_sample"] = """
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    return (
+        group_split(docs, "source")
+        .groupBy("split")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.countDistinct("source").cast("long").alias("n_sources"),
+        )
+    )
+
+
+@query(oracle="""
     WITH ranked AS (
         SELECT label, vec_id,
                row_number() OVER (
@@ -6992,9 +7200,36 @@ ORACLE_SQL["q_balanced_sample"] = """
     FROM ranked, floor_n
     WHERE rk <= f
     GROUP BY label
-"""
+""")
+def q_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Class-balanced downsample of the embeddings table to min-class
+    cardinality, summarized per label (operators/sampling.py:
+    balanced_downsample) — the md5-ordered deterministic variant of the
+    random undersampling every classifier pipeline runs; checksum of
+    picked ids proves both engines selected the IDENTICAL rows, not just
+    the same count."""
+    from datalake_breweries_two_spark.operators.sampling import balanced_downsample
+
+    emb = _t(spark, sf_dir, "embeddings").select("vec_id", "label")
+    picked = balanced_downsample(emb, "label", "vec_id")
+    return picked.groupBy("label").agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.sum("vec_id").cast("long").alias("id_checksum"),
+    )
 
 
+@query(oracle="""
+    WITH user_days AS (
+        SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS d
+        FROM events
+    ),
+    spine AS (SELECT DISTINCT d AS day FROM user_days)
+    SELECT s.day, count(DISTINCT u.user_id) AS wau
+    FROM spine s
+    JOIN user_days u
+      ON u.d <= s.day AND u.d >= s.day - INTERVAL 6 DAY
+    GROUP BY s.day
+""")
 def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct active users (the WAU engagement metric) via
     BOUNDED EXPANSION instead of a range join: events first dedupe to
@@ -7025,6 +7260,37 @@ def q_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH pts AS (
+        SELECT c_custkey AS id,
+               CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR) || ':lat-v1'), 1, 8))
+                    AS BIGINT) / 4294967295.0 * 90.0 - 45.0 AS lat,
+               CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR) || ':lon-v1'), 1, 8))
+                    AS BIGINT) / 4294967295.0 * 120.0 - 60.0 AS lon
+        FROM customer
+    ),
+    cells AS (
+        SELECT id, lat, lon,
+               CAST(floor(lat / 2.0) AS BIGINT) AS cx,
+               CAST(floor(lon / 2.0) AS BIGINT) AS cy
+        FROM pts
+    )
+    SELECT a.id AS id_a, b.id AS id_b,
+           round(2.0 * 6371.0 * asin(sqrt(
+               pow(sin((radians(b.lat) - radians(a.lat)) / 2.0), 2)
+               + cos(radians(a.lat)) * cos(radians(b.lat))
+                 * pow(sin((radians(b.lon) - radians(a.lon)) / 2.0), 2))), 3)
+               AS dist_km
+    FROM cells a
+    JOIN cells b
+      ON b.cx BETWEEN a.cx - 1 AND a.cx + 1
+     AND b.cy BETWEEN a.cy - 1 AND a.cy + 1
+     AND a.id < b.id
+    WHERE round(2.0 * 6371.0 * asin(sqrt(
+               pow(sin((radians(b.lat) - radians(a.lat)) / 2.0), 2)
+               + cos(radians(a.lat)) * cos(radians(b.lat))
+                 * pow(sin((radians(b.lon) - radians(a.lon)) / 2.0), 2))), 3) <= 150.0
+""")
 def q_geo_radius_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid-bucketed spatial self-join: customer pairs within 150 km.
 
@@ -7084,55 +7350,36 @@ def q_geo_radius_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_rolling_active_users"] = q_rolling_active_users
-QUERIES["q_geo_radius_pairs"] = q_geo_radius_pairs
-
-ORACLE_SQL["q_rolling_active_users"] = """
-    WITH user_days AS (
-        SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS d
-        FROM events
-    ),
-    spine AS (SELECT DISTINCT d AS day FROM user_days)
-    SELECT s.day, count(DISTINCT u.user_id) AS wau
-    FROM spine s
-    JOIN user_days u
-      ON u.d <= s.day AND u.d >= s.day - INTERVAL 6 DAY
-    GROUP BY s.day
-"""
-
-ORACLE_SQL["q_geo_radius_pairs"] = """
-    WITH pts AS (
-        SELECT c_custkey AS id,
-               CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR) || ':lat-v1'), 1, 8))
-                    AS BIGINT) / 4294967295.0 * 90.0 - 45.0 AS lat,
-               CAST(('0x' || substr(md5(CAST(c_custkey AS VARCHAR) || ':lon-v1'), 1, 8))
-                    AS BIGINT) / 4294967295.0 * 120.0 - 60.0 AS lon
-        FROM customer
-    ),
-    cells AS (
-        SELECT id, lat, lon,
-               CAST(floor(lat / 2.0) AS BIGINT) AS cx,
-               CAST(floor(lon / 2.0) AS BIGINT) AS cy
-        FROM pts
-    )
-    SELECT a.id AS id_a, b.id AS id_b,
-           round(2.0 * 6371.0 * asin(sqrt(
-               pow(sin((radians(b.lat) - radians(a.lat)) / 2.0), 2)
-               + cos(radians(a.lat)) * cos(radians(b.lat))
-                 * pow(sin((radians(b.lon) - radians(a.lon)) / 2.0), 2))), 3)
-               AS dist_km
-    FROM cells a
-    JOIN cells b
-      ON b.cx BETWEEN a.cx - 1 AND a.cx + 1
-     AND b.cy BETWEEN a.cy - 1 AND a.cy + 1
-     AND a.id < b.id
-    WHERE round(2.0 * 6371.0 * asin(sqrt(
-               pow(sin((radians(b.lat) - radians(a.lat)) / 2.0), 2)
-               + cos(radians(a.lat)) * cos(radians(b.lat))
-                 * pow(sin((radians(b.lon) - radians(a.lon)) / 2.0), 2))), 3) <= 150.0
-"""
-
-
+@query(oracle="""
+    WITH k1 AS (SELECT count(*) AS _n FROM lineitem GROUP BY l_orderkey),
+         k2 AS (SELECT count(*) AS _n FROM lineitem GROUP BY l_suppkey),
+         k3 AS (SELECT count(*) AS _n FROM lineitem GROUP BY l_partkey),
+         k4 AS (SELECT count(*) AS _n FROM orders GROUP BY o_custkey)
+    SELECT 'lineitem.l_orderkey' AS key_name, count(*) AS n_keys,
+           CAST(sum(_n) AS BIGINT) AS total_rows, max(_n) AS max_rows,
+           CAST(quantile_disc(_n, 0.5) AS BIGINT) AS p50_rows,
+           CAST(quantile_disc(_n, 0.99) AS BIGINT) AS p99_rows,
+           round(CAST(max(_n) AS DOUBLE) / quantile_disc(_n, 0.5), 2) AS skew_ratio
+    FROM k1
+    UNION ALL
+    SELECT 'lineitem.l_suppkey', count(*), CAST(sum(_n) AS BIGINT), max(_n),
+           CAST(quantile_disc(_n, 0.5) AS BIGINT),
+           CAST(quantile_disc(_n, 0.99) AS BIGINT),
+           round(CAST(max(_n) AS DOUBLE) / quantile_disc(_n, 0.5), 2)
+    FROM k2
+    UNION ALL
+    SELECT 'lineitem.l_partkey', count(*), CAST(sum(_n) AS BIGINT), max(_n),
+           CAST(quantile_disc(_n, 0.5) AS BIGINT),
+           CAST(quantile_disc(_n, 0.99) AS BIGINT),
+           round(CAST(max(_n) AS DOUBLE) / quantile_disc(_n, 0.5), 2)
+    FROM k3
+    UNION ALL
+    SELECT 'orders.o_custkey', count(*), CAST(sum(_n) AS BIGINT), max(_n),
+           CAST(quantile_disc(_n, 0.5) AS BIGINT),
+           CAST(quantile_disc(_n, 0.99) AS BIGINT),
+           round(CAST(max(_n) AS DOUBLE) / quantile_disc(_n, 0.5), 2)
+    FROM k4
+""")
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnostics — the report you run BEFORE shipping a
     100 TB join: per-key row-count distribution (distinct keys, max,
@@ -7173,6 +7420,30 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+@query(oracle="""
+    WITH per_part AS (
+        SELECT strftime(o_orderdate, '%Y-%m') AS part_value,
+               count(*) AS n_rows
+        FROM orders
+        GROUP BY 1
+    ),
+    totals AS (
+        SELECT sum(n_rows) AS _total, count(*) AS _nparts FROM per_part
+    )
+    SELECT part_value,
+           n_rows,
+           round(CAST(n_rows AS DOUBLE) / CAST(_total AS DOUBLE), 6) AS share,
+           CASE
+             WHEN CAST(n_rows AS DOUBLE)
+                  < 0.2 * (CAST(_total AS DOUBLE) / CAST(_nparts AS DOUBLE))
+               THEN 'small'
+             WHEN CAST(n_rows AS DOUBLE)
+                  > 2.0 * (CAST(_total AS DOUBLE) / CAST(_nparts AS DOUBLE))
+               THEN 'skewed'
+             ELSE 'ok'
+           END AS classification
+    FROM per_part, totals
+""")
 def q_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-layout planning report: for a candidate hive partition
     column (order month), rows per partition, share of total, and a
@@ -7204,66 +7475,13 @@ def q_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_skew_report"] = q_skew_report
-QUERIES["q_partition_plan"] = q_partition_plan
-
-ORACLE_SQL["q_skew_report"] = """
-    WITH k1 AS (SELECT count(*) AS _n FROM lineitem GROUP BY l_orderkey),
-         k2 AS (SELECT count(*) AS _n FROM lineitem GROUP BY l_suppkey),
-         k3 AS (SELECT count(*) AS _n FROM lineitem GROUP BY l_partkey),
-         k4 AS (SELECT count(*) AS _n FROM orders GROUP BY o_custkey)
-    SELECT 'lineitem.l_orderkey' AS key_name, count(*) AS n_keys,
-           CAST(sum(_n) AS BIGINT) AS total_rows, max(_n) AS max_rows,
-           CAST(quantile_disc(_n, 0.5) AS BIGINT) AS p50_rows,
-           CAST(quantile_disc(_n, 0.99) AS BIGINT) AS p99_rows,
-           round(CAST(max(_n) AS DOUBLE) / quantile_disc(_n, 0.5), 2) AS skew_ratio
-    FROM k1
-    UNION ALL
-    SELECT 'lineitem.l_suppkey', count(*), CAST(sum(_n) AS BIGINT), max(_n),
-           CAST(quantile_disc(_n, 0.5) AS BIGINT),
-           CAST(quantile_disc(_n, 0.99) AS BIGINT),
-           round(CAST(max(_n) AS DOUBLE) / quantile_disc(_n, 0.5), 2)
-    FROM k2
-    UNION ALL
-    SELECT 'lineitem.l_partkey', count(*), CAST(sum(_n) AS BIGINT), max(_n),
-           CAST(quantile_disc(_n, 0.5) AS BIGINT),
-           CAST(quantile_disc(_n, 0.99) AS BIGINT),
-           round(CAST(max(_n) AS DOUBLE) / quantile_disc(_n, 0.5), 2)
-    FROM k3
-    UNION ALL
-    SELECT 'orders.o_custkey', count(*), CAST(sum(_n) AS BIGINT), max(_n),
-           CAST(quantile_disc(_n, 0.5) AS BIGINT),
-           CAST(quantile_disc(_n, 0.99) AS BIGINT),
-           round(CAST(max(_n) AS DOUBLE) / quantile_disc(_n, 0.5), 2)
-    FROM k4
-"""
-
-ORACLE_SQL["q_partition_plan"] = """
-    WITH per_part AS (
-        SELECT strftime(o_orderdate, '%Y-%m') AS part_value,
-               count(*) AS n_rows
-        FROM orders
-        GROUP BY 1
-    ),
-    totals AS (
-        SELECT sum(n_rows) AS _total, count(*) AS _nparts FROM per_part
-    )
-    SELECT part_value,
-           n_rows,
-           round(CAST(n_rows AS DOUBLE) / CAST(_total AS DOUBLE), 6) AS share,
-           CASE
-             WHEN CAST(n_rows AS DOUBLE)
-                  < 0.2 * (CAST(_total AS DOUBLE) / CAST(_nparts AS DOUBLE))
-               THEN 'small'
-             WHEN CAST(n_rows AS DOUBLE)
-                  > 2.0 * (CAST(_total AS DOUBLE) / CAST(_nparts AS DOUBLE))
-               THEN 'skewed'
-             ELSE 'ok'
-           END AS classification
-    FROM per_part, totals
-"""
-
-
+@query(oracle="""
+    SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
+           count(DISTINCT user_id) AS dau
+    FROM events
+    WHERE user_id IS NOT NULL AND ts IS NOT NULL
+    GROUP BY 1
+""")
 def q_streaming_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming daily-active-users: the dedup→aggregate CHAIN shape — a
     watermarked (user, day) dropDuplicates feeding a per-day count in
@@ -7302,17 +7520,26 @@ def q_streaming_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("day").agg(F.max("dau").cast("long").alias("dau"))
 
 
-QUERIES["q_streaming_dau"] = q_streaming_dau
-
-ORACLE_SQL["q_streaming_dau"] = """
-    SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-           count(DISTINCT user_id) AS dau
-    FROM events
-    WHERE user_id IS NOT NULL AND ts IS NOT NULL
-    GROUP BY 1
-"""
-
-
+@query(oracle="""
+    WITH clicks AS (
+        SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
+    ),
+    purch AS (
+        SELECT event_id AS p_event_id, user_id, ts, value
+        FROM events WHERE event_type = 'purchase'
+    )
+    SELECT c.event_id, c.user_id,
+           n.p_event_id AS next_event_id,
+           n.value AS next_value
+    FROM clicks c
+    LEFT JOIN LATERAL (
+        SELECT p.p_event_id, p.value
+        FROM purch p
+        WHERE p.user_id = c.user_id AND p.ts >= c.ts
+        ORDER BY p.ts, p.p_event_id
+        LIMIT 1
+    ) n ON TRUE
+""")
 def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of join (operators/joins.py:asof_join_forward): each click
     matched to the user's NEXT purchase at-or-after it — the
@@ -7340,6 +7567,24 @@ def q_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    SELECT o_orderkey,
+           o_custkey,
+           last_value(pri IGNORE NULLS) OVER (
+               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS pri_ffill,
+           first_value(pri IGNORE NULLS) OVER (
+               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS pri_anchor
+    FROM (
+        SELECT o_orderkey, o_custkey, o_orderdate,
+               nullif(o_orderpriority, '4-NOT SPECIFIED') AS pri
+        FROM orders
+        WHERE o_custkey % 10 = 0
+    )
+""")
 def q_window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IGNORE NULLS window navigation — the gaps-forward-fill idiom as raw
     SQL (the engine's resample operator builds the same shape with the
@@ -7369,50 +7614,6 @@ def q_window_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         """
     )
-
-
-QUERIES["q_asof_join_forward"] = q_asof_join_forward
-QUERIES["q_window_ignore_nulls"] = q_window_ignore_nulls
-
-ORACLE_SQL["q_asof_join_forward"] = """
-    WITH clicks AS (
-        SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
-    ),
-    purch AS (
-        SELECT event_id AS p_event_id, user_id, ts, value
-        FROM events WHERE event_type = 'purchase'
-    )
-    SELECT c.event_id, c.user_id,
-           n.p_event_id AS next_event_id,
-           n.value AS next_value
-    FROM clicks c
-    LEFT JOIN LATERAL (
-        SELECT p.p_event_id, p.value
-        FROM purch p
-        WHERE p.user_id = c.user_id AND p.ts >= c.ts
-        ORDER BY p.ts, p.p_event_id
-        LIMIT 1
-    ) n ON TRUE
-"""
-
-ORACLE_SQL["q_window_ignore_nulls"] = """
-    SELECT o_orderkey,
-           o_custkey,
-           last_value(pri IGNORE NULLS) OVER (
-               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS pri_ffill,
-           first_value(pri IGNORE NULLS) OVER (
-               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS pri_anchor
-    FROM (
-        SELECT o_orderkey, o_custkey, o_orderdate,
-               nullif(o_orderpriority, '4-NOT SPECIFIED') AS pri
-        FROM orders
-        WHERE o_custkey % 10 = 0
-    )
-"""
 
 
 # --------------------------------------------------------------------------
@@ -7627,6 +7828,7 @@ def _run_tpch_pairs(spark: SparkSession, sf_dir: str, body: str) -> DataFrame:
     return spark.sql(_tpch_pairs_sql("spark", body))
 
 
+@query(oracle=_tpch_ps_sql("duck", _TPCH_Q2_BODY))
 def q_sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 (minimum-cost supplier): region-scoped part/supplier chain,
     per-part min supplycost via ONE window over the eligible relation (the
@@ -7636,6 +7838,7 @@ def q_sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_tpch_ps(spark, sf_dir, _TPCH_Q2_BODY)
 
 
+@query(oracle=_tpch_q9_sql("duck"))
 def q_sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 (product-type profit): five-way join of the fact to the
     derived partsupp (BOTH keys — pairs exist by construction), decimal-
@@ -7647,6 +7850,7 @@ def q_sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_tpch_q9_sql("spark"))
 
 
+@query(oracle=_tpch_ps_sql("duck", _TPCH_Q11_BODY))
 def q_sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 (important stock): nation-scoped inventory value per part
     vs a scalar-subquery share threshold — compared in EXACT decimal
@@ -7654,6 +7858,7 @@ def q_sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_tpch_ps(spark, sf_dir, _TPCH_Q11_BODY)
 
 
+@query(oracle=_tpch_pairs_sql("duck", _TPCH_Q16_BODY))
 def q_sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 (parts/supplier relationship): brand/type/size exclusion
     filters + NOT IN complaint-supplier subquery (negative-balance analog)
@@ -7663,6 +7868,7 @@ def q_sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_tpch_pairs(spark, sf_dir, _TPCH_Q16_BODY)
 
 
+@query(oracle=_tpch_ps_sql("duck", _TPCH_Q20_BODY))
 def q_sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 (excess-stock suppliers): nested IN chain ending in a
     correlated scalar aggregate (availqty > half the year's shipped
@@ -7671,19 +7877,23 @@ def q_sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_tpch_ps(spark, sf_dir, _TPCH_Q20_BODY)
 
 
-QUERIES["q_sql_tpch_q2"] = q_sql_tpch_q2
-QUERIES["q_sql_tpch_q9"] = q_sql_tpch_q9
-QUERIES["q_sql_tpch_q11"] = q_sql_tpch_q11
-QUERIES["q_sql_tpch_q16"] = q_sql_tpch_q16
-QUERIES["q_sql_tpch_q20"] = q_sql_tpch_q20
-
-ORACLE_SQL["q_sql_tpch_q2"] = _tpch_ps_sql("duck", _TPCH_Q2_BODY)
-ORACLE_SQL["q_sql_tpch_q9"] = _tpch_q9_sql("duck")
-ORACLE_SQL["q_sql_tpch_q11"] = _tpch_ps_sql("duck", _TPCH_Q11_BODY)
-ORACLE_SQL["q_sql_tpch_q16"] = _tpch_pairs_sql("duck", _TPCH_Q16_BODY)
-ORACLE_SQL["q_sql_tpch_q20"] = _tpch_ps_sql("duck", _TPCH_Q20_BODY)
-
-
+@query(oracle="""
+    WITH med AS (
+        SELECT l_returnflag,
+               quantile_disc(l_extendedprice, 0.5) AS _med
+        FROM lineitem GROUP BY l_returnflag
+    ),
+    dev AS (
+        SELECT l.l_returnflag, abs(l.l_extendedprice - m._med) AS _dev, m._med
+        FROM lineitem l JOIN med m ON l.l_returnflag = m.l_returnflag
+    )
+    SELECT l_returnflag,
+           max(_med) AS median_price,
+           quantile_disc(_dev, 0.5) AS mad,
+           count(*) AS n_rows
+    FROM dev
+    GROUP BY l_returnflag
+""")
 def q_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median absolute deviation per group — the robust dispersion measure
     (outlier-insensitive sibling of q_stats_agg's stddev). Two discrete-
@@ -7710,6 +7920,28 @@ def q_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH ranked AS (
+        SELECT c_mktsegment,
+               CAST(o_totalprice AS DECIMAL(18,4)) AS x,
+               CAST(row_number() OVER (
+                   PARTITION BY c_mktsegment
+                   ORDER BY o_totalprice, o_custkey) AS DECIMAL(18,0)) AS i
+        FROM orders JOIN customer ON o_custkey = c_custkey
+        WHERE o_totalprice IS NOT NULL
+    ),
+    agg AS (
+        SELECT c_mktsegment,
+               sum(i * x) AS _ix, sum(x) AS _sx, count(*) AS n_orders
+        FROM ranked GROUP BY c_mktsegment
+    )
+    SELECT c_mktsegment, n_orders,
+           round(2.0 * CAST(_ix AS DOUBLE)
+                     / (CAST(n_orders AS DOUBLE) * CAST(_sx AS DOUBLE))
+                 - (CAST(n_orders AS DOUBLE) + 1.0) / CAST(n_orders AS DOUBLE),
+                 6) + 0.0 AS gini
+    FROM agg
+""")
 def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini concentration coefficient of order value per market segment —
     the revenue-concentration metric. Rank-based formula
@@ -7757,6 +7989,22 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH digits AS (
+        SELECT CAST(substr(CAST(CAST(round(abs(o_totalprice) * 10000.0)
+                                     AS BIGINT) AS VARCHAR), 1, 1) AS INT)
+               AS digit
+        FROM orders
+    ),
+    per_digit AS (
+        SELECT digit, count(*) AS n FROM digits WHERE digit > 0 GROUP BY digit
+    ),
+    total AS (SELECT sum(n) AS _t FROM per_digit)
+    SELECT digit, n,
+           round(CAST(n AS DOUBLE) / CAST(_t AS DOUBLE), 6) AS observed_share,
+           round(log10((digit + 1.0) / digit), 6) AS benford_share
+    FROM per_digit, total
+""")
 def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit audit of order totals — the classic fabricated-
     numbers screen (a synthetic-uniform generator like this testdata FAILS
@@ -7789,69 +8037,23 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_mad"] = q_mad
-QUERIES["q_gini"] = q_gini
-QUERIES["q_benford"] = q_benford
-
-ORACLE_SQL["q_mad"] = """
-    WITH med AS (
-        SELECT l_returnflag,
-               quantile_disc(l_extendedprice, 0.5) AS _med
-        FROM lineitem GROUP BY l_returnflag
+@query(oracle="""
+    WITH vocab AS (
+        SELECT token, count(*) AS n FROM (
+            SELECT unnest(string_split(text, ' ')) AS token FROM documents
+        ) WHERE length(token) > 0 GROUP BY token
     ),
-    dev AS (
-        SELECT l.l_returnflag, abs(l.l_extendedprice - m._med) AS _dev, m._med
-        FROM lineitem l JOIN med m ON l.l_returnflag = m.l_returnflag
+    ranked AS (
+        SELECT ln(CAST(row_number() OVER (ORDER BY n DESC, token ASC)
+                       AS DOUBLE)) AS ln_rank,
+               ln(CAST(n AS DOUBLE)) AS ln_freq
+        FROM vocab
     )
-    SELECT l_returnflag,
-           max(_med) AS median_price,
-           quantile_disc(_dev, 0.5) AS mad,
-           count(*) AS n_rows
-    FROM dev
-    GROUP BY l_returnflag
-"""
-
-ORACLE_SQL["q_gini"] = """
-    WITH ranked AS (
-        SELECT c_mktsegment,
-               CAST(o_totalprice AS DECIMAL(18,4)) AS x,
-               CAST(row_number() OVER (
-                   PARTITION BY c_mktsegment
-                   ORDER BY o_totalprice, o_custkey) AS DECIMAL(18,0)) AS i
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        WHERE o_totalprice IS NOT NULL
-    ),
-    agg AS (
-        SELECT c_mktsegment,
-               sum(i * x) AS _ix, sum(x) AS _sx, count(*) AS n_orders
-        FROM ranked GROUP BY c_mktsegment
-    )
-    SELECT c_mktsegment, n_orders,
-           round(2.0 * CAST(_ix AS DOUBLE)
-                     / (CAST(n_orders AS DOUBLE) * CAST(_sx AS DOUBLE))
-                 - (CAST(n_orders AS DOUBLE) + 1.0) / CAST(n_orders AS DOUBLE),
-                 6) + 0.0 AS gini
-    FROM agg
-"""
-
-ORACLE_SQL["q_benford"] = """
-    WITH digits AS (
-        SELECT CAST(substr(CAST(CAST(round(abs(o_totalprice) * 10000.0)
-                                     AS BIGINT) AS VARCHAR), 1, 1) AS INT)
-               AS digit
-        FROM orders
-    ),
-    per_digit AS (
-        SELECT digit, count(*) AS n FROM digits WHERE digit > 0 GROUP BY digit
-    ),
-    total AS (SELECT sum(n) AS _t FROM per_digit)
-    SELECT digit, n,
-           round(CAST(n AS DOUBLE) / CAST(_t AS DOUBLE), 6) AS observed_share,
-           round(log10((digit + 1.0) / digit), 6) AS benford_share
-    FROM per_digit, total
-"""
-
-
+    SELECT round(regr_sxy(ln_freq, ln_rank) / regr_sxx(ln_freq, ln_rank), 4) + 0.0
+               AS zipf_slope,
+           count(*) AS vocab_size
+    FROM ranked
+""")
 def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law fit of the corpus token distribution: regression slope of
     ln(freq) on ln(rank) over the frequency-ranked vocabulary (natural
@@ -7892,6 +8094,33 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH tagged AS (
+        SELECT o_totalprice AS v, (o_orderstatus = 'F') AS is_a
+        FROM orders WHERE o_orderstatus IN ('F', 'O')
+          AND o_totalprice IS NOT NULL
+    ),
+    counts AS (
+        SELECT sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS n_a,
+               sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS n_b
+        FROM tagged
+    ),
+    cum AS (
+        SELECT sum(CASE WHEN is_a THEN 1 ELSE 0 END) OVER (
+                   ORDER BY v
+                   RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
+               sum(CASE WHEN is_a THEN 0 ELSE 1 END) OVER (
+                   ORDER BY v
+                   RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb
+        FROM tagged
+    )
+    SELECT round(max(abs(CAST(ca AS DOUBLE) / CAST(n_a AS DOUBLE)
+                         - CAST(cb AS DOUBLE) / CAST(n_b AS DOUBLE))), 6)
+               AS ks_stat,
+           CAST(max(n_a) AS BIGINT) AS n_a,
+           CAST(max(n_b) AS BIGINT) AS n_b
+    FROM cum, counts
+""")
 def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov statistic between finished ('F') and
     open ('O') orders' value distributions — the drift test a training
@@ -7952,56 +8181,25 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_zipf_slope"] = q_zipf_slope
-QUERIES["q_ks_test"] = q_ks_test
-
-ORACLE_SQL["q_zipf_slope"] = """
-    WITH vocab AS (
-        SELECT token, count(*) AS n FROM (
-            SELECT unnest(string_split(text, ' ')) AS token FROM documents
-        ) WHERE length(token) > 0 GROUP BY token
+@query(oracle="""
+    WITH m AS (SELECT quantile_disc(event_id, 0.5) AS m FROM events),
+    tagged AS (
+        SELECT event_type, (event_id <= m.m) AS first_half FROM events, m
     ),
-    ranked AS (
-        SELECT ln(CAST(row_number() OVER (ORDER BY n DESC, token ASC)
-                       AS DOUBLE)) AS ln_rank,
-               ln(CAST(n AS DOUBLE)) AS ln_freq
-        FROM vocab
-    )
-    SELECT round(regr_sxy(ln_freq, ln_rank) / regr_sxx(ln_freq, ln_rank), 4) + 0.0
-               AS zipf_slope,
-           count(*) AS vocab_size
-    FROM ranked
-"""
-
-ORACLE_SQL["q_ks_test"] = """
-    WITH tagged AS (
-        SELECT o_totalprice AS v, (o_orderstatus = 'F') AS is_a
-        FROM orders WHERE o_orderstatus IN ('F', 'O')
-          AND o_totalprice IS NOT NULL
+    tab AS (
+        SELECT event_type,
+               sum(CASE WHEN first_half THEN 1 ELSE 0 END) AS o1,
+               sum(CASE WHEN first_half THEN 0 ELSE 1 END) AS o2
+        FROM tagged GROUP BY event_type
     ),
-    counts AS (
-        SELECT sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS n_a,
-               sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS n_b
-        FROM tagged
-    ),
-    cum AS (
-        SELECT sum(CASE WHEN is_a THEN 1 ELSE 0 END) OVER (
-                   ORDER BY v
-                   RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ca,
-               sum(CASE WHEN is_a THEN 0 ELSE 1 END) OVER (
-                   ORDER BY v
-                   RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cb
-        FROM tagged
-    )
-    SELECT round(max(abs(CAST(ca AS DOUBLE) / CAST(n_a AS DOUBLE)
-                         - CAST(cb AS DOUBLE) / CAST(n_b AS DOUBLE))), 6)
-               AS ks_stat,
-           CAST(max(n_a) AS BIGINT) AS n_a,
-           CAST(max(n_b) AS BIGINT) AS n_b
-    FROM cum, counts
-"""
-
-
+    tot AS (SELECT sum(o1) AS t1, sum(o2) AS t2, sum(o1 + o2) AS tt FROM tab)
+    SELECT round(sum(
+               pow(o1 - (o1 + o2) * t1 / tt, 2) / ((o1 + o2) * t1 / tt)
+             + pow(o2 - (o1 + o2) * t2 / tt, 2) / ((o1 + o2) * t2 / tt)
+           ), 6) AS chi2,
+           count(*) - 1 AS dof
+    FROM tab, tot
+""")
 def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square drift test over a categorical column: does the
     event-type mix differ between the first and second half of the event
@@ -8043,6 +8241,44 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH ref AS (
+        SELECT quantile_disc(o_totalprice, 0.1) AS _e1,
+               quantile_disc(o_totalprice, 0.2) AS _e2,
+               quantile_disc(o_totalprice, 0.3) AS _e3,
+               quantile_disc(o_totalprice, 0.4) AS _e4,
+               quantile_disc(o_totalprice, 0.5) AS _e5,
+               quantile_disc(o_totalprice, 0.6) AS _e6,
+               quantile_disc(o_totalprice, 0.7) AS _e7,
+               quantile_disc(o_totalprice, 0.8) AS _e8,
+               quantile_disc(o_totalprice, 0.9) AS _e9
+        FROM orders WHERE o_orderstatus = 'F'
+    ),
+    binned AS (
+        SELECT (o_orderstatus = 'F') AS is_a,
+               CAST(o_totalprice > _e1 AS INT) + CAST(o_totalprice > _e2 AS INT)
+             + CAST(o_totalprice > _e3 AS INT) + CAST(o_totalprice > _e4 AS INT)
+             + CAST(o_totalprice > _e5 AS INT) + CAST(o_totalprice > _e6 AS INT)
+             + CAST(o_totalprice > _e7 AS INT) + CAST(o_totalprice > _e8 AS INT)
+             + CAST(o_totalprice > _e9 AS INT) AS bin
+        FROM orders, ref WHERE o_orderstatus IN ('F', 'O')
+    ),
+    per_bin AS (
+        SELECT bin,
+               sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS na,
+               sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS nb
+        FROM binned GROUP BY bin
+    ),
+    tot AS (SELECT sum(na) AS ta, sum(nb) AS tb FROM per_bin)
+    SELECT round(sum(
+               (greatest(CAST(na AS DOUBLE)/ta, 1e-6)
+                  - greatest(CAST(nb AS DOUBLE)/tb, 1e-6))
+               * ln(greatest(CAST(na AS DOUBLE)/ta, 1e-6)
+                      / greatest(CAST(nb AS DOUBLE)/tb, 1e-6))
+           ), 6) AS psi,
+           count(*) AS n_bins
+    FROM per_bin, tot
+""")
 def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population stability index of order value between finished and open
     orders — the standard ML-monitoring drift score. Bins are the DECILE
@@ -8102,69 +8338,14 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_chi_square"] = q_chi_square
-QUERIES["q_psi"] = q_psi
-
-ORACLE_SQL["q_chi_square"] = """
-    WITH m AS (SELECT quantile_disc(event_id, 0.5) AS m FROM events),
-    tagged AS (
-        SELECT event_type, (event_id <= m.m) AS first_half FROM events, m
-    ),
-    tab AS (
-        SELECT event_type,
-               sum(CASE WHEN first_half THEN 1 ELSE 0 END) AS o1,
-               sum(CASE WHEN first_half THEN 0 ELSE 1 END) AS o2
-        FROM tagged GROUP BY event_type
-    ),
-    tot AS (SELECT sum(o1) AS t1, sum(o2) AS t2, sum(o1 + o2) AS tt FROM tab)
-    SELECT round(sum(
-               pow(o1 - (o1 + o2) * t1 / tt, 2) / ((o1 + o2) * t1 / tt)
-             + pow(o2 - (o1 + o2) * t2 / tt, 2) / ((o1 + o2) * t2 / tt)
-           ), 6) AS chi2,
-           count(*) - 1 AS dof
-    FROM tab, tot
-"""
-
-ORACLE_SQL["q_psi"] = """
-    WITH ref AS (
-        SELECT quantile_disc(o_totalprice, 0.1) AS _e1,
-               quantile_disc(o_totalprice, 0.2) AS _e2,
-               quantile_disc(o_totalprice, 0.3) AS _e3,
-               quantile_disc(o_totalprice, 0.4) AS _e4,
-               quantile_disc(o_totalprice, 0.5) AS _e5,
-               quantile_disc(o_totalprice, 0.6) AS _e6,
-               quantile_disc(o_totalprice, 0.7) AS _e7,
-               quantile_disc(o_totalprice, 0.8) AS _e8,
-               quantile_disc(o_totalprice, 0.9) AS _e9
-        FROM orders WHERE o_orderstatus = 'F'
-    ),
-    binned AS (
-        SELECT (o_orderstatus = 'F') AS is_a,
-               CAST(o_totalprice > _e1 AS INT) + CAST(o_totalprice > _e2 AS INT)
-             + CAST(o_totalprice > _e3 AS INT) + CAST(o_totalprice > _e4 AS INT)
-             + CAST(o_totalprice > _e5 AS INT) + CAST(o_totalprice > _e6 AS INT)
-             + CAST(o_totalprice > _e7 AS INT) + CAST(o_totalprice > _e8 AS INT)
-             + CAST(o_totalprice > _e9 AS INT) AS bin
-        FROM orders, ref WHERE o_orderstatus IN ('F', 'O')
-    ),
-    per_bin AS (
-        SELECT bin,
-               sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS na,
-               sum(CASE WHEN is_a THEN 0 ELSE 1 END) AS nb
-        FROM binned GROUP BY bin
-    ),
-    tot AS (SELECT sum(na) AS ta, sum(nb) AS tb FROM per_bin)
-    SELECT round(sum(
-               (greatest(CAST(na AS DOUBLE)/ta, 1e-6)
-                  - greatest(CAST(nb AS DOUBLE)/tb, 1e-6))
-               * ln(greatest(CAST(na AS DOUBLE)/ta, 1e-6)
-                      / greatest(CAST(nb AS DOUBLE)/tb, 1e-6))
-           ), 6) AS psi,
-           count(*) AS n_bins
-    FROM per_bin, tot
-"""
-
-
+# full-recompute oracle: the maintained view must equal joining ALL orders
+@query(oracle="""
+    SELECT c_mktsegment, c_nationkey,
+           count(*) AS n_orders,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
+    FROM orders JOIN customer ON o_custkey = c_custkey
+    GROUP BY c_mktsegment, c_nationkey
+""")
 def q_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental JOIN-view maintenance — the delta-join half of IVM
     (q_incremental_agg covers the aggregate half). A materialized
@@ -8204,18 +8385,14 @@ def q_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_incremental_join"] = q_incremental_join
-
-# full-recompute oracle: the maintained view must equal joining ALL orders
-ORACLE_SQL["q_incremental_join"] = """
-    SELECT c_mktsegment, c_nationkey,
-           count(*) AS n_orders,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_mktsegment, c_nationkey
-"""
-
-
+@query(oracle="""
+    SELECT user_id, event_type, event_id, ts, value FROM (
+        SELECT user_id, event_type, event_id, ts, value,
+               row_number() OVER (PARTITION BY user_id, event_type
+                                  ORDER BY ts DESC, event_id DESC) AS rn
+        FROM events
+    ) WHERE rn = 1
+""")
 def q_dedup_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-latest dedup — the production survivorship variant of
     q_dedup_exact (which keeps the stable minimum): one row per
@@ -8240,6 +8417,21 @@ def q_dedup_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH ranked AS (
+        SELECT c_mktsegment, o_totalprice,
+               cume_dist() OVER (PARTITION BY c_mktsegment
+                                 ORDER BY o_totalprice DESC) AS _cd
+        FROM orders JOIN customer ON o_custkey = c_custkey
+    )
+    SELECT c_mktsegment,
+           count(*) AS n_top,
+           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+               AS top_revenue,
+           min(o_totalprice) AS threshold_value
+    FROM ranked WHERE _cd <= 0.05
+    GROUP BY c_mktsegment
+""")
 def q_top_percent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5%-by-value orders per market segment via cume_dist — the
     percentile-threshold filter (distinct from fixed-k q_topk_per_group).
@@ -8262,6 +8454,21 @@ def q_top_percent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    WITH keys AS (
+        SELECT DISTINCT o_orderkey FROM orders WHERE o_orderkey % 10 <> 3
+    ),
+    stepped AS (
+        SELECT o_orderkey,
+               lag(o_orderkey) OVER (ORDER BY o_orderkey) AS _prev
+        FROM keys
+    )
+    SELECT _prev + 1 AS gap_start,
+           o_orderkey - 1 AS gap_end,
+           o_orderkey - _prev - 1 AS n_missing
+    FROM stepped
+    WHERE _prev IS NOT NULL AND o_orderkey - _prev > 1
+""")
 def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap detection in a dense key sequence — the completeness check for
     ingest pipelines (missing orderkey ranges = lost batches). Each
@@ -8318,52 +8525,14 @@ def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_dedup_keep_latest"] = q_dedup_keep_latest
-QUERIES["q_top_percent"] = q_top_percent
-QUERIES["q_sequence_gaps"] = q_sequence_gaps
-
-ORACLE_SQL["q_dedup_keep_latest"] = """
-    SELECT user_id, event_type, event_id, ts, value FROM (
-        SELECT user_id, event_type, event_id, ts, value,
-               row_number() OVER (PARTITION BY user_id, event_type
-                                  ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-    ) WHERE rn = 1
-"""
-
-ORACLE_SQL["q_top_percent"] = """
-    WITH ranked AS (
-        SELECT c_mktsegment, o_totalprice,
-               cume_dist() OVER (PARTITION BY c_mktsegment
-                                 ORDER BY o_totalprice DESC) AS _cd
-        FROM orders JOIN customer ON o_custkey = c_custkey
-    )
-    SELECT c_mktsegment,
-           count(*) AS n_top,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
-               AS top_revenue,
-           min(o_totalprice) AS threshold_value
-    FROM ranked WHERE _cd <= 0.05
-    GROUP BY c_mktsegment
-"""
-
-ORACLE_SQL["q_sequence_gaps"] = """
-    WITH keys AS (
-        SELECT DISTINCT o_orderkey FROM orders WHERE o_orderkey % 10 <> 3
-    ),
-    stepped AS (
-        SELECT o_orderkey,
-               lag(o_orderkey) OVER (ORDER BY o_orderkey) AS _prev
-        FROM keys
-    )
-    SELECT _prev + 1 AS gap_start,
-           o_orderkey - 1 AS gap_end,
-           o_orderkey - _prev - 1 AS n_missing
-    FROM stepped
-    WHERE _prev IS NOT NULL AND o_orderkey - _prev > 1
-"""
-
-
+@query(oracle="""
+    SELECT n_name,
+           string_agg(c_mktsegment, ',' ORDER BY c_mktsegment) AS segments,
+           count(*) AS n_segments
+    FROM (SELECT DISTINCT n_name, c_mktsegment
+          FROM customer JOIN nation ON c_nationkey = n_nationkey)
+    GROUP BY n_name
+""")
 def q_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-standard LISTAGG ... WITHIN GROUP (Spark 4): ordered string
     aggregation — the denormalized-export shape (one row per nation,
@@ -8389,6 +8558,13 @@ def q_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query(oracle="""
+    SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS value_bin,
+           CAST(month(o_orderdate) AS BIGINT) AS month_bin,
+           count(*) AS n
+    FROM orders
+    GROUP BY 1, 2
+""")
 def q_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D histogram (heat-map counts) of order value x order month —
     equi-width integer binning on both axes via floor arithmetic (exact
@@ -8406,79 +8582,7 @@ def q_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_listagg"] = q_listagg
-QUERIES["q_histogram_2d"] = q_histogram_2d
-
-ORACLE_SQL["q_listagg"] = """
-    SELECT n_name,
-           string_agg(c_mktsegment, ',' ORDER BY c_mktsegment) AS segments,
-           count(*) AS n_segments
-    FROM (SELECT DISTINCT n_name, c_mktsegment
-          FROM customer JOIN nation ON c_nationkey = n_nationkey)
-    GROUP BY n_name
-"""
-
-ORACLE_SQL["q_histogram_2d"] = """
-    SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS value_bin,
-           CAST(month(o_orderdate) AS BIGINT) AS month_bin,
-           count(*) AS n
-    FROM orders
-    GROUP BY 1, 2
-"""
-
-
-def q_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter membership (r7): build a 4032-bit packed bloom over
-    high-balance customer keys, probe EVERY order against it map-side,
-    and report per-status order counts, bloom-pass counts, and exact
-    semi-join matches — so the false-positive rate is measured, never
-    silent, and the no-false-negative invariant (n_bloom_pass >=
-    n_true_match) is visible in the output. The 100 TB shape: the probe
-    side never shuffles for the membership test (the filter words
-    broadcast); see ``operators/bloom.py`` for the design notes."""
-    cust = _t(spark, sf_dir, "customer")
-    keys = cust.filter(F.col("c_acctbal") > 8000).select(
-        F.col("c_custkey").alias("key")
-    ).distinct()
-    bl = bloom.build_bloom(keys, "key", n_words=64, k_hashes=4)
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus"
-    )
-    probed = bloom.bloom_member(orders, "o_custkey", bl, n_words=64, k_hashes=4)
-    probed = (
-        probed.join(
-            F.broadcast(keys), probed["o_custkey"] == keys["key"], "left"
-        )
-        .withColumn("true_member", F.col("key").isNotNull())
-        .drop("key")
-    )
-    return probed.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("bloom_member").cast("int")).cast("long").alias("n_bloom_pass"),
-        F.sum(F.col("true_member").cast("int")).cast("long").alias("n_true_match"),
-    )
-
-
-def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine-portable MinHash signature rows (r7): BPE-ish token 3-gram
-    shingles → md5-based 60-bit min-hash per (doc, seed), bounded id
-    subset (doc_id < 400, the token-tier fence). FULL ORACLE over the
-    signature VALUES themselves — the production xxhash64 path
-    (q_dedup_near) is only checkable at the pair-decision level; this
-    pins the signature math itself cross-engine. BPE tokenizer, not
-    whitespace: signatures expose the raw shingle STRINGS through md5,
-    so the tokenizer must be the İ-pre-folded cross-engine one
-    (count/ratio outputs are insensitive to Java-vs-utf8proc lower()
-    divergence; hash-of-string outputs are not — unicode sweep)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    shingled = dedup.shingle_docs_exploded(docs, n=3, tokenizer="bpe")
-    return dedup.minhash_signatures_portable(shingled, num_hashes=8)
-
-
-QUERIES["q_bloom_filter"] = q_bloom_filter
-QUERIES["q_minhash_signature"] = q_minhash_signature
-
-ORACLE_SQL["q_bloom_filter"] = """
+@query(oracle="""
     WITH keys AS (
         SELECT DISTINCT c_custkey AS key FROM customer WHERE c_acctbal > 8000
     ),
@@ -8519,9 +8623,40 @@ ORACLE_SQL["q_bloom_filter"] = """
            CAST(sum(CASE WHEN k.key IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_true_match
     FROM checked c LEFT JOIN keys k ON c.o_custkey = k.key
     GROUP BY c.o_orderstatus
-"""
+""")
+def q_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom-filter membership (r7): build a 4032-bit packed bloom over
+    high-balance customer keys, probe EVERY order against it map-side,
+    and report per-status order counts, bloom-pass counts, and exact
+    semi-join matches — so the false-positive rate is measured, never
+    silent, and the no-false-negative invariant (n_bloom_pass >=
+    n_true_match) is visible in the output. The 100 TB shape: the probe
+    side never shuffles for the membership test (the filter words
+    broadcast); see ``operators/bloom.py`` for the design notes."""
+    cust = _t(spark, sf_dir, "customer")
+    keys = cust.filter(F.col("c_acctbal") > 8000).select(
+        F.col("c_custkey").alias("key")
+    ).distinct()
+    bl = bloom.build_bloom(keys, "key", n_words=64, k_hashes=4)
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus"
+    )
+    probed = bloom.bloom_member(orders, "o_custkey", bl, n_words=64, k_hashes=4)
+    probed = (
+        probed.join(
+            F.broadcast(keys), probed["o_custkey"] == keys["key"], "left"
+        )
+        .withColumn("true_member", F.col("key").isNotNull())
+        .drop("key")
+    )
+    return probed.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(F.col("bloom_member").cast("int")).cast("long").alias("n_bloom_pass"),
+        F.sum(F.col("true_member").cast("int")).cast("long").alias("n_true_match"),
+    )
 
-ORACLE_SQL["q_minhash_signature"] = """
+
+@query(oracle="""
     WITH toks AS (
         SELECT doc_id,
                regexp_extract_all(lower(translate(text, 'İ', 'i')), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]') AS t
@@ -8542,566 +8677,21 @@ ORACLE_SQL["q_minhash_signature"] = """
            min(CAST(('0x' || substr(md5(shingle || ':'
                        || CAST(seed AS VARCHAR)), 1, 15)) AS BIGINT)) AS minhash
     FROM seeded GROUP BY doc_id, seed
-"""
-
-
-# ---------------------------------------------------------------------------
-# r7 rows-only → full-oracle upgrades: the IVF pair and the LSH top-k.
-# All three are deterministic end-to-end — centroid seeding now uses the
-# portable md5-60bit id hash (operators/similarity.py:centroid_seeds), the
-# LSH hyperplanes are a pure integer-LCG sequence inlined below as double
-# literals, and r6's raw-float registry validation established that
-# DuckDB's sequential list sum is bit-identical to Spark's left fold, so
-# every argmin / sign-bit / Hamming-rank / rounded-cosine decision is
-# reproduced exactly by these oracles.
-# ---------------------------------------------------------------------------
-
-# DuckDB mirror of the portable seed hash + driver-side enumeration in
-# centroid_seeds: pick n by (hash asc, id asc), re-number by id order.
-_IVF_SEEDS_SQL = """
-    nn AS (
-        SELECT vec_id, embedding FROM embeddings WHERE embedding IS NOT NULL
-    ),
-    seedpick AS (
-        SELECT vec_id, embedding FROM nn
-        ORDER BY CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-                     AS BIGINT) ASC,
-                 vec_id ASC
-        LIMIT {n_centroids}
-    ),
-    seeds AS (
-        SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id ASC) - 1 AS INT)
-                   AS centroid_id,
-               embedding AS cv
-        FROM seedpick
-    ),
-    scored AS (
-        SELECT n.vec_id, s.centroid_id,
-               coalesce(list_aggregate(list_transform(
-                   range(1, len(n.embedding) + 1),
-                   i -> (CAST(n.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))
-                      * (CAST(n.embedding[i] AS DOUBLE) - CAST(s.cv[i] AS DOUBLE))),
-                   'sum'), 0.0) AS d2
-        FROM nn n CROSS JOIN seeds s
-    ),
-    assigned AS (
-        SELECT vec_id, centroid_id
-        FROM (SELECT vec_id, centroid_id,
-                     ROW_NUMBER() OVER (PARTITION BY vec_id
-                                        ORDER BY d2 ASC, centroid_id ASC) AS rn
-              FROM scored)
-        WHERE rn = 1
-    )
-"""
-
-ORACLE_SQL["q_ivf_assign"] = (
-    "WITH "
-    + _IVF_SEEDS_SQL.format(n_centroids=8)
-    + """
-    SELECT centroid_id, CAST(count(*) AS BIGINT) AS n_vectors
-    FROM assigned GROUP BY centroid_id
-"""
-)
-
-# Probe search: rank the 16 seeds by squared distance to the query vector
-# (vec 0, lowest id as fallback — same rule as the declared query), keep
-# the 4 nearest cells, exact-rescore only their members. `+ 0.0` is
-# DuckDB-side negative-zero normalization only: Spark's round never emits
-# -0.0, DuckDB's preserves it.
-ORACLE_SQL["q_ivf_search"] = (
-    "WITH "
-    + _IVF_SEEDS_SQL.format(n_centroids=16)
-    + """
-    , q AS (
-        -- nn only: NULL embeddings can't be queries (mirrors the declared
-        -- draw's isNotNull guard)
-        SELECT embedding AS qv FROM nn
-        WHERE vec_id = COALESCE(
-            (SELECT min(vec_id) FROM nn WHERE vec_id = 0),
-            (SELECT min(vec_id) FROM nn))
-    ),
-    probes AS (
-        SELECT centroid_id FROM seeds, q
-        ORDER BY coalesce(list_aggregate(list_transform(
-                     range(1, len(cv) + 1),
-                     i -> (CAST(cv[i] AS DOUBLE) - CAST(qv[i] AS DOUBLE))
-                        * (CAST(cv[i] AS DOUBLE) - CAST(qv[i] AS DOUBLE))),
-                     'sum'), 0.0) ASC,
-                 centroid_id ASC
-        LIMIT 4
-    ),
-    rescored AS (
-        SELECT n.vec_id,
-               round(
-                   coalesce(list_aggregate(list_transform(
-                       range(1, len(n.embedding) + 1),
-                       i -> CAST(n.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)),
-                       'sum'), 0.0)
-                   / (sqrt(coalesce(list_aggregate(list_transform(n.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))
-                      * sqrt(coalesce(list_aggregate(list_transform(q.qv,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))),
-                   4) + 0.0 AS cosine
-        FROM nn n
-        JOIN assigned a ON n.vec_id = a.vec_id
-        CROSS JOIN q
-        WHERE a.centroid_id IN (SELECT centroid_id FROM probes)
-    )
-    SELECT vec_id, cosine FROM rescored
-    ORDER BY cosine DESC NULLS LAST, vec_id ASC LIMIT 10
-"""
-)
-
-
-def _lsh_planes_values_sql(n_planes: int, dim: int) -> str:
-    """The deterministic hyperplane sequence as DuckDB VALUES rows.
-
-    Generated from the SAME source function the Spark plan embeds
-    (operators/similarity.py:_hyperplane — pure integer LCG, no RNG
-    state), so the literals are guaranteed identical on both sides;
-    Python float repr round-trips to the exact double in DuckDB."""
-    from datalake_breweries_two_spark.operators.similarity import _hyperplane
-
-    rows = []
-    for b in range(n_planes):
-        vals = ", ".join(repr(w) for w in _hyperplane(dim, b))
-        rows.append(f"({b}, [{vals}])")
-    return ",\n        ".join(rows)
-
-
-# Semantics mirrored bit-for-bit from cosine_topk_lsh (k=10 → candidate
-# budget max(8k, 64) = 80): sign bits coalesce exactly like Spark's
-# when(dot >= 0, bit).otherwise(0) — a NULL vector scores FALSE on every
-# plane, an EMPTY one folds to dot 0.0 (>= 0 → TRUE); Hamming rank ties
-# break on vec_id; the rescore is the same rounded cosine as the exact
-# path, NULLS LAST like Spark's desc().
-ORACLE_SQL["q_cosine_topk_lsh"] = """
-    WITH planes(plane_id, pv) AS (VALUES
-        {planes}
-    ),
-    q AS (
-        -- embedding IS NOT NULL everywhere: NULL embeddings can't be
-        -- queries (mirrors the declared draw's isNotNull guard)
-        SELECT embedding AS qv FROM embeddings
-        WHERE embedding IS NOT NULL AND vec_id = COALESCE(
-            (SELECT min(vec_id) FROM embeddings
-             WHERE vec_id = 0 AND embedding IS NOT NULL),
-            (SELECT min(vec_id) FROM embeddings
-             WHERE embedding IS NOT NULL))
-    ),
-    bits AS (
-        SELECT e.vec_id, p.plane_id,
-               CASE WHEN e.embedding IS NULL THEN FALSE
-                    ELSE coalesce(list_aggregate(list_transform(
-                             range(1, len(e.embedding) + 1),
-                             i -> CAST(e.embedding[i] AS DOUBLE) * pv[i]),
-                             'sum'), 0.0) >= 0
-               END AS bit
-        FROM embeddings e CROSS JOIN planes p
-    ),
-    qbits AS (
-        SELECT p.plane_id,
-               coalesce(list_aggregate(list_transform(
-                   range(1, len(q.qv) + 1),
-                   i -> CAST(q.qv[i] AS DOUBLE) * pv[i]), 'sum'), 0.0) >= 0 AS qbit
-        FROM q CROSS JOIN planes p
-    ),
-    hamm AS (
-        SELECT b.vec_id,
-               sum(CASE WHEN b.bit <> qb.qbit THEN 1 ELSE 0 END) AS h
-        FROM bits b JOIN qbits qb USING (plane_id)
-        GROUP BY b.vec_id
-    ),
-    cand AS (
-        SELECT vec_id FROM hamm ORDER BY h ASC, vec_id ASC LIMIT 80
-    ),
-    rescored AS (
-        SELECT e.vec_id,
-               round(
-                   coalesce(list_aggregate(list_transform(
-                       range(1, len(e.embedding) + 1),
-                       i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)),
-                       'sum'), 0.0)
-                   / (sqrt(coalesce(list_aggregate(list_transform(e.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))
-                      * sqrt(coalesce(list_aggregate(list_transform(q.qv,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))),
-                   4) + 0.0 AS cosine
-        FROM embeddings e JOIN cand ON e.vec_id = cand.vec_id CROSS JOIN q
-    )
-    SELECT vec_id, cosine FROM rescored
-    ORDER BY cosine DESC NULLS LAST, vec_id ASC LIMIT 10
-""".format(planes=_lsh_planes_values_sql(48, 64))
-
-
-# q_ann_recall full oracle (r7): with BOTH bounded draws (centroid seeds
-# and the recall harness's query vectors) on the portable md5-60bit id
-# hash, every tier of the harness is deterministic — exact top-k truth
-# (round-6 cosine, id tie-breaks), LSH Hamming-budget candidates
-# (integer-LCG plane literals), IVF probe candidates (md5-seeded
-# assignment + per-query centroid ranks) — so DuckDB recomputes the
-# whole recall report. Every window pins DESC NULLS LAST explicitly
-# (Spark's desc() is NULLS LAST; DuckDB's DESC default is not).
-ORACLE_SQL["q_ann_recall"] = """
-    WITH """ + _IVF_SEEDS_SQL.format(n_centroids=8) + """
-    , planes(plane_id, pv) AS (VALUES
-        {planes}
-    ),
-    qsel AS (
-        SELECT vec_id AS qid, embedding AS qv FROM nn
-        ORDER BY CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))
-                     AS BIGINT) ASC,
-                 vec_id ASC
-        LIMIT 3
-    ),
-    -- round-6 cosine of every (query, corpus) pair except the query row
-    -- itself: shared by the truth ranking AND both tiers' rescoring
-    pair_cos AS (
-        SELECT q.qid, e.vec_id,
-               round(
-                   coalesce(list_aggregate(list_transform(
-                       range(1, len(e.embedding) + 1),
-                       i -> CAST(e.embedding[i] AS DOUBLE) * q.qv[i]), 'sum'), 0.0)
-                   / (sqrt(coalesce(list_aggregate(list_transform(e.embedding,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))
-                      * sqrt(coalesce(list_aggregate(list_transform(q.qv,
-                          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'), 0.0))),
-                   6) AS cosine
-        FROM embeddings e CROSS JOIN qsel q
-        WHERE e.vec_id <> q.qid
-    ),
-    truth AS (
-        SELECT qid, vec_id
-        FROM (SELECT qid, vec_id,
-                     ROW_NUMBER() OVER (PARTITION BY qid
-                         ORDER BY cosine DESC NULLS LAST, vec_id ASC) AS rn
-              FROM pair_cos)
-        WHERE rn <= 10
-    ),
-    denom AS (SELECT qid, count(*) AS n_truth FROM truth GROUP BY qid),
-    -- LSH tier: sign bits vs the 48 plane literals, Hamming rank, budget
-    -- cut, rescore by the shared round-6 cosine
-    bits AS (
-        SELECT e.vec_id, p.plane_id,
-               CASE WHEN e.embedding IS NULL THEN FALSE
-                    ELSE coalesce(list_aggregate(list_transform(
-                             range(1, len(e.embedding) + 1),
-                             i -> CAST(e.embedding[i] AS DOUBLE) * pv[i]),
-                             'sum'), 0.0) >= 0
-               END AS bit
-        FROM embeddings e CROSS JOIN planes p
-    ),
-    qbits AS (
-        SELECT q.qid, p.plane_id,
-               coalesce(list_aggregate(list_transform(
-                   range(1, len(q.qv) + 1),
-                   i -> q.qv[i] * pv[i]), 'sum'), 0.0) >= 0 AS qbit
-        FROM qsel q CROSS JOIN planes p
-    ),
-    hamm AS (
-        SELECT qb.qid, b.vec_id,
-               sum(CASE WHEN b.bit <> qb.qbit THEN 1 ELSE 0 END) AS h
-        FROM bits b JOIN qbits qb USING (plane_id)
-        GROUP BY qb.qid, b.vec_id
-    ),
-    lsh_ranked AS (
-        SELECT qid, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY qid
-                   ORDER BY h ASC, vec_id ASC) AS rn_h
-        FROM hamm WHERE vec_id <> qid
-    ),
-    lsh_hits AS (
-        SELECT qid, param, vec_id
-        FROM (SELECT l.qid, bu.param, l.vec_id,
-                     ROW_NUMBER() OVER (PARTITION BY l.qid, bu.param
-                         ORDER BY pc.cosine DESC NULLS LAST, l.vec_id ASC) AS rn
-              FROM lsh_ranked l
-              JOIN (VALUES (16), (64)) bu(param) ON l.rn_h <= bu.param
-              JOIN pair_cos pc ON pc.qid = l.qid AND pc.vec_id = l.vec_id)
-        WHERE rn <= 10
-    ),
-    -- IVF tier: per-query centroid ranks over the 8 md5-seeded cells,
-    -- candidates from the crank<=n_probe cells, same rescore
-    d2q AS (
-        SELECT q.qid, s.centroid_id,
-               coalesce(list_aggregate(list_transform(
-                   range(1, len(s.cv) + 1),
-                   i -> (CAST(s.cv[i] AS DOUBLE) - q.qv[i])
-                      * (CAST(s.cv[i] AS DOUBLE) - q.qv[i])), 'sum'), 0.0) AS d2
-        FROM qsel q CROSS JOIN seeds s
-    ),
-    cranks AS (
-        SELECT qid, centroid_id,
-               ROW_NUMBER() OVER (PARTITION BY qid
-                   ORDER BY d2 ASC, centroid_id ASC) AS crank
-        FROM d2q
-    ),
-    ivf_hits AS (
-        SELECT qid, param, vec_id
-        FROM (SELECT c.qid, pr.param, a.vec_id,
-                     ROW_NUMBER() OVER (PARTITION BY c.qid, pr.param
-                         ORDER BY pc.cosine DESC NULLS LAST, a.vec_id ASC) AS rn
-              FROM assigned a
-              JOIN cranks c ON a.centroid_id = c.centroid_id
-              JOIN (VALUES (1), (4)) pr(param) ON c.crank <= pr.param
-              JOIN pair_cos pc ON pc.qid = c.qid AND pc.vec_id = a.vec_id
-              WHERE a.vec_id <> c.qid)
-        WHERE rn <= 10
-    ),
-    lsh_recall AS (
-        SELECT 'lsh' AS method, g.param,
-               round(avg(CASE WHEN coalesce(d.n_truth, 0) = 0 THEN 1.0
-                              ELSE coalesce(m.n_hit, 0) / d.n_truth END),
-                     4) AS recall
-        FROM (SELECT q.qid, bu.param
-              FROM qsel q CROSS JOIN (VALUES (16), (64)) bu(param)) g
-        LEFT JOIN (SELECT h.qid, h.param, count(*) AS n_hit
-                   FROM lsh_hits h
-                   JOIN truth t ON t.qid = h.qid AND t.vec_id = h.vec_id
-                   GROUP BY h.qid, h.param) m
-               ON m.qid = g.qid AND m.param = g.param
-        LEFT JOIN denom d ON d.qid = g.qid
-        GROUP BY g.param
-    ),
-    ivf_recall AS (
-        SELECT 'ivf' AS method, g.param,
-               round(avg(CASE WHEN coalesce(d.n_truth, 0) = 0 THEN 1.0
-                              ELSE coalesce(m.n_hit, 0) / d.n_truth END),
-                     4) AS recall
-        FROM (SELECT q.qid, pr.param
-              FROM qsel q CROSS JOIN (VALUES (1), (4)) pr(param)) g
-        LEFT JOIN (SELECT h.qid, h.param, count(*) AS n_hit
-                   FROM ivf_hits h
-                   JOIN truth t ON t.qid = h.qid AND t.vec_id = h.vec_id
-                   GROUP BY h.qid, h.param) m
-               ON m.qid = g.qid AND m.param = g.param
-        LEFT JOIN denom d ON d.qid = g.qid
-        GROUP BY g.param
-    )
-    SELECT method, CAST(param AS INT) AS param, recall FROM (
-        SELECT 'brute' AS method, 10 AS param, 1.0 AS recall
-        UNION ALL SELECT * FROM lsh_recall
-        UNION ALL SELECT * FROM ivf_recall
-    ) ORDER BY method, param
-""".format(planes=_lsh_planes_values_sql(48, 64))
-
-
-# ---------------------------------------------------------------------------
-# r7 rows-only → full-oracle upgrades, part 2: the fingerprint pair.
-# Both declared queries switch to the portable md5-60bit hash (operators
-# keep their fast xxhash64 production default behind hash_fn="xx"), so
-# DuckDB recomputes every hash decision exactly — the same pattern that
-# upgraded the IVF/LSH/recall tier above.
-# ---------------------------------------------------------------------------
-
-ORACLE_SQL["q_rolling_fingerprint"] = """
-    SELECT doc_id,
-           list_min(list_transform(
-               range(1, greatest(length(text) - 15, 1) + 1),
-               i -> CAST(('0x' || substr(md5(substr(text, CAST(i AS INT), 16)),
-                                         1, 15)) AS BIGINT)
-           )) AS robust_fingerprint
-    FROM documents
-"""
-
-
-def _simhash_oracle_sql(max_hamming: int, bucket_cap: int) -> str:
-    """DuckDB mirror of the portable-simhash near-dup pipeline: 60 md5
-    bit-planes, majority vote per bit, the SAME disjoint-block layout as
-    the Spark pair generator (shared via ``simhash_block_layout``),
-    over-cap bucket drops BEFORE pairing, exact Hamming verify."""
-    n_bits = dedup.simhash_bits("portable")
-    offsets, widths = dedup.simhash_block_layout(n_bits, max_hamming + 1)
-    bit_sums = ",\n               ".join(
-        f"sum((h >> {b}) & 1) AS b{b}" for b in range(n_bits)
-    )
-    sim_terms = "\n                 + ".join(
-        f"(CASE WHEN b{b} * 2 >= n THEN {1 << b} ELSE 0 END)"
-        for b in range(n_bits)
-    )
-    blocks_values = ", ".join(
-        f"({i}, {offsets[i]}, {(1 << widths[i]) - 1})"
-        for i in range(len(offsets))
-    )
-    return f"""
-    WITH toks AS (
-        SELECT doc_id,
-               unnest(regexp_extract_all(lower(translate(text, 'İ', 'i')),
-                      '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')) AS token
-        FROM documents
-    ),
-    th AS (
-        SELECT doc_id,
-               CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT) AS h
-        FROM toks
-    ),
-    bs AS (
-        SELECT doc_id, count(*) AS n,
-               {bit_sums}
-        FROM th GROUP BY doc_id
-    ),
-    sh AS (
-        SELECT doc_id,
-               CAST({sim_terms} AS BIGINT) AS simhash
-        FROM bs
-    ),
-    blocks AS (
-        SELECT s.doc_id, s.simhash, b.blk,
-               (s.simhash >> b.off) & b.mask AS val
-        FROM sh s CROSS JOIN (VALUES {blocks_values}) b(blk, off, mask)
-    ),
-    sized AS (
-        SELECT *, count(*) OVER (PARTITION BY blk, val) AS _n FROM blocks
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.simhash AS sh_a, b.simhash AS sh_b
-        FROM sized a JOIN sized b
-          ON a.blk = b.blk AND a.val = b.val AND a.doc_id < b.doc_id
-        WHERE a._n <= {bucket_cap}
-    )
-    SELECT id_a, id_b,
-           CAST(bit_count(xor(sh_a, sh_b)) AS BIGINT) AS hamming
-    FROM pairs
-    WHERE bit_count(xor(sh_a, sh_b)) <= {max_hamming}
-"""
-
-
-ORACLE_SQL["q_simhash"] = _simhash_oracle_sql(max_hamming=6, bucket_cap=256)
-
-# ---------------------------------------------------------------------------
-# r7 rows-only → full-oracle upgrades: the MinHash+LSH near-dup tier.
-# The declared queries now run hash_fn="portable" (operators/dedup.py:
-# minhash_signatures — two md5-derived integers per shingle mixed per seed
-# as (h1 + s*h2) mod 2^61-1) with İ-folded tokenizers, so a DuckDB oracle
-# recomputes every signature value, every band bucket (the raw joined
-# signature-slice string — no re-hash), the over-cap bucket drops, and the
-# est/exact verify tier. Production xxhash64 paths are unchanged.
-# ---------------------------------------------------------------------------
-
-# Mirrors of _tokens_expr (İ-folded variants only — portable hashing
-# requires the fold; see operators/dedup.py:_tokens_expr).
-_TOKS_SQL = {
-    "whitespace_folded": (
-        "regexp_split_to_array(lower(translate(trim(text), 'İ', 'i')),"
-        " '[ \\t\\n\\r\\f\\x0b]+')"
-    ),
-    "bpe": (
-        "regexp_extract_all(lower(translate(text, 'İ', 'i')),"
-        " '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')"
-    ),
-}
-
-
-def _minhash_lsh_oracle_sql(
-    tokenizer: str,
-    shingle_n: int,
-    num_hashes: int,
-    bands: int,
-    threshold: float,
-    verify: str,
-    max_bucket: int = 64,
-) -> str:
-    """DuckDB mirror of the portable MinHash+LSH near-dup pipeline.
-
-    ``verify="est"`` scores candidate pairs by signature agreement
-    fraction (q_dedup_near); ``verify="exact"`` scores them by exact
-    shingle-set Jaccard (near_duplicates_verified). Shingling mirrors
-    shingle_docs_exploded: docs with fewer than ``shingle_n`` tokens
-    contribute one truncated shingle; bpe zero-token docs contribute
-    none. The minhash family constants (P = 2^61-1, 55-bit h2 fold)
-    are dedup.py's _MINHASH_P / _MINHASH_H2_FOLD."""
-    rpb = num_hashes // bands
-    # bpe on an empty doc extracts ZERO tokens (doc has no shingles);
-    # whitespace split always yields ≥1 token (one "" for empty docs)
-    nz = "WHERE len(t) > 0" if tokenizer == "bpe" else ""
-    scorer = {
-        "est": f"""
-    agree AS (
-        SELECT c.id_a, c.id_b,
-               sum(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END) AS n_agree
-        FROM cands c
-        JOIN sig sa ON sa.doc_id = c.id_a
-        JOIN sig sb ON sb.doc_id = c.id_b AND sb.seed = sa.seed
-        GROUP BY c.id_a, c.id_b
-    )
-    SELECT id_a, id_b, n_agree / {num_hashes} AS est_jaccard
-    FROM agree
-    WHERE n_agree / {num_hashes} >= {threshold}
-""",
-        "exact": f"""
-    sizes AS (SELECT doc_id, len(shingles) AS sz FROM sh),
-    inter AS (
-        SELECT c.id_a, c.id_b, count(*) AS n_inter
-        FROM cands c
-        JOIN ex ea ON ea.doc_id = c.id_a
-        JOIN ex eb ON eb.doc_id = c.id_b AND eb.shingle = ea.shingle
-        GROUP BY c.id_a, c.id_b
-    )
-    SELECT i.id_a, i.id_b,
-           round(i.n_inter / (za.sz + zb.sz - i.n_inter), 4) AS jaccard
-    FROM inter i
-    JOIN sizes za ON za.doc_id = i.id_a
-    JOIN sizes zb ON zb.doc_id = i.id_b
-    WHERE round(i.n_inter / (za.sz + zb.sz - i.n_inter), 4) >= {threshold}
-""",
-    }[verify]
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, {_TOKS_SQL[tokenizer]} AS t
-        FROM documents WHERE text IS NOT NULL
-    ),
-    nzt AS (SELECT doc_id, t FROM toks {nz}),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, greatest(len(t) - {shingle_n - 1}, 1) + 1),
-                   i -> array_to_string(list_slice(t, i, i + {shingle_n - 1}), ' ')
-               )) AS shingles
-        FROM nzt
-    ),
-    ex AS (SELECT doc_id, unnest(shingles) AS shingle FROM sh),
-    th AS (
-        SELECT doc_id,
-               CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) AS h1,
-               CAST(('0x' || substr(md5('#' || shingle), 1, 15)) AS BIGINT)
-                   % 36028797018963968 AS h2,
-               shingle
-        FROM ex
-    ),
-    sig AS (
-        SELECT doc_id, s.seed,
-               min((h1 + s.seed * h2) % 2305843009213693951) AS mh
-        FROM th CROSS JOIN (SELECT unnest(range({num_hashes})) AS seed) s
-        GROUP BY doc_id, s.seed
-    ),
-    bnd AS (
-        SELECT doc_id, seed // {rpb} AS band,
-               string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS bucket
-        FROM sig GROUP BY doc_id, seed // {rpb}
-    ),
-    sized AS (
-        SELECT *, count(*) OVER (PARTITION BY band, bucket) AS _n FROM bnd
-    ),
-    cands AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM sized a JOIN sized b
-          ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-        WHERE a._n <= {max_bucket}
-    ),
-    {scorer}
-"""
-
-
-ORACLE_SQL["q_dedup_near"] = _minhash_lsh_oracle_sql(
-    "whitespace_folded", 3, 32, 8, 0.4, "est"
-)
-ORACLE_SQL["q_dedup_near_verified"] = _minhash_lsh_oracle_sql(
-    "whitespace_folded", 3, 32, 8, 0.2, "exact"
-)
-ORACLE_SQL["q_token_dedup_near"] = _minhash_lsh_oracle_sql(
-    "bpe", 2, 32, 8, 0.3, "exact"
-)
+""")
+def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Engine-portable MinHash signature rows (r7): BPE-ish token 3-gram
+    shingles → md5-based 60-bit min-hash per (doc, seed), bounded id
+    subset (doc_id < 400, the token-tier fence). FULL ORACLE over the
+    signature VALUES themselves — the production xxhash64 path
+    (q_dedup_near) is only checkable at the pair-decision level; this
+    pins the signature math itself cross-engine. BPE tokenizer, not
+    whitespace: signatures expose the raw shingle STRINGS through md5,
+    so the tokenizer must be the İ-pre-folded cross-engine one
+    (count/ratio outputs are insensitive to Java-vs-utf8proc lower()
+    divergence; hash-of-string outputs are not — unicode sweep)."""
+    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
+    shingled = dedup.shingle_docs_exploded(docs, n=3, tokenizer="bpe")
+    return dedup.minhash_signatures_portable(shingled, num_hashes=8)
 
 
 # --------------------------------------------------------------------------
@@ -9110,21 +8700,6 @@ ORACLE_SQL["q_token_dedup_near"] = _minhash_lsh_oracle_sql(
 # --------------------------------------------------------------------------
 
 
-def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary-coverage summary: occurrence share of the top
-    10/100/10k token types plus the minimum type count reaching
-    90/95/99% coverage — one row, exact integer thresholds, distributed
-    prefix-sum ranking (never a single-task global window). The size
-    tiers straddle the synthetic corpus's 31-type vocabulary so both
-    regimes are exercised: cov_10 is a real partial share, cov_100 and
-    cov_10000 the saturated (size > |V|) case."""
-    return text.vocab_coverage(
-        _t(spark, sf_dir, "documents"), vocab_sizes=(10, 100, 10000)
-    )
-
-
-QUERIES["q_vocab_coverage"] = q_vocab_coverage
-
 # Every milestone is integer-exact: counts and cumulative sums are
 # BIGINTs on both engines, the ">= pct%" tests are integer
 # cross-products, and the only division is the final coverage share
@@ -9132,7 +8707,7 @@ QUERIES["q_vocab_coverage"] = q_vocab_coverage
 # established md5-draw discipline). Ties in the frequency ranking are
 # broken (n DESC, token ASC); the token strings themselves are made
 # cross-engine identical by the İ-folded whitespace tokenizer.
-ORACLE_SQL["q_vocab_coverage"] = """
+@query(oracle="""
     WITH counts AS (
         SELECT token, CAST(count(*) AS BIGINT) AS n FROM (
             SELECT unnest(regexp_split_to_array(
@@ -9172,28 +8747,19 @@ ORACLE_SQL["q_vocab_coverage"] = """
            round(CAST(c10000 AS DOUBLE) / CAST(total_tokens AS DOUBLE), 4) AS cov_10000,
            vocab_p90, vocab_p95, vocab_p99
     FROM agg
-"""
-
-
-def q_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval-then-rerank: embedding-cosine retrieval of 20 candidates
-    for each of 3 query vectors (broadcast queries, two-level top-k),
-    then a cross-encoder-style rescore of ONLY those candidates against
-    the query document's text (token-set cosine blended 50/50 with the
-    embedding cosine), final top-5 per query — the standard two-stage
-    search/RAG serving pipeline (see operators/similarity.py:
-    rerank_topk)."""
-    return similarity.rerank_topk(
-        _t(spark, sf_dir, "embeddings"),
-        _t(spark, sf_dir, "documents"),
-        n_queries=3,
-        k_retrieve=20,
-        k_final=5,
-        alpha=0.5,
+""")
+def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus vocabulary-coverage summary: occurrence share of the top
+    10/100/10k token types plus the minimum type count reaching
+    90/95/99% coverage — one row, exact integer thresholds, distributed
+    prefix-sum ranking (never a single-task global window). The size
+    tiers straddle the synthetic corpus's 31-type vocabulary so both
+    regimes are exercised: cov_10 is a real partial share, cov_100 and
+    cov_10000 the saturated (size > |V|) case."""
+    return text.vocab_coverage(
+        _t(spark, sf_dir, "documents"), vocab_sizes=(10, 100, 10000)
     )
 
-
-QUERIES["q_rerank_topk"] = q_rerank_topk
 
 # Stage 1 reuses the q_knn_join oracle shape (4dp cosine, neighbor-id
 # tie-break, NULLS LAST); stage 2's token-set cosine is exact-operand
@@ -9201,7 +8767,7 @@ QUERIES["q_rerank_topk"] = q_rerank_topk
 # product, 0.5·x exact), rounded ONCE at 4dp with +0.0 folding -0.0.
 # Both engines feed list_distinct'd İ-folded whitespace tokens so the
 # set sizes agree codepoint-for-codepoint.
-ORACLE_SQL["q_rerank_topk"] = """
+@query(oracle="""
     WITH q AS (
         SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 3
     ),
@@ -9248,35 +8814,31 @@ ORACLE_SQL["q_rerank_topk"] = """
                AS BIGINT) AS final_rank
     FROM rer
     QUALIFY final_rank <= 5
-"""
-
-
-def q_contamination_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source contamination-rate report: which data sources carry the
-    most benchmark-contaminated documents (3-gram overlap >= 10% with
-    the held-out doc_id % 20 == 0 slice, the q_decontaminate contract),
-    as (n_docs, n_contaminated, contamination_pct, avg_overlap) per
-    source — the drop-this-source triage table a training team reads
-    after the per-doc sweep (see operators/dedup.py:
-    contamination_by_group)."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.contamination_by_group(
-        docs.filter(F.col("doc_id") % 20 != 0),
-        docs.filter(F.col("doc_id") % 20 == 0),
-        group_col="source",
-        n=3,
-        threshold=0.1,
+""")
+def q_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Retrieval-then-rerank: embedding-cosine retrieval of 20 candidates
+    for each of 3 query vectors (broadcast queries, two-level top-k),
+    then a cross-encoder-style rescore of ONLY those candidates against
+    the query document's text (token-set cosine blended 50/50 with the
+    embedding cosine), final top-5 per query — the standard two-stage
+    search/RAG serving pipeline (see operators/similarity.py:
+    rerank_topk)."""
+    return similarity.rerank_topk(
+        _t(spark, sf_dir, "embeddings"),
+        _t(spark, sf_dir, "documents"),
+        n_queries=3,
+        k_retrieve=20,
+        k_final=5,
+        alpha=0.5,
     )
 
-
-QUERIES["q_contamination_by_source"] = q_contamination_by_source
 
 # The flagged-doc tier is byte-identical to the proven q_decontaminate
 # oracle (token COUNTS are İ-insensitive under whitespace splitting —
 # comparisons stay engine-side); the report tier is two bigint counts
 # per group (one exact-operand rounding) and a decimal-exact ratio sum
 # divided once, NULL for clean groups on both engines.
-ORACLE_SQL["q_contamination_by_source"] = """
+@query(oracle="""
     WITH sh AS (
         SELECT doc_id,
                list_distinct(list_transform(
@@ -9314,22 +8876,24 @@ ORACLE_SQL["q_contamination_by_source"] = """
                  / count(f.overlap_ratio), 4) + 0.0 AS avg_overlap
     FROM src s LEFT JOIN flagged f USING (doc_id)
     GROUP BY 1
-"""
-
-
-def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source "data card": the quality × dedup × mix one-pager a
-    training team publishes per ingested source before choosing sampling
-    weights — volume (docs, whitespace tokens, discrete median length),
-    within-source exact-dup rate (md5 fingerprints), C4-style low-quality
-    share (< 16 tokens or punct-saturated), dominant language + share
-    (see operators/text.py: source_data_card)."""
-    return text.source_data_card(
-        _t(spark, sf_dir, "documents"), min_tokens=16, max_punct_ratio=0.3
+""")
+def q_contamination_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source contamination-rate report: which data sources carry the
+    most benchmark-contaminated documents (3-gram overlap >= 10% with
+    the held-out doc_id % 20 == 0 slice, the q_decontaminate contract),
+    as (n_docs, n_contaminated, contamination_pct, avg_overlap) per
+    source — the drop-this-source triage table a training team reads
+    after the per-doc sweep (see operators/dedup.py:
+    contamination_by_group)."""
+    docs = _t(spark, sf_dir, "documents")
+    return dedup.contamination_by_group(
+        docs.filter(F.col("doc_id") % 20 != 0),
+        docs.filter(F.col("doc_id") % 20 == 0),
+        group_col="source",
+        n=3,
+        threshold=0.1,
     )
 
-
-QUERIES["q_data_card"] = q_data_card
 
 # Every scalar is either integer-exact (counts, BIGINT-cast sums,
 # percentile_disc elements, distinct fingerprints) or a single IEEE
@@ -9337,7 +8901,7 @@ QUERIES["q_data_card"] = q_data_card
 # 4dp-rounded punct ratio on both engines (double-rounding half-rule);
 # the dominant language is tie-broken (count DESC, lang ASC NULLS LAST)
 # identically; NULL source groups survive via IS NOT DISTINCT FROM.
-ORACLE_SQL["q_data_card"] = """
+@query(oracle="""
     WITH f AS (
         SELECT source, text,
                CASE WHEN trim(text) = '' THEN 0
@@ -9376,9 +8940,25 @@ ORACLE_SQL["q_data_card"] = """
            round(t.top_n * 100.0 / p.n_docs, 2) AS top_lang_pct
     FROM per_source p
     LEFT JOIN top t ON p.source IS NOT DISTINCT FROM t.tl_source
-"""
+""")
+def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source "data card": the quality × dedup × mix one-pager a
+    training team publishes per ingested source before choosing sampling
+    weights — volume (docs, whitespace tokens, discrete median length),
+    within-source exact-dup rate (md5 fingerprints), C4-style low-quality
+    share (< 16 tokens or punct-saturated), dominant language + share
+    (see operators/text.py: source_data_card)."""
+    return text.source_data_card(
+        _t(spark, sf_dir, "documents"), min_tokens=16, max_punct_ratio=0.3
+    )
 
 
+# The drained stream must reproduce the batch sweep bit-for-bit, so the
+# oracle IS q_decontaminate's proven SQL: the stream-side HOF shingler
+# and the batch window shingler share slice-truncation semantics, the
+# broadcast probe preserves per-doc hit counts, and the single rounding
+# site (4dp ratio) is shared by filter and output.
+@query(oracle=ORACLE_SQL["q_decontaminate"])
 def q_streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming benchmark-contamination gate — the in-flight twin of
     q_decontaminate: corpus documents arrive as micro-batches (staged
@@ -9408,12 +8988,14 @@ def q_streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared staging scaffold (streaming/windows.py): synthetic bounded-day
     # ingest_ts folded from doc_id (int64-extreme ids would overflow the
     # timestamp µs range — the r11 extremes-profile find), 4 round-robin
-    # slices replayed one file per trigger
+    # slices replayed two files per trigger (half the fixed per-trigger
+    # cost, still two triggers)
     stream = stream_windows.stage_keyed_micro_batches(
         spark,
         docs.filter(F.col("doc_id") % 20 != 0).select("doc_id", "text"),
         "doc_id",
         os.path.join(_SCRATCH, "docs_contam_stream"),
+        files_per_trigger=2,
     )
     exploded = stream.select(
         "doc_id",
@@ -9475,34 +9057,6 @@ def q_streaming_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_streaming_contamination"] = q_streaming_contamination
-
-# The drained stream must reproduce the batch sweep bit-for-bit, so the
-# oracle IS q_decontaminate's proven SQL: the stream-side HOF shingler
-# and the batch window shingler share slice-truncation semantics, the
-# broadcast probe preserves per-doc hit counts, and the single rounding
-# site (4dp ratio) is shared by filter and output.
-ORACLE_SQL["q_streaming_contamination"] = ORACLE_SQL["q_decontaminate"]
-
-
-def q_shard_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-shard data card: for each ~1000-BPE-token training shard from
-    the q_token_shards plan, the composition report a data lead reads
-    before a run — volume, within-shard exact-dup count, C4-style
-    low-quality share, and the source mix (distinct sources, dominant
-    source + share). Composes the distributed prefix-sum shard
-    assignment with source_data_card's aggregate battery (see
-    operators/sampling.py:shard_data_card)."""
-    return sampling.shard_data_card(
-        _t(spark, sf_dir, "documents"),
-        budget_tokens=1000,
-        min_tokens=16,
-        max_punct_ratio=0.3,
-    )
-
-
-QUERIES["q_shard_data_card"] = q_shard_data_card
-
 # Every scalar is integer-exact (counts, BIGINT sums, id min/max,
 # distinct fingerprints) or a single IEEE divide of exact operands
 # rounded ONCE; the quality bar compares the 4dp-rounded punct ratio on
@@ -9510,7 +9064,7 @@ QUERIES["q_shard_data_card"] = q_shard_data_card
 # running token sum (same recurrence as q_token_shards); the dominant
 # source is tie-broken (count DESC, source ASC NULLS LAST) identically;
 # an all-NULL-text shard's dup rate is NULL on both engines (0/0).
-ORACLE_SQL["q_shard_data_card"] = """
+@query(oracle="""
     WITH f AS (
         SELECT doc_id, source,
                coalesce(len(regexp_extract_all(
@@ -9562,9 +9116,52 @@ ORACLE_SQL["q_shard_data_card"] = """
            t.n_sources, t.top_source,
            round(t.top_n * 100.0 / a.n_docs, 2) AS top_source_pct
     FROM agg a LEFT JOIN top t ON a.shard_id = t.ts_shard
-"""
+""")
+def q_shard_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-shard data card: for each ~1000-BPE-token training shard from
+    the q_token_shards plan, the composition report a data lead reads
+    before a run — volume, within-shard exact-dup count, C4-style
+    low-quality share, and the source mix (distinct sources, dominant
+    source + share). Composes the distributed prefix-sum shard
+    assignment with source_data_card's aggregate battery (see
+    operators/sampling.py:shard_data_card)."""
+    return sampling.shard_data_card(
+        _t(spark, sf_dir, "documents"),
+        budget_tokens=1000,
+        min_tokens=16,
+        max_punct_ratio=0.3,
+    )
 
 
+# The drained stream must reproduce the batch audit bit-for-bit, so the
+# oracle IS q_dq_audit's proven SQL restricted to the four orders checks:
+# uniqueness counts ROWS participating in a duplicated key, NULL custkeys
+# are orphans, NULL prices violate the positivity invariant (unknown =
+# broken), and NULL prices do NOT count as non-finite — all integer-exact.
+@query(oracle="""
+    SELECT 'orders_custkey_fk' AS check,
+           count(*) AS n_violations, count(*) = 0 AS passed
+    FROM orders WHERE o_custkey IS NULL
+       OR NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey)
+    UNION ALL
+    SELECT 'orders_orderkey_unique',
+           CAST(coalesce(sum(n), 0) AS BIGINT), coalesce(sum(n), 0) = 0
+    FROM (SELECT count(*) AS n FROM orders GROUP BY o_orderkey HAVING count(*) > 1)
+    UNION ALL
+    SELECT 'orders_totalprice_positive',
+           CAST(coalesce(sum(CASE WHEN o_totalprice <= 0 OR o_totalprice IS NULL
+                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
+           coalesce(sum(CASE WHEN o_totalprice <= 0 OR o_totalprice IS NULL
+                             THEN 1 ELSE 0 END), 0) = 0
+    FROM orders
+    UNION ALL
+    SELECT 'orders_totalprice_finite',
+           CAST(coalesce(sum(CASE WHEN isnan(o_totalprice) OR isinf(o_totalprice)
+                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
+           coalesce(sum(CASE WHEN isnan(o_totalprice) OR isinf(o_totalprice)
+                             THEN 1 ELSE 0 END), 0) = 0
+    FROM orders
+""")
 def q_streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming data-quality gate — the in-flight twin of q_dq_audit's
     orders checks: order rows arrive as micro-batches (staged slices with
@@ -9592,12 +9189,14 @@ def q_streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared staging scaffold (streaming/windows.py): synthetic bounded-day
     # ingest_ts (NULL orderkeys coalesced so their rows survive the
     # epoch-0 initial watermark — the batch oracle counts them), 4
-    # round-robin slices so duplicate keys cross trigger boundaries
+    # round-robin slices so duplicate keys cross trigger boundaries,
+    # replayed two files per trigger
     stream = stream_windows.stage_keyed_micro_batches(
         spark,
         orders.select("o_orderkey", "o_custkey", "o_totalprice"),
         "o_orderkey",
         os.path.join(_SCRATCH, "orders_dq_stream"),
+        files_per_trigger=2,
     )
     price = F.col("o_totalprice")
     flagged = stream.join(
@@ -9666,39 +9265,31 @@ def q_streaming_dq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_streaming_dq_gate"] = q_streaming_dq_gate
-
-# The drained stream must reproduce the batch audit bit-for-bit, so the
-# oracle IS q_dq_audit's proven SQL restricted to the four orders checks:
-# uniqueness counts ROWS participating in a duplicated key, NULL custkeys
-# are orphans, NULL prices violate the positivity invariant (unknown =
-# broken), and NULL prices do NOT count as non-finite — all integer-exact.
-ORACLE_SQL["q_streaming_dq_gate"] = """
-    SELECT 'orders_custkey_fk' AS check,
-           count(*) AS n_violations, count(*) = 0 AS passed
-    FROM orders WHERE o_custkey IS NULL
-       OR NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey)
-    UNION ALL
-    SELECT 'orders_orderkey_unique',
-           CAST(coalesce(sum(n), 0) AS BIGINT), coalesce(sum(n), 0) = 0
-    FROM (SELECT count(*) AS n FROM orders GROUP BY o_orderkey HAVING count(*) > 1)
-    UNION ALL
-    SELECT 'orders_totalprice_positive',
-           CAST(coalesce(sum(CASE WHEN o_totalprice <= 0 OR o_totalprice IS NULL
-                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
-           coalesce(sum(CASE WHEN o_totalprice <= 0 OR o_totalprice IS NULL
-                             THEN 1 ELSE 0 END), 0) = 0
-    FROM orders
-    UNION ALL
-    SELECT 'orders_totalprice_finite',
-           CAST(coalesce(sum(CASE WHEN isnan(o_totalprice) OR isinf(o_totalprice)
-                                  THEN 1 ELSE 0 END), 0) AS BIGINT),
-           coalesce(sum(CASE WHEN isnan(o_totalprice) OR isinf(o_totalprice)
-                             THEN 1 ELSE 0 END), 0) = 0
-    FROM orders
-"""
-
-
+# Deterministic scalars are integer-exact: n_rows / sketch_n both equal
+# the non-NULL value count (sketch_n coming from the merged sketch is the
+# coverage proof), n_parts counts day cells with ≥1 value; the
+# randomized quantile estimates surface only through the bounded-rank
+# 'ok' flags, exactly as q_kll_quantiles.
+@query(oracle="""
+    WITH cells AS (
+        SELECT event_type, date_trunc('day', ts) AS pk
+        FROM events WHERE value IS NOT NULL
+        GROUP BY event_type, date_trunc('day', ts)
+    ),
+    np AS (
+        SELECT event_type, CAST(count(*) AS BIGINT) AS n_parts
+        FROM cells GROUP BY event_type
+    ),
+    g AS (
+        SELECT event_type, CAST(count(value) AS BIGINT) AS n_rows
+        FROM events GROUP BY event_type
+    )
+    SELECT g.event_type, g.n_rows,
+           coalesce(np.n_parts, 0) AS n_parts,
+           g.n_rows AS sketch_n,
+           'ok' AS p50_ok, 'ok' AS p90_ok, 'ok' AS p99_ok
+    FROM g LEFT JOIN np ON g.event_type IS NOT DISTINCT FROM np.event_type
+""")
 def q_kll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read sketch rollup end-to-end (r13 growth — the r12
     plan's own candidate): per-(event_type, day) KLL sketches are
@@ -9778,35 +9369,29 @@ def q_kll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_kll_rollup_merge"] = q_kll_rollup_merge
-
-# Deterministic scalars are integer-exact: n_rows / sketch_n both equal
-# the non-NULL value count (sketch_n coming from the merged sketch is the
-# coverage proof), n_parts counts day cells with ≥1 value; the
-# randomized quantile estimates surface only through the bounded-rank
-# 'ok' flags, exactly as q_kll_quantiles.
-ORACLE_SQL["q_kll_rollup_merge"] = """
-    WITH cells AS (
-        SELECT event_type, date_trunc('day', ts) AS pk
-        FROM events WHERE value IS NOT NULL
-        GROUP BY event_type, date_trunc('day', ts)
+# The drained stream must reproduce the batch shard plan bit-for-bit, so
+# the oracle IS q_token_shards' proven SQL at the same budget.
+@query(oracle="""
+    WITH toks AS (
+        SELECT doc_id,
+               coalesce(len(regexp_extract_all(
+                   lower(translate(text, 'İ', 'i')),
+                   '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')), 0) AS n_tokens
+        FROM documents WHERE doc_id IS NOT NULL
     ),
-    np AS (
-        SELECT event_type, CAST(count(*) AS BIGINT) AS n_parts
-        FROM cells GROUP BY event_type
-    ),
-    g AS (
-        SELECT event_type, CAST(count(value) AS BIGINT) AS n_rows
-        FROM events GROUP BY event_type
+    cum AS (
+        SELECT doc_id, n_tokens,
+               sum(n_tokens) OVER (ORDER BY doc_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
+        FROM toks
     )
-    SELECT g.event_type, g.n_rows,
-           coalesce(np.n_parts, 0) AS n_parts,
-           g.n_rows AS sketch_n,
-           'ok' AS p50_ok, 'ok' AS p90_ok, 'ok' AS p99_ok
-    FROM g LEFT JOIN np ON g.event_type IS NOT DISTINCT FROM np.event_type
-"""
-
-
+    SELECT CAST((cum_tokens - n_tokens) // 1000 AS BIGINT) AS shard_id,
+           count(*) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
+           min(doc_id) AS first_id,
+           max(doc_id) AS last_id
+    FROM cum GROUP BY 1
+""")
 def q_streaming_shard_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming shard-progress card (r13 growth — the r12 plan's own
     candidate): documents arrive as micro-batches and a keyed update-mode
@@ -9836,11 +9421,13 @@ def q_streaming_shard_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "shard_id")
         .localCheckpoint(eager=True)
     )
+    # 4 staged slices replayed two files per trigger
     stream = stream_windows.stage_keyed_micro_batches(
         spark,
         docs.select("doc_id", "text"),
         "doc_id",
         os.path.join(_SCRATCH, "docs_shard_stream"),
+        files_per_trigger=2,
     )
     flight = stream.filter(F.col("doc_id").isNotNull()).select(
         "doc_id",
@@ -9875,33 +9462,37 @@ def q_streaming_shard_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_streaming_shard_progress"] = q_streaming_shard_progress
-
-# The drained stream must reproduce the batch shard plan bit-for-bit, so
-# the oracle IS q_token_shards' proven SQL at the same budget.
-ORACLE_SQL["q_streaming_shard_progress"] = """
-    WITH toks AS (
-        SELECT doc_id,
-               coalesce(len(regexp_extract_all(
-                   lower(translate(text, 'İ', 'i')),
-                   '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]')), 0) AS n_tokens
-        FROM documents WHERE doc_id IS NOT NULL
+# The register/estimate CTEs are the SHARED fragment above (the merge of
+# per-day register maxes equals the global per-group max), plus the two
+# physical-coverage integers. n_parts counts day CELLS including the
+# NULL-day cell (a NULL-ts row with a non-NULL key is a real gold
+# partition — r14 review find: count(DISTINCT pk) skipped it, diverging
+# from the Spark query and its own hand test; cells are materialized
+# with GROUP BY instead, the same fix the kll and hll_partitioned
+# oracles already carry).
+@query(oracle=f"""
+    WITH keyed AS (
+        SELECT event_type AS g, date_trunc('day', ts) AS pk,
+               md5(CAST(user_id AS VARCHAR)) AS h, user_id AS k
+        FROM events WHERE user_id IS NOT NULL
     ),
-    cum AS (
-        SELECT doc_id, n_tokens,
-               sum(n_tokens) OVER (ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
-        FROM toks
-    )
-    SELECT CAST((cum_tokens - n_tokens) // 1000 AS BIGINT) AS shard_id,
-           count(*) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-           min(doc_id) AS first_id,
-           max(doc_id) AS last_id
-    FROM cum GROUP BY 1
-"""
-
-
+    cells AS (SELECT g, pk FROM keyed GROUP BY g, pk),
+    np AS (SELECT g, CAST(count(*) AS BIGINT) AS n_parts FROM cells GROUP BY g),
+    nr AS (
+        SELECT g, CAST(count(*) AS BIGINT) AS n_rows_covered
+        FROM keyed GROUP BY g
+    ),
+    cov AS (
+        SELECT np.g, np.n_parts, nr.n_rows_covered
+        FROM np JOIN nr ON np.g IS NOT DISTINCT FROM nr.g
+    ),
+{_HLL_REGISTER_ESTIMATE_CTES}
+    SELECT fin.g AS event_type, cov.n_parts, cov.n_rows_covered,
+           fin.n_used, fin.hll_estimate, fin.exact_distinct,
+           round(abs(fin.hll_estimate - CAST(fin.exact_distinct AS DOUBLE))
+                 / CAST(fin.exact_distinct AS DOUBLE), 4) AS abs_rel_err
+    FROM fin JOIN cov ON fin.g IS NOT DISTINCT FROM cov.g
+""")
 def q_hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read DISTINCT-COUNT rollup end-to-end (r14 growth — the
     r13 plan's own candidate, completing the physical sketch-lifecycle
@@ -9936,41 +9527,6 @@ def q_hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_hll_rollup_merge"] = q_hll_rollup_merge
-
-# The register/estimate CTEs are the SHARED fragment above (the merge of
-# per-day register maxes equals the global per-group max), plus the two
-# physical-coverage integers. n_parts counts day CELLS including the
-# NULL-day cell (a NULL-ts row with a non-NULL key is a real gold
-# partition — r14 review find: count(DISTINCT pk) skipped it, diverging
-# from the Spark query and its own hand test; cells are materialized
-# with GROUP BY instead, the same fix the kll and hll_partitioned
-# oracles already carry).
-ORACLE_SQL["q_hll_rollup_merge"] = f"""
-    WITH keyed AS (
-        SELECT event_type AS g, date_trunc('day', ts) AS pk,
-               md5(CAST(user_id AS VARCHAR)) AS h, user_id AS k
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    cells AS (SELECT g, pk FROM keyed GROUP BY g, pk),
-    np AS (SELECT g, CAST(count(*) AS BIGINT) AS n_parts FROM cells GROUP BY g),
-    nr AS (
-        SELECT g, CAST(count(*) AS BIGINT) AS n_rows_covered
-        FROM keyed GROUP BY g
-    ),
-    cov AS (
-        SELECT np.g, np.n_parts, nr.n_rows_covered
-        FROM np JOIN nr ON np.g IS NOT DISTINCT FROM nr.g
-    ),
-{_HLL_REGISTER_ESTIMATE_CTES}
-    SELECT fin.g AS event_type, cov.n_parts, cov.n_rows_covered,
-           fin.n_used, fin.hll_estimate, fin.exact_distinct,
-           round(abs(fin.hll_estimate - CAST(fin.exact_distinct AS DOUBLE))
-                 / CAST(fin.exact_distinct AS DOUBLE), 4) AS abs_rel_err
-    FROM fin JOIN cov ON fin.g IS NOT DISTINCT FROM cov.g
-"""
-
-
 def _wav_corpus_spec(n: int = 24) -> list[tuple]:
     """Deterministic analytic WAV corpus spec, shared by the Spark query
     and (re-derived arithmetically) the DuckDB oracle: per media_id —
@@ -9994,6 +9550,44 @@ def _wav_corpus_spec(n: int = 24) -> list[tuple]:
     return specs
 
 
+# Computed golden: q(width) = round(amp*(2^(8w-1)-1)) / 2^(8w-1) per
+# channel (numpy's half-even vs SQL's half-away rounding agree at every
+# tie this spec can hit — ties land on odd floors), stereo downmix =
+# (q(amp) + q(amp/2)) / 2, and every per-sample magnitude is equal so
+# rms = peak = envelope segment = that magnitude exactly.
+@query(oracle="""
+    WITH spec AS (
+        SELECT i AS media_id,
+               CASE WHEN i % 2 = 0 THEN 32768.0 ELSE 8388608.0 END AS fullscale,
+               CASE WHEN i % 3 = 0 THEN 2 ELSE 1 END AS nch,
+               (i % 4 < 2) AS is_const,
+               (i + 1) / 32.0 AS amp,
+               400 + 8 * i AS ns
+        FROM generate_series(0, 23) t(i)
+    ),
+    q AS (
+        SELECT media_id, nch, is_const, ns,
+               round(amp * (fullscale - 1)) / fullscale AS q1,
+               round((amp / 2) * (fullscale - 1)) / fullscale AS q2
+        FROM spec
+    ),
+    m AS (
+        SELECT media_id, nch, is_const, ns,
+               CASE WHEN nch = 2 THEN (q1 + q2) / 2 ELSE q1 END AS mag
+        FROM q
+    )
+    SELECT media_id,
+           8000 AS sample_rate,
+           nch AS n_channels,
+           CAST(ns AS BIGINT) AS n_samples,
+           CAST(ns / 8 AS INT) AS duration_ms,
+           round(mag, 4) AS rms,
+           round(mag, 4) AS peak,
+           CAST(CASE WHEN is_const THEN 0.0 ELSE 1.0 END AS DOUBLE) AS zcr,
+           round(mag, 4) AS env0, round(mag, 4) AS env1,
+           round(mag, 4) AS env2, round(mag, 4) AS env3
+    FROM m
+""")
 def q_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec media decode as a declared query (r14 growth — the r13
     plan's own candidate, now that the WAV codec is real): a bounded
@@ -10049,48 +9643,36 @@ def q_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_wav_decode"] = q_wav_decode
-
-# Computed golden: q(width) = round(amp*(2^(8w-1)-1)) / 2^(8w-1) per
-# channel (numpy's half-even vs SQL's half-away rounding agree at every
-# tie this spec can hit — ties land on odd floors), stereo downmix =
-# (q(amp) + q(amp/2)) / 2, and every per-sample magnitude is equal so
-# rms = peak = envelope segment = that magnitude exactly.
-ORACLE_SQL["q_wav_decode"] = """
+# Exact golden (no quantization): mono magnitude = amp = (i+1)/32,
+# stereo downmix = (amp + amp/2)/2 = 3*(i+1)/128 — dyadic rationals with
+# at most 7 decimal digits, so round(·, 7) is the identity on both
+# engines and the doubles compare bit-equal.
+@query(oracle="""
     WITH spec AS (
         SELECT i AS media_id,
-               CASE WHEN i % 2 = 0 THEN 32768.0 ELSE 8388608.0 END AS fullscale,
                CASE WHEN i % 3 = 0 THEN 2 ELSE 1 END AS nch,
                (i % 4 < 2) AS is_const,
                (i + 1) / 32.0 AS amp,
                400 + 8 * i AS ns
         FROM generate_series(0, 23) t(i)
     ),
-    q AS (
-        SELECT media_id, nch, is_const, ns,
-               round(amp * (fullscale - 1)) / fullscale AS q1,
-               round((amp / 2) * (fullscale - 1)) / fullscale AS q2
-        FROM spec
-    ),
     m AS (
         SELECT media_id, nch, is_const, ns,
-               CASE WHEN nch = 2 THEN (q1 + q2) / 2 ELSE q1 END AS mag
-        FROM q
+               CASE WHEN nch = 2 THEN amp * 0.75 ELSE amp END AS mag
+        FROM spec
     )
     SELECT media_id,
            8000 AS sample_rate,
            nch AS n_channels,
            CAST(ns AS BIGINT) AS n_samples,
            CAST(ns / 8 AS INT) AS duration_ms,
-           round(mag, 4) AS rms,
-           round(mag, 4) AS peak,
+           round(mag, 7) AS rms,
+           round(mag, 7) AS peak,
            CAST(CASE WHEN is_const THEN 0.0 ELSE 1.0 END AS DOUBLE) AS zcr,
-           round(mag, 4) AS env0, round(mag, 4) AS env1,
-           round(mag, 4) AS env2, round(mag, 4) AS env3
+           round(mag, 7) AS env0, round(mag, 7) AS env1,
+           round(mag, 7) AS env2, round(mag, 7) AS env3
     FROM m
-"""
-
-
+""")
 def q_wav_decode_float(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IEEE-float WAV decode as a declared query (r15 growth — the codec
     widened to WAVE_FORMAT_IEEE_FLOAT this round, so the declared
@@ -10157,63 +9739,9 @@ def q_wav_decode_float(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_wav_decode_float"] = q_wav_decode_float
-
-# Exact golden (no quantization): mono magnitude = amp = (i+1)/32,
-# stereo downmix = (amp + amp/2)/2 = 3*(i+1)/128 — dyadic rationals with
-# at most 7 decimal digits, so round(·, 7) is the identity on both
-# engines and the doubles compare bit-equal.
-ORACLE_SQL["q_wav_decode_float"] = """
-    WITH spec AS (
-        SELECT i AS media_id,
-               CASE WHEN i % 3 = 0 THEN 2 ELSE 1 END AS nch,
-               (i % 4 < 2) AS is_const,
-               (i + 1) / 32.0 AS amp,
-               400 + 8 * i AS ns
-        FROM generate_series(0, 23) t(i)
-    ),
-    m AS (
-        SELECT media_id, nch, is_const, ns,
-               CASE WHEN nch = 2 THEN amp * 0.75 ELSE amp END AS mag
-        FROM spec
-    )
-    SELECT media_id,
-           8000 AS sample_rate,
-           nch AS n_channels,
-           CAST(ns AS BIGINT) AS n_samples,
-           CAST(ns / 8 AS INT) AS duration_ms,
-           round(mag, 7) AS rms,
-           round(mag, 7) AS peak,
-           CAST(CASE WHEN is_const THEN 0.0 ELSE 1.0 END AS DOUBLE) AS zcr,
-           round(mag, 7) AS env0, round(mag, 7) AS env1,
-           round(mag, 7) AS env2, round(mag, 7) AS env3
-    FROM m
-"""
-
-
-# q_hll_partitioned rows-only -> oracle upgrade (r14): n_parts counts the
-# (type, day) cells the merge consumed — one per DISTINCT (event_type,
-# to_date(ts)) incl. NULL days (count(DISTINCT x) would skip them, so the
-# cell relation is materialized first); the Datasketches estimate surfaces
-# only through the self-diagnosing bounded-accuracy flag.
-ORACLE_SQL["q_hll_partitioned"] = """
-    WITH cells AS (
-        SELECT DISTINCT event_type, CAST(ts AS DATE) AS day FROM events
-    ),
-    np AS (
-        SELECT event_type, CAST(count(*) AS BIGINT) AS n_parts
-        FROM cells GROUP BY event_type
-    ),
-    ex AS (
-        SELECT event_type,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS exact_distinct
-        FROM events GROUP BY event_type
-    )
-    SELECT ex.event_type, np.n_parts, ex.exact_distinct, 'ok' AS est_ok
-    FROM ex JOIN np ON ex.event_type IS NOT DISTINCT FROM np.event_type
-"""
-
-
+# Verbatim the q_hll_rollup_merge oracle (the streaming register store
+# must converge to the batch register build — that IS the check).
+@query(oracle=ORACLE_SQL["q_hll_rollup_merge"])
 def q_streaming_hll_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming producer for the merge-on-read distinct-count gold table
     (r15 growth — the r14 plan's own candidate, composing
@@ -10258,13 +9786,6 @@ def q_streaming_hll_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-QUERIES["q_streaming_hll_upsert"] = q_streaming_hll_upsert
-
-# Verbatim the q_hll_rollup_merge oracle (the streaming register store
-# must converge to the batch register build — that IS the check).
-ORACLE_SQL["q_streaming_hll_upsert"] = ORACLE_SQL["q_hll_rollup_merge"]
-
-
 def _bmp_corpus_spec(n: int = 24) -> list[tuple]:
     """Deterministic analytic BMP corpus spec, shared by the Spark query
     and (re-derived arithmetically) the DuckDB oracle: per media_id —
@@ -10286,6 +9807,52 @@ def _bmp_corpus_spec(n: int = 24) -> list[tuple]:
     return specs
 
 
+# Computed golden: channel means are integer half-sums, luma is the
+# Rec. 601 dot product of integers (exactly 3 decimals — never at a 4dp
+# rounding boundary, so the float eval order and the feature array's
+# float32 truncation, error ≤ ~1.5e-5, both round away), brightness is
+# the 4-decimal half-sum of the two half lumas, and each grid tile is
+# its half's luma verbatim.
+@query(oracle="""
+    WITH spec AS (
+        SELECT i AS media_id,
+               CAST(3 + (i % 5) AS INT) AS w,
+               CAST(4 + 2 * (i % 4) AS INT) AS h,
+               (i % 3 = 0) AS is_const,
+               CAST((17*i + 5) % 256 AS DOUBLE) AS r1,
+               CAST((29*i + 40) % 256 AS DOUBLE) AS g1,
+               CAST((53*i + 90) % 256 AS DOUBLE) AS b1,
+               CAST((23*i + 11) % 256 AS DOUBLE) AS r2x,
+               CAST((41*i + 3) % 256 AS DOUBLE) AS g2x,
+               CAST((7*i + 200) % 256 AS DOUBLE) AS b2x
+        FROM generate_series(0, 23) t(i)
+    ),
+    c AS (
+        SELECT media_id, w, h, r1, g1, b1,
+               CASE WHEN is_const THEN r1 ELSE r2x END AS r2,
+               CASE WHEN is_const THEN g1 ELSE g2x END AS g2,
+               CASE WHEN is_const THEN b1 ELSE b2x END AS b2
+        FROM spec
+    ),
+    l AS (
+        SELECT media_id, w, h, r1, g1, b1, r2, g2, b2,
+               0.299*r1 + 0.587*g1 + 0.114*b1 AS luma1,
+               0.299*r2 + 0.587*g2 + 0.114*b2 AS luma2
+        FROM c
+    )
+    SELECT media_id,
+           w AS width,
+           h AS height,
+           round((r1 + r2) / 2, 4) AS mean_r,
+           round((g1 + g2) / 2, 4) AS mean_g,
+           round((b1 + b2) / 2, 4) AS mean_b,
+           round((luma1 + luma2) / 2, 4) AS brightness,
+           round(luma1, 4) AS tile0,
+           round(luma1, 4) AS tile1,
+           round(luma2, 4) AS tile2,
+           round(luma2, 4) AS tile3
+    FROM l
+""")
 def q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec image decode as a declared query (r15 growth — the r14
     plan's own candidate, copying q_wav_decode's computed-golden
@@ -10333,26 +9900,46 @@ def q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_bmp_decode"] = q_bmp_decode
+def _png_corpus_spec(n: int = 24) -> list[tuple]:
+    """Deterministic analytic PNG corpus spec, shared by the Spark query
+    and (re-derived arithmetically) the DuckDB oracle: per media_id —
+    width 2..7, even height 4..10 (so the 2×2 luminance grid splits
+    exactly on the color boundary), constant-color vs top/bottom
+    two-tone, with channel values from fixed modular ramps DISTINCT from
+    the BMP corpus's so the two image queries never hash-collide."""
+    specs = []
+    for i in range(n):
+        w = 2 + (i % 6)
+        h = 4 + 2 * (i % 4)
+        top = ((19 * i + 7) % 256, (31 * i + 50) % 256, (59 * i + 80) % 256)
+        bot = (
+            top
+            if i % 4 == 0
+            else ((13 * i + 21) % 256, (37 * i + 9) % 256, (11 * i + 180) % 256)
+        )
+        specs.append((i, w, h, top, bot))
+    return specs
 
-# Computed golden: channel means are integer half-sums, luma is the
-# Rec. 601 dot product of integers (exactly 3 decimals — never at a 4dp
-# rounding boundary, so the float eval order and the feature array's
-# float32 truncation, error ≤ ~1.5e-5, both round away), brightness is
-# the 4-decimal half-sum of the two half lumas, and each grid tile is
-# its half's luma verbatim.
-ORACLE_SQL["q_bmp_decode"] = """
+
+# Computed golden, same arithmetic argument as q_bmp_decode's oracle:
+# channel means are integer half-sums, luma is the Rec. 601 dot product
+# of integers (exactly 3 decimals — never at a 4dp rounding boundary, so
+# float eval order and the feature array's float32 truncation, error
+# <= ~1.5e-5, both round away), brightness is the 4-decimal half-sum of
+# the two half lumas, and each grid tile is its half's luma verbatim.
+# Only the modular ramps differ from the BMP spec (see _png_corpus_spec).
+@query(oracle="""
     WITH spec AS (
         SELECT i AS media_id,
-               CAST(3 + (i % 5) AS INT) AS w,
+               CAST(2 + (i % 6) AS INT) AS w,
                CAST(4 + 2 * (i % 4) AS INT) AS h,
-               (i % 3 = 0) AS is_const,
-               CAST((17*i + 5) % 256 AS DOUBLE) AS r1,
-               CAST((29*i + 40) % 256 AS DOUBLE) AS g1,
-               CAST((53*i + 90) % 256 AS DOUBLE) AS b1,
-               CAST((23*i + 11) % 256 AS DOUBLE) AS r2x,
-               CAST((41*i + 3) % 256 AS DOUBLE) AS g2x,
-               CAST((7*i + 200) % 256 AS DOUBLE) AS b2x
+               (i % 4 = 0) AS is_const,
+               CAST((19*i + 7) % 256 AS DOUBLE) AS r1,
+               CAST((31*i + 50) % 256 AS DOUBLE) AS g1,
+               CAST((59*i + 80) % 256 AS DOUBLE) AS b1,
+               CAST((13*i + 21) % 256 AS DOUBLE) AS r2x,
+               CAST((37*i + 9) % 256 AS DOUBLE) AS g2x,
+               CAST((11*i + 180) % 256 AS DOUBLE) AS b2x
         FROM generate_series(0, 23) t(i)
     ),
     c AS (
@@ -10380,30 +9967,7 @@ ORACLE_SQL["q_bmp_decode"] = """
            round(luma2, 4) AS tile2,
            round(luma2, 4) AS tile3
     FROM l
-"""
-
-
-def _png_corpus_spec(n: int = 24) -> list[tuple]:
-    """Deterministic analytic PNG corpus spec, shared by the Spark query
-    and (re-derived arithmetically) the DuckDB oracle: per media_id —
-    width 2..7, even height 4..10 (so the 2×2 luminance grid splits
-    exactly on the color boundary), constant-color vs top/bottom
-    two-tone, with channel values from fixed modular ramps DISTINCT from
-    the BMP corpus's so the two image queries never hash-collide."""
-    specs = []
-    for i in range(n):
-        w = 2 + (i % 6)
-        h = 4 + 2 * (i % 4)
-        top = ((19 * i + 7) % 256, (31 * i + 50) % 256, (59 * i + 80) % 256)
-        bot = (
-            top
-            if i % 4 == 0
-            else ((13 * i + 21) % 256, (37 * i + 9) % 256, (11 * i + 180) % 256)
-        )
-        specs.append((i, w, h, top, bot))
-    return specs
-
-
+""")
 def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec COMPRESSED image decode as a declared query (r16 growth
     — the r15 verdict's named candidate, copying q_bmp_decode's
@@ -10454,27 +10018,48 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_png_decode"] = q_png_decode
+def _gif_corpus_spec(n: int = 24) -> list[tuple]:
+    """Deterministic analytic GIF corpus spec, shared by the Spark query
+    and (re-derived arithmetically) the DuckDB oracle: per media_id —
+    width 4..7, even height 6..10 (the 2×2 luminance grid splits exactly
+    on the color boundary), constant-color vs top/bottom two-tone, with
+    channel values from fixed modular ramps DISTINCT from the BMP and
+    PNG corpora so the three image queries never hash-collide. Two-tone
+    images have a ≤2-color palette (LZW minimum code size floor = 2),
+    the densest compression case the codec supports."""
+    specs = []
+    for i in range(n):
+        w = 4 + (i % 4)
+        h = 6 + 2 * (i % 3)
+        top = ((23 * i + 13) % 256, (43 * i + 60) % 256, (61 * i + 70) % 256)
+        bot = (
+            top
+            if i % 5 == 0
+            else ((17 * i + 31) % 256, (29 * i + 17) % 256, (13 * i + 160) % 256)
+        )
+        specs.append((i, w, h, top, bot))
+    return specs
 
-# Computed golden, same arithmetic argument as q_bmp_decode's oracle:
+
+# Computed golden, same arithmetic argument as the BMP/PNG oracles:
 # channel means are integer half-sums, luma is the Rec. 601 dot product
 # of integers (exactly 3 decimals — never at a 4dp rounding boundary, so
-# float eval order and the feature array's float32 truncation, error
-# <= ~1.5e-5, both round away), brightness is the 4-decimal half-sum of
-# the two half lumas, and each grid tile is its half's luma verbatim.
-# Only the modular ramps differ from the BMP spec (see _png_corpus_spec).
-ORACLE_SQL["q_png_decode"] = """
+# float eval order and the feature array's float32 truncation both round
+# away), brightness is the 4-decimal half-sum of the two half lumas, and
+# each grid tile is its half's luma verbatim. Only the modular ramps and
+# dimension ramps differ (see _gif_corpus_spec).
+@query(oracle="""
     WITH spec AS (
         SELECT i AS media_id,
-               CAST(2 + (i % 6) AS INT) AS w,
-               CAST(4 + 2 * (i % 4) AS INT) AS h,
-               (i % 4 = 0) AS is_const,
-               CAST((19*i + 7) % 256 AS DOUBLE) AS r1,
-               CAST((31*i + 50) % 256 AS DOUBLE) AS g1,
-               CAST((59*i + 80) % 256 AS DOUBLE) AS b1,
-               CAST((13*i + 21) % 256 AS DOUBLE) AS r2x,
-               CAST((37*i + 9) % 256 AS DOUBLE) AS g2x,
-               CAST((11*i + 180) % 256 AS DOUBLE) AS b2x
+               CAST(4 + (i % 4) AS INT) AS w,
+               CAST(6 + 2 * (i % 3) AS INT) AS h,
+               (i % 5 = 0) AS is_const,
+               CAST((23*i + 13) % 256 AS DOUBLE) AS r1,
+               CAST((43*i + 60) % 256 AS DOUBLE) AS g1,
+               CAST((61*i + 70) % 256 AS DOUBLE) AS b1,
+               CAST((17*i + 31) % 256 AS DOUBLE) AS r2x,
+               CAST((29*i + 17) % 256 AS DOUBLE) AS g2x,
+               CAST((13*i + 160) % 256 AS DOUBLE) AS b2x
         FROM generate_series(0, 23) t(i)
     ),
     c AS (
@@ -10502,32 +10087,7 @@ ORACLE_SQL["q_png_decode"] = """
            round(luma2, 4) AS tile2,
            round(luma2, 4) AS tile3
     FROM l
-"""
-
-
-def _gif_corpus_spec(n: int = 24) -> list[tuple]:
-    """Deterministic analytic GIF corpus spec, shared by the Spark query
-    and (re-derived arithmetically) the DuckDB oracle: per media_id —
-    width 4..7, even height 6..10 (the 2×2 luminance grid splits exactly
-    on the color boundary), constant-color vs top/bottom two-tone, with
-    channel values from fixed modular ramps DISTINCT from the BMP and
-    PNG corpora so the three image queries never hash-collide. Two-tone
-    images have a ≤2-color palette (LZW minimum code size floor = 2),
-    the densest compression case the codec supports."""
-    specs = []
-    for i in range(n):
-        w = 4 + (i % 4)
-        h = 6 + 2 * (i % 3)
-        top = ((23 * i + 13) % 256, (43 * i + 60) % 256, (61 * i + 70) % 256)
-        bot = (
-            top
-            if i % 5 == 0
-            else ((17 * i + 31) % 256, (29 * i + 17) % 256, (13 * i + 160) % 256)
-        )
-        specs.append((i, w, h, top, bot))
-    return specs
-
-
+""")
 def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL-codec palette-indexed image decode as a declared query (r16
     growth #2, completing the stdlib-feasible image-container triple
@@ -10575,54 +10135,3 @@ def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("brightness", 4).alias("brightness"),
         *tiles,
     )
-
-
-QUERIES["q_gif_decode"] = q_gif_decode
-
-# Computed golden, same arithmetic argument as the BMP/PNG oracles:
-# channel means are integer half-sums, luma is the Rec. 601 dot product
-# of integers (exactly 3 decimals — never at a 4dp rounding boundary, so
-# float eval order and the feature array's float32 truncation both round
-# away), brightness is the 4-decimal half-sum of the two half lumas, and
-# each grid tile is its half's luma verbatim. Only the modular ramps and
-# dimension ramps differ (see _gif_corpus_spec).
-ORACLE_SQL["q_gif_decode"] = """
-    WITH spec AS (
-        SELECT i AS media_id,
-               CAST(4 + (i % 4) AS INT) AS w,
-               CAST(6 + 2 * (i % 3) AS INT) AS h,
-               (i % 5 = 0) AS is_const,
-               CAST((23*i + 13) % 256 AS DOUBLE) AS r1,
-               CAST((43*i + 60) % 256 AS DOUBLE) AS g1,
-               CAST((61*i + 70) % 256 AS DOUBLE) AS b1,
-               CAST((17*i + 31) % 256 AS DOUBLE) AS r2x,
-               CAST((29*i + 17) % 256 AS DOUBLE) AS g2x,
-               CAST((13*i + 160) % 256 AS DOUBLE) AS b2x
-        FROM generate_series(0, 23) t(i)
-    ),
-    c AS (
-        SELECT media_id, w, h, r1, g1, b1,
-               CASE WHEN is_const THEN r1 ELSE r2x END AS r2,
-               CASE WHEN is_const THEN g1 ELSE g2x END AS g2,
-               CASE WHEN is_const THEN b1 ELSE b2x END AS b2
-        FROM spec
-    ),
-    l AS (
-        SELECT media_id, w, h, r1, g1, b1, r2, g2, b2,
-               0.299*r1 + 0.587*g1 + 0.114*b1 AS luma1,
-               0.299*r2 + 0.587*g2 + 0.114*b2 AS luma2
-        FROM c
-    )
-    SELECT media_id,
-           w AS width,
-           h AS height,
-           round((r1 + r2) / 2, 4) AS mean_r,
-           round((g1 + g2) / 2, 4) AS mean_g,
-           round((b1 + b2) / 2, 4) AS mean_b,
-           round((luma1 + luma2) / 2, 4) AS brightness,
-           round(luma1, 4) AS tile0,
-           round(luma1, 4) AS tile1,
-           round(luma2, 4) AS tile2,
-           round(luma2, 4) AS tile3
-    FROM l
-"""

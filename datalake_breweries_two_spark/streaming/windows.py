@@ -102,7 +102,7 @@ def stage_keyed_micro_batches(
     key_col: str,
     dest_dir: str,
     n_slices: int = 4,
-    files_per_trigger: int = 2,
+    files_per_trigger: int = 1,
 ) -> DataFrame:
     """Stage a batch relation as a replayable micro-batch stream (the
     shared scaffold behind the streaming gate queries — contamination,
@@ -121,8 +121,9 @@ def stage_keyed_micro_batches(
       relation's OWN schema (no inference), ``files_per_trigger``
       files per micro-batch.
 
-    ``files_per_trigger=2`` (r17, guide §5/§1): every micro-batch pays
-    a fixed cycle that is independent of its size — incremental
+    The default replays one staged file per trigger. The gate queries
+    pass ``files_per_trigger=2`` (r17, guide §5/§1): every micro-batch
+    pays a fixed cycle that is independent of its size — incremental
     re-plan + static-side re-broadcast, one state-store open/commit
     per stateful partition, WAL/offset/commit log writes, sink collect
     — measured at 0.5-1.5 s per trigger at sf0.1 (per-trigger

@@ -2765,6 +2765,13 @@ def test_paged_api_stream_pages_per_trigger_batches_invariantly(spark):
     assert got["1"] == got["3"] and len(got["1"]) == 40
 
 
+def test_paged_api_stream_rejects_non_positive_pages_per_trigger():
+    from datalake_breweries_two_spark.sources.paged_api import PagedApiStreamReader
+
+    with pytest.raises(ValueError, match="pages_per_trigger"):
+        PagedApiStreamReader({"pages_per_trigger": "0"})
+
+
 def test_coalesce_intervals_merges_touching_and_overlapping(spark):
     from datetime import datetime
 

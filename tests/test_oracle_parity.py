@@ -263,3 +263,33 @@ def test_oracle_sql_avoids_divergent_regex_classes():
                 f"{name}: oracle SQL contains {banned!r} — spell the "
                 "class explicitly (see operators/text.py WS_RE)"
             )
+
+
+def test_tpch_partsupp_rewrites_match_original_shapes():
+    """Q16 runs over the raw pair stream and Q9 over a red-part-filtered
+    partsupp, on the Spark side AND in the oracle, so parity alone cannot
+    catch a rewrite that changes both sides together. Pin each rewrite
+    against the original DISTINCT-partsupp shape (``_tpch_ps_sql``) in
+    DuckDB."""
+    from collections import Counter
+
+    from datalake_breweries_two_spark import entry_queries as eq
+
+    con = _duck(SF_ORACLE)
+    try:
+        for rewritten, original in (
+            (
+                eq._tpch_pairs_sql("duck", eq._TPCH_Q16_BODY),
+                eq._tpch_ps_sql("duck", eq._TPCH_Q16_BODY),
+            ),
+            (
+                eq._tpch_q9_sql("duck"),
+                eq._tpch_ps_sql("duck", eq._TPCH_Q9_BODY),
+            ),
+        ):
+            got = Counter(con.execute(rewritten).fetchall())
+            want = Counter(con.execute(original).fetchall())
+            assert want, "original shape is empty: the pin would be vacuous"
+            assert got == want
+    finally:
+        con.close()

@@ -12,7 +12,7 @@ import pytest
 from datalake_breweries_two_spark.catalog import BRONZE_BREWERY_SCHEMA
 from datalake_breweries_two_spark.operators.aggregates import group_count
 from datalake_breweries_two_spark.operators.projection import curate_silver_breweries
-from .conftest import SF_SMOKE
+from .conftest import REPO_DIR, SF_SMOKE
 from datalake_breweries_two_spark.plans.medallion import (
     MedallionConfig,
     QualityGateError,
@@ -120,7 +120,7 @@ def test_spark_entry_adapter_contract(spark):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "spark_entry_contract", "/root/repo/__spark_entry__.py"
+        "spark_entry_contract", os.path.join(REPO_DIR, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -143,7 +143,7 @@ def test_spark_entry_adapter_contract(spark):
     import json
 
     checked: set = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(REPO_DIR, "CORRECTNESS_r*.json")):
         checked.update(json.load(open(path)))
 
     names = list(q)
