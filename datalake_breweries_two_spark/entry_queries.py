@@ -3512,18 +3512,18 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # r7 rows-only → full-oracle upgrades: the MinHash+LSH near-dup tier.
-# The declared queries now run hash_fn="portable" (operators/dedup.py:
+# The near-dup operators hash with the md5 family (operators/dedup.py:
 # minhash_signatures — two md5-derived integers per shingle mixed per seed
-# as (h1 + s*h2) mod 2^61-1) with İ-folded tokenizers, so a DuckDB oracle
+# as (h1 + s*h2) mod 2^61-1) over İ-folded tokens, so a DuckDB oracle
 # recomputes every signature value, every band bucket (the raw joined
 # signature-slice string — no re-hash), the over-cap bucket drops, and the
-# est/exact verify tier. Production xxhash64 paths are unchanged.
+# est/exact verify tier.
 # ---------------------------------------------------------------------------
 
-# Mirrors of _tokens_expr (İ-folded variants only — portable hashing
-# requires the fold; see operators/dedup.py:_tokens_expr).
+# Mirrors of _tokens_expr (both tokenizers pre-fold İ; see
+# operators/dedup.py:_tokens_expr).
 _TOKS_SQL = {
-    "whitespace_folded": (
+    "whitespace": (
         "regexp_split_to_array(lower(translate(trim(text), 'İ', 'i')),"
         " '[ \\t\\n\\r\\f\\x0b]+')"
     ),
@@ -3634,27 +3634,23 @@ def _minhash_lsh_oracle_sql(
 """
 
 
-@query(oracle=_minhash_lsh_oracle_sql("whitespace_folded", 3, 32, 8, 0.4, "est"))
+@query(oracle=_minhash_lsh_oracle_sql("whitespace", 3, 32, 8, 0.4, "est"))
 def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs. FULL ORACLE since r7: the declared
-    query runs ``hash_fn="portable"`` (two-md5 Carter-Wegman minhash
-    family, band buckets = raw signature-slice strings) with the
-    İ-folded whitespace tokenizer, so DuckDB recomputes every signature
-    value, every band bucket, the over-cap bucket drops, and each
-    pair's agreement fraction — the LSH DECISIONS are pinned
-    cross-engine, not just the surviving pairs' scores. Production
-    default (xxhash64 hashing, plain whitespace tokens) unchanged."""
+    """MinHash+LSH near-dup pairs. FULL ORACLE since r7: the two-md5
+    Carter-Wegman minhash family (band buckets = raw signature-slice
+    strings) over İ-folded whitespace tokens, so DuckDB recomputes every
+    signature value, every band bucket, the over-cap bucket drops, and
+    each pair's agreement fraction — the LSH DECISIONS are pinned
+    cross-engine, not just the surviving pairs' scores."""
     return dedup.minhash_near_duplicates(
         _t(spark, sf_dir, "documents"),
         num_hashes=32,
         bands=8,
         threshold=0.4,
-        tokenizer="whitespace_folded",
-        hash_fn="portable",
     )
 
 
-@query(oracle=_minhash_lsh_oracle_sql("whitespace_folded", 3, 32, 8, 0.2, "exact"))
+@query(oracle=_minhash_lsh_oracle_sql("whitespace", 3, 32, 8, 0.2, "exact"))
 def q_dedup_near_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tiered near-dup: LSH candidates verified by EXACT Jaccard restricted
     to candidate pairs (the 100 TB pipeline shape). FULL ORACLE since r7
@@ -3666,8 +3662,6 @@ def q_dedup_near_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=32,
         bands=8,
         threshold=0.2,
-        tokenizer="whitespace_folded",
-        hash_fn="portable",
     )
 
 
@@ -3847,7 +3841,7 @@ def _simhash_oracle_sql(max_hamming: int, bucket_cap: int) -> str:
     bit-planes, majority vote per bit, the SAME disjoint-block layout as
     the Spark pair generator (shared via ``simhash_block_layout``),
     over-cap bucket drops BEFORE pairing, exact Hamming verify."""
-    n_bits = dedup.simhash_bits("portable")
+    n_bits = dedup.SIMHASH_BITS
     offsets, widths = dedup.simhash_block_layout(n_bits, max_hamming + 1)
     bit_sums = ",\n               ".join(
         f"sum((h >> {b}) & 1) AS b{b}" for b in range(n_bits)
@@ -3906,18 +3900,15 @@ def _simhash_oracle_sql(max_hamming: int, bucket_cap: int) -> str:
 
 @query(oracle=_simhash_oracle_sql(max_hamming=6, bucket_cap=256))
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs. FULL ORACLE since r7: the declared query
-    runs the ``hash_fn="portable"`` 60-bit md5-plane variant with the
-    İ-pre-folded BPE tokenizer, so DuckDB recomputes every signature
-    bit, the disjoint-block bucketing (shared layout via
+    """SimHash near-dup pairs. FULL ORACLE since r7: 60 md5 bit-planes
+    over the İ-pre-folded BPE tokenizer, so DuckDB recomputes every
+    signature bit, the disjoint-block bucketing (shared layout via
     ``simhash_block_layout``), the over-cap bucket drops, and the exact
-    Hamming verify. The production xxhash64/whitespace default is
-    unchanged — this pins the simhash MATH cross-engine the same way
-    q_minhash_signature pins the minhash math."""
+    Hamming verify — this pins the simhash MATH cross-engine the same
+    way q_minhash_signature pins the minhash math."""
     pairs = dedup.simhash_near_duplicates(
         _t(spark, sf_dir, "documents"),
         max_hamming=6,
-        hash_fn="portable",
         tokenizer="bpe",
     )
     return pairs.select(
@@ -3988,7 +3979,6 @@ def q_token_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=8,
         threshold=0.3,
         tokenizer="bpe",
-        hash_fn="portable",
     )
 
 
@@ -4835,8 +4825,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # r7 rows-only → full-oracle upgrades, part 2: the fingerprint pair.
-# Both declared queries switch to the portable md5-60bit hash (operators
-# keep their fast xxhash64 production default behind hash_fn="xx"), so
+# Both operators hash with the md5-60 hash (operators/hashing.py), so
 # DuckDB recomputes every hash decision exactly — the same pattern that
 # upgraded the IVF/LSH/recall tier above.
 @query(oracle="""
@@ -4850,12 +4839,11 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 """)
 def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprint (min hash over 16-char shingles). FULL
-    ORACLE since r7: the declared query runs the ``hash_fn="portable"``
-    md5-60bit variant over the RAW text (no lowering — no case-fold
-    divergence surface), so DuckDB recomputes every shingle hash and the
-    min. The production xxhash64 default is unchanged."""
+    ORACLE since r7: md5-60 shingle hashes over the RAW text (no
+    lowering — no case-fold divergence surface), so DuckDB recomputes
+    every shingle hash and the min."""
     return text.rolling_hash_fingerprint(
-        _t(spark, sf_dir, "documents"), hash_fn="portable"
+        _t(spark, sf_dir, "documents")
     ).select("doc_id", "robust_fingerprint")
 
 
@@ -8682,11 +8670,11 @@ def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-portable MinHash signature rows (r7): BPE-ish token 3-gram
     shingles → md5-based 60-bit min-hash per (doc, seed), bounded id
     subset (doc_id < 400, the token-tier fence). FULL ORACLE over the
-    signature VALUES themselves — the production xxhash64 path
-    (q_dedup_near) is only checkable at the pair-decision level; this
-    pins the signature math itself cross-engine. BPE tokenizer, not
-    whitespace: signatures expose the raw shingle STRINGS through md5,
-    so the tokenizer must be the İ-pre-folded cross-engine one
+    signature VALUES themselves — q_dedup_near's array signatures are
+    checked through their pair decisions; this pins the per-seed
+    signature rows value by value. Signatures expose the raw shingle
+    STRINGS through md5, so the tokenizer's İ pre-fold is what makes
+    them cross-engine identical
     (count/ratio outputs are insensitive to Java-vs-utf8proc lower()
     divergence; hash-of-string outputs are not — unicode sweep)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)

@@ -28,18 +28,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark.operators.hashing import h60
+
 BITS_PER_WORD = 63  # avoid the sign bit: 1<<63 overflows in DuckDB
 
 
 def _position(key: Column, seed: int, m_bits: int) -> Column:
     """Deterministic bit position in [0, m_bits): 60-bit md5 prefix mod m.
     Non-negative dividend, so ``%`` agrees across engines."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(":", key.cast("string"), F.lit(seed))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    return h % F.lit(m_bits)
+    return h60(F.concat_ws(":", key.cast("string"), F.lit(seed))) % F.lit(m_bits)
 
 
 def build_bloom(

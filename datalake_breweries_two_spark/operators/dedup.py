@@ -3,21 +3,22 @@
 Four tiers, cheapest-first (the order a 100 TB pipeline applies them):
 
   1. **Exact** — hash-groupBy on a content fingerprint. One shuffle on the
-     md5/xxhash key; at 100 TB shuffle rows are (hash, id) pairs only.
+     md5 key; at 100 TB shuffle rows are (hash, id) pairs only.
   2. **MinHash + LSH banding** — shingle → per-seed min-hash → band →
      groupBy band signature → pair candidates within buckets. All JVM
      higher-order functions; the only shuffle is on band signatures, whose
      cardinality is ~corpus size × bands, and the quadratic pair expansion
      happens only INSIDE buckets (bounded by bucket size, not corpus size).
-  3. **SimHash** — 64-bit hyperplane-free sketch from token hashes; near
+  3. **SimHash** — 60-bit hyperplane-free sketch from token hashes; near
      dups differ in few bits. Bucket on rotated prefixes for candidate
      generation.
   4. **Exact n-gram Jaccard** — ground-truth pairwise similarity via
      explode + self-join on shingle; quadratic in bucket co-occurrence, used
      as the verification pass over LSH candidates, never the full corpus.
 
-All hashing uses ``xxhash64(col, seed)`` — deterministic across runs and
-executors (no Python ``hash()``, which is salted per process).
+All hashing is md5-derived (:mod:`.hashing`) — deterministic across runs,
+executors and engines (no Python ``hash()``, which is salted per process),
+so a DuckDB oracle recomputes every signature, bucket and fingerprint.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark.operators.hashing import h60, h60_sql
 from datalake_breweries_two_spark.operators.text import WS_RE
 
 
@@ -61,13 +63,6 @@ def dedup_exact_keep_first(docs: DataFrame, subset: list[str]) -> DataFrame:
 # Intermediate materialization (shared by the LSH / Jaccard tiers)
 # --------------------------------------------------------------------------
 
-# Session conf consulted when a dedup entry point's ``stage_dir=None``:
-# point it at a scratch directory (HDFS/S3/local) to switch EVERY
-# multi-consumer intermediate in this module from in-memory
-# localCheckpoint blocks to durable parquet stages without touching
-# call sites.
-STAGE_DIR_CONF = "spark.sparkGraft.dedup.stageDir"
-
 _stage_counter = 0
 
 
@@ -78,7 +73,7 @@ def _stage(df: DataFrame, tag: str, stage_dir: str | None) -> DataFrame:
     materialization stats for AQE, nothing registered in the session
     CacheManager):
 
-    * ``stage_dir`` unset (and ``STAGE_DIR_CONF`` unset): eager
+    * ``stage_dir`` unset: eager
       ``localCheckpoint`` — zero-copy reuse, but the blocks live in
       EXECUTOR MEMORY, where storage contends with execution. Fine at
       test scale; the r14 sf10 study (500k docs) needed a 24 GiB heap
@@ -92,11 +87,6 @@ def _stage(df: DataFrame, tag: str, stage_dir: str | None) -> DataFrame:
       queries sharing one scratch root; wipe the root when the query's
       consumers are done).
     """
-    if stage_dir is None:
-        try:
-            stage_dir = df.sparkSession.conf.get(STAGE_DIR_CONF, None) or None
-        except Exception:
-            stage_dir = None
     if not stage_dir:
         return df.localCheckpoint(eager=True)
     global _stage_counter
@@ -131,22 +121,14 @@ def _tokens_expr(text_col: str, tokenizer: str) -> Column:
     words, so "don't stop." and "don' t stop ." shingle identically; an
     empty doc yields ZERO tokens (the doc simply has no shingle set).
 
-    Turkish dotted İ (U+0130) is pre-folded to plain "i" BEFORE lower:
-    Java's lower produces "i"+U+0307 (two codepoints, which the regex
-    then splits into an extra combining-mark token) while DuckDB's
-    utf8proc lower produces bare "i" — the one case-folding divergence
-    the unicode sweep surfaced (İstanbul tokenized 3-vs-1 ways)."""
+    Both tokenizers pre-fold the Turkish dotted İ (U+0130) to plain "i"
+    BEFORE lower: Java's lower produces "i"+U+0307 (two codepoints, which
+    the bpe regex then splits into an extra combining-mark token) while
+    DuckDB's utf8proc lower produces bare "i" — the one case-folding
+    divergence the unicode sweep surfaced (İstanbul tokenized 3-vs-1
+    ways). With the fold, the token STRINGS that feed md5 are
+    cross-engine identical, so every hash of them is oracle-checkable."""
     if tokenizer == "whitespace":
-        return F.split(F.lower(F.trim(F.col(text_col))), WS_RE)
-    if tokenizer == "whitespace_folded":
-        # Same split as "whitespace" but with the Turkish dotted İ
-        # pre-folded BEFORE lower (identical to the bpe fold below).
-        # Required whenever the token/shingle STRINGS feed a portable
-        # hash: Java lower('İ') = "i"+U+0307 while DuckDB's utf8proc
-        # emits bare "i" — equality/count outputs are insensitive to the
-        # divergence (comparisons stay engine-side) but md5-of-string
-        # outputs are not. Production whitespace semantics are otherwise
-        # unchanged (empty doc still yields one "" token).
         return F.split(
             F.lower(F.translate(F.trim(F.col(text_col)), "İ", "i")), WS_RE
         )
@@ -167,7 +149,7 @@ def word_shingles(text_col: str, n: int, tokenizer: str = "whitespace") -> Colum
     shingler (:func:`shingle_docs_exploded`) uses, so the stateless
     array form (the only legal shape on a stream, where window-``lead``
     shinglers are illegal) can never drift from the batch form under any
-    tokenizer: same İ→i pre-fold under ``whitespace_folded``/``bpe``,
+    tokenizer: same İ→i pre-fold,
     same whitespace class, same slice-truncation semantics (docs with
     < ``n`` tokens yield one truncated shingle; a zero-token bpe doc
     yields an EMPTY array, matching the exploded form's zero rows).
@@ -298,7 +280,7 @@ def shingle_sets_with_size(
 # 2. MinHash + LSH
 # --------------------------------------------------------------------------
 
-# Carter-Wegman mixing constants for the portable minhash family:
+# Carter-Wegman mixing constants for the minhash family:
 # seed s maps a shingle's two independent md5-derived integers (h1 full
 # 60-bit, h2 folded to 55 bits) to (h1 + s*h2) mod P. P = 2^61-1 (prime);
 # the 55-bit fold bounds s*h2 ≤ 63*(2^55-1) < 2^61 so h1 + s*h2 < 2^62
@@ -311,18 +293,10 @@ _MINHASH_P = (1 << 61) - 1
 _MINHASH_H2_FOLD = 1 << 55
 
 
-def _portable_h60(col: Column) -> Column:
-    """First 15 md5 hex chars as an exact 60-bit integer — the repo's
-    cross-engine hash primitive (DuckDB: CAST(('0x' || substr(md5(x),1,15))
-    AS BIGINT))."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def minhash_signatures(
     shingled: DataFrame,
     num_hashes: int = 64,
     id_col: str = "doc_id",
-    hash_fn: str = "xx",
 ) -> DataFrame:
     """MinHash signature per doc: for seed s, min over shingles of hash_s.
 
@@ -333,27 +307,20 @@ def minhash_signatures(
     shuffle carries one
     (id, sig) row per doc per partition, not per shingle.
 
-    ``hash_fn="xx"`` (production default): hash_s = xxhash64(shingle, s)
-    — fastest, Spark-only. ``hash_fn="portable"``: the Carter-Wegman
-    md5 family above — every signature value is recomputable by a DuckDB
-    oracle, at two md5s per shingle (measured ~1.2× the xx path at
-    sf0.1; the shingle window + distinct dominates, not the hash). Pair
-    it with an İ-folded tokenizer ("whitespace_folded" / "bpe") so the
-    shingle STRINGS entering md5 are cross-engine identical.
+    hash_s is the Carter-Wegman md5 family above, so every signature
+    value is recomputable by a DuckDB oracle, at two md5s per shingle
+    (SCALING.md r7: 1.00-1.16× the cost of a Spark-only seeded hash at
+    sf0.1; the shingle window + distinct dominates, not the hash). The
+    tokenizers' İ fold keeps the shingle STRINGS entering md5
+    cross-engine identical.
 
-    Accepts either array-form (id, shingles) or exploded (id, shingle) input.
+    Input is exploded (id, shingle) rows (:func:`shingle_docs_exploded`).
     """
-    if "shingle" in shingled.columns:
-        exploded = shingled.select(F.col(id_col), F.col("shingle"))
-    else:
-        exploded = shingled.select(
-            F.col(id_col), F.explode(F.col("shingles")).alias("shingle")
-        )
-    agg = exploded.groupBy(id_col).agg(*_minhash_min_exprs(num_hashes, hash_fn))
+    agg = shingled.groupBy(id_col).agg(*_minhash_min_exprs(num_hashes))
     return agg.select(F.col(id_col), _minhash_signature_expr(num_hashes))
 
 
-def _minhash_min_exprs(num_hashes: int, hash_fn: str) -> list:
+def _minhash_min_exprs(num_hashes: int) -> list:
     """The per-seed ``min(hash_s(shingle)) AS _h{s}`` aggregate columns —
     extracted (r16) so :func:`near_duplicates_verified` can ride them on
     the SAME ``groupBy(id)`` that builds the shingle-set arrays (one pass
@@ -364,33 +331,19 @@ def _minhash_min_exprs(num_hashes: int, hash_fn: str) -> list:
     via cProfile — the same chatter mechanism as
     similarity._signature_expr). min() is duplicate-insensitive, so the
     exprs are valid over both distinct and raw (id, shingle) rows."""
-    if hash_fn == "portable":
-        # Overflow bound: h1 + s*h2 < 2^60 + s*2^55 must stay under
-        # 2^63-1, i.e. s ≤ 224. Enforced, not just documented — a
-        # too-large num_hashes would otherwise surface as a runtime
-        # ANSI ARITHMETIC_OVERFLOW only on the unlucky shingle whose
-        # h2 is near the fold ceiling.
-        if not 1 <= num_hashes <= 224:
-            raise ValueError(
-                f"portable minhash supports 1..224 hashes, got {num_hashes}"
-            )
-        h1_sql = "CAST(conv(substring(md5(shingle), 1, 15), 16, 10) AS BIGINT)"
-        h2_sql = (
-            "(CAST(conv(substring(md5(concat('#', shingle)), 1, 15), 16, 10)"
-            f" AS BIGINT) % {_MINHASH_H2_FOLD})"
-        )
-        return [
-            F.expr(
-                f"min(({h1_sql} + {s} * {h2_sql}) % {_MINHASH_P}) AS _h{s}"
-            )
-            for s in range(num_hashes)
-        ]
-    if hash_fn == "xx":
-        return [
-            F.expr(f"min(xxhash64(shingle, {s})) AS _h{s}")
-            for s in range(num_hashes)
-        ]
-    raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    # Overflow bound: h1 + s*h2 < 2^60 + s*2^55 must stay under
+    # 2^63-1, i.e. s ≤ 224. Enforced, not just documented — a
+    # too-large num_hashes would otherwise surface as a runtime
+    # ANSI ARITHMETIC_OVERFLOW only on the unlucky shingle whose
+    # h2 is near the fold ceiling.
+    if not 1 <= num_hashes <= 224:
+        raise ValueError(f"minhash supports 1..224 hashes, got {num_hashes}")
+    h1_sql = h60_sql("shingle")
+    h2_sql = "(" + h60_sql("concat('#', shingle)") + f" % {_MINHASH_H2_FOLD})"
+    return [
+        F.expr(f"min(({h1_sql} + {s} * {h2_sql}) % {_MINHASH_P}) AS _h{s}")
+        for s in range(num_hashes)
+    ]
 
 
 def _minhash_signature_expr(num_hashes: int) -> Column:
@@ -402,47 +355,29 @@ def _minhash_signature_expr(num_hashes: int) -> Column:
 def minhash_signatures_portable(
     shingled: DataFrame, num_hashes: int = 8, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Engine-portable MinHash signature ROWS (id, seed, minhash).
+    """Engine-portable MinHash signature ROWS (id, seed, minhash) over
+    exploded (id, shingle) rows: one md5-60 (:func:`.hashing.h60`) per
+    (shingle, seed), one scalar row per (doc, seed) instead of an array
+    column, so a DuckDB oracle can recompute every signature value and
+    the output rows sort canonically.
 
-    The production path (:func:`minhash_signatures`) hashes with
-    ``xxhash64``, which only Spark can recompute — so the signature
-    itself was never oracle-checkable, only its downstream pair
-    decisions. This variant hashes with the repo's cross-engine md5
-    pattern (first 15 hex chars → exact 60-bit integer, bit-identical
-    in any engine with md5) and emits one scalar row per (doc, seed)
-    instead of an array column, so a DuckDB oracle can recompute every
-    signature value and the driver canonicalizer can sort the output.
-
-    This is the EXPOSITORY portable scheme (one md5 per (shingle, seed)
-    — what q_minhash_signature pins value-by-value). The corpus-scale
-    near-dup tier uses :func:`minhash_signatures` with
-    ``hash_fn="portable"`` instead: the Carter-Wegman family above it
+    This is the EXPOSITORY scheme — what q_minhash_signature pins
+    value-by-value. The corpus-scale near-dup tier uses
+    :func:`minhash_signatures` instead: the Carter-Wegman family above it
     derives all seeds from two md5s per shingle, ~num_hashes/2 × less
     hash work with the same cross-engine recomputability.
 
-    Same shuffle shape as the production path: explode × seeds, then a
-    partial-aggregated min keyed on (id, seed) — the shuffle carries
-    docs × num_hashes rows, never per-shingle rows."""
-    if "shingle" in shingled.columns:
-        exploded = shingled.select(F.col(id_col), F.col("shingle"))
-    else:
-        exploded = shingled.select(
-            F.col(id_col), F.explode(F.col("shingles")).alias("shingle")
-        )
-    seeded = exploded.select(
+    Same shuffle shape as :func:`minhash_signatures`: explode × seeds,
+    then a partial-aggregated min keyed on (id, seed) — the shuffle
+    carries docs × num_hashes rows, never per-shingle rows."""
+    seeded = shingled.select(
         F.col(id_col),
         F.col("shingle"),
         F.explode(
             F.array(*[F.lit(s) for s in range(num_hashes)])
         ).alias("seed"),
     )
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.col("shingle"), F.col("seed"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = h60(F.concat_ws(":", F.col("shingle"), F.col("seed")))
     return seeded.groupBy(id_col, "seed").agg(F.min(h).alias("minhash"))
 
 
@@ -516,7 +451,7 @@ def auto_band_rows(
     in the worst case where every other document sits exactly at the
     threshold. Clamped to [lo, hi]: below lo the S-curve is too flat to
     discriminate, above hi signature-build cost (num_hashes = bands·r
-    hash evaluations per shingle on the xx path) dominates while the
+    hash evaluations per shingle) dominates while the
     j≤threshold tail is already suppressed ≥ 2^hi/2^lo ≈ 256x, and the
     ``max_bucket`` cap + dropped-bucket Observation remain the backstop
     for adversarial buckets.
@@ -545,7 +480,6 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     max_bucket: int = 64,
     dropped_obs: "Observation | None" = None,
-    hash_fn: str = "xx",
 ) -> DataFrame:
     """Band the signatures and emit candidate pairs sharing any band bucket.
 
@@ -564,20 +498,18 @@ def lsh_candidate_pairs(
     aggregate's exchange is reused for the sentinel branch), so a
     production run can alert on recall erosion at zero extra passes.
 
-    ``hash_fn="xx"`` buckets on xxhash64 of the band's joined signature
-    slice (8-byte shuffle keys); ``hash_fn="portable"`` buckets on the
-    joined slice STRING itself — no re-hash, so a DuckDB oracle groups on
-    byte-identical keys (wider shuffle rows: ~rows_per_band × 20 chars,
-    still tiny next to the documents they stand for).
+    The bucket key is the band's joined signature-slice STRING itself —
+    no re-hash, so a DuckDB oracle groups on byte-identical keys (shuffle
+    rows of ~rows_per_band × 20 chars, still tiny next to the documents
+    they stand for).
     """
     # One F.expr string for the whole banded explode (same py4j-chatter
     # economics as the minhash min columns above)
     def _band_key_sql(b: int) -> str:
-        joined = (
+        return (
             f"array_join(transform(slice(signature, {b * rows_per_band + 1}, "
             f"{rows_per_band}), x -> CAST(x AS STRING)), ',')"
         )
-        return joined if hash_fn == "portable" else f"xxhash64({joined})"
 
     structs = ", ".join(
         f"struct({b} AS band, {_band_key_sql(b)} AS bucket)" for b in range(bands)
@@ -645,7 +577,6 @@ def minhash_near_duplicates(
     bands: int = 16,
     threshold: float = 0.5,
     tokenizer: str = "whitespace",
-    hash_fn: str = "xx",
     stage_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end near-dup pairs: shingle → minhash → LSH candidates →
@@ -662,14 +593,12 @@ def minhash_near_duplicates(
     (16 bands × 4 rows). Declared registry queries pass explicit widths
     so their DuckDB oracles recompute identical signatures.
 
-    ``hash_fn="portable"`` (with an İ-folded tokenizer) makes every stage
-    — signature values, band buckets, agreement fractions — recomputable
-    by a DuckDB oracle; production default stays xxhash64.
+    Every stage — signature values, band buckets, agreement fractions —
+    is recomputable by a DuckDB oracle.
 
-    ``stage_dir`` (or session conf ``STAGE_DIR_CONF``) switches the
-    signature/candidate intermediates from in-memory localCheckpoint
-    blocks to durable parquet stages — the 100 TB medium; see
-    :func:`_stage`.
+    ``stage_dir`` switches the signature/candidate intermediates from
+    in-memory localCheckpoint blocks to durable parquet stages — the
+    100 TB medium; see :func:`_stage`.
     """
     if num_hashes is None:
         num_hashes = bands * auto_band_rows(docs.count(), threshold)
@@ -679,15 +608,15 @@ def minhash_near_duplicates(
     # WITHOUT registering a CacheManager entry — a leaked .persist() here
     # survives the query and silently substitutes into later queries'
     # plans (order-dependent timings; blocks never freed in a long-lived
-    # session). At 100 TB pass stage_dir (or set STAGE_DIR_CONF) so the
+    # session). At 100 TB pass stage_dir so the
     # signature/candidate intermediates live in a parquet stage instead of
     # executor heap — same contract, durable, zero heap residency.
     sigs = _stage(
-        minhash_signatures(shingled, num_hashes, id_col, hash_fn),
+        minhash_signatures(shingled, num_hashes, id_col),
         "minhash_sigs", stage_dir,
     )
     cands = _stage(
-        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col, hash_fn=hash_fn),
+        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col),
         "lsh_cands", stage_dir,
     )
     # same candidate-id pruning as near_duplicates_verified (r14
@@ -729,15 +658,8 @@ def minhash_near_duplicates(
 # 3. SimHash
 # --------------------------------------------------------------------------
 
-def simhash_bits(hash_fn: str) -> int:
-    """Signature width per hash backend: xxhash64 keeps 63 usable bits
-    (sign bit skipped to stay in signed-long range); the portable
-    md5-60bit hash has exactly 60."""
-    if hash_fn == "xx":
-        return 63
-    if hash_fn == "portable":
-        return 60
-    raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+# Signature width: one bit per bit of the md5-60 token hash.
+SIMHASH_BITS = 60
 
 
 def simhash_block_layout(n_bits: int, n_blocks: int) -> tuple[list[int], list[int]]:
@@ -759,7 +681,6 @@ def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = "xx",
     tokenizer: str = "whitespace",
 ) -> DataFrame:
     """SimHash per doc: per-token hash, sum ±1 per bit position, sign →
@@ -770,34 +691,28 @@ def simhash(
     buckets on disjoint signature blocks (pigeonhole — see
     :func:`simhash_near_duplicates`).
 
-    ``hash_fn="xx"`` (production default): 63-bit xxhash64 planes — fast,
-    Spark-only. ``hash_fn="portable"``: 60-bit md5 planes (first 15 hex
-    chars as an exact integer) — ~2-3× more hash cost, but every
-    signature bit is recomputable by a DuckDB oracle; pair it with
-    ``tokenizer="bpe"`` so the token STRINGS entering md5 are the
-    İ-pre-folded cross-engine ones (hash-of-string outputs expose Java
-    vs utf8proc ``lower()`` divergence that count outputs hide).
+    The planes are the md5-60 token hash (:func:`.hashing.h60`), so every
+    signature bit is recomputable by a DuckDB oracle; the tokenizers' İ
+    fold keeps the token STRINGS entering md5 cross-engine identical
+    (hash-of-string outputs expose Java vs utf8proc ``lower()``
+    divergence that count outputs hide).
     """
     # explode → codegen'd aggregate (same reasoning as minhash_signatures:
     # interpreted lambda functions lose to whole-stage codegen by ~10×)
-    n_bits = simhash_bits(hash_fn)
     exploded = docs.select(
         F.col(id_col),
         F.explode(_tokens_expr(text_col, tokenizer)).alias("token"),
     )
-    if hash_fn == "portable":
-        h = F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.xxhash64(F.col("token"))
+    h = h60(F.col("token"))
     bit_sums = [
         F.sum(F.shiftright(h, bit).bitwiseAND(F.lit(1))).alias(f"_b{bit}")
-        for bit in range(n_bits)
+        for bit in range(SIMHASH_BITS)
     ] + [F.count(F.lit(1)).alias("_n")]
     agg = exploded.groupBy(id_col).agg(*bit_sums)
     sim = sum(
         F.when(F.col(f"_b{bit}") * 2 >= F.col("_n"), F.lit(2 ** bit).cast("long"))
         .otherwise(F.lit(0).cast("long"))
-        for bit in range(n_bits)
+        for bit in range(SIMHASH_BITS)
     )
     return agg.select(F.col(id_col), sim.alias("simhash"))
 
@@ -808,13 +723,12 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bucket_cap: int = 256,
-    hash_fn: str = "xx",
     tokenizer: str = "whitespace",
 ) -> DataFrame:
     """Candidate pairs by disjoint-block bucketing, verified by exact
     Hamming distance via bit_count(xor).
 
-    The 63-bit simhash is split into ``max_hamming + 1`` disjoint blocks, so
+    The 60-bit simhash is split into ``max_hamming + 1`` disjoint blocks, so
     by pigeonhole any pair within ``max_hamming`` differing bits agrees
     EXACTLY on at least one whole block — full recall at the requested
     radius (a fixed 4×16-bit split only guarantees distance ≤ 3). The cost
@@ -826,8 +740,8 @@ def simhash_near_duplicates(
     quadratic expansion happens only inside capped buckets.
     """
     n_blocks = max_hamming + 1
-    offsets, widths = simhash_block_layout(simhash_bits(hash_fn), n_blocks)
-    sh = simhash(docs, text_col, id_col, hash_fn=hash_fn, tokenizer=tokenizer)
+    offsets, widths = simhash_block_layout(SIMHASH_BITS, n_blocks)
+    sh = simhash(docs, text_col, id_col, tokenizer=tokenizer)
     blocks = sh.select(
         F.col(id_col),
         F.col("simhash"),
@@ -910,7 +824,7 @@ def ngram_jaccard_pairs(
     candidates. At 100 TB run it ONLY on candidate pairs (join against the
     candidate set before the explode), never corpus-wide; corpus-wide here
     is for the oracle-checkable declared query on the small test table.
-    ``stage_dir`` (or session conf ``STAGE_DIR_CONF``) puts the exploded
+    ``stage_dir`` puts the exploded
     shingle table in a parquet stage instead of executor heap.
     """
     # _stage: both sides of the self-join re-derive the shingling
@@ -955,7 +869,6 @@ def near_duplicates_verified(
     bands: int = 8,
     threshold: float = 0.5,
     tokenizer: str = "whitespace",
-    hash_fn: str = "xx",
     stage_dir: str | None = None,
 ) -> DataFrame:
     """The full tiered near-dup pipeline as it runs at 100 TB:
@@ -975,7 +888,7 @@ def near_duplicates_verified(
     — see :func:`minhash_near_duplicates`; corpora ≤ 256 docs at t=0.5
     resolve to the historical 32 (8 bands × 4 rows).
 
-    ``stage_dir`` (or session conf ``STAGE_DIR_CONF``) switches the
+    ``stage_dir`` switches the
     shingle/candidate intermediates — the tier's biggest heap residents —
     from in-memory localCheckpoint blocks to durable parquet stages; the
     r15 sf10 re-run at the DEFAULT 8 GiB heap (SCALING.md) is the measured
@@ -1005,7 +918,7 @@ def near_duplicates_verified(
         .groupBy(id_col)
         .agg(
             F.collect_set(F.col("shingle")).alias("shingles"),
-            *_minhash_min_exprs(num_hashes, hash_fn),
+            *_minhash_min_exprs(num_hashes),
         ),
         "verified_doc_sigs", stage_dir,
     )
@@ -1018,7 +931,7 @@ def near_duplicates_verified(
     # accurate post-materialization stats keep AQE building the verify
     # joins on the candidate side.
     cands = _stage(
-        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col, hash_fn=hash_fn),
+        lsh_candidate_pairs(sigs, bands, num_hashes // bands, id_col),
         "verified_cands", stage_dir,
     )
     # r14 third-decade find (sf1→sf10 study): without the pruning below,

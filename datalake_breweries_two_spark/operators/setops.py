@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark.operators.hashing import h60_sql
+
 
 def distinct_rows(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.select(*cols).distinct()
@@ -372,10 +374,7 @@ def kmv_set_overlap(
     count_distinct triple is the sf-scale error probe a production
     rollup would drop — estimates never depend on it.
     """
-    h_sql = (
-        f"CAST(conv(substring(md5(CAST(`{key_col}` AS STRING)), 1, 15), 16, 10)"
-        " AS BIGINT)"
-    )
+    h_sql = h60_sql(f"CAST(`{key_col}` AS STRING)")
     base = df.filter(
         F.col(key_col).isNotNull() & F.col(type_col).isin(type_a, type_b)
     ).select(F.col(type_col).alias("_t"), F.expr(h_sql).alias("h"))

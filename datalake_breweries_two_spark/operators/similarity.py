@@ -6,8 +6,9 @@ Three tiers:
     one full scan per query vector — fine for batch scoring of a few
     queries, wrong for many queries (use the LSH/IVF tiers).
   * **LSH-bucketed ANN** — random-hyperplane signature (deterministic
-    seeded planes via xxhash64), candidates share a signature prefix; only
-    candidates get exact rescoring. Sub-linear per query.
+    seeded planes from an integer hash chain), candidates share a
+    signature prefix; only candidates get exact rescoring. Sub-linear
+    per query.
   * **IVF (inverted-file) ANN** — k-means-lite centroid assignment (seeded
     deterministic init, few Lloyd iterations via DataFrame joins), queries
     probe the nearest ``nprobe`` centroid partitions only. The scale path:
@@ -23,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from datalake_breweries_two_spark.operators.hashing import h60
 from datalake_breweries_two_spark.operators.semistructured import dot_product, vector_norm
 
 
@@ -316,17 +318,6 @@ def embedding_near_dup_pairs(
 # IVF — inverted-file partitioned ANN (the 100 TB layout)
 # --------------------------------------------------------------------------
 
-def _portable_id_hash(id_col: str) -> Column:
-    """The repo's cross-engine 60-bit id hash (first 15 hex chars of
-    ``md5(id)`` as an exact integer) — used wherever a bounded
-    deterministic draw (centroid seeds, recall-harness query vectors)
-    must be reproducible by a SQL oracle. DuckDB mirror:
-    ``CAST(('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 15)) AS BIGINT)``."""
-    return F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
-
-
 def centroid_seeds(
     embeddings: DataFrame,
     n_centroids: int = 16,
@@ -343,7 +334,7 @@ def centroid_seeds(
     previous unpartitioned ``row_number`` window, which would funnel even
     the 16-row post-limit frame through a single partition. One md5 per
     corpus ID, only at index-BUILD time — seeding cost, not probe cost."""
-    seed_hash = _portable_id_hash(id_col)
+    seed_hash = h60(F.col(id_col).cast("string"))
     rows = (
         embeddings.select(F.col(id_col), F.col(vec_col))
         # a NULL vector can seed nothing (and would crash the driver-side
@@ -536,7 +527,7 @@ def ann_recall_curves(
     qrows = (
         embeddings.select(F.col(id_col), F.col(vec_col))
         .filter(F.col(vec_col).isNotNull())
-        .orderBy(_portable_id_hash(id_col).asc(), F.col(id_col).asc())
+        .orderBy(h60(F.col(id_col).cast("string")).asc(), F.col(id_col).asc())
         .limit(n_queries)
         .collect()
     )
@@ -917,7 +908,7 @@ def rerank_topk(
 
     Reference parity: no similarity surface in the reference
     (LLM-pipeline extension, SURVEY.md §2.2)."""
-    from datalake_breweries_two_spark.operators.text import WS_RE
+    from datalake_breweries_two_spark.operators.dedup import _tokens_expr
 
     cand = knn_join(
         embeddings,
@@ -932,11 +923,7 @@ def rerank_topk(
         F.col("rank").alias("retrieval_rank"),
         F.col("cosine").alias("emb_cos"),
     )
-    toks = F.array_distinct(
-        F.split(
-            F.lower(F.translate(F.trim(F.col(text_col)), "İ", "i")), WS_RE
-        )
-    )
+    toks = F.array_distinct(_tokens_expr(text_col, "whitespace"))
     docs_tok = documents.select(
         F.col(doc_id_col).alias("_tid"), toks.alias("_toks")
     )

@@ -1364,11 +1364,10 @@ def test_near_duplicates_verified_subset_of_exact(spark):
 
 def test_dedup_stage_dir_parquet_medium(spark, tmp_path):
     """The r15 parquet-stage medium (VERDICT r14 item 1): with stage_dir
-    set — per-call or via the STAGE_DIR_CONF session conf — every dedup
-    entry point must (a) return byte-identical results to the default
-    localCheckpoint medium, (b) actually write its intermediates as
-    parquet stages under the dir (heap-free at 100 TB), and (c) register
-    nothing in the session CacheManager."""
+    set, every dedup entry point must (a) return byte-identical results
+    to the default localCheckpoint medium, (b) actually write its
+    intermediates as parquet stages under the dir (heap-free at 100 TB),
+    and (c) register nothing in the session CacheManager."""
     from datalake_breweries_two_spark.operators import dedup
 
     docs = load_table(spark, "documents", SF_SMOKE)
@@ -1425,45 +1424,19 @@ def test_dedup_stage_dir_parquet_medium(spark, tmp_path):
     # (c) nothing leaked into the CacheManager
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
-    # session-conf route: stage_dir=None + conf set → same medium
-    conf_root = str(tmp_path / "conf_stages")
-    spark.conf.set(dedup.STAGE_DIR_CONF, conf_root)
-    try:
-        conf_ver = canon(
-            dedup.near_duplicates_verified(docs, threshold=0.2).collect()
-        )
-    finally:
-        spark.conf.unset(dedup.STAGE_DIR_CONF)
-    assert conf_ver == base_ver
-    assert len(os.listdir(conf_root)) >= 2
-
 
 def test_portable_minhash_near_dup_family(spark):
-    """The hash_fn="portable" near-dup path (r7 — what the declared
-    q_dedup_near/q_dedup_near_verified/q_token_dedup_near run): (a) its
-    verified pairs are a subset of the exact ground truth with equal
-    scores, (b) planted exact twins are recovered at est_jaccard 1.0,
-    (c) the Carter-Wegman mixing survives num_hashes=64 (max seed 63 ×
-    55-bit h2 must not trip Spark's ANSI bigint-overflow — the bound the
-    _MINHASH_H2_FOLD constant exists for)."""
+    """The md5-family near-dup path (r7 — what the declared
+    q_dedup_near/q_dedup_near_verified/q_token_dedup_near run; its
+    verified pairs' subset-of-exact property is
+    test_near_duplicates_verified_subset_of_exact): (a) planted exact
+    twins are recovered at est_jaccard 1.0, (b) the Carter-Wegman mixing
+    survives num_hashes=64 (max seed 63 × 55-bit h2 must not trip
+    Spark's ANSI bigint-overflow — the bound the _MINHASH_H2_FOLD
+    constant exists for), and (c) the 1..224 seed bound is enforced."""
     from datalake_breweries_two_spark.operators import dedup
 
     docs = load_table(spark, "documents", SF_SMOKE)
-    exact = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(
-            docs, threshold=0.2, tokenizer="whitespace_folded"
-        ).collect()
-    }
-    tiered = dedup.near_duplicates_verified(
-        docs, threshold=0.2, tokenizer="whitespace_folded", hash_fn="portable"
-    ).collect()
-    assert len(tiered) > 0
-    for r in tiered:
-        key = (r["id_a"], r["id_b"])
-        assert key in exact, f"portable tier invented pair {key}"
-        assert abs(exact[key] - r["jaccard"]) < 1e-9, f"score mismatch at {key}"
-
     twins = docs.limit(5).select(
         (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
     )
@@ -1472,8 +1445,6 @@ def test_portable_minhash_near_dup_family(spark):
         num_hashes=64,  # max seed 63 — the ANSI overflow bound
         bands=16,
         threshold=0.9,
-        tokenizer="whitespace_folded",
-        hash_fn="portable",
     ).collect()
     found = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in est}
     planted = {
@@ -1491,8 +1462,8 @@ def test_portable_minhash_near_dup_family(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="1..224"):
-        dedup.minhash_signatures(sh, num_hashes=225, hash_fn="portable")
-    dedup.minhash_signatures(sh, num_hashes=224, hash_fn="portable")
+        dedup.minhash_signatures(sh, num_hashes=225)
+    dedup.minhash_signatures(sh, num_hashes=224)
 
 
 def test_sample_seeded_deterministic_and_bounded(spark):
@@ -1521,6 +1492,7 @@ def test_rolling_fingerprint_equivalence_and_stability(spark):
     fingerprint, and the transform+array_min formulation must equal an
     independent posexplode+groupBy-min recompute of the same shingle
     hashes (two different plans, one definition)."""
+    from datalake_breweries_two_spark.operators.hashing import h60
     from datalake_breweries_two_spark.operators.text import rolling_hash_fingerprint
 
     docs = load_table(spark, "documents", SF_SMOKE).select("doc_id", "text").filter(
@@ -1536,7 +1508,7 @@ def test_rolling_fingerprint_equivalence_and_stability(spark):
         r["doc_id"]: r["fp"]
         for r in docs.select("doc_id", "text", F.explode(idx).alias("i"))
         .select(
-            "doc_id", F.xxhash64(F.col("text").substr(F.col("i"), F.lit(16))).alias("h")
+            "doc_id", h60(F.col("text").substr(F.col("i"), F.lit(16))).alias("h")
         )
         .groupBy("doc_id")
         .agg(F.min("h").alias("fp"))
@@ -1555,10 +1527,10 @@ def test_rolling_fingerprint_equivalence_and_stability(spark):
 
 
 def test_portable_hash_variants_match_reference_semantics(spark):
-    """The r7 portable (md5-60bit) variants behind q_rolling_fingerprint
-    and q_simhash: same dedup semantics as the xxhash production path —
-    identical texts share a fingerprint / land at Hamming 0 — and every
-    portable hash value fits the 60-bit range the oracles recompute."""
+    """The md5-60 hashes behind q_rolling_fingerprint and q_simhash keep
+    the dedup semantics — identical texts share a fingerprint / land at
+    Hamming 0 — and every hash value fits the 60-bit range the oracles
+    recompute."""
     from datalake_breweries_two_spark.operators import dedup
     from datalake_breweries_two_spark.operators.text import rolling_hash_fingerprint
 
@@ -1569,26 +1541,18 @@ def test_portable_hash_variants_match_reference_semantics(spark):
         "doc_id long, text string",
     )
     fp = {r["doc_id"]: r["robust_fingerprint"]
-          for r in rolling_hash_fingerprint(pair, window=8, hash_fn="portable")
-          .collect()}
+          for r in rolling_hash_fingerprint(pair, window=8).collect()}
     assert fp[1] == fp[2] and fp[1] != fp[3]
     assert all(0 <= v < (1 << 60) for v in fp.values())
 
     sh = {r["doc_id"]: r["simhash"]
-          for r in dedup.simhash(pair, hash_fn="portable", tokenizer="bpe")
-          .collect()}
+          for r in dedup.simhash(pair, tokenizer="bpe").collect()}
     assert sh[1] == sh[2] and 0 <= sh[1] < (1 << 60)
     pairs = {(r["id_a"], r["id_b"]): r["hamming"]
              for r in dedup.simhash_near_duplicates(
-                 pair, max_hamming=6, hash_fn="portable", tokenizer="bpe"
+                 pair, max_hamming=6, tokenizer="bpe"
              ).collect()}
     assert pairs.get((1, 2)) == 0 and (1, 3) not in pairs
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        dedup.simhash_bits("nope")
-    with _pytest.raises(ValueError):
-        rolling_hash_fingerprint(pair, hash_fn="nope")
 
 
 def test_ann_recall_curves_invariants(spark):
@@ -4673,7 +4637,7 @@ def test_word_shingles_matches_exploded_shingler_per_tokenizer(spark):
     on a stream) must produce the SAME distinct (doc, shingle) set as the
     batch window shingler (shingle_docs_exploded) under EVERY tokenizer,
     on the hostile inputs that historically split the two: Turkish İ
-    (folded pre-lower by whitespace_folded/bpe, not by whitespace),
+    (folded pre-lower by both tokenizers),
     \\x0b whitespace, empty text (zero bpe tokens), punctuation, and
     short (<n token) docs. r11 advice: both shinglers now build on one
     _tokens_expr, so divergence is a construction bug, not a latent
@@ -4694,7 +4658,7 @@ def test_word_shingles_matches_exploded_shingler_per_tokenizer(spark):
         ],
         "doc_id long, text string",
     )
-    for tok in ("whitespace", "whitespace_folded", "bpe"):
+    for tok in ("whitespace", "bpe"):
         batch = {
             (r["doc_id"], r["shingle"])
             for r in shingle_docs_exploded(docs, n=3, tokenizer=tok).collect()
@@ -4712,6 +4676,35 @@ def test_word_shingles_matches_exploded_shingler_per_tokenizer(spark):
         )
         stream = {(r["doc_id"], r["shingle"]) for r in stream_form.collect()}
         assert stream == batch, f"tokenizer={tok}: {stream ^ batch}"
+
+
+def test_whitespace_shingles_match_duckdb_on_dotted_i(spark):
+    """The whitespace tokenizer folds the Turkish dotted İ before lower,
+    so its shingle STRINGS — what the md5 hashes see — equal DuckDB's
+    plain ``lower(trim(text))`` split: utf8proc lowers İ to a bare "i",
+    where Java's lower alone gives "i" + U+0307."""
+    import duckdb
+
+    from datalake_breweries_two_spark.operators.dedup import shingle_docs_exploded
+
+    text = "İstanbul BÜYÜK İstanbul gezisi\x0bplanı  var"
+    docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    spark_sh = {
+        r["shingle"]
+        for r in shingle_docs_exploded(docs, n=3, tokenizer="whitespace").collect()
+    }
+    (duck_sh,) = duckdb.execute(
+        """
+        SELECT list_distinct(list_transform(
+                   range(1, greatest(len(t) - 2, 1) + 1),
+                   i -> array_to_string(list_slice(t, i, i + 2), ' ')))
+        FROM (SELECT regexp_split_to_array(
+                         lower(trim(?)), '[ \\t\\n\\r\\f\\x0b]+') AS t)
+        """,
+        [text],
+    ).fetchone()
+    assert spark_sh == set(duck_sh)
+    assert "istanbul büyük istanbul" in spark_sh
 
 
 def test_rerank_topk_matches_reference_randomized(spark):
